@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 import graft.ingest.Archive
-import graft.store.{Fts, Ivf, IvfPq, Lsh, Pq, SqliteCompat, TableStore}
+import graft.store.{Fts, Lsh, SqliteCompat, TableStore, VectorIndex}
 
 /** Thin command surface mirroring the reference CLI's offline
   * commands (the network-bound commands — user-timeline, search,
@@ -32,28 +32,18 @@ import graft.store.{Fts, Ivf, IvfPq, Lsh, Pq, SqliteCompat, TableStore}
   *                                         the single indexed column)
   *   fts-snippet <store> <table> <pk> <column|-> <ntok> <query...>
   *                                         snippet() best window
-  *   pq-index <store> <table> <pk> <emb> [k] [iters]   train + encode
-  *   pq-search <store> <table> <pk> <emb> <qid> [topk] ADC top-k
-  *   ivf-index <store> <table> <pk> <emb> [k] [iters]  train + assign
-  *   ivf-search <store> <table> <pk> <emb> <qid> [topk] [nprobe]
-  *   ivfpq-index <store> <table> <pk> <emb> [k] [iters] cells + residual codes
-  *   ivfpq-search <store> <table> <pk> <emb> <qid> [topk] [nprobe]
-  *   sq-index <store> <table> <pk> <emb>   per-dim int8 scales + codes
-  *   sq-search <store> <table> <pk> <emb> <qid> [topk]  asymmetric
-  *                                         cosine over the code table
-  *   ivfsq-index <store> <table> <pk> <emb> [k] [iters]  cells +
-  *                                         residual int8 codes
-  *   ivfsq-search <store> <table> <pk> <emb> <qid> [topk] [nprobe]
-  *   bin-index <store> <table> <pk> <emb>  sign-bit blobs (1 bit/dim,
-  *                                         no training)
-  *   bin-search <store> <table> <pk> <emb> <qid> [topk]  Hamming top-k
-  *   bin-rerank <store> <table> <pk> <emb> <qid> [topk] [depth]
-  *                                         Hamming shortlist → exact
-  *                                         cosine re-rank
-  *   ivfbin-index <store> <table> <pk> <emb> [k] [iters]  cells +
-  *                                         sign blobs
-  *   ivfbin-search <store> <table> <pk> <emb> <qid> [topk] [nprobe]
-  *   ivfbin-rerank <store> <table> <pk> <emb> <qid> [topk] [depth] [nprobe]
+  *   <fam>-index <store> <table> <pk> <emb> [k] [iters]
+  *                                         build a VectorIndex family
+  *                                         (fam = a family name; k =
+  *                                         cells under IVF, codebook
+  *                                         size for flat PQ)
+  *   <fam>-search <store> <table> <pk> <emb> <qid> [topk] [nprobe]
+  *   <fam>-search-filtered <store> <table> <pk> <emb> <qid> <k>
+  *       <predCol> <predVal>               top-k among base rows with
+  *                                         predCol = predVal
+  *   <fam>-rerank <store> <table> <pk> <emb> <qid> [topk] [depth]
+  *       [nprobe]                          sign-bit families: Hamming
+  *                                         shortlist → exact cosine
   *   tri-index <store> <table> <pk> <text>  trigram postings (substring accel)
   *   tri-search <store> <table> <pk> <text> <needle...>
   *   tri-match <store> <table> <pk> <text> <query...>  boolean substring
@@ -100,8 +90,8 @@ import graft.store.{Fts, Ivf, IvfPq, Lsh, Pq, SqliteCompat, TableStore}
   *   index-retrain <store> <famBase>       re-run the recorded
   *                                         buildIndex for a drifted
   *                                         IVF family (famBase =
-  *                                         <table>_<ivf|ivfpq|ivfsq|
-  *                                         ivfbin>); doctor --repair
+  *                                         <table>_<family>); doctor
+  *                                         --repair
   *                                         runs the same loop for
   *                                         every flagged index
   *   vacuum-epochs <store> [minutes]       reclaim replaced-epoch
@@ -199,14 +189,23 @@ object Cli {
   private val ReadOnlyVerbs: Set[String] = Set(
     "fts-search", "fts-ranked", "fts-highlight", "fts-snippet",
     "tri-search", "tri-match", "lsh-pairs", "lsh-pairs-filtered",
-    "pq-search", "ivf-search", "ivfpq-search", "sq-search",
-    "ivfsq-search", "bin-search", "bin-rerank", "ivfbin-search",
-    "ivfbin-rerank", "sq-search-filtered", "ivfsq-search-filtered",
-    "bin-search-filtered", "ivfbin-search-filtered",
-    "ivf-search-filtered", "pq-search-filtered", "ivfpq-search-filtered",
     "hybrid-search", "hh-top", "quantiles", "classify", "estimate", "prune-files",
     "fingerprint", "tables", "show", "epochs", "tags", "show-tag",
-    "show-epoch", "diff-epochs", "history", "changes")
+    "show-epoch", "diff-epochs", "history", "changes") ++
+    VectorIndex.families.flatMap(f =>
+      VectorVerb.verbs(f).filter(_ != "index").map(v => s"${f.name}-$v"))
+
+  /** `<family>-<verb>` over [[VectorIndex.families]]: index, search and
+    * search-filtered for every family, rerank for the sign-bit ones.
+    */
+  private object VectorVerb {
+    def verbs(f: VectorIndex): Seq[String] =
+      Seq("index", "search", "search-filtered") ++
+        (if (f.codec == VectorIndex.Codec.Sign) Seq("rerank") else Nil)
+    def unapply(cmd: String): Option[(VectorIndex, String)] =
+      VectorIndex.families.flatMap(f =>
+        verbs(f).filter(v => cmd == s"${f.name}-$v").map(f -> _)).headOption
+  }
 
   def run(spark: SparkSession, args: Array[String]): Unit = {
     val cmd = args(0)
@@ -335,175 +334,43 @@ object Cli {
         val out = spark.sql(args(2))
         if (out.columns.nonEmpty)
           out.show(args.lift(3).map(_.toInt).getOrElse(20), truncate = false)
-      case "pq-index" | "ivf-index" =>
+      case VectorVerb(f, verb) =>
+        // <fam>-index <store> <table> <pk> <emb> [k] [iters] — k is the
+        // cell count under IVF, the codebook size for flat PQ;
+        // <fam>-search ... <qid> [topk] [nprobe];
+        // <fam>-rerank ... <qid> [topk] [depth] [nprobe] (sign bits);
+        // <fam>-search-filtered ... <qid> <k> <predCol> <predVal> —
+        // allowed = base rows where predCol equals predVal
+        // (string-compared), pre-filtered into the scan
         import org.apache.spark.sql.functions.col
         val (table, pk, emb) = (args(2), args(3), args(4))
-        val k = if (args.length > 5) args(5).toInt else 16
-        val iters = if (args.length > 6) args(6).toInt else 3
+        def opt(i: Int, d: Int) = if (args.length > i) args(i).toInt else d
         val vecs = store.read(table)
           .select(col(pk), col(emb).cast("array<double>").as(emb))
-        if (cmd == "pq-index") {
-          Pq.buildIndex(store, table, vecs, pk, emb, k = k, iters = iters)
-          println(s"[pq-index] ${store.read(Pq.codesName(table)).count()} code rows")
+        if (verb == "index") {
+          val k = opt(5, 16)
+          f.tuned((if (f.cellular) f.cellsKey else "kCodes") -> k,
+            "iters" -> opt(6, 3)).build(store, table, vecs, pk, emb)
+          val unit = f.codec match {
+            case VectorIndex.Codec.Raw => "assigned"
+            case VectorIndex.Codec.Sign => "blob rows"
+            case _ => "code rows"
+          }
+          println(s"[$cmd] ${store.read(f.coverName(table)).count()} $unit")
         } else {
-          Ivf.buildIndex(store, table, vecs, pk, emb, k = k, iters = iters)
-          println(s"[ivf-index] ${store.read(Ivf.mapName(table)).count()} assigned")
+          val queries = vecs.filter(col(pk) === args(5).toLong)
+          val topk = opt(6, 10)
+          (verb match {
+            case "search" => f.annTopK(store, table, queries, pk, emb, topk,
+              nprobe = opt(7, VectorIndex.Nprobe))
+            case "rerank" => f.rerank(store, table, queries, pk, emb, topk,
+              opt(7, 4 * topk), opt(8, VectorIndex.Nprobe))
+            case _ => f.annTopKFiltered(store, table, queries, pk, emb,
+              args(6).toInt, store.read(table)
+                .filter(col(args(7)).cast("string") === args(8))
+                .select(col(pk)))
+          }).show(topk, truncate = false)
         }
-      case "ivfpq-index" =>
-        import org.apache.spark.sql.functions.col
-        val (table, pk, emb) = (args(2), args(3), args(4))
-        val k = if (args.length > 5) args(5).toInt else 16
-        val iters = if (args.length > 6) args(6).toInt else 3
-        val vecs = store.read(table)
-          .select(col(pk), col(emb).cast("array<double>").as(emb))
-        IvfPq.buildIndex(store, table, vecs, pk, emb,
-          kCells = k, iters = iters)
-        println(s"[ivfpq-index] ${store.read(IvfPq.codesName(table)).count()} code rows")
-      case "ivfsq-index" =>
-        import org.apache.spark.sql.functions.col
-        val (table, pk, emb) = (args(2), args(3), args(4))
-        val k = if (args.length > 5) args(5).toInt else 16
-        val iters = if (args.length > 6) args(6).toInt else 3
-        val vecs = store.read(table)
-          .select(col(pk), col(emb).cast("array<double>").as(emb))
-        graft.store.IvfSq.buildIndex(store, table, vecs, pk, emb,
-          kCells = k, iters = iters)
-        println(s"[ivfsq-index] ${store.read(graft.store.IvfSq.codesName(table)).count()} code rows")
-      case "ivfsq-search" =>
-        import org.apache.spark.sql.functions.col
-        val (table, pk, emb, qid) = (args(2), args(3), args(4), args(5).toLong)
-        val topk = if (args.length > 6) args(6).toInt else 10
-        val nprobe = if (args.length > 7) args(7).toInt else 2
-        val queries = store.read(table).filter(col(pk) === qid)
-          .select(col(pk), col(emb).cast("array<double>").as(emb))
-        graft.store.IvfSq.annTopK(store, table, queries, pk, emb, topk,
-          nprobe = nprobe)
-          .show(topk, truncate = false)
-      case "ivfbin-index" =>
-        import org.apache.spark.sql.functions.col
-        val (table, pk, emb) = (args(2), args(3), args(4))
-        val k = if (args.length > 5) args(5).toInt else 16
-        val iters = if (args.length > 6) args(6).toInt else 3
-        val vecs = store.read(table)
-          .select(col(pk), col(emb).cast("array<double>").as(emb))
-        graft.store.IvfBin.buildIndex(store, table, vecs, pk, emb,
-          kCells = k, iters = iters)
-        println(s"[ivfbin-index] ${store.read(graft.store.IvfBin.codesName(table)).count()} blob rows")
-      case "ivfbin-search" =>
-        import org.apache.spark.sql.functions.col
-        val (table, pk, emb, qid) = (args(2), args(3), args(4), args(5).toLong)
-        val topk = if (args.length > 6) args(6).toInt else 10
-        val nprobe = if (args.length > 7) args(7).toInt else 2
-        val queries = store.read(table).filter(col(pk) === qid)
-          .select(col(pk), col(emb).cast("array<double>").as(emb))
-        graft.store.IvfBin.annTopK(store, table, queries, pk, emb, topk,
-          nprobe = nprobe)
-          .show(topk, truncate = false)
-      case "ivfbin-rerank" =>
-        import org.apache.spark.sql.functions.col
-        val (table, pk, emb, qid) = (args(2), args(3), args(4), args(5).toLong)
-        val topk = if (args.length > 6) args(6).toInt else 10
-        val depth = if (args.length > 7) args(7).toInt else 4 * topk
-        val nprobe = if (args.length > 8) args(8).toInt else 2
-        val queries = store.read(table).filter(col(pk) === qid)
-          .select(col(pk), col(emb).cast("array<double>").as(emb))
-        graft.store.IvfBin.rerank(store, table, queries, pk, emb, topk,
-          depth, nprobe = nprobe)
-          .show(topk, truncate = false)
-      case "bin-index" =>
-        import org.apache.spark.sql.functions.col
-        val (table, pk, emb) = (args(2), args(3), args(4))
-        val vecs = store.read(table)
-          .select(col(pk), col(emb).cast("array<double>").as(emb))
-        graft.store.Bin.buildIndex(store, table, vecs, pk, emb)
-        println(s"[bin-index] ${store.read(graft.store.Bin.codesName(table)).count()} blob rows")
-      case "bin-search" =>
-        import org.apache.spark.sql.functions.col
-        val (table, pk, emb, qid) = (args(2), args(3), args(4), args(5).toLong)
-        val topk = if (args.length > 6) args(6).toInt else 10
-        val queries = store.read(table).filter(col(pk) === qid)
-          .select(col(pk), col(emb).cast("array<double>").as(emb))
-        graft.store.Bin.annTopK(store, table, queries, pk, emb, topk)
-          .show(topk, truncate = false)
-      case "bin-rerank" =>
-        import org.apache.spark.sql.functions.col
-        val (table, pk, emb, qid) = (args(2), args(3), args(4), args(5).toLong)
-        val topk = if (args.length > 6) args(6).toInt else 10
-        val depth = if (args.length > 7) args(7).toInt else 4 * topk
-        val queries = store.read(table).filter(col(pk) === qid)
-          .select(col(pk), col(emb).cast("array<double>").as(emb))
-        graft.store.Bin.rerank(store, table, queries, pk, emb, topk, depth)
-          .show(topk, truncate = false)
-      case "sq-index" =>
-        import org.apache.spark.sql.functions.col
-        val (table, pk, emb) = (args(2), args(3), args(4))
-        val vecs = store.read(table)
-          .select(col(pk), col(emb).cast("array<double>").as(emb))
-        graft.store.Sq.buildIndex(store, table, vecs, pk, emb)
-        println(s"[sq-index] ${store.read(graft.store.Sq.codesName(table)).count()} code rows")
-      case "sq-search" =>
-        import org.apache.spark.sql.functions.col
-        val (table, pk, emb, qid) = (args(2), args(3), args(4), args(5).toLong)
-        val topk = if (args.length > 6) args(6).toInt else 10
-        val queries = store.read(table).filter(col(pk) === qid)
-          .select(col(pk), col(emb).cast("array<double>").as(emb))
-        graft.store.Sq.annTopK(store, table, queries, pk, emb, topk)
-          .show(topk, truncate = false)
-      case "sq-search-filtered" | "ivfsq-search-filtered" |
-           "bin-search-filtered" | "ivfbin-search-filtered" |
-           "ivf-search-filtered" | "pq-search-filtered" |
-           "ivfpq-search-filtered" =>
-        // <store> <table> <pk> <emb> <qid> <k> <predCol> <predVal> —
-        // filtered search: allowed = base-table rows where predCol
-        // equals predVal (string-compared), pre-filtered into the
-        // code/blob scan
-        import org.apache.spark.sql.functions.col
-        val (table, pk, emb, qid) = (args(2), args(3), args(4), args(5).toLong)
-        val topk = args(6).toInt
-        val allowed = store.read(table)
-          .filter(col(args(7)).cast("string") === args(8))
-          .select(col(pk))
-        val queries = store.read(table).filter(col(pk) === qid)
-          .select(col(pk), col(emb).cast("array<double>").as(emb))
-        val res = cmd match {
-          case "sq-search-filtered" =>
-            graft.store.Sq.annTopKFiltered(
-              store, table, queries, pk, emb, topk, allowed)
-          case "ivfsq-search-filtered" =>
-            graft.store.IvfSq.annTopKFiltered(
-              store, table, queries, pk, emb, topk, allowed)
-          case "bin-search-filtered" =>
-            graft.store.Bin.annTopKFiltered(
-              store, table, queries, pk, emb, topk, allowed)
-          case "ivf-search-filtered" =>
-            graft.store.Ivf.annTopKFiltered(
-              store, table, queries, pk, emb, topk, allowed)
-          case "pq-search-filtered" =>
-            graft.store.Pq.annTopKFiltered(
-              store, table, queries, pk, emb, topk, allowed)
-          case "ivfpq-search-filtered" =>
-            graft.store.IvfPq.annTopKFiltered(
-              store, table, queries, pk, emb, topk, allowed)
-          case _ =>
-            graft.store.IvfBin.annTopKFiltered(
-              store, table, queries, pk, emb, topk, allowed)
-        }
-        res.show(topk, truncate = false)
-      case "pq-search" | "ivf-search" | "ivfpq-search" =>
-        import org.apache.spark.sql.functions.col
-        val (table, pk, emb, qid) = (args(2), args(3), args(4), args(5).toLong)
-        val topk = if (args.length > 6) args(6).toInt else 10
-        val nprobe = if (args.length > 7) args(7).toInt else 2
-        val queries = store.read(table).filter(col(pk) === qid)
-          .select(col(pk), col(emb).cast("array<double>").as(emb))
-        val res = cmd match {
-          case "pq-search" => Pq.annTopK(store, table, queries, pk, emb, topk)
-          case "ivf-search" =>
-            Ivf.annTopK(store, table, queries, pk, emb, topk, nprobe = nprobe)
-          case _ =>
-            IvfPq.annTopK(store, table, queries, pk, emb, topk, nprobe = nprobe)
-        }
-        res.show(topk, truncate = false)
       case "tri-index" =>
         val (table, pk, text) = (args(2), args(3), args(4))
         graft.store.Trigram.upsertWithIndex(
@@ -840,7 +707,7 @@ object Cli {
       case "index-retrain" =>
         // index-retrain <store> <famBase> — re-run the recorded
         // buildIndex for a drifted IVF family index (famBase =
-        // <table>_<ivf|ivfpq|ivfsq|ivfbin>); restores the recall
+        // <table>_<family>); restores the recall
         // floor and resets the drift report to tv≈0, growth=1
         val r = graft.store.IvfDrift.retrain(store, args(2))
         println(f"[index-retrain] ${args(2)}: tv=${r.tv}%.3f " +

@@ -217,8 +217,9 @@ private[sql] object GraftProcedures {
           k = args.getLong(3).toInt, slices = args.getLong(4).toInt)
         Seq(row(utf8(t), utf8(fam), s.read(t).count()))
       },
-      "build one index family (trigram, lsh, sq, pq, bin, ivf, ivfpq, " +
-        "ivfsq, ivfbin) over the table's current rows with recorded " +
+      "build one index family (" + ("trigram" +: "lsh" +:
+        graft.store.VectorIndex.families.map(_.name)).mkString(", ") +
+        ") over the table's current rows with recorded " +
         "provenance — every later SQL write refreshes it, Doctor " +
         "checks it, DROP removes it; k = cells for the IVF families, " +
         "slices = PQ sub-spaces (subDim derives from the emb dim)"),

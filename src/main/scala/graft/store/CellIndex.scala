@@ -3,8 +3,8 @@ package graft.store
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Shared maintenance for cell-partitioned index tables ([[Ivf]]'s
-  * vector rows, [[IvfPq]]'s code rows): merge a freshly-assigned
+/** Maintenance of the IVF coarse quantizer's cell-partitioned per-pk
+  * tables ([[VectorIndex.Coarse.Ivf]]): merge a freshly-assigned
   * batch into `idxTable` (Hive-partitioned by `cell`) and its
   * pk → cell `mapTable` using dynamic partition overwrite — only the
   * cells the batch enters, plus the OLD cells of re-upserted pks

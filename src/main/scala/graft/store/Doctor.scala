@@ -82,22 +82,8 @@ object Doctor {
     names.filter(_.endsWith("_lsh")).foreach { idx =>
       issues ++= lsh(store, baseOf(idx, "_lsh"), names)
     }
-    names.filter(_.endsWith("_ivf")).foreach { idx =>
-      val t = baseOf(idx, "_ivf")
-      issues ++= ivf(store, t, names)
-      issues ++= coverage(store, "ivf", t, Ivf.mapName(t))
-    }
-    // "_ivfpq" also ends with "_pq" — route it to its own check, not
-    // the flat-PQ one (whose table names wouldn't resolve)
-    names.filter(n => n.endsWith("_pq") && !n.endsWith("_ivfpq")).foreach { idx =>
-      val t = baseOf(idx, "_pq")
-      issues ++= pq(store, t, names)
-      issues ++= coverage(store, "pq", t, Pq.codesName(t))
-    }
-    names.filter(_.endsWith("_ivfpq")).foreach { idx =>
-      val t = baseOf(idx, "_ivfpq")
-      issues ++= ivfpq(store, t, names)
-      issues ++= coverage(store, "ivfpq", t, IvfPq.codesName(t))
+    names.toSeq.flatMap(VectorIndex.ofPrimary).foreach { case (f, t) =>
+      issues ++= f.check(store, t, names)
     }
     names.filter(_.endsWith("_tri")).foreach { idx =>
       issues ++= trigram(store, baseOf(idx, "_tri"))
@@ -116,28 +102,6 @@ object Doctor {
     }
     names.filter(_.endsWith("_bks")).foreach { idx =>
       issues ++= bottomKSample(store, baseOf(idx, "_bks"))
-    }
-    // "_ivfsq" also ends with "_sq" — route it to its own check
-    names.filter(n => n.endsWith("_sq") && !n.endsWith("_ivfsq")).foreach { idx =>
-      val t = baseOf(idx, "_sq")
-      issues ++= sq(store, t, names)
-      issues ++= coverage(store, "sq", t, Sq.codesName(t))
-    }
-    names.filter(_.endsWith("_ivfsq")).foreach { idx =>
-      val t = baseOf(idx, "_ivfsq")
-      issues ++= ivfsq(store, t, names)
-      issues ++= coverage(store, "ivfsq", t, IvfSq.codesName(t))
-    }
-    // "_ivfbin" also ends with "_bin" — route it to its own check
-    names.filter(n => n.endsWith("_bin") && !n.endsWith("_ivfbin")).foreach { idx =>
-      val t = baseOf(idx, "_bin")
-      issues ++= bin(store, t)
-      issues ++= coverage(store, "bin", t, Bin.codesName(t))
-    }
-    names.filter(_.endsWith("_ivfbin")).foreach { idx =>
-      val t = baseOf(idx, "_ivfbin")
-      issues ++= ivfbin(store, t, names)
-      issues ++= coverage(store, "ivfbin", t, IvfBin.codesName(t))
     }
     names.foreach { t =>
       store.bucketLayoutOf(t).foreach { case (n, pk) =>
@@ -334,35 +298,28 @@ object Doctor {
     * retrain recommendation (one buildIndex re-run — the Kmeans.train
     * path the index was born from — rewrites cells and snapshot).
     */
-  private def centroidDrift(store: TableStore): Seq[Issue] = {
-    val names = store.tableNames.toSet
-    names.toSeq.sorted.filter(_.endsWith("_cents_train")).flatMap { snap =>
-      val cents = snap.stripSuffix("_train")
-      val famBase = cents.stripSuffix("_cents") // <table>_ivf[pq|sq|bin]
-      val map = s"${famBase}_map"
-      IvfDrift.report(store, cents, map).flatMap { r =>
-        val reasons = Seq(
-          if (r.tv > 0.25)
-            Some(f"occupancy shape drifted (TV ${r.tv}%.2f > 0.25)")
-          else None,
-          if (r.growth > 2.0 && r.nTrain == 0L)
-            // growth is +Infinity here — "grew Infinityx" reads as a
-            // bug, and the real story is an index trained before any
-            // vectors landed
-            Some(s"index trained on an EMPTY corpus (now ${r.nNow} " +
-              "vectors) — the centroids are meaningless")
-          else if (r.growth > 2.0)
-            Some(f"corpus grew ${r.growth}%.1fx past the training snapshot " +
-              f"(${r.nTrain} -> ${r.nNow} vectors)")
-          else None).flatten
-        if (reasons.isEmpty) None
-        else Some(Issue("ivf-drift", famBase,
-          reasons.mkString("; ") + " — probe recall decays silently; " +
-            "retrain the coarse quantizer (re-run buildIndex / kmeans " +
-            "training) to restore the recall floor"))
-      }
+  private def centroidDrift(store: TableStore): Seq[Issue] =
+    VectorIndex.driftReports(store).flatMap { case (famBase, r) =>
+      val reasons = Seq(
+        if (r.tv > 0.25)
+          Some(f"occupancy shape drifted (TV ${r.tv}%.2f > 0.25)")
+        else None,
+        if (r.growth > 2.0 && r.nTrain == 0L)
+          // growth is +Infinity here — "grew Infinityx" reads as a
+          // bug, and the real story is an index trained before any
+          // vectors landed
+          Some(s"index trained on an EMPTY corpus (now ${r.nNow} " +
+            "vectors) — the centroids are meaningless")
+        else if (r.growth > 2.0)
+          Some(f"corpus grew ${r.growth}%.1fx past the training snapshot " +
+            f"(${r.nTrain} -> ${r.nNow} vectors)")
+        else None).flatten
+      if (reasons.isEmpty) None
+      else Some(Issue("ivf-drift", famBase,
+        reasons.mkString("; ") + " — probe recall decays silently; " +
+          "retrain the coarse quantizer (re-run buildIndex / kmeans " +
+          "training) to restore the recall floor"))
     }
-  }
 
   /** Execute every [[suggest]] finding — closing the self-driving
     * maintenance loop: `check` names what is WRONG, `suggest` what is
@@ -468,8 +425,7 @@ object Doctor {
     centroidDrift(store).flatMap { issue =>
       val famBase = issue.table
       IvfDrift.trainingMeta(store, famBase).map { _ =>
-        val before = IvfDrift
-          .report(store, s"${famBase}_cents", s"${famBase}_map").get
+        val before = VectorIndex.driftReport(store, famBase).get
         (famBase, before, IvfDrift.retrain(store, famBase))
       }
     }
@@ -746,210 +702,6 @@ object Doctor {
     out.result()
   }
 
-  /** Guard for the round-8 code-layout migration: a code table whose
-    * `codes` column is still the legacy array<int> form (written by a
-    * pre-blob build) must be NAMED as out of contract — running the
-    * blob-shaped length/score checks against it would crash the whole
-    * doctor pass at analysis time instead of diagnosing the table.
-    */
-  private def legacyCodes(
-      store: TableStore, component: String, table: String,
-      codesTable: String): Option[Issue] = {
-    import org.apache.spark.sql.types.BinaryType
-    val t = store.read(codesTable).schema("codes").dataType
-    if (t == BinaryType) None
-    else Some(Issue(component, table,
-      s"codes column is $t, not the binary blob layout — legacy index; " +
-        "rebuild with buildIndex"))
-  }
-
-  private def sq(
-      store: TableStore, table: String, names: Set[String]): Seq[Issue] = {
-    val out = Seq.newBuilder[Issue]
-    if (!names.contains(Sq.scalesName(table))) {
-      out += Issue("sq", table,
-        "per-dim scales missing: stored int8 codes are uninterpretable")
-      return out.result()
-    }
-    val dims = store.read(Sq.scalesName(table)).count()
-    if (dims == 0L) {
-      out += Issue("sq", table,
-        "scales table is empty: torn buildIndex — stored codes are " +
-          "uninterpretable (rebuild)")
-      return out.result()
-    }
-    val legacySq = legacyCodes(store, "sq", table, Sq.codesName(table))
-    if (legacySq.nonEmpty) {
-      out ++= legacySq
-      return out.result()
-    }
-    val codes = store.read(Sq.codesName(table))
-    // every code blob must span the trained dimension count (one
-    // unsigned byte per dim — the byte domain IS [0, 255], so only
-    // the length can tear) with a non-negative dequantized norm —
-    // anything else is a torn encode or an out-of-band edit, and
-    // search would score it silently wrong
-    val bad = codes.filter(length(col("codes")) =!= dims.toInt ||
-      col("dnorm") < 0.0).count()
-    if (bad > 0)
-      out += Issue("sq", table,
-        s"$bad code rows don't fit the trained $dims-byte " +
-          "layout — scales and codes disagree (rebuild the code table)")
-    out.result()
-  }
-
-  /** Count-parity of a one-row-per-vector artifact against its base
-    * table — the COVERAGE invariant every upsertWithCodes/-Cells path
-    * maintains (base row and artifact row land in the same call): an
-    * artifact missing rows makes searches silently SKIP those vectors
-    * (absent, not ranked — the worst failure mode, invisible to any
-    * per-row check of the artifact itself), and extra rows rank
-    * ghosts deleted from the base. Skipped when the base table
-    * doesn't exist in this store (an index built standalone over an
-    * external corpus has no in-store base to cover).
-    */
-  private def coverage(
-      store: TableStore, component: String, table: String,
-      artifact: String): Seq[Issue] =
-    (store.readIfExists(table), store.readIfExists(artifact)) match {
-      case (Some(base), Some(art)) =>
-        val nb = base.count()
-        val na = art.count()
-        if (na != nb)
-          Seq(Issue(component, table,
-            s"$artifact covers $na of $nb base rows — searches " +
-              "silently skip missing vectors and rank deleted ones " +
-              "(ghost rows: heal-ghosts / delete-cascade; missing " +
-              "rows: re-upsert the divergent pks or rebuild)"))
-        else Nil
-      case _ => Nil
-    }
-
-  /** Sign-blob width uniformity — the [[Bin]]/[[IvfBin]] torn-write
-    * invariant: with no trained state, the only thing a torn encode
-    * or out-of-band edit can corrupt is the blob width itself. Every
-    * blob in one index must pack the same dimension count — a NULL or
-    * stray-width blob means HammingFold would (rightly) fail loudly
-    * mid-search on it.
-    */
-  private def blobWidths(
-      store: TableStore, component: String, table: String,
-      codesTable: String): Seq[Issue] = {
-    val out = Seq.newBuilder[Issue]
-    // the legacyCodes contract: a table that merely MATCHES the name
-    // suffix but doesn't carry the blob layout (a user's own
-    // "recycle_bin", an out-of-band array<int> rewrite) must be
-    // NAMED, not crash the whole doctor pass at analysis time
-    val schema = store.read(codesTable).schema
-    schema.find(_.name == "bits") match {
-      case None =>
-        out += Issue(component, table,
-          s"$codesTable has no `bits` column — not a sign-blob index " +
-            "layout (rename the table or rebuild the index)")
-        return out.result()
-      case Some(f) if f.dataType != org.apache.spark.sql.types.BinaryType =>
-        out += Issue(component, table,
-          s"bits column is ${f.dataType}, not the binary blob layout — " +
-            "legacy or out-of-band table; rebuild with buildIndex")
-        return out.result()
-      case _ => ()
-    }
-    val widths = store.read(codesTable)
-      .select(length(col("bits")).as("w"))
-      .groupBy(col("w")).count()
-      .orderBy(desc("count"), col("w"))
-      .collect() // ≤ distinct-widths rows — 1 on a healthy index
-    if (widths.exists(_.isNullAt(0)))
-      out += Issue(component, table,
-        "NULL sign blobs present — torn encode or out-of-band edit " +
-          "(re-upsert the affected pks)")
-    val real = widths.filter(!_.isNullAt(0))
-    if (real.length > 1) {
-      val dominant = real.head.getInt(0)
-      val stray = real.tail.map(r => s"${r.getInt(0)}B×${r.getLong(1)}").mkString(", ")
-      out += Issue(component, table,
-        s"mixed blob widths (dominant ${dominant}B; stray $stray) — " +
-          "the index mixes vectors of different dims; rebuild")
-    }
-    out.result()
-  }
-
-  private def bin(store: TableStore, table: String): Seq[Issue] =
-    blobWidths(store, "bin", table, Bin.codesName(table))
-
-  private def ivfbin(
-      store: TableStore, table: String, names: Set[String]): Seq[Issue] = {
-    val out = Seq.newBuilder[Issue]
-    if (!names.contains(IvfBin.centsName(table)))
-      out += Issue("ivfbin", table,
-        "centroids missing: assignment and probing are impossible")
-    out ++= blobWidths(store, "ivfbin", table, IvfBin.codesName(table))
-    // pk → cell map must mirror the cell partitions exactly, same
-    // invariant as the flat IVF index
-    val idx = store.read(IvfBin.codesName(table))
-      .select(col("pk"), col("cell").cast("long"))
-    store.readIfExists(IvfBin.mapName(table)) match {
-      case None =>
-        out += Issue("ivfbin", table, "map table missing")
-      case Some(m) =>
-        val map = m.select(col("pk"), col("cell").cast("long"))
-        val onlyIdx = idx.join(map, Seq("pk", "cell"), "left_anti").count()
-        val onlyMap = map.join(idx, Seq("pk", "cell"), "left_anti").count()
-        if (onlyIdx > 0 || onlyMap > 0)
-          out += Issue("ivfbin", table,
-            s"map out of sync: $onlyIdx index-only / $onlyMap map-only " +
-              "(pk, cell) rows — moved vectors would leave stale cells")
-    }
-    out.result()
-  }
-
-  private def ivfsq(
-      store: TableStore, table: String, names: Set[String]): Seq[Issue] = {
-    val out = Seq.newBuilder[Issue]
-    if (!names.contains(IvfSq.centsName(table)))
-      out += Issue("ivfsq", table,
-        "centroids missing: assignment, probing, and residuals are impossible")
-    if (!names.contains(IvfSq.scalesName(table))) {
-      out += Issue("ivfsq", table,
-        "residual scales missing: stored int8 codes are uninterpretable")
-      return out.result()
-    }
-    val dims = store.read(IvfSq.scalesName(table)).count()
-    if (dims == 0L) {
-      out += Issue("ivfsq", table,
-        "residual scales table is empty: torn buildIndex (rebuild)")
-      return out.result()
-    }
-    val legacyIvfSq = legacyCodes(store, "ivfsq", table, IvfSq.codesName(table))
-    if (legacyIvfSq.nonEmpty) {
-      out ++= legacyIvfSq
-      return out.result()
-    }
-    val codes = store.read(IvfSq.codesName(table))
-    val bad = codes.filter(length(col("codes")) =!= dims.toInt ||
-      col("rnorm") < 0.0).count()
-    if (bad > 0)
-      out += Issue("ivfsq", table,
-        s"$bad code rows don't fit the trained $dims-byte " +
-          "layout — scales and codes disagree (rebuild the code table)")
-    // pk → cell map must mirror the cell partitions exactly (the
-    // CellIndex invariant shared with ivf/ivfpq)
-    val idx = codes.select(col("pk"), col("cell").cast("long"))
-    store.readIfExists(IvfSq.mapName(table)) match {
-      case None =>
-        out += Issue("ivfsq", table, "map table missing")
-      case Some(m) =>
-        val map = m.select(col("pk"), col("cell").cast("long"))
-        val onlyIdx = idx.join(map, Seq("pk", "cell"), "left_anti").count()
-        val onlyMap = map.join(idx, Seq("pk", "cell"), "left_anti").count()
-        if (onlyIdx > 0 || onlyMap > 0)
-          out += Issue("ivfsq", table,
-            s"map out of sync: $onlyIdx index-only / $onlyMap map-only " +
-              "(pk, cell) rows — moved vectors would leave stale cells")
-    }
-    out.result()
-  }
-
   /** StreamQuantiles' bottom-k sample: every row's hash must equal
     * the salted-md5 recompute of its tie key (the sample is a pure
     * function of the data — a drifted hash silently biases every
@@ -1102,111 +854,6 @@ object Doctor {
             s"map out of sync: $onlyIdx index-only / $onlyMap map-only " +
               "(pk, bucket) rows — re-upserts would leave stale bands")
     }
-    out.result()
-  }
-
-  private def ivf(store: TableStore, table: String, names: Set[String]): Seq[Issue] = {
-    val out = Seq.newBuilder[Issue]
-    if (!names.contains(Ivf.centsName(table)))
-      out += Issue("ivf", table,
-        "centroids missing: assignment and probing are impossible")
-    val idx = store.read(Ivf.indexName(table))
-      .select(col("pk"), col("cell").cast("long"))
-    store.readIfExists(Ivf.mapName(table)) match {
-      case None =>
-        out += Issue("ivf", table, "map table missing")
-      case Some(m) =>
-        val map = m.select(col("pk"), col("cell").cast("long"))
-        val onlyIdx = idx.join(map, Seq("pk", "cell"), "left_anti").count()
-        val onlyMap = map.join(idx, Seq("pk", "cell"), "left_anti").count()
-        if (onlyIdx > 0 || onlyMap > 0)
-          out += Issue("ivf", table,
-            s"map out of sync: $onlyIdx index-only / $onlyMap map-only " +
-              "(pk, cell) rows — moved vectors would leave stale cells")
-    }
-    out.result()
-  }
-
-  private def ivfpq(store: TableStore, table: String, names: Set[String]): Seq[Issue] = {
-    val out = Seq.newBuilder[Issue]
-    if (!names.contains(IvfPq.centsName(table)))
-      out += Issue("ivfpq", table,
-        "centroids missing: assignment, probing, and residuals are impossible")
-    if (!names.contains(IvfPq.booksName(table))) {
-      out += Issue("ivfpq", table,
-        "residual codebooks missing: stored codes are uninterpretable")
-      return out.result()
-    }
-    val legacyIvfPq = legacyCodes(store, "ivfpq", table, IvfPq.codesName(table))
-    if (legacyIvfPq.nonEmpty) {
-      out ++= legacyIvfPq
-      return out.result()
-    }
-    val codes = store.read(IvfPq.codesName(table))
-    // every stored code vector must span the trained subspace count;
-    // max(s) over an EMPTY books table aggregates to null — a torn
-    // buildIndex — which must be reported, not NPE the whole check
-    val maxS = store.read(IvfPq.booksName(table)).agg(max(col("s"))).head
-    if (maxS.isNullAt(0)) {
-      out += Issue("ivfpq", table,
-        "residual codebooks table is empty: torn buildIndex — stored " +
-          "codes are uninterpretable (rebuild)")
-      return out.result()
-    }
-    val slices = maxS.getInt(0) + 1
-    val bad = codes.filter(length(col("codes")) =!= slices).count()
-    if (bad > 0)
-      out += Issue("ivfpq", table,
-        s"$bad code blobs don't span the trained $slices subspaces — " +
-          "books and codes disagree (rebuild the code table)")
-    // pk → cell map must mirror the cell partitions exactly, same
-    // invariant as the flat IVF index
-    val idx = codes.select(col("pk"), col("cell").cast("long"))
-    store.readIfExists(IvfPq.mapName(table)) match {
-      case None =>
-        out += Issue("ivfpq", table, "map table missing")
-      case Some(m) =>
-        val map = m.select(col("pk"), col("cell").cast("long"))
-        val onlyIdx = idx.join(map, Seq("pk", "cell"), "left_anti").count()
-        val onlyMap = map.join(idx, Seq("pk", "cell"), "left_anti").count()
-        if (onlyIdx > 0 || onlyMap > 0)
-          out += Issue("ivfpq", table,
-            s"map out of sync: $onlyIdx index-only / $onlyMap map-only " +
-              "(pk, cell) rows — moved vectors would leave stale cells")
-    }
-    out.result()
-  }
-
-  private def pq(store: TableStore, table: String, names: Set[String]): Seq[Issue] = {
-    val out = Seq.newBuilder[Issue]
-    if (!names.contains(Pq.booksName(table))) {
-      out += Issue("pq", table,
-        "codebooks missing: stored codes are uninterpretable")
-      return out.result()
-    }
-    // every stored code vector must span exactly the trained subspace
-    // count — a torn encode (or books retrained to a different shape
-    // without re-encoding) breaks ADC silently; an EMPTY books table
-    // (max(s) = null) is itself a torn-build finding, not an NPE
-    val maxS = store.read(Pq.booksName(table)).agg(max(col("s"))).head
-    if (maxS.isNullAt(0)) {
-      out += Issue("pq", table,
-        "codebooks table is empty: torn buildIndex — stored codes are " +
-          "uninterpretable (rebuild)")
-      return out.result()
-    }
-    val slices = maxS.getInt(0) + 1
-    val legacyPq = legacyCodes(store, "pq", table, Pq.codesName(table))
-    if (legacyPq.nonEmpty) {
-      out ++= legacyPq
-      return out.result()
-    }
-    val bad = store.read(Pq.codesName(table))
-      .filter(length(col("codes")) =!= slices).count()
-    if (bad > 0)
-      out += Issue("pq", table,
-        s"$bad code blobs don't span the trained $slices subspaces — " +
-          "books and codes disagree (rebuild the code table)")
     out.result()
   }
 }

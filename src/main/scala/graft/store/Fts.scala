@@ -119,6 +119,12 @@ object Fts {
     * computed expression (see indexRows). The index-lambda `filter`
     * keeps this [size] for an empty token array, where a
     * `sequence(0, -1)` would instead yield the descending [0, -1].
+    *
+    * The predicate relies on `Or` short-circuiting: at i = 0 the left
+    * side is true, so `element_at(pairs, 0)` — an invalid index that
+    * throws INVALID_ARRAY_INDEX under ANSI — is never evaluated. An
+    * expression rewrite that reorders the disjuncts or evaluates both
+    * sides eagerly would break every non-empty document.
     */
   private def runBounds(pairs: Column): Column =
     concat(

@@ -110,49 +110,15 @@ object IndexMaintain {
         case _ => skip += "lsh"
       }
 
-    withMeta("sq", Sq.codesName(table),
-      Seq(Sq.codesName(table)), Seq("emb"))(m =>
-      (s, t, b, pk) => Sq.refreshCodes(s, t, b, pk, m("emb")))
-    withMeta("pq", Pq.codesName(table),
-      Seq(Pq.codesName(table)), Seq("emb", "slices", "subDim"))(m =>
-      (s, t, b, pk) => Pq.refreshCodes(s, t, b, pk, m("emb"),
-        m("slices").toInt, m("subDim").toInt))
-    withMeta("bin", Bin.codesName(table),
-      Seq(Bin.codesName(table)), Seq("emb"))(m =>
-      (s, t, b, pk) => Bin.refreshCodes(s, t, b, pk, m("emb")))
-    withMeta("ivf", Ivf.indexName(table),
-      Seq(Ivf.indexName(table), Ivf.mapName(table)), Seq("emb"))(m =>
-      (s, t, b, pk) => Ivf.refreshCells(s, t, b, pk, m("emb")))
-    withMeta("ivfpq", IvfPq.codesName(table),
-      Seq(IvfPq.codesName(table), IvfPq.mapName(table)),
-      Seq("emb", "slices", "subDim"))(m =>
-      (s, t, b, pk) => IvfPq.refreshCodes(s, t, b, pk, m("emb"),
-        m("slices").toInt, m("subDim").toInt))
-    withMeta("ivfsq", IvfSq.codesName(table),
-      Seq(IvfSq.codesName(table), IvfSq.mapName(table)), Seq("emb"))(m =>
-      (s, t, b, pk) => IvfSq.refreshCodes(s, t, b, pk, m("emb")))
-    withMeta("ivfbin", IvfBin.codesName(table),
-      Seq(IvfBin.codesName(table), IvfBin.mapName(table)), Seq("emb"))(m =>
-      (s, t, b, pk) => IvfBin.refreshCodes(s, t, b, pk, m("emb")))
+    VectorIndex.families.foreach { f =>
+      withMeta(f.name, f.primaryName(table), f.perPkTables(table),
+        f.refreshKeys)(m =>
+        (s, t, b, pk) => f.withMeta(m).refresh(s, t, b, pk, m("emb")))
+    }
 
     (out.result(), skip.result())
   }
 
-  /** Upsert `batch` into `table` AND refresh every refreshable index
-    * for those rows — ONE epoch when the base and all index
-    * write-tables are governed (no-op wrapping inside an already-open
-    * transaction, which then provides the atomicity). Composite-pk
-    * tables cannot carry per-pk indexes: plain upsert. Returns
-    * (refreshed, skipped) family names.
-    *
-    * Ordering/healing: the batch is materialized first (severing any
-    * plan dependency on base files an un-governed bucketed upsert
-    * rewrites in place), then base, then indexes — under mixed
-    * governance a crash between the two leaves indexes STALE for
-    * already-live rows, the direction Doctor detects and a re-upsert
-    * heals (contrast deletes, where [[Retract.cascade]] must own the
-    * ordering because an upsert can never retract).
-    */
   /** Heal coverage divergence of `table`'s per-pk indexes from
     * recorded provenance: GHOST pks (indexed rows whose base row is
     * gone) retract everywhere via [[Retract.healGhosts]]; MISSING
@@ -174,12 +140,8 @@ object IndexMaintain {
       case Some((_, Seq(pk))) if Retract.indexTablesOf(store, table).nonEmpty =>
         val ghosts = Retract.healGhosts(store, table, pk)
           .map { case (idx, n) => s"ghosts:$idx" -> n }
-        val covers = Map(
-          "sq" -> Sq.codesName(table), "pq" -> Pq.codesName(table),
-          "bin" -> Bin.codesName(table), "ivf" -> Ivf.mapName(table),
-          "ivfpq" -> IvfPq.codesName(table),
-          "ivfsq" -> IvfSq.codesName(table),
-          "ivfbin" -> IvfBin.codesName(table))
+        val covers = VectorIndex.families.map(f =>
+          f.name -> f.coverName(table)).toMap
         val (fams, _) = resolve(store, table, pk)
         val base = store.read(table)
         val refreshed = fams.filter(f => covers.contains(f.name)).flatMap { f =>
@@ -312,34 +274,28 @@ object IndexMaintain {
       .drop(store.BucketCol)
     require(rows.columns.contains(column),
       s"column '$column' is not in $table (${rows.columns.mkString(", ")})")
-    def dim: Int = rows.select(
-      org.apache.spark.sql.functions.size(
-        org.apache.spark.sql.functions.col(column))).head.getInt(0)
     family match {
       case "trigram" => Trigram.upsertWithIndex(store, table, rows, pk, column)
       case "lsh" => Lsh.buildIndex(store, table, rows, pk, column)
-      case "sq" => Sq.buildIndex(store, table, rows, pk, column)
-      case "bin" => Bin.buildIndex(store, table, rows, pk, column)
-      case "ivf" => Ivf.buildIndex(store, table, rows, pk, column, k = k)
-      case "ivfsq" =>
-        IvfSq.buildIndex(store, table, rows, pk, column, kCells = k)
-      case "ivfbin" =>
-        IvfBin.buildIndex(store, table, rows, pk, column, kCells = k)
-      case "pq" =>
-        val d = dim
-        require(slices > 0 && d % slices == 0,
-          s"emb dim $d is not divisible by slices=$slices")
-        Pq.buildIndex(store, table, rows, pk, column,
-          slices = slices, subDim = d / slices)
-      case "ivfpq" =>
-        val d = dim
-        require(slices > 0 && d % slices == 0,
-          s"emb dim $d is not divisible by slices=$slices")
-        IvfPq.buildIndex(store, table, rows, pk, column,
-          kCells = k, slices = slices, subDim = d / slices)
-      case other => throw new IllegalArgumentException(
-        s"unknown index family '$other' — known: trigram, lsh, sq, pq, " +
-          "bin, ivf, ivfpq, ivfsq, ivfbin (FTS builds through build_fts)")
+      case other =>
+        val f = VectorIndex.byName(other).getOrElse(
+          throw new IllegalArgumentException(
+            s"unknown index family '$other' — known: " +
+              ("trigram" +: "lsh" +: VectorIndex.families.map(_.name))
+                .mkString(", ") + " (FTS builds through build_fts)"))
+        // k = cells for the IVF families; slices = PQ sub-spaces, the
+        // sub-space width derived from the emb dim
+        val pq = f.codec match {
+          case _: VectorIndex.Codec.Pq =>
+            val d = rows.select(org.apache.spark.sql.functions.size(
+              org.apache.spark.sql.functions.col(column))).head.getInt(0)
+            require(slices > 0 && d % slices == 0,
+              s"emb dim $d is not divisible by slices=$slices")
+            Seq("slices" -> slices, "subDim" -> d / slices)
+          case _ => Nil
+        }
+        f.tuned((f.cellsKey -> k) +: pq: _*)
+          .build(store, table, rows, pk, column)
     }
     if (store.governed.contains(table))
       store.ensureGoverned(Retract.artifactTablesOf(store, table))
@@ -361,6 +317,21 @@ object IndexMaintain {
     fts ++ meta
   }
 
+  /** Upsert `batch` into `table` AND refresh every refreshable index
+    * for those rows — ONE epoch when the base and all index
+    * write-tables are governed (no-op wrapping inside an already-open
+    * transaction, which then provides the atomicity). Composite-pk
+    * tables cannot carry per-pk indexes: plain upsert. Returns
+    * (refreshed, skipped) family names.
+    *
+    * Ordering/healing: the batch is materialized first (severing any
+    * plan dependency on base files an un-governed bucketed upsert
+    * rewrites in place), then base, then indexes — under mixed
+    * governance a crash between the two leaves indexes STALE for
+    * already-live rows, the direction Doctor detects and a re-upsert
+    * heals (contrast deletes, where [[Retract.cascade]] must own the
+    * ordering because an upsert can never retract).
+    */
   def upsertMaintained(
       store: TableStore, table: String, batch: DataFrame,
       pk: Seq[String]): (Seq[String], Seq[String]) = {

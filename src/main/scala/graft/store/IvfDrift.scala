@@ -83,24 +83,13 @@ object IvfDrift {
         s"no training provenance recorded for $famBase — the index " +
           "predates provenance capture; re-run its buildIndex manually"))
     val (table, pk, emb) = (meta("table"), meta("pk"), meta("emb"))
-    def p(k: String, d: Int) = meta.get(k).map(_.toInt).getOrElse(d)
-    val vecs = store.read(table)
-      .select(col(pk), col(emb).cast("array<double>").as(emb))
-    meta("family") match {
-      case "ivf" => Ivf.buildIndex(store, table, vecs, pk, emb,
-        k = p("k", 16), iters = p("iters", 3))
-      case "ivfpq" => IvfPq.buildIndex(store, table, vecs, pk, emb,
-        kCells = p("kCells", 16), slices = p("slices", 8),
-        subDim = p("subDim", 8), kCodes = p("kCodes", 16),
-        iters = p("iters", 3))
-      case "ivfsq" => IvfSq.buildIndex(store, table, vecs, pk, emb,
-        kCells = p("kCells", 16), iters = p("iters", 3))
-      case "ivfbin" => IvfBin.buildIndex(store, table, vecs, pk, emb,
-        kCells = p("kCells", 16), iters = p("iters", 3))
-      case other => throw new IllegalArgumentException(
-        s"unknown IVF family in $famBase provenance: $other")
-    }
-    report(store, s"${famBase}_cents", s"${famBase}_map").getOrElse(
+    val index = VectorIndex.byName(meta("family"))
+      .filter(_.coarse.isInstanceOf[VectorIndex.Coarse.Ivf])
+      .getOrElse(throw new IllegalArgumentException(
+        s"unknown IVF family in $famBase provenance: ${meta("family")}"))
+    index.withMeta(meta).build(store, table, store.read(table)
+      .select(col(pk), col(emb).cast("array<double>").as(emb)), pk, emb)
+    VectorIndex.driftReport(store, famBase).getOrElse(
       throw new IllegalStateException(
         s"$famBase retrained but no drift report resolves — " +
           "snapshot or map missing after buildIndex"))

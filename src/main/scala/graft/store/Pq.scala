@@ -19,10 +19,10 @@ import org.apache.spark.sql.functions._
   * read per candidate instead of 256 — the genuine 100 TB
   * read-reduction shape.
   *
-  * Two tables ride the [[TableStore]]:
-  *  - `<table>_pq_books` (s, cent_id, ce): the per-subspace codebooks,
-  *    written once at training time (small — slices × k rows);
-  *  - `<table>_pq` (pk, codes): one row per vector — codes as a
+  * Two tables ride the [[TableStore]] ([[VectorIndex]] names them):
+  *  - the codebooks (s, cent_id, ce), one per subspace, written once
+  *    at training time (small — slices × k rows);
+  *  - the code table (pk, codes): one row per vector — codes as a
   *    BinaryType blob, one unsigned byte per subspace (1 B/slice in
   *    Tungsten rows and on disk, the genuine 32× at 8×8/16) —
   *    maintained with the same upsert-batch pattern as the FTS
@@ -33,11 +33,14 @@ import org.apache.spark.sql.functions._
   * (exact, commutative sums on any partitioning — same convention as
   * the k-means step in queries/SimilarityOps); argmin ties break on
   * the lower cent_id; LUT distances quantize to longs before summing.
+  *
+  * This object is the product-quantizer math [[VectorIndex.Codec.Pq]]
+  * runs on, plus the flat `pq` family's preset verbs.
   */
 object Pq {
 
-  def codesName(table: String): String = s"${table}_pq"
-  def booksName(table: String): String = s"${table}_pq_books"
+  def codesName(table: String): String = VectorIndex.pq.primaryName(table)
+  def booksName(table: String): String = VectorIndex.pq.paramsName(table).get
 
   /** Squared L2 between two equal-length vector columns, as a
     * sequential left-fold (bit-exact regardless of partitioning).
@@ -179,108 +182,38 @@ object Pq {
       .select(col("pk").as("query_id"), col("s"), col("cent_id").as("code"),
         floor(l2sq(col("sv"), col("ce")) * 1e6).cast("long").as("qd"))
 
-  /** Train-and-persist: write `<table>_pq_books` (trained from the
-    * batch corpus) and seed `<table>_pq` with the batch's codes.
+  private def index(slices: Int, subDim: Int, k: Int = 16, iters: Int = 3) =
+    VectorIndex.pq.tuned("slices" -> slices, "subDim" -> subDim,
+      "kCodes" -> k, "iters" -> iters)
+
+  /** Train-and-persist: write the codebooks (trained from the batch
+    * corpus) and seed the code table with the batch's codes.
     */
   def buildIndex(
       store: TableStore, table: String, emb: DataFrame,
       pkCol: String, embCol: String,
-      slices: Int = 8, subDim: Int = 8, k: Int = 16, iters: Int = 3): Unit = {
-    val books = trainBooks(emb, pkCol, embCol, slices, subDim, k, iters)
-    store.overwrite(booksName(table), books)
-    upsertWithCodes(store, table, emb, pkCol, embCol, slices, subDim)
-  }
+      slices: Int = 8, subDim: Int = 8, k: Int = 16, iters: Int = 3): Unit =
+    index(slices, subDim, k, iters).build(store, table, emb, pkCol, embCol)
 
-  /** Upsert embedding rows AND their PQ codes: the batch is encoded
-    * against the persisted books (O(batch) — the corpus is never
-    * re-encoded) and upserted into `<table>_pq` keyed by pk, then the
-    * base table upserts as usual. Requires `buildIndex` (or a manual
-    * books write) first.
-    */
   def upsertWithCodes(
       store: TableStore, table: String, batch: DataFrame,
       pkCol: String, embCol: String,
-      slices: Int = 8, subDim: Int = 8): Unit = {
-    refreshCodes(store, table, batch, pkCol, embCol, slices, subDim)
-    store.upsert(table, batch, Seq(pkCol))
-  }
+      slices: Int = 8, subDim: Int = 8): Unit =
+    index(slices, subDim).upsert(store, table, batch, pkCol, embCol)
 
-  /** The codes half of [[upsertWithCodes]] — no base write (the SQL
-    * DML maintenance seam, [[IndexMaintain]]); records provenance.
-    */
-  private[store] def refreshCodes(
-      store: TableStore, table: String, batch: DataFrame,
-      pkCol: String, embCol: String,
-      slices: Int = 8, subDim: Int = 8): Unit = {
-    IndexMaintain.recordIfChanged(store, codesName(table), Map(
-      "table" -> table, "family" -> "pq", "pk" -> pkCol, "emb" -> embCol,
-      "slices" -> slices.toString, "subDim" -> subDim.toString))
-    val books = store.read(booksName(table))
-    val fresh = encode(batch, books, pkCol, embCol, slices, subDim)
-    store.upsert(codesName(table), fresh, Seq("pk"))
-  }
-
-  /** ADC top-k over the PERSISTED code table: the per-query LUT from
-    * the stored books flattens to one row-major array<long> (slices ×
-    * k entries, broadcast), and each candidate's distance is ONE
-    * native [[graft.functions.AdcDist]] fold of its code blob — a
-    * map-only scan, no per-slice row blowup, no aggregate exchange on
-    * (query, cand); the only shuffle left is the WindowGroupLimit
-    * top-k's. Distances are bit-identical to the former explode/join/
-    * groupBy form (same quantized longs, long addition commutes). The
-    * corpus embeddings are never read — the scan side is 1 code blob
-    * per vector.
+  /** ADC top-k over the PERSISTED code table: (query_id, rnk, cand_id,
+    * adist) — see [[VectorIndex.Codec.Pq]].
     */
   def annTopK(
       store: TableStore, table: String, queries: DataFrame,
       pkCol: String, embCol: String, k: Int,
       slices: Int = 8, subDim: Int = 8): DataFrame =
-    annSearch(store, table, queries, pkCol, embCol, k, slices, subDim, None)
+    index(slices, subDim).annTopK(store, table, queries, pkCol, embCol, k)
 
-  /** Filtered ADC top-k: candidates restricted to the pks in
-    * `allowed` (one column), semi-joined onto the code scan before
-    * the ADC fold — the pre-filter design shared across the served
-    * family (see [[Sq.annTopKFiltered]]): selectivity-proportional
-    * cost, k results whenever k matches exist, codebooks untouched
-    * (an index property can never depend on a predicate).
-    */
   def annTopKFiltered(
       store: TableStore, table: String, queries: DataFrame,
       pkCol: String, embCol: String, k: Int, allowed: DataFrame,
       slices: Int = 8, subDim: Int = 8): DataFrame =
-    annSearch(store, table, queries, pkCol, embCol, k, slices, subDim,
-      Some(allowed))
-
-  private def annSearch(
-      store: TableStore, table: String, queries: DataFrame,
-      pkCol: String, embCol: String, k: Int,
-      slices: Int, subDim: Int, allowed: Option[DataFrame]): DataFrame = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    val books = store.read(booksName(table))
-    // one (query_id, lut_arr) row per query: qd sorted by (s, code) is
-    // exactly the s·k + code row-major order AdcDist indexes
-    val ql = lut(queries, books, pkCol, embCol, slices, subDim)
-      .groupBy(col("query_id"))
-      .agg(transform(
-        array_sort(collect_list(struct(col("s"), col("code"), col("qd")))),
-        x => x.getField("qd")).as("lut_arr"))
-    val scan0 = store.read(codesName(table))
-      .select(col("pk").as("cand_id"), col("codes"))
-    val scan = allowed.fold(scan0)(
-      AnnFilter.semiJoinAllowed(scan0, _, "cand_id"))
-    scan
-      .crossJoin(broadcast(ql))
-      .select(col("query_id"), col("cand_id"),
-        graft.functions.SliceDists.adcDist(spark, col("codes"), col("lut_arr"))
-          .as("adist"))
-      // a NULL adist is a degenerate blob the aggregate form would
-      // never have produced a row for — absent, not ranked
-      .filter(col("adist").isNotNull)
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(col("adist"), col("cand_id"))).cast("long"))
-      .filter(col("rnk") <= k)
-      .select(col("query_id"), col("rnk"), col("cand_id"), col("adist"))
-      .orderBy(col("query_id"), col("rnk"))
-  }
+    index(slices, subDim).annTopKFiltered(
+      store, table, queries, pkCol, embCol, k, allowed)
 }

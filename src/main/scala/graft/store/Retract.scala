@@ -33,18 +33,8 @@ object Retract {
   private def registry(table: String): Seq[(String, Seq[String])] = Seq(
     Trigram.indexName(table) -> Nil,
     Lsh.indexName(table) -> Seq("band"),
-    Lsh.mapName(table) -> Nil,
-    Sq.codesName(table) -> Nil,
-    Bin.codesName(table) -> Nil,
-    Pq.codesName(table) -> Nil,
-    Ivf.indexName(table) -> Nil,
-    Ivf.mapName(table) -> Nil,
-    IvfPq.codesName(table) -> Nil,
-    IvfPq.mapName(table) -> Nil,
-    IvfSq.codesName(table) -> Nil,
-    IvfSq.mapName(table) -> Nil,
-    IvfBin.codesName(table) -> Nil,
-    IvfBin.mapName(table) -> Nil)
+    Lsh.mapName(table) -> Nil) ++
+    VectorIndex.families.flatMap(_.perPkTables(table)).map(_ -> Nil)
 
   /** Every maintained per-pk index table of `table` that EXISTS in the
     * store right now (FTS postings + the trigram/LSH/ANN registry) —
@@ -59,20 +49,15 @@ object Retract {
   /** Model-PARAMETER tables per family — what [[cascade]] deliberately
     * leaves alive (they parameterize the encoding, not the corpus) but
     * a DROP must take: FTS's stats/epoch rows, LSH's params, the
-    * centroids/codebooks/scales. Keep this next to [[registry]]: a new
-    * family adds its per-pk tables THERE and its parameter tables
-    * HERE, and every consumer (cascade, ghost heal, the DROP
-    * inventory) stays complete.
+    * centroids/codebooks/scales. The vector families' entries here and
+    * in [[registry]] come from [[VectorIndex.families]], so every
+    * consumer (cascade, ghost heal, the DROP inventory) stays complete
+    * when a family is added there.
     */
   private def paramsRegistry(table: String): Seq[String] = Seq(
     Fts.statsName(table), Fts.epochName(table),
-    Lsh.paramsName(table),
-    Sq.scalesName(table),
-    Pq.booksName(table),
-    Ivf.centsName(table),
-    IvfPq.centsName(table), IvfPq.booksName(table),
-    IvfSq.centsName(table), IvfSq.scalesName(table),
-    IvfBin.centsName(table))
+    Lsh.paramsName(table)) ++
+    VectorIndex.families.flatMap(_.paramTables(table))
 
   /** EVERY store artifact belonging to `table`'s index families that
     * exists right now — the per-pk tables [[indexTablesOf]] names
@@ -106,10 +91,8 @@ object Retract {
     * `CALL graft.system.drop_index(table, family)` removes: exactly one
     * family's artifacts, base untouched, every other family intact —
     * build_fts/build_index's inverse. Unknown family names refuse with
-    * the known list (a typo must never silently drop nothing). Kept
-    * next to [[registry]]/[[paramsRegistry]] so a new family that adds
-    * its tables there is named here too or the exhaustiveness check
-    * fails at the test's family sweep.
+    * the known list (a typo must never silently drop nothing); the
+    * vector families resolve through [[VectorIndex.byName]].
     */
   def familyArtifacts(
       store: TableStore, table: String, family: String): Seq[String] = {
@@ -119,20 +102,12 @@ object Retract {
       case "trigram" => Seq(Trigram.indexName(table))
       case "lsh" => Seq(Lsh.indexName(table), Lsh.mapName(table),
         Lsh.paramsName(table))
-      case "sq" => Seq(Sq.codesName(table), Sq.scalesName(table))
-      case "pq" => Seq(Pq.codesName(table), Pq.booksName(table))
-      case "bin" => Seq(Bin.codesName(table))
-      case "ivf" => Seq(Ivf.indexName(table), Ivf.mapName(table),
-        Ivf.centsName(table))
-      case "ivfpq" => Seq(IvfPq.codesName(table), IvfPq.mapName(table),
-        IvfPq.centsName(table), IvfPq.booksName(table))
-      case "ivfsq" => Seq(IvfSq.codesName(table), IvfSq.mapName(table),
-        IvfSq.centsName(table), IvfSq.scalesName(table))
-      case "ivfbin" => Seq(IvfBin.codesName(table), IvfBin.mapName(table),
-        IvfBin.centsName(table))
-      case other => throw new IllegalArgumentException(
-        s"unknown index family '$other' — known: fts, trigram, lsh, sq, " +
-          "pq, bin, ivf, ivfpq, ivfsq, ivfbin")
+      case other => VectorIndex.byName(other)
+        .map(f => f.perPkTables(table) ++ f.paramTables(table))
+        .getOrElse(throw new IllegalArgumentException(
+          s"unknown index family '$other' — known: " +
+            ("fts" +: "trigram" +: "lsh" +: VectorIndex.families.map(_.name))
+              .mkString(", ")))
     }
     val derived = named.flatMap(f =>
       Seq(IvfDrift.metaName(f), IvfDrift.snapName(f)))

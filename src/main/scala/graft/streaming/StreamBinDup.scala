@@ -41,7 +41,7 @@ import graft.store.{Bin, TableStore}
   */
 object StreamBinDup {
 
-  def dupsName(table: String): String = s"${table}_bin_dups"
+  def dupsName(table: String): String = s"${Bin.codesName(table)}_dups"
 
   /** foreachBatch handler: maintain blobs, screen, verify, record.
     *

@@ -4,162 +4,87 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
 import org.apache.spark.sql.Row
 
-import graft.store.{Bin, Ivf, IvfBin, IvfPq, IvfSq, Pq, Sq, TableStore}
+import graft.store.{TableStore, VectorIndex}
 
 /** Streaming maintenance of the persisted vector indexes — the
-  * embedding-side analog of [[StreamFts]]: as vectors stream in, the
-  * PQ code table and/or the IVF cell partitions stay queryable
-  * without ever re-encoding or re-assigning the corpus.
+  * embedding-side analog of [[StreamFts]]: as vectors stream in, any
+  * [[VectorIndex]] family stays queryable without ever re-encoding or
+  * re-assigning the corpus.
   *
   * Each micro-batch runs the SAME store maintenance the batch path
-  * uses (`Pq.upsertWithCodes` / `Ivf.upsertWithCells`): encode or
-  * assign the batch against the PERSISTED books/centroids (O(batch)),
-  * replace by pk. Training stays a batch-time concern — a stream
-  * never retrains codebooks or centroids mid-flight (that would
-  * silently re-interpret every previously stored code); production
-  * retrains offline and rebuilds via `buildIndex`.
+  * uses ([[VectorIndex.upsert]]): encode or assign the batch against
+  * the PERSISTED books/scales/centroids (O(batch)), replace by pk.
+  * Training stays a batch-time concern — a stream never retrains
+  * codebooks, scales or centroids mid-flight (that would silently
+  * re-interpret every previously stored code); production retrains
+  * offline and rebuilds via `buildIndex`. Every family but the
+  * training-free flat sign-bit one therefore needs its `buildIndex`
+  * first; that one can cold-start.
   *
   * Exactly-once composition: checkpointed source offsets + idempotent
   * by-pk replacement, the same contract as StreamNormalize/StreamFts.
   */
 object StreamVectors {
 
-  /** foreachBatch handler maintaining the PQ code table. Requires
-    * `Pq.buildIndex` to have trained and written the books.
-    */
-  def pqSink(
-      store: TableStore, table: String, pkCol: String, embCol: String,
-      slices: Int = 8, subDim: Int = 8): (DataFrame, Long) => Unit =
+  /** foreachBatch handler maintaining `index` on `table`. */
+  def sink(
+      index: VectorIndex, store: TableStore, table: String, pkCol: String,
+      embCol: String): (DataFrame, Long) => Unit =
     (batch, _) =>
-      if (!batch.isEmpty)
-        Pq.upsertWithCodes(store, table, batch, pkCol, embCol, slices, subDim)
+      if (!batch.isEmpty) index.upsert(store, table, batch, pkCol, embCol)
 
-  /** foreachBatch handler maintaining the IVF cell partitions.
-    * Requires `Ivf.buildIndex` to have trained and written centroids.
-    */
-  def ivfSink(
-      store: TableStore, table: String, pkCol: String, embCol: String)
-      : (DataFrame, Long) => Unit =
-    (batch, _) =>
-      if (!batch.isEmpty)
-        Ivf.upsertWithCells(store, table, batch, pkCol, embCol)
-
-  /** foreachBatch handler maintaining the combined IVF+PQ index
-    * (cell-partitioned residual codes). Requires `IvfPq.buildIndex`
-    * to have trained and written centroids + books.
-    */
-  def ivfPqSink(
-      store: TableStore, table: String, pkCol: String, embCol: String,
-      slices: Int = 8, subDim: Int = 8): (DataFrame, Long) => Unit =
-    (batch, _) =>
-      if (!batch.isEmpty)
-        IvfPq.upsertWithCodes(store, table, batch, pkCol, embCol,
-          slices, subDim)
-
-  /** foreachBatch handler maintaining the SQ8 code table. Requires
-    * `Sq.buildIndex` to have trained and written the per-dim scales
-    * (a stream never retrains scales mid-flight — that would silently
-    * re-interpret every previously stored code, the same contract as
-    * PQ books).
-    */
-  def sqSink(
-      store: TableStore, table: String, pkCol: String, embCol: String)
-      : (DataFrame, Long) => Unit =
-    (batch, _) =>
-      if (!batch.isEmpty)
-        Sq.upsertWithCodes(store, table, batch, pkCol, embCol)
-
-  /** foreachBatch handler maintaining the binary sign-bit blob table.
-    * No trained state at all (encode is stateless per-row), so this
-    * is the one vector sink with no buildIndex precondition — a
-    * stream can cold-start the index.
-    */
-  def binSink(
-      store: TableStore, table: String, pkCol: String, embCol: String)
-      : (DataFrame, Long) => Unit =
-    (batch, _) =>
-      if (!batch.isEmpty)
-        Bin.upsertWithCodes(store, table, batch, pkCol, embCol)
-
-  /** foreachBatch handler maintaining the IVF+binary index
-    * (cell-partitioned sign blobs). Requires `IvfBin.buildIndex` to
-    * have trained and written the coarse centroids — the blobs
-    * themselves are stateless, but cell assignment is not.
-    */
-  def ivfBinSink(
-      store: TableStore, table: String, pkCol: String, embCol: String)
-      : (DataFrame, Long) => Unit =
-    (batch, _) =>
-      if (!batch.isEmpty)
-        IvfBin.upsertWithCodes(store, table, batch, pkCol, embCol)
-
-  /** Wire a streaming (pk, embedding, …) frame into the IVF+binary
-    * sink.
-    */
-  def writeIvfBinIndexed(
-      vectors: DataFrame, store: TableStore, table: String,
-      pkCol: String, embCol: String, checkpointDir: String): StreamingQuery =
-    start(vectors, checkpointDir, ivfBinSink(store, table, pkCol, embCol))
-
-  /** Wire a streaming (pk, embedding, …) frame into the binary sink. */
-  def writeBinIndexed(
-      vectors: DataFrame, store: TableStore, table: String,
-      pkCol: String, embCol: String, checkpointDir: String): StreamingQuery =
-    start(vectors, checkpointDir, binSink(store, table, pkCol, embCol))
-
-  /** foreachBatch handler maintaining the IVF+SQ index
-    * (cell-partitioned residual int8 codes). Requires
-    * `IvfSq.buildIndex` to have trained centroids + scales.
-    */
-  def ivfSqSink(
-      store: TableStore, table: String, pkCol: String, embCol: String)
-      : (DataFrame, Long) => Unit =
-    (batch, _) =>
-      if (!batch.isEmpty)
-        IvfSq.upsertWithCodes(store, table, batch, pkCol, embCol)
-
-  /** Wire a streaming (pk, embedding, …) frame into the IVF+SQ sink. */
-  def writeIvfSqIndexed(
-      vectors: DataFrame, store: TableStore, table: String,
-      pkCol: String, embCol: String, checkpointDir: String): StreamingQuery =
-    start(vectors, checkpointDir, ivfSqSink(store, table, pkCol, embCol))
-
-  /** Wire a streaming (pk, embedding, …) frame into the SQ sink. */
-  def writeSqIndexed(
-      vectors: DataFrame, store: TableStore, table: String,
-      pkCol: String, embCol: String, checkpointDir: String): StreamingQuery =
-    start(vectors, checkpointDir, sqSink(store, table, pkCol, embCol))
-
-  /** Wire a streaming (pk, embedding, …) frame into the PQ sink. */
-  def writePqIndexed(
-      vectors: DataFrame, store: TableStore, table: String,
-      pkCol: String, embCol: String, checkpointDir: String,
-      slices: Int = 8, subDim: Int = 8): StreamingQuery =
-    start(vectors, checkpointDir,
-      pqSink(store, table, pkCol, embCol, slices, subDim))
-
-  /** Wire a streaming (pk, embedding, …) frame into the IVF sink. */
-  def writeIvfIndexed(
-      vectors: DataFrame, store: TableStore, table: String,
-      pkCol: String, embCol: String, checkpointDir: String): StreamingQuery =
-    start(vectors, checkpointDir, ivfSink(store, table, pkCol, embCol))
-
-  /** Wire a streaming (pk, embedding, …) frame into the IVF+PQ sink. */
-  def writeIvfPqIndexed(
-      vectors: DataFrame, store: TableStore, table: String,
-      pkCol: String, embCol: String, checkpointDir: String,
-      slices: Int = 8, subDim: Int = 8): StreamingQuery =
-    start(vectors, checkpointDir,
-      ivfPqSink(store, table, pkCol, embCol, slices, subDim))
-
-  private def start(
-      vectors: DataFrame, checkpointDir: String,
-      sink: (DataFrame, Long) => Unit): StreamingQuery = {
+  /** Wire a streaming (pk, embedding, …) frame into [[sink]]. */
+  def writeIndexed(
+      vectors: DataFrame, index: VectorIndex, store: TableStore,
+      table: String, pkCol: String, embCol: String,
+      checkpointDir: String): StreamingQuery = {
     val writer: DataStreamWriter[Row] = vectors.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
+    val handler = sink(index, store, table, pkCol, embCol)
     writer.foreachBatch { (batch: DataFrame, id: Long) =>
-      sink(batch, id)
+      handler(batch, id)
     }.start()
   }
+
+  private def pq(slices: Int, subDim: Int) =
+    VectorIndex.pq.tuned("slices" -> slices, "subDim" -> subDim)
+  private def ivfPq(slices: Int, subDim: Int) =
+    VectorIndex.ivfpq.tuned("slices" -> slices, "subDim" -> subDim)
+
+  def sqSink(store: TableStore, table: String, pkCol: String,
+      embCol: String): (DataFrame, Long) => Unit =
+    sink(VectorIndex.sq, store, table, pkCol, embCol)
+
+  // one writer per family
+  def writePqIndexed(vectors: DataFrame, store: TableStore, table: String,
+      pkCol: String, embCol: String, checkpointDir: String,
+      slices: Int = 8, subDim: Int = 8): StreamingQuery =
+    writeIndexed(vectors, pq(slices, subDim), store, table, pkCol, embCol,
+      checkpointDir)
+  def writeIvfPqIndexed(vectors: DataFrame, store: TableStore, table: String,
+      pkCol: String, embCol: String, checkpointDir: String,
+      slices: Int = 8, subDim: Int = 8): StreamingQuery =
+    writeIndexed(vectors, ivfPq(slices, subDim), store, table, pkCol, embCol,
+      checkpointDir)
+  def writeSqIndexed(vectors: DataFrame, store: TableStore, table: String,
+      pkCol: String, embCol: String, checkpointDir: String): StreamingQuery =
+    writeIndexed(vectors, VectorIndex.sq, store, table, pkCol, embCol,
+      checkpointDir)
+  def writeBinIndexed(vectors: DataFrame, store: TableStore, table: String,
+      pkCol: String, embCol: String, checkpointDir: String): StreamingQuery =
+    writeIndexed(vectors, VectorIndex.bin, store, table, pkCol, embCol,
+      checkpointDir)
+  def writeIvfIndexed(vectors: DataFrame, store: TableStore, table: String,
+      pkCol: String, embCol: String, checkpointDir: String): StreamingQuery =
+    writeIndexed(vectors, VectorIndex.ivf, store, table, pkCol, embCol,
+      checkpointDir)
+  def writeIvfSqIndexed(vectors: DataFrame, store: TableStore, table: String,
+      pkCol: String, embCol: String, checkpointDir: String): StreamingQuery =
+    writeIndexed(vectors, VectorIndex.ivfsq, store, table, pkCol, embCol,
+      checkpointDir)
+  def writeIvfBinIndexed(vectors: DataFrame, store: TableStore, table: String,
+      pkCol: String, embCol: String, checkpointDir: String): StreamingQuery =
+    writeIndexed(vectors, VectorIndex.ivfbin, store, table, pkCol, embCol,
+      checkpointDir)
 }
