@@ -6,11 +6,10 @@ import org.apache.spark.sql.functions._
 /** Maintenance of the IVF coarse quantizer's cell-partitioned per-pk
   * tables ([[VectorIndex.Coarse.Ivf]]): merge a freshly-assigned
   * batch into `idxTable` (Hive-partitioned by `cell`) and its
-  * pk → cell `mapTable` using dynamic partition overwrite — only the
-  * cells the batch enters, plus the OLD cells of re-upserted pks
-  * (looked up in the map, so finding them is O(batch) not O(index)),
-  * are rewritten; cells whose merged content would be empty are
-  * dropped explicitly (dynamic overwrite never visits them).
+  * pk → cell `mapTable`. The touched set is the cells the batch
+  * enters plus the OLD cells of re-upserted pks (looked up in the
+  * map, so finding them is O(batch) not O(index));
+  * [[TableStore.rewritePartitions]] rewrites exactly those.
   *
   * `fresh` must carry `pk`, `cell` (long) and whatever payload the
   * index stores; assignment must be deterministic so affected-cell
@@ -39,20 +38,14 @@ private[store] object CellIndex {
     val affected = (newCells ++ oldCells).toSeq
 
     store.readIfExists(idxTable) match {
-      case Some(idx0) =>
-        // partition-column type inference reads `cell=N` dirs as int;
-        // normalize to long so unions and collects stay type-stable
-        val idx = idx0.withColumn(CellCol, col(CellCol).cast("long"))
-        val merged = Iteration.materialize(
-          idx.filter(col(CellCol).isin(affected: _*))
+      case Some(_) =>
+        store.rewritePartitions(idxTable, CellCol, affected)(
+          // partition-column type inference reads `cell=N` dirs as
+          // int; normalize to long so unions stay type-stable
+          _.withColumn(CellCol, col(CellCol).cast("long"))
             .join(batchPks, Seq("pk"), "left_anti")
             .unionByName(fresh)
             .repartition(col(CellCol)))
-        store.overwritePartitions(idxTable, merged, Seq(CellCol))
-        val stillThere = merged.select(col(CellCol)).distinct()
-          .collect().map(_.getLong(0)).toSet
-        affected.filterNot(stillThere).foreach(c =>
-          store.dropPartition(idxTable, CellCol, c.toString))
       case None =>
         // never create the index as a ZERO-ROW partitioned dir — a
         // partitioned parquet layout with no part files fails schema

@@ -545,8 +545,7 @@ object Doctor {
     // the next upsert of its pk rewrites a bucket that doesn't hold it,
     // leaving the stale row behind — the Trigram misfiled-row invariant
     val bad = df.filter(
-      col(store.BucketCol).cast("long") =!=
-        pmod(xxhash64(pk.map(col): _*), lit(buckets.toLong))).count()
+      col(store.BucketCol).cast("long") =!= store.bucketOfPk(pk, buckets)).count()
     if (bad > 0)
       out += Issue("bucketed-base", table,
         s"$bad rows sit in the wrong pk bucket — an upsert of their pks " +
@@ -568,8 +567,7 @@ object Doctor {
     // queries (search doesn't prune by bucket) but breaks O(batch)
     // maintenance — the next upsert of its pk won't rewrite its dir
     val badB = idx.filter(
-      col("pk_bucket").cast("long") =!=
-        pmod(xxhash64(col("pk")), lit(Trigram.nBuckets.toLong)))
+      col("pk_bucket").cast("long") =!= store.bucketOfPk(Seq("pk"), Trigram.nBuckets))
       .count()
     if (badB > 0)
       out += Issue("trigram", table,

@@ -187,8 +187,15 @@ object Fts {
   /** Partition column of the bucketed postings layout. */
   private val BucketCol = "pk_bucket"
 
-  private def bucketOf(pk: Column, buckets: Int): Column =
-    pmod(xxhash64(pk), lit(buckets.toLong))
+  /** `postings` in the bucketed layout: filed under their pk's bucket,
+    * range-split and sorted on (bucket, token) so each file covers a
+    * narrow token range (tight envelopes for the manifest file skip).
+    */
+  private def bucketedPostings(
+      store: TableStore, postings: DataFrame, buckets: Int): DataFrame =
+    postings.withColumn(BucketCol, store.bucketOfPk(Seq("pk"), buckets))
+      .repartitionByRange(col(BucketCol), col("token"))
+      .sortWithinPartitions(col(BucketCol), col("token"))
 
   /** Upsert base rows AND their index rows: delete-and-replace the
     * index entries of every pk in the batch (trigger analog), then
@@ -353,47 +360,25 @@ object Fts {
         // affected buckets derive from the BATCH pks (not from fresh
         // postings): a doc re-upserted with empty text has no fresh
         // rows but its old postings must still be cleared
-        val affected = batchPks.select(bucketOf(col("pk"), buckets).as("b"))
+        val affected = batchPks.select(store.bucketOfPk(Seq("pk"), buckets))
           .distinct().collect().map(_.getLong(0)).toSeq
-        val exAffected = ex.filter(col(BucketCol).isin(affected: _*))
         // incremental stats deltas read the OLD index — before any write
         val (oldN, oldDl) = statsTotals(store, table, ex)
-        val (outN, outDl) = docTotals(
-          exAffected.join(batchPks, Seq("pk"), "left_semi"))
+        val (outN, outDl) = docTotals(ex.filter(col(BucketCol).isin(affected: _*))
+          .join(batchPks, Seq("pk"), "left_semi"))
         val (inN, inDl) = docTotals(fresh)
-        // materialize severs the plan's dependency on the files the
-        // dynamic overwrite is about to replace (in-place, no swap).
-        // The range split stays (SCALING.md: narrow per-file token
-        // envelopes are what keep the manifest file skip selective);
-        // its sampling pass now reads the PINNED fresh postings, so it
-        // no longer re-executes the tokenize/derivation subtree
-        val merged = Iteration.materialize(
-          exAffected.join(batchPks, Seq("pk"), "left_anti")
-            .drop(BucketCol)
-            .unionByName(fresh)
-            .withColumn(BucketCol, bucketOf(col("pk"), buckets))
-            .repartitionByRange(col(BucketCol), col("token"))
-            .sortWithinPartitions(col(BucketCol), col("token")))
         // bump the epoch BEFORE touching postings: a crash anywhere
         // between here and writeStats leaves epoch ≠ stats.epoch and
         // the next upsert rebuilds wholesale instead of trusting
         // silently-stale BM25 totals
         val epoch = writeEpoch(store, table)
-        store.overwritePartitions(indexName(table), merged, Seq(BucketCol))
-        // a bucket whose merged content is empty is absent from the
-        // dynamic overwrite — clear its stale partition explicitly
-        val stillThere = merged.select(col(BucketCol)).distinct()
-          .collect().map(_.getLong(0)).toSet
-        affected.filterNot(stillThere).foreach(b =>
-          store.dropPartition(indexName(table), BucketCol, b.toString))
+        // the range split's sampling pass reads the PINNED fresh
+        // postings, so it does not re-execute the tokenize subtree
+        store.rewritePartitions(indexName(table), BucketCol, affected)(cur =>
+          bucketedPostings(store, cur.join(batchPks, Seq("pk"), "left_anti")
+            .drop(BucketCol).unionByName(fresh), buckets))
         writeStats(store, table, oldN - outN + inN, oldDl - outDl + inDl,
           buckets, epoch, textCols, Some(pkCol))
-        // an index opted into file skipping keeps its token envelopes
-        // fresh at O(replaced buckets' files), matching the write
-        // (governed stores get this from the commit itself; there the
-        // presence sets already agree and this is a no-op)
-        if (store.hasFileStats(indexName(table)))
-          store.refreshFileStatsIncremental(indexName(table))
 
       case _ =>
         // (re)build wholesale: first index of this table, a layout
@@ -426,10 +411,7 @@ object Fts {
         val epoch = writeEpoch(store, table)
         if (buckets > 0)
           store.overwrite(indexName(table),
-            flat.withColumn(BucketCol, bucketOf(col("pk"), buckets))
-              .repartitionByRange(col(BucketCol), col("token"))
-              .sortWithinPartitions(col(BucketCol), col("token")),
-            partitionBy = Seq(BucketCol))
+            bucketedPostings(store, flat, buckets), partitionBy = Seq(BucketCol))
         else store.overwrite(indexName(table), flat)
         // corpus stats from the fresh index: one scan at write time —
         // the price FTS5 pays in its docsize table — so ranked queries
@@ -498,32 +480,20 @@ object Fts {
           statsBucketCount(store, table).contains(buckets) &&
           statsCols(store, table).isDefined &&
           epochsAgree(store, table) =>
-        val affected = delPks.select(bucketOf(col("pk"), buckets).as("b"))
+        val affected = delPks.select(store.bucketOfPk(Seq("pk"), buckets))
           .distinct().collect().map(_.getLong(0)).toSeq
         if (affected.nonEmpty) {
-          val exAffected = ex.filter(col(BucketCol).isin(affected: _*))
           val (oldN, oldDl) = statsTotals(store, table, ex)
-          val (outN, outDl) = docTotals(
-            exAffected.join(delPks, Seq("pk"), "left_semi"))
-          val merged = Iteration.materialize(
-            exAffected.join(delPks, Seq("pk"), "left_anti")
-              .drop(BucketCol)
-              .withColumn(BucketCol, bucketOf(col("pk"), buckets))
-              .repartitionByRange(col(BucketCol), col("token"))
-              .sortWithinPartitions(col(BucketCol), col("token")))
+          val (outN, outDl) = docTotals(ex.filter(col(BucketCol).isin(affected: _*))
+            .join(delPks, Seq("pk"), "left_semi"))
           // same crash discipline as the upsert path: epoch bump FIRST
           val epoch = writeEpoch(store, table)
-          store.overwritePartitions(indexName(table), merged,
-            Seq(BucketCol), TableStore.OpDelete)
-          val stillThere = merged.select(col(BucketCol)).distinct()
-            .collect().map(_.getLong(0)).toSet
-          affected.filterNot(stillThere).foreach(b =>
-            store.dropPartition(indexName(table), BucketCol, b.toString))
+          store.rewritePartitions(indexName(table), BucketCol, affected,
+            TableStore.OpDelete)(cur => bucketedPostings(store,
+              cur.join(delPks, Seq("pk"), "left_anti").drop(BucketCol), buckets))
           writeStats(store, table, oldN - outN, oldDl - outDl,
             buckets, epoch, statsCols(store, table).get,
             statsPk(store, table))
-          if (store.hasFileStats(indexName(table)))
-            store.refreshFileStatsIncremental(indexName(table))
         }
       case Some(ex) =>
         // flat layout, legacy schema, or torn stats: wholesale rewrite
@@ -534,10 +504,7 @@ object Fts {
         val epoch = writeEpoch(store, table)
         if (buckets > 0)
           store.overwrite(indexName(table),
-            flat.withColumn(BucketCol, bucketOf(col("pk"), buckets))
-              .repartitionByRange(col(BucketCol), col("token"))
-              .sortWithinPartitions(col(BucketCol), col("token")),
-            partitionBy = Seq(BucketCol))
+            bucketedPostings(store, flat, buckets), partitionBy = Seq(BucketCol))
         else store.overwrite(indexName(table), flat)
         statsCols(store, table).foreach { cols =>
           val (n, dl) = docTotals(store.read(indexName(table)))

@@ -1,6 +1,6 @@
 package graft.store
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.MinHashSig
@@ -50,9 +50,6 @@ object Lsh {
 
   final case class Params(
       shingleSize: Int, nHashes: Int, bands: Int, buckets: Int)
-
-  private def bucketOf(bandIdx: Column, band: Column, buckets: Int): Column =
-    pmod(xxhash64(bandIdx, band), lit(buckets.toLong))
 
   /** One membership row per (doc, band): (pk, band_idx, band). Docs
     * too short to shingle produce no rows (and so never pair). The
@@ -158,7 +155,7 @@ object Lsh {
     // before the swap-writes below delete them
     val rows = Iteration.materialize(
       bandRows(corpus, pkCol, textCol, p)
-        .withColumn(BucketCol, bucketOf(col("band_idx"), col("band"), p.buckets)))
+        .withColumn(BucketCol, store.bucketOfPk(Seq("band_idx", "band"), p.buckets)))
     writeParams(store, table, p)
     // zero band rows (every doc too short to shingle): a PARTITIONED
     // zero-row write leaves no files at all — unreadable — so the
@@ -181,7 +178,7 @@ object Lsh {
       pkCol: String, textCol: String, p: Params): Unit = {
     val fresh = Iteration.materialize(
       bandRows(batch, pkCol, textCol, p)
-        .withColumn(BucketCol, bucketOf(col("band_idx"), col("band"), p.buckets)))
+        .withColumn(BucketCol, store.bucketOfPk(Seq("band_idx", "band"), p.buckets)))
     val batchPks = batch.select(col(pkCol).as("pk")).distinct()
 
     // affected buckets: where the batch's new bands land, plus where
@@ -198,32 +195,25 @@ object Lsh {
     val affected = (newBuckets ++ oldBuckets).toSeq
 
     if (affected.nonEmpty) {
-      // partition-column dirs read back as int; normalize to long
-      val idx = store.read(indexName(table))
-        .withColumn(BucketCol, col(BucketCol).cast("long"))
-        .filter(col(BucketCol).isin(affected: _*))
-      val merged = Iteration.materialize(
-        idx.join(batchPks, Seq("pk"), "left_anti")
+      val survivors = store.rewritePartitions(indexName(table), BucketCol, affected)(
+        // partition-column dirs read back as int; normalize to long
+        _.withColumn(BucketCol, col(BucketCol).cast("long"))
+          .join(batchPks, Seq("pk"), "left_anti")
           .unionByName(fresh)
           .repartitionByRange(col(BucketCol), col("band"))
           .sortWithinPartitions(col(BucketCol), col("band")))
-      if (merged.isEmpty) {
+      if (survivors.isEmpty) {
         // the batch blanked every doc in the affected buckets; if those
-        // were the index's ONLY buckets, dropping them all would leave
-        // an unreadable empty directory — rebuild wholesale instead
-        // (rare by construction, and the rebuild lands on the
-        // unpartitioned-empty representation when nothing survives)
+        // were the index's ONLY buckets, the index is now an unreadable
+        // empty directory — rebuild wholesale (rare by construction,
+        // and the rebuild lands on the unpartitioned-empty
+        // representation when nothing survives)
         rebuild(store, table,
           Upsert.upsert(store.readIfExists(table), batch, Seq(pkCol))
             .select(col(pkCol), col(textCol)),
           pkCol, textCol, p)
         return
       }
-      store.overwritePartitions(indexName(table), merged, Seq(BucketCol))
-      val stillThere = merged.select(col(BucketCol)).distinct()
-        .collect().map(_.getLong(0)).toSet
-      affected.filterNot(stillThere).foreach(b =>
-        store.dropPartition(indexName(table), BucketCol, b.toString))
     }
     // map: replace ALL rows of the batch pks (a pk spans ≤ `bands`
     // buckets, so per-pk replacement is row_number-free anti-join +

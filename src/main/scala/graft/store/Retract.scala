@@ -145,9 +145,8 @@ object Retract {
     * Hive-partitioned layout (pk-hash buckets, IVF cells) rewrites
     * only the partitions that actually HOLD a deleted pk (one semi-
     * join scan to find them — never more than the index's own read
-    * cost); an unpartitioned table pays the flat rewrite. Emptied
-    * partitions drop explicitly (dynamic overwrite cannot rewrite an
-    * absent partition).
+    * cost) through [[TableStore.rewritePartitions]]; an unpartitioned
+    * table pays the flat rewrite.
     */
   def fromIndexTable(
       store: TableStore, name: String, delPks: DataFrame,
@@ -163,20 +162,12 @@ object Retract {
         store.partitionColumnsOf(name) match {
           case Seq(p) =>
             val hit = ex.join(delPks, Seq("pk"), "left_semi")
-              .select(col(p).cast("string")).distinct()
-              .collect().map(_.getString(0)).toSeq
-            if (hit.isEmpty) return
-            val exTouched = ex.filter(col(p).cast("string").isin(hit: _*))
-            val kept0 = exTouched.join(delPks, Seq("pk"), "left_anti")
-              .repartition(col(p))
-            val kept = Iteration.materialize(
-              if (sortCols.isEmpty) kept0
-              else kept0.sortWithinPartitions(sortCols.map(col): _*))
-            store.overwritePartitions(name, kept, Seq(p), TableStore.OpDelete)
-            val stillThere = kept.select(col(p).cast("string")).distinct()
-              .collect().map(_.getString(0)).toSet
-            hit.filterNot(stillThere).foreach(v =>
-              store.dropPartition(name, p, v))
+              .select(col(p)).distinct().collect().map(_.get(0)).toSeq
+            store.rewritePartitions(name, p, hit, TableStore.OpDelete) { cur =>
+              val kept = cur.join(delPks, Seq("pk"), "left_anti").repartition(col(p))
+              if (sortCols.isEmpty) kept
+              else kept.sortWithinPartitions(sortCols.map(col): _*)
+            }
           case _ =>
             store.deleteByPk(name, delPks, Seq("pk"))
         }

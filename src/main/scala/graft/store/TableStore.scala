@@ -154,20 +154,17 @@ class TableStore(val spark: SparkSession, val root: String) {
 
   /** Overwrite ONLY the Hive partitions present in `df`, leaving all
     * other partitions' files untouched (dynamic partition overwrite) —
-    * the O(batch) maintenance path for a large partitioned table where
-    * a batch touches few partitions (e.g. FTS postings bucketed by pk
-    * hash).
+    * the write step of [[rewritePartitions]], which every maintained
+    * partitioned table goes through.
     *
     * The caller MUST pass a `df` that does not lazily read from this
     * table's own files (materialize/checkpoint first): unlike the
     * swap-based writes, this writes in place, and Spark refuses — or
     * worse, corrupts — reads of a path being overwritten.
     */
-  def overwritePartitions(name: String, df: DataFrame, partitionBy: Seq[String]): Unit =
-    overwritePartitions(name, df, partitionBy, OpUpsert)
-
-  private[store] def overwritePartitions(
-      name: String, df: DataFrame, partitionBy: Seq[String], op: String): Unit = {
+  def overwritePartitions(
+      name: String, df: DataFrame, partitionBy: Seq[String],
+      op: String = OpUpsert): Unit = {
     require(partitionBy.nonEmpty, "overwritePartitions needs partition columns")
     if (isGoverned(name)) { withTxWrite(tx => stagePartitions(tx, name, df, partitionBy, op)); return }
     markStatsPending(name)
@@ -372,7 +369,7 @@ class TableStore(val spark: SparkSession, val root: String) {
   /** Delete one Hive partition directory (`name/col=value`) — the
     * companion of `overwritePartitions` for partitions whose new
     * content is empty (dynamic overwrite can only rewrite partitions
-    * present in the written frame).
+    * present in the written frame); [[rewritePartitions]] pairs them.
     */
   def dropPartition(name: String, partCol: String, value: String): Unit = {
     if (isGoverned(name)) {
@@ -391,44 +388,44 @@ class TableStore(val spark: SparkSession, val root: String) {
   }
 
   def upsert(name: String, incoming: DataFrame, pk: Seq[String]): Unit =
+    mergeKeyed(name, incoming, pk, ignore = false)
+
+  def insertIgnore(name: String, incoming: DataFrame, pk: Seq[String]): Unit =
+    mergeKeyed(name, incoming, pk, ignore = true)
+
+  private def mergeKeyed(
+      name: String, incoming: DataFrame, pk: Seq[String], ignore: Boolean): Unit =
     bucketLayoutOf(name) match {
       case Some((n, declaredPk)) =>
         require(declaredPk == pk,
-          s"$name is bucketed on pk=${declaredPk.mkString(",")}; upsert " +
-            s"passed pk=${pk.mkString(",")} — refusing a mixed-key merge")
-        mergeBucketed(name, incoming, pk, n, ignore = false)
+          s"$name is bucketed on pk=${declaredPk.mkString(",")}; " +
+            s"${if (ignore) "insertIgnore" else "upsert"} passed " +
+            s"pk=${pk.mkString(",")} — refusing a mixed-key merge")
+        mergeBucketed(name, incoming, pk, n, ignore)
       case None =>
-        writeSwapped(name, Upsert.upsert(readIfExists(name), incoming, pk),
+        writeSwapped(name, keyMerge(pk, ignore)(readIfExists(name), incoming),
           op = OpUpsert)
     }
 
-  def insertIgnore(name: String, incoming: DataFrame, pk: Seq[String]): Unit =
-    bucketLayoutOf(name) match {
-      case Some((n, declaredPk)) =>
-        require(declaredPk == pk,
-          s"$name is bucketed on pk=${declaredPk.mkString(",")}; insertIgnore " +
-            s"passed pk=${pk.mkString(",")} — refusing a mixed-key merge")
-        mergeBucketed(name, incoming, pk, n, ignore = true)
-      case None =>
-        writeSwapped(name, Upsert.insertIgnore(readIfExists(name), incoming, pk),
-          op = OpUpsert)
-    }
+  /** The keyed merge rule of [[upsert]] (later wins) or
+    * [[insertIgnore]] (existing wins).
+    */
+  private def keyMerge(pk: Seq[String], ignore: Boolean)(
+      ex: Option[DataFrame], inc: DataFrame): DataFrame =
+    if (ignore) Upsert.insertIgnore(ex, inc, pk) else Upsert.upsert(ex, inc, pk)
 
   /** Delete rows by pk — the write path a dedup pass or retention
     * policy takes (the reference never deletes; this is the
     * extension-side complement of upsert that the row-level change
     * feed retracts through). On a declared bucket layout the delete is
     * O(touched buckets): only the buckets the keys hash into are
-    * anti-joined and dynamically overwritten, emptied buckets drop
-    * their partition explicitly — and on a governed store the whole
-    * branch (overwrite + partition drops + stats) lands as ONE epoch
-    * ([[inOneEpoch]]), so no reader or change-feed consumer can
-    * observe a partially-applied delete; a flat table pays the
-    * whole-table rewrite (the same Delta-MERGE seam as the flat
-    * upsert), atomic by the single swap. Commits are op-tagged
-    * `delete`, so incremental consumers see exactly the retracted pks
-    * through [[readChangesSince]]. Keys with pk types
-    * narrower than the stored ones are cast up front (the
+    * anti-joined and rewritten through [[rewritePartitions]] (emptied
+    * buckets drop, and a governed table sees the whole delete as ONE
+    * epoch); a flat table pays the whole-table rewrite (the same
+    * Delta-MERGE seam as the flat upsert), atomic by the single swap.
+    * Commits are op-tagged `delete`, so incremental consumers see
+    * exactly the retracted pks through [[readChangesSince]]. Keys with
+    * pk types narrower than the stored ones are cast up front (the
     * type-sensitive-xxhash64 rule the bucketed merge enforces); a
     * lossy cast is refused.
     */
@@ -439,7 +436,7 @@ class TableStore(val spark: SparkSession, val root: String) {
     val existing = read(name)
     val keyCols = keys.select(pk.map(col): _*)
     bucketLayoutOf(name) match {
-      case Some((buckets, declaredPk)) => inOneEpoch(name) {
+      case Some((buckets, declaredPk)) =>
         require(declaredPk == pk,
           s"$name is bucketed on pk=${declaredPk.mkString(",")}; deleteByPk " +
             s"passed pk=${pk.mkString(",")} — refusing a mixed-key delete")
@@ -455,27 +452,8 @@ class TableStore(val spark: SparkSession, val root: String) {
             df.withColumn(c, col(c).cast(stored))
           }
         }
-        val inc = Iteration.materialize(
-          keyTyped.withColumn(BucketCol, bucketOfPk(pk, buckets)))
-        val touched = inc.select(col(BucketCol)).distinct()
-          .collect().map(_.getLong(0)).toSeq
-        if (touched.nonEmpty) {
-          val ex = existing.filter(col(BucketCol).isin(touched: _*))
-          val kept = Iteration.materialize(zsortIfDeclared(name,
-            ex.drop(BucketCol).join(inc.drop(BucketCol), pk, "left_anti")
-              .withColumn(BucketCol, bucketOfPk(pk, buckets))
-              .repartition(col(BucketCol))))
-          overwritePartitions(name, kept, Seq(BucketCol), TableStore.OpDelete)
-          // a bucket emptied by the delete is absent from the dynamic
-          // overwrite — clear its stale partition explicitly (the same
-          // rule as the FTS empty-bucket path)
-          val stillThere = kept.select(col(BucketCol)).distinct()
-            .collect().map(_.getLong(0)).toSet
-          touched.filterNot(stillThere).foreach(b =>
-            dropPartition(name, BucketCol, b.toString))
-          refreshTouchedStats(name, touched)
-        }
-      }
+        rewriteTouchedBuckets(name, keyTyped, pk, buckets, TableStore.OpDelete)(
+          (ex, inc) => ex.get.join(inc, pk, "left_anti"))
       case None =>
         writeSwapped(name,
           existing.join(keyCols, pk, "left_anti"),
@@ -506,30 +484,74 @@ class TableStore(val spark: SparkSession, val root: String) {
       partitionColumnsOf(name), op = TableStore.OpDelete)
   }
 
-  /** Run `f`'s writes to governed `name` as ONE epoch: the bucketed
-    * delete (dynamic overwrite + per-emptied-bucket dropPartition) is
-    * multi-commit without it, so a reader or change-feed consumer
-    * landing between those epochs would observe a PARTIALLY-applied
-    * delete. No-op when un-governed (swap writes are already atomic)
-    * or when the caller already opened a transaction (nesting is
-    * refused by [[transact]]; the outer tx provides the atomicity).
+  /** Run `f`'s writes to governed `name` as ONE epoch: outside a
+    * transaction every partition overwrite and every partition drop
+    * is its own commit, so a reader or change-feed consumer landing
+    * between them would observe a PARTIALLY-applied rewrite. No-op
+    * when un-governed (swap writes are already atomic) or when the
+    * caller already opened a transaction (nesting is refused by
+    * [[transact]]; the outer tx provides the atomicity).
     */
   private[store] def inOneEpoch[T](name: String)(f: => T): T =
     if (isGoverned(name) && activeTx.isEmpty) transact(f) else f
 
+  /** Rewrite the `touched` Hive partitions of `name` (partitioned on
+    * `partCol`) and nothing else — the one O(touched partitions) write
+    * every bucket- or cell-partitioned table is maintained through
+    * (bucketed base upsert/insertIgnore/deleteByPk, the custom
+    * [[mergeTouchedBuckets]], FTS/trigram/LSH postings, IVF cells,
+    * index retraction). `rewrite` maps the touched partitions' current
+    * rows (partition column included) to their COMPLETE new content;
+    * rows of other partitions are never read.
+    *
+    * In one epoch ([[inOneEpoch]]): partition-pruned read, materialize
+    * (severing the plan from the files the in-place overwrite
+    * replaces), the invariant gate — every output row must land in a
+    * touched partition, else untouched rows would be silently lost —
+    * dynamic partition overwrite, one collect of the partitions that
+    * still hold rows, and a drop of each emptied one (dynamic
+    * overwrite never visits an absent partition). The file-stats
+    * manifest then refreshes at O(changed files); governed tables get
+    * that from the commit itself. Returns the touched partitions that
+    * still hold rows (as partition-value strings); nothing is touched
+    * when `touched` is empty.
+    */
+  private[store] def rewritePartitions(
+      name: String, partCol: String, touched: Seq[Any], op: String = OpUpsert)(
+      rewrite: DataFrame => DataFrame): Set[String] = {
+    import org.apache.spark.sql.functions.col
+    val values = touched.distinct
+    if (values.isEmpty) return Set.empty
+    val keys = values.map(_.toString)
+    val survivors = inOneEpoch(name) {
+      val merged = Iteration.materialize(
+        rewrite(read(name).filter(col(partCol).isin(values: _*))))
+      val out = merged.select(col(partCol).cast("string")).distinct()
+        .collect().map(_.getString(0)).toSet
+      require(out.subsetOf(keys.toSet),
+        s"$name merge produced partitions outside the touched set " +
+          s"(${(out -- keys).mkString(",")}) — the partition key diverged " +
+          "between batch and merge; refusing to overwrite")
+      overwritePartitions(name, merged, Seq(partCol), op)
+      keys.filterNot(out).foreach(dropPartition(name, partCol, _))
+      out
+    }
+    if (!isGoverned(name) && hasFileStats(name)) refreshFileStatsIncremental(name)
+    survivors
+  }
+
   // -------------------------------------------------------------------
   // Bucketed base-table layout — the O(batch) upsert path. The plain
   // upsert above rewrites the WHOLE table per batch (the documented
-  // lakehouse-MERGE seam); that is the last O(table) write in the
-  // engine, and at 100 TB it is untenable for the K1-K9 sinks. The
-  // same partition-scoped machinery the maintained indexes already
-  // use (FTS postings, IVF cells) applies to the base table itself:
-  // lay the table out as Hive partitions on pk_bucket =
-  // pmod(xxhash64(pk…), buckets), and a batch upsert then merges and
-  // dynamically overwrites ONLY the buckets its pks hash into —
-  // O(batch + touched buckets' data), not O(table). Size `buckets` so
-  // one bucket ≈ 100-500 MB at the target scale (task-sized), and at
-  // least the cluster parallelism you want for a full-table scan.
+  // lakehouse-MERGE seam); at 100 TB that is untenable for the K1-K9
+  // sinks. A table declared bucketed is laid out as Hive partitions on
+  // pk_bucket = [[bucketOfPk]], and every keyed write — upsert,
+  // insertIgnore, deleteByPk and the custom [[mergeTouchedBuckets]] —
+  // derives its touched buckets from the batch's key hashes and hands
+  // them to [[rewritePartitions]]: O(batch + touched buckets' data),
+  // not O(table). Size `buckets` so one bucket ≈ 100-500 MB at the
+  // target scale (task-sized), and at least the cluster parallelism
+  // you want for a full-table scan.
   //
   // The layout is DECLARED in a `_graft_layout` marker inside the
   // table directory (underscore-prefixed: invisible to parquet scans
@@ -574,12 +596,14 @@ class TableStore(val spark: SparkSession, val root: String) {
       finally out.close()
     })
 
-  /** The bucket a pk tuple hashes into (the Fts/Trigram convention:
-    * xxhash64 then pmod, so the layout survives any pk type).
+  /** The bucket `cols` hash into — THE bucket-layout rule of every
+    * pk-bucketed artifact (base tables, FTS/trigram postings, LSH
+    * bands): xxhash64 then pmod, so the layout survives any key type.
+    * Changing it re-files every existing store.
     */
-  def bucketOfPk(pk: Seq[String], buckets: Int): org.apache.spark.sql.Column = {
+  def bucketOfPk(cols: Seq[String], buckets: Int): org.apache.spark.sql.Column = {
     import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
-    pmod(xxhash64(pk.map(col): _*), lit(buckets.toLong))
+    pmod(xxhash64(cols.map(col): _*), lit(buckets.toLong))
   }
 
   /** Upsert into a pk-bucketed layout, converting the table on first
@@ -649,39 +673,11 @@ class TableStore(val spark: SparkSession, val root: String) {
   private def mergeBucketed(
       name: String, incoming: DataFrame, pk: Seq[String], buckets: Int,
       ignore: Boolean, op: String = OpUpsert): Unit = {
-    require(buckets > 0, s"buckets must be positive: $buckets")
-    require(pk.nonEmpty, "bucketed layout needs pk columns")
     import org.apache.spark.sql.functions.col
-    def merge(ex: Option[DataFrame], inc: DataFrame) =
-      if (ignore) Upsert.insertIgnore(ex, inc, pk)
-      else Upsert.upsert(ex, inc, pk)
-    bucketLayoutOf(name) match {
-      case None =>
-        // first bucketed write — or one-time conversion of an existing
-        // flat table: full merge, full partitioned rewrite, declare
-        val merged = merge(readIfExists(name).map(df =>
-            if (df.columns.contains(BucketCol)) df.drop(BucketCol) else df),
-          incoming)
-          .withColumn(BucketCol, bucketOfPk(pk, buckets))
-          .repartition(col(BucketCol))
-        writeSwapped(name, merged, Seq(BucketCol), op = op)
-        writeBucketLayout(name, buckets, pk)
-      case Some((n, declaredPk)) =>
-        require(n == buckets && declaredPk == pk,
-          s"$name declares (buckets=$n, pk=${declaredPk.mkString(",")}); " +
-            s"caller passed (buckets=$buckets, pk=${pk.mkString(",")})")
-        if (dataFiles(name).isEmpty) {
-          // declared-before-first-write (ensureBucketed): nothing to
-          // merge with — first partitioned write, re-declare after the
-          // swap (writeSwapped replaces the dir, marker included)
-          val merged = merge(None, incoming)
-            .withColumn(BucketCol, bucketOfPk(pk, buckets))
-            .repartition(col(BucketCol))
-          writeSwapped(name, merged, Seq(BucketCol), op = op)
-          writeBucketLayout(name, buckets, pk)
-          return
-        }
-        val existing = read(name)
+    val merge = keyMerge(pk, ignore) _
+    val declared = checkBucketLayout(name, pk, buckets)
+    readIfExists(name) match {
+      case Some(existing) if declared =>
         // xxhash64 is TYPE-sensitive: an INT-id batch against a
         // LONG-id table would hash the same key to different buckets
         // before vs after union widening, steering the dynamic
@@ -710,12 +706,6 @@ class TableStore(val spark: SparkSession, val root: String) {
             df // batch pk wider: handled by the full-rewrite path
           }
         }
-        // pinned ONCE: the batch plan feeds the touched-bucket set,
-        // the schema probe, and the merge — an expensive incoming
-        // frame (a streaming sink's join output) must not re-execute
-        // per consumer
-        val inc = Iteration.materialize(
-          incTyped.withColumn(BucketCol, bucketOfPk(pk, buckets)))
         // Upsert's schema-evolution contract (alter=True: unionByName
         // allowMissingColumns) is all-or-nothing per table — evolving
         // only the touched buckets would leave mixed file schemas, and
@@ -730,88 +720,87 @@ class TableStore(val spark: SparkSession, val root: String) {
         // (dropped by the merge).
         val exTypes = existing.schema
           .map(f => f.name -> f.dataType).toMap
-        val widens = (inc.columns.toSet - Upsert.OrdCol - BucketCol)
-          .exists(c => !exTypes.get(c).contains(inc.schema(c).dataType))
-        if (widens) {
-          // the swap deletes the in-dir markers; the merged data IS
-          // still bucket-partitioned and z-sorted, so both claims are
-          // re-declared after
-          val zl = zorderLayoutOf(name)
-          val merged = zsortIfDeclared(name,
-            merge(Some(existing.drop(BucketCol)), inc.drop(BucketCol))
-              .withColumn(BucketCol, bucketOfPk(pk, buckets))
-              .repartition(col(BucketCol)))
-          writeSwapped(name, merged, Seq(BucketCol), op = op)
-          writeBucketLayout(name, buckets, pk)
-          zl.foreach { case (zc, b) => writeZorderMarker(name, zc, b) }
-        } else {
-          // touched buckets derive from the BATCH pks — a ≤`buckets`-
-          // row driver set, the same bounded pattern as the FTS
-          // affected set
-          val touched = inc.select(col(BucketCol)).distinct()
-            .collect().map(_.getLong(0)).toSeq
-          // partition pruning keeps this scan to the touched dirs only
-          val ex = existing.filter(col(BucketCol).isin(touched: _*))
-          // materialize severs the plan from the files the dynamic
-          // overwrite replaces in place (the overwritePartitions
-          // contract)
-          val merged = Iteration.materialize(zsortIfDeclared(name,
-            merge(Some(ex.drop(BucketCol)), inc.drop(BucketCol))
-              .withColumn(BucketCol, bucketOfPk(pk, buckets))
-              .repartition(col(BucketCol))))
-          // invariant gate for the overwrite below: every output row
-          // must land in a bucket whose existing rows were read. The
-          // pk cast above makes this hold by construction; if a future
-          // type path breaks it, failing here turns silent data loss
-          // into an error. Bounded: ≤ `buckets` rows, over a
-          // materialized frame.
-          val outBuckets = merged.select(col(BucketCol)).distinct()
-            .collect().map(_.getLong(0)).toSet
-          require(outBuckets.subsetOf(touched.toSet),
-            s"$name merge produced buckets outside the touched set " +
-              s"(${(outBuckets -- touched).mkString(",")}) — pk hashing " +
-              "diverged between batch and merge; refusing to overwrite")
-          overwritePartitions(name, merged, Seq(BucketCol), op)
-          refreshTouchedStats(name, touched)
-        }
+        val widens = (incTyped.columns.toSet - Upsert.OrdCol - BucketCol)
+          .exists(c => !exTypes.get(c).contains(incTyped.schema(c).dataType))
+        if (widens)
+          rewriteBucketedWhole(name, merge(Some(existing.drop(BucketCol)),
+            incTyped), pk, buckets, op)
+        else rewriteTouchedBuckets(name, incTyped, pk, buckets, op)(merge)
+      case existing =>
+        // first bucketed write — declared before first write
+        // (ensureBucketed), or one-time conversion of an existing flat
+        // table: full merge, full partitioned rewrite, (re-)declare
+        // (writeSwapped replaces the dir, marker included)
+        val merged = merge(existing.map(df =>
+            if (df.columns.contains(BucketCol)) df.drop(BucketCol) else df),
+          incoming)
+          .withColumn(BucketCol, bucketOfPk(pk, buckets))
+          .repartition(col(BucketCol))
+        writeSwapped(name, merged, Seq(BucketCol), op = op)
+        writeBucketLayout(name, buckets, pk)
     }
   }
 
-  /** O(touched) manifest maintenance to match an O(touched) bucket
-    * overwrite: keep the untouched buckets' stats rows as-is,
-    * footer-read only the files the overwrite just replaced.
+  /** Whether `name` already declares a bucket layout; refuses one that
+    * disagrees with the caller's (`buckets`, `key`).
     */
-  private def refreshTouchedStats(name: String, touched: Seq[Long]): Unit =
-    // governed tables refresh their stats in the COMMIT (O(changed
-    // files), after the flip) — both mid-transaction (pending) and
-    // just-committed (auto-wrapped write), so this per-merge partial
-    // refresh would be dead weight either way
-    if (isGoverned(name)) ()
-    else if (hasFileStats(name) && !manifestHasRowCounts(name))
-      // legacy manifest: the partial merge would keep zero-count
-      // presence rows while the full rewrite stamps the row-count
-      // marker — upgrade wholesale once instead
-      refreshFileStats(name)
-    else if (hasFileStats(name)) {
-      import org.apache.spark.sql.functions.{col, split}
-      val segs = touched.map(b => s"$BucketCol=$b")
-      val keepOld = spark.read.parquet(statsPath(name).toString)
-        .filter(!split(col("file"), "/").getItem(0).isin(segs: _*))
-      val base = qualifiedDir(name)
-      val newFiles = dataFiles(name).filter(f =>
-        segs.exists(s => f.stripPrefix(base + "/").startsWith(s + "/")))
-      writeStatsManifest(name, keepOld.unionByName(
-        footerStatsDf(newFiles, statCols(name), base)))
-    }
+  private def checkBucketLayout(
+      name: String, key: Seq[String], buckets: Int): Boolean = {
+    require(buckets > 0, s"buckets must be positive: $buckets")
+    require(key.nonEmpty, "bucketed layout needs key columns")
+    bucketLayoutOf(name).map { case (n, declared) =>
+      require(n == buckets && declared == key,
+        s"$name declares (buckets=$n, key=${declared.mkString(",")}); " +
+          s"caller passed (buckets=$buckets, key=${key.mkString(",")})")
+    }.isDefined
+  }
 
-  /** Bucket-scoped CUSTOM merge — the touched-buckets choreography of
-    * the bucketed upsert (batch-derived touched set, partition-pruned
-    * existing read, bucket-subset invariant gate, dynamic partition
-    * overwrite, O(touched) stats maintenance) for maintained artifacts
-    * whose merge is NOT a keyed upsert. The motivating case is an
-    * EVICTION merge: StreamQuantiles' bottom-k sample keeps the k
-    * best rows per group and displaces the rest, which no
-    * upsert/insertIgnore precedence rule expresses.
+  /** Full partitioned rewrite of a bucketed table to `merged` (no
+    * bucket column), re-declaring the layout after the swap. The swap
+    * deletes the in-dir markers, so a declared z-order clustering is
+    * applied to the rewrite and re-declared too.
+    */
+  private def rewriteBucketedWhole(
+      name: String, merged: DataFrame, key: Seq[String], buckets: Int,
+      op: String): Unit = {
+    import org.apache.spark.sql.functions.col
+    val zl = zorderLayoutOf(name)
+    writeSwapped(name, zsortIfDeclared(name, merged
+      .withColumn(BucketCol, bucketOfPk(key, buckets))
+      .repartition(col(BucketCol))), Seq(BucketCol), op = op)
+    writeBucketLayout(name, buckets, key)
+    zl.foreach { case (zc, b) => writeZorderMarker(name, zc, b) }
+  }
+
+  /** Merge `batch` into the buckets its `key` hashes into through
+    * [[rewritePartitions]]: `mergeFn(touched buckets' rows, batch)`
+    * (both without the bucket column) gives their new content, which
+    * is re-bucketed and re-z-sorted before the write. The batch is
+    * pinned ONCE — it feeds the touched set and the merge, and an
+    * expensive frame (a streaming sink's join output) must not
+    * re-execute per consumer.
+    */
+  private def rewriteTouchedBuckets(
+      name: String, batch: DataFrame, key: Seq[String], buckets: Int,
+      op: String)(mergeFn: (Option[DataFrame], DataFrame) => DataFrame): Unit = {
+    import org.apache.spark.sql.functions.col
+    val inc = Iteration.materialize(
+      batch.withColumn(BucketCol, bucketOfPk(key, buckets)))
+    // a ≤`buckets`-row driver set
+    val touched = inc.select(col(BucketCol)).distinct()
+      .collect().map(_.getLong(0)).toSeq
+    rewritePartitions(name, BucketCol, touched, op)(ex =>
+      zsortIfDeclared(name, mergeFn(Some(ex.drop(BucketCol)), inc.drop(BucketCol))
+        .withColumn(BucketCol, bucketOfPk(key, buckets))
+        .repartition(col(BucketCol))))
+  }
+
+  /** Bucket-scoped CUSTOM merge for maintained artifacts whose merge is
+    * NOT a keyed upsert — the motivating case is an EVICTION merge:
+    * StreamQuantiles' bottom-k sample keeps the k best rows per group
+    * and displaces the rest, which no upsert/insertIgnore precedence
+    * rule expresses. The touched buckets derive from the batch's `key`
+    * hashes; the write is [[rewritePartitions]].
     *
     * `mergeFn(existing, batch)` must return the touched buckets'
     * COMPLETE new content: `existing` carries every row of every
@@ -828,55 +817,19 @@ class TableStore(val spark: SparkSession, val root: String) {
     */
   def mergeTouchedBuckets(
       name: String, incoming: DataFrame, key: Seq[String], buckets: Int)(
-      mergeFn: (Option[DataFrame], DataFrame) => DataFrame): Unit = {
-    require(buckets > 0, s"buckets must be positive: $buckets")
-    require(key.nonEmpty, "bucketed layout needs key columns")
-    import org.apache.spark.sql.functions.col
-    def bucketed(df: DataFrame): DataFrame = df
-      .withColumn(BucketCol, bucketOfPk(key, buckets))
-      .repartition(col(BucketCol))
-    bucketLayoutOf(name) match {
-      case Some((n, declared)) =>
-        require(n == buckets && declared == key,
-          s"$name declares (buckets=$n, key=${declared.mkString(",")}); " +
-            s"caller passed (buckets=$buckets, key=${key.mkString(",")})")
-      case None => ()
-    }
+      mergeFn: (Option[DataFrame], DataFrame) => DataFrame): Unit =
     // readIfExists treats a marker-only dir (declared before first
     // write) as absent
-    val existingAll = readIfExists(name)
-    if (bucketLayoutOf(name).isEmpty || existingAll.isEmpty) {
-      // first write, declared-before-first-write, or one-time flat
-      // conversion: full partitioned rewrite, then (re-)declare — the
-      // swap replaces the dir, markers included, so a declared z-order
-      // clustering is applied to the rewrite and re-declared after
-      // (the same discipline as the bucketed upsert's full branch)
-      val zl = zorderLayoutOf(name)
-      val merged = zsortIfDeclared(name, bucketed(mergeFn(
-        existingAll.map(df =>
+    (checkBucketLayout(name, key, buckets), readIfExists(name)) match {
+      case (true, Some(_)) =>
+        rewriteTouchedBuckets(name, incoming, key, buckets, OpUpsert)(mergeFn)
+      case (_, existing) =>
+        // first write, declared-before-first-write, or one-time flat
+        // conversion
+        rewriteBucketedWhole(name, mergeFn(existing.map(df =>
           if (df.columns.contains(BucketCol)) df.drop(BucketCol) else df),
-        incoming)))
-      writeSwapped(name, merged, Seq(BucketCol), op = OpUpsert)
-      writeBucketLayout(name, buckets, key)
-      zl.foreach { case (zc, b) => writeZorderMarker(name, zc, b) }
-    } else {
-      val inc = Iteration.materialize(
-        incoming.withColumn(BucketCol, bucketOfPk(key, buckets)))
-      val touched = inc.select(col(BucketCol)).distinct()
-        .collect().map(_.getLong(0)).toSeq
-      val ex = read(name).filter(col(BucketCol).isin(touched: _*))
-      val merged = Iteration.materialize(zsortIfDeclared(name, bucketed(
-        mergeFn(Some(ex.drop(BucketCol)), inc.drop(BucketCol)))))
-      val outBuckets = merged.select(col(BucketCol)).distinct()
-        .collect().map(_.getLong(0)).toSet
-      require(outBuckets.subsetOf(touched.toSet),
-        s"$name merge produced buckets outside the touched set " +
-          s"(${(outBuckets -- touched).mkString(",")}) — key hashing " +
-          "diverged between batch and merge; refusing to overwrite")
-      overwritePartitions(name, merged, Seq(BucketCol))
-      refreshTouchedStats(name, touched)
+          incoming), key, buckets, OpUpsert)
     }
-  }
 
   /** Absolute paths of the table's parquet part files (layout
     * inspection: compaction specs, per-file min/max locality checks).

@@ -27,7 +27,7 @@ object Trigram {
   private[store] val nBuckets = 16
 
   private def gramRows(
-      batch: DataFrame, pkCol: String, textCol: String): DataFrame =
+      store: TableStore, batch: DataFrame, pkCol: String, textCol: String): DataFrame =
     batch
       // docs shorter than 3 chars have no grams — and cannot match
       // any trigram-prunable needle
@@ -36,7 +36,7 @@ object Trigram {
       // transform-of-substr HOF chain it replaces ran interpreted
       // per element, dominating index-build time
       .select(col(pkCol).as("pk"),
-        pmod(xxhash64(col(pkCol)), lit(nBuckets.toLong)).as(BucketCol),
+        store.bucketOfPk(Seq(pkCol), nBuckets).as(BucketCol),
         lower(col(textCol)).as("_t"))
       .select(col("pk"), col(BucketCol),
         explode(graft.functions.CharGrams.charGrams(
@@ -70,19 +70,17 @@ object Trigram {
     IndexMaintain.recordIfChanged(store, indexName(table), Map(
       "table" -> table, "family" -> "trigram",
       "pk" -> pkCol, "text" -> textCol))
-    val fresh = Iteration.materialize(gramRows(batch, pkCol, textCol))
+    val fresh = Iteration.materialize(gramRows(store, batch, pkCol, textCol))
     val batchPks = Iteration.materialize(
       batch.select(col(pkCol).as("pk")).distinct())
     // buckets the BATCH pks hash into — includes pks whose new text
     // has no grams (their stale rows must still drop)
-    val touched = batchPks
-      .select(pmod(xxhash64(col("pk")), lit(nBuckets.toLong)).as(BucketCol))
+    val touched = batchPks.select(store.bucketOfPk(Seq("pk"), nBuckets))
       .distinct().collect().map(_.getLong(0)).toSeq
     store.readIfExists(indexName(table)) match {
-      case Some(idx0) =>
-        val idx = idx0.withColumn(BucketCol, col(BucketCol).cast("long"))
-        val merged = Iteration.materialize(
-          idx.filter(col(BucketCol).isin(touched: _*))
+      case Some(_) =>
+        store.rewritePartitions(indexName(table), BucketCol, touched)(cur =>
+          cur.withColumn(BucketCol, col(BucketCol).cast("long"))
             .join(batchPks, Seq("pk"), "left_anti")
             .unionByName(fresh)
             // range-split on (bucket, gram): a hot bucket spreads over
@@ -92,13 +90,6 @@ object Trigram {
             // as FTS token sorting)
             .repartitionByRange(col(BucketCol), col("g"))
             .sortWithinPartitions(col(BucketCol), col("g")))
-        store.overwritePartitions(indexName(table), merged, Seq(BucketCol))
-        val stillThere = merged.select(col(BucketCol)).distinct()
-          .collect().map(_.getLong(0)).toSet
-        touched.filterNot(stillThere).foreach(b =>
-          store.dropPartition(indexName(table), BucketCol, b.toString))
-        if (store.hasFileStats(indexName(table)))
-          store.refreshFileStatsIncremental(indexName(table))
       case None =>
         // an all-short-text first batch has no gram rows; writing a
         // zero-file partitioned dir would leave an unreadable index —

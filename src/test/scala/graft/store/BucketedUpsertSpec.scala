@@ -259,6 +259,28 @@ class BucketedUpsertSpec extends SparkSpec {
     }
   }
 
+  test("a rewrite landing outside the touched set is refused; the table is unchanged") {
+    for (governed <- Seq(false, true)) {
+      val store = freshStore()
+      store.upsertBucketed("t", rows(0 until 50), Seq("id"), buckets = 10)
+      if (governed) store.ensureGoverned(Seq("t"))
+      val files = store.dataFiles("t").toSet
+      val before = store.read("t").collect().toSet
+      val epochs = store.epochs()
+      val b = store.read("t").select(col(store.BucketCol).cast("long")).head.getLong(0)
+      // bucket b's rows re-filed under a bucket whose rows were never
+      // read: overwriting it would silently lose them
+      val e = intercept[IllegalArgumentException] {
+        store.rewritePartitions("t", store.BucketCol, Seq(b))(
+          _.withColumn(store.BucketCol, lit((b + 1) % 10)))
+      }
+      assert(e.getMessage.contains("outside the touched set"))
+      assert(store.dataFiles("t").toSet === files, s"governed=$governed")
+      assert(store.read("t").collect().toSet === before, s"governed=$governed")
+      assert(store.epochs() === epochs, s"governed=$governed")
+    }
+  }
+
   test("Doctor flags a misfiled bucket row") {
     val store = freshStore()
     store.upsertBucketed("t", rows(0 until 50), Seq("id"), buckets = 10)

@@ -139,6 +139,33 @@ class TrigramSpec extends SparkSpec {
     assert(rows(store) === rows(rebuilt))
   }
 
+  test("a governed re-upsert that empties a bucket advances the index one epoch") {
+    // every partition overwrite and every partition drop outside a
+    // transaction is its own commit: split, the epoch between them
+    // would still serve the emptied bucket's old grams
+    val store = freshStore()
+    val idx = Trigram.indexName("docs")
+    Trigram.upsertWithIndex(store, "docs", corpus, "doc_id", "text")
+    store.ensureGoverned(Seq(idx))
+    // a doc alone in its bucket, and one other doc that keeps grams
+    val solo = store.read(idx).groupBy(col("pk_bucket"))
+      .agg(countDistinct(col("pk")).as("n"), min(col("pk")).as("pk"))
+      .filter(col("n") === 1L).select(col("pk")).head.getLong(0)
+    val mover = (1L to 4L).find(_ != solo).get
+    val start = store.epochs().max
+    Trigram.upsertWithIndex(store, "docs",
+      Seq((solo, "zz"), (mover, "an entirely new sentence")).toDF("doc_id", "text"),
+      "doc_id", "text")
+    val advanced = store.epochs().filter(_ > start)
+    assert(advanced === Seq(start + 1), s"index maintenance committed epochs $advanced")
+    advanced.foreach { e =>
+      assert(store.readEpoch(idx, e).filter(col("pk") === solo).count() === 0L,
+        s"epoch $e still serves the emptied bucket's old grams")
+    }
+    assert(Trigram.substringSearch(store, "docs", "doc_id", "text", "entirely new")
+      .collect().map(_.getLong(0)).toSeq === Seq(mover))
+  }
+
   test("file skipping: a needle probe opens a strict subset of postings files") {
     import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
     val store = freshStore()
