@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.sources.{BaseRelation, DataSourceRegister, Filter, PrunedFilteredScan, RelationProvider}
 import org.apache.spark.sql.types.StructType
 
-import graft.store.TableStore
+import graft.store.{ChangeWindow, TableStore}
 
 /** The row-level change feed as a BATCH reader format — CDC windows
   * for API surfaces that cannot call the Scala store (PySpark, SQL
@@ -37,8 +37,9 @@ import graft.store.TableStore
   * '''Multi-table windows''' — `tables=a,b` + per-member `pk.<t>`
   * keys (instead of `table`/`pk`): ONE read serving every member's
   * changes over the SAME global epoch window, rows tagged with a
-  * `_table` discriminator — the batch twin of the streaming source's
-  * multi mode and [[graft.store.EpochFollower.consumeChangesMulti]].
+  * `_table` discriminator; the window's members, frames and schema
+  * come from [[graft.store.ChangeWindow]], the rule every CDC
+  * consumer shares.
   * `mode=appends` composes with `tables=` too (no `pk.<t>` needed, no
   * `_change_type` column): the cheap file-level adds scan per member
   * over the one global window — a multi-table mirror that only needs
@@ -51,6 +52,14 @@ import graft.store.TableStore
   * columns; same-name columns must be union-compatible); a member
   * with no logical change in the window contributes no rows and
   * costs no data I/O (commit-op metadata proves it unchanged).
+  * Every form serves the tables' CURRENT surface columns, without
+  * dropped columns or the bucket routing column; a table emptied
+  * since the window (and never given a declared schema) serves the
+  * columns it had in the window, and one without files there either
+  * is refused (as a member of several it contributes no columns).
+  * Members must be known tables
+  * (governed, holding data or declaring a schema), and appends
+  * windows refuse flat (never-governed) tables.
   */
 class ChangesRelationProvider extends RelationProvider with DataSourceRegister {
 
@@ -59,170 +68,34 @@ class ChangesRelationProvider extends RelationProvider with DataSourceRegister {
   override def createRelation(
       sqlContext: SQLContext,
       parameters: Map[String, String]): BaseRelation = {
-    def required(key: String): String = parameters.getOrElse(key,
-      throw new IllegalArgumentException(
-        s"graft-changes needs option(\"$key\", ...)"))
-    val store = new TableStore(sqlContext.sparkSession, required("root"))
-    def table: String = required("table") // single-table branches only
-    val mode = parameters.getOrElse("mode", "changes")
-    def tagEpoch(tag: String): Long = store.tags().getOrElse(tag,
-      throw new IllegalArgumentException(s"unknown tag '$tag'"))
-    // fromTimestamp/toTimestamp resolve through the commit log's
-    // persisted wall-clock stamps (epoch millis, or any ISO-8601
-    // instant) — "what changed since yesterday 03:00" is one option
-    def tsEpoch(v: String): Long = store.epochAtTimestamp(
-      if (v.forall(_.isDigit)) v.toLong
-      else java.time.Instant.parse(v).toEpochMilli)
-    // fromTag/toTag name release-pinned epochs — "what changed between
-    // release A and release B" is two options
-    val from = parameters.get("fromTag").map(tagEpoch)
-      .orElse(parameters.get("fromTimestamp").map(tsEpoch))
-      .orElse(parameters.get("fromEpoch").map(_.toLong))
+    val store = new TableStore(sqlContext.sparkSession,
+      ChangeWindow.required(parameters, "root", shortName()))
+    val appends = ChangeWindow.appendsMode(parameters)
+    // endpoints: a release tag ("what changed between release A and
+    // release B"), a wall-clock instant ("what changed since yesterday
+    // 03:00"), or an epoch
+    val from = ChangeWindow.endpoint(store, parameters, "from")
       .getOrElse(throw new IllegalArgumentException(
         "graft-changes needs option(\"fromEpoch\"|\"fromTag\"|" +
           "\"fromTimestamp\", ...)"))
-    val to = parameters.get("toTag").map(tagEpoch)
-      .orElse(parameters.get("toTimestamp").map(tsEpoch))
-      .orElse(parameters.get("toEpoch").map(_.toLong))
+    val to = ChangeWindow.endpoint(store, parameters, "to")
       .orElse(store.currentEpochIfAny)
       .getOrElse(throw new IllegalStateException(
         "no commits — govern tables first"))
-    val frame = (mode, parameters.get("tables")) match {
-      case (m, Some(ts)) if m == "changes" || m == "appends" =>
-        require(!parameters.contains("table"),
-          "pass option(\"table\", ...) or option(\"tables\", ...), not both")
-        val names = ts.split(",").map(_.trim).filter(_.nonEmpty).toSeq
-        require(names.nonEmpty, "tables must name at least one table")
-        import org.apache.spark.sql.functions.lit
-        import org.apache.spark.sql.types.{StringType, StructField}
-        // every member must be a KNOWN table — governed at an
-        // endpoint, holding data, or declaring a schema (the same
-        // disjunction the streaming provider enforces at creation). A
-        // misspelled member would otherwise be indistinguishable from
-        // a governed-but-empty one and serve zero rows forever; the
-        // engine's norm is loud-on-ambiguity. In APPENDS mode the bar
-        // is higher: the file-add walk is commit-log based, so a FLAT
-        // (data-holding but never-governed) member would pass the
-        // known-table test yet serve zero rows forever — refuse it
-        // too (govern the table, or read it directly).
-        val knownAtEndpoints = store.tablesAt(from) ++ store.tablesAt(to)
-        names.foreach { t =>
-          require(knownAtEndpoints.contains(t) ||
-            store.readIfExists(t).isDefined ||
-            store.declaredSchemaOf(t).isDefined,
-            s"unknown member '$t' in multi-table graft-changes — not " +
-              s"governed at epoch $from or $to, holds no data, and " +
-              "declares no schema (misspelled table name?)")
-          if (mode == "appends")
-            require(knownAtEndpoints.contains(t) ||
-              store.governed.contains(t) ||
-              store.declaredSchemaOf(t).isDefined,
-              s"member '$t' is a flat (ungoverned) table — appends " +
-                "windows walk the commit log, so it would serve zero " +
-                "rows forever; govern it (ensureGoverned) or read it " +
-                "directly")
-        }
-        // the served shape is STABLE regardless of which members
-        // changed in the window: _table + the union of the members'
-        // CURRENT schemas (first-seen order, same-name columns must
-        // agree on type) + _change_type (changes mode only — an
-        // appends scan is untyped adds); members null-fill each
-        // other's columns
-        val fields =
-          scala.collection.mutable.LinkedHashMap[String, StructField]()
-        names.foreach { t =>
-          // a governed-but-empty member (CREATE/CTAS before any
-          // insert) contributes its DECLARED shape, so the union
-          // schema is stable from the member's creation — not from
-          // its first insert. Data-derived schemas carry PHYSICAL
-          // names — map them to the member's surface names (ALTER
-          // RENAME COLUMN) and project out the member's DROPPED
-          // tombstones, like every current read does; declared
-          // schemas are already surface-shaped and narrow.
-          val gone = store.droppedColumnsOf(t).toSet
-          store.readIfExists(t).map(_.schema)
-            .map(store.surfaceSchemaOf(t, _))
-            .orElse(store.declaredSchemaOf(t))
-            .foreach(_.fields
-              .filterNot(f => f.name == store.BucketCol || gone(f.name))
-              .foreach { f =>
-                fields.get(f.name) match {
-                  case Some(g) => require(g.dataType == f.dataType,
-                    s"column '${f.name}' is ${g.dataType} in one member and " +
-                      s"${f.dataType} in '$t' — multi-table windows need " +
-                      "union-compatible member schemas")
-                  case None => fields(f.name) = f.copy(nullable = true)
-                }
-              })
-        }
-        val target = StructType(
-          StructField("_table", StringType, nullable = false) +:
-            (fields.values.toSeq ++
-              (if (mode == "changes")
-                Seq(StructField("_change_type", StringType, nullable = false))
-              else Nil)))
-        // one global window for every member: a one-transact commit is
-        // never torn across the result. Provably-unchanged members
-        // (commit-op metadata: no logical op in the window) contribute
-        // nothing and cost no data I/O — in appends mode the
-        // rewrite-aware file walk itself yields zero added files.
-        // one batched pointer probe: members with no files ANYWHERE in
-        // the window (governed empty) contribute nothing in appends
-        // mode — readAddedSince has no schema to serve for them, and
-        // the union target shape is already fixed above. The probe is
-        // window-wide, not endpoints-only: a member emptied within the
-        // window still owes its added files (at-least-once appends).
-        val nonEmpty =
-          if (mode == "appends") store.withFilesInWindow(names, from, to)
-          else Set.empty[String]
-        val parts = names.flatMap { t =>
-          if (mode == "appends") {
-            if (!nonEmpty(t)) None
-            else Some(store.toSurface(t, store.readAddedSince(t, from, to))
-              .withColumn("_table", lit(t)))
-          } else {
-            val pk = parameters.get(s"pk.$t")
-              .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-              .getOrElse(throw new IllegalArgumentException(
-                s"multi-table graft-changes needs option(\"pk.$t\", ...) — " +
-                  "each member's logical key"))
-            val logical = store.commitOps(t, from, to) match {
-              case Some(ops) => ops.exists { case (e, op) =>
-                e > from && e <= to && !TableStore.RewriteOps(op) }
-              case None => true // unprovable (vacuumed): must deliver
-            }
-            if (!logical) None
-            else Some(store.toSurface(t, store.readChangesSince(t, from, to, pk))
-              .withColumn("_table", lit(t)))
-          }
-        }
-        val aligned = parts.map { df =>
-          val have = df.schema.map(f => f.name -> f.dataType).toMap
-          df.select(target.map(f => have.get(f.name) match {
-            case Some(dt) if dt == f.dataType => col(f.name)
-            case Some(_) => col(f.name).cast(f.dataType).as(f.name)
-            case None => lit(null).cast(f.dataType).as(f.name)
-          }): _*)
-        }
-        if (aligned.isEmpty)
-          sqlContext.sparkSession.createDataFrame(
-            new java.util.ArrayList[Row](), target)
-        else aligned.reduce(_.unionByName(_))
-      // single-table modes serve the surface shape too: DROPPED
-      // tombstones project out (physical names), then ALTER RENAME
-      // COLUMN maps the files' physical names — the same order every
-      // current read applies
-      case ("appends", None) =>
-        store.toSurface(table, store.readAddedSince(table, from, to)
-          .drop(store.droppedColumnsOf(table): _*))
-      case ("changes", None) =>
-        val pk = required("pk").split(",").map(_.trim).toSeq
-        store.toSurface(table, store.readChangesSince(table, from, to, pk)
-          .drop(store.droppedColumnsOf(table): _*))
-      case (other, _) => throw new IllegalArgumentException(
-        s"mode must be changes|appends, got '$other'")
-    }
-    new ChangesRelation(sqlContext, frame)
+    require(from <= to, s"window start $from is after its end $to")
+    val window = ChangeWindow(store,
+      ChangeWindow.membersOf(parameters, appends, shortName()), appends)
+    window.requireKnown(Seq(from, to))
+    // one global window for every member: a one-transact commit is
+    // never torn across the result, and a member with no logical
+    // change in it costs no data I/O. A single table with no shape to
+    // serve is refused; a shapeless member of several contributes none
+    val multi = ChangeWindow.isMulti(parameters)
+    val segment = window.whole(from, to)
+    val parts = window.frames(segment)
+    new ChangesRelation(sqlContext, window.serve(parts,
+      window.servedSchema(multi, requireShape = !multi, Some(segment -> parts)),
+      multi))
   }
 }
 

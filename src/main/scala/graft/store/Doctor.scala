@@ -211,7 +211,9 @@ object Doctor {
               s"head $cur) — its vacuum pin retains every epoch since; " +
               "run `consume <store> $table $consumer` to catch it up, or " +
               "`drop-consumer` if it is dead"))
-        else if (lag > 0 && store.commitOps(table, epoch, cur).isEmpty)
+        else if (lag > 0 &&
+            !ChangeWindow(store, Seq(table -> Nil), appends = false)
+              .walkable(epoch, cur))
           // the window is no longer rewrite-walkable (intermediate
           // commits vacuumed / table ungoverned at a step): the next
           // consume falls back to the coarse endpoint diff, and any

@@ -77,16 +77,12 @@ object EpochFollower {
     throw new IllegalStateException("unreachable")
   }
 
-  private def advance(
-      store: TableStore, table: String, consumer: String, epoch: Long): Unit =
-    advanceAll(store, Seq(table), consumer, epoch)
-
   /** ONE swap upsert advancing every member table's cursor row — the
     * cursor table is whole-table swap-maintained, so the advance is
     * atomic across tables: a multi-table consumer can never observe
     * (or leave behind) member cursors at different epochs.
     */
-  private def advanceAll(
+  private[graft] def advance(
       store: TableStore, tables: Seq[String], consumer: String,
       epoch: Long): Unit = {
     import store.spark.implicits._
@@ -112,38 +108,18 @@ object EpochFollower {
     * was consumed, None when the consumer is already current. The
     * handler's frame is epoch-pinned (explicit file list), so a
     * concurrent commit mid-handler neither tears it nor is missed —
-    * it is the next call's diff.
+    * it is the next call's diff. A window that adds no files
+    * (rewrite-only commits: compaction, z-order; or commits touching
+    * other tables) advances the cursor WITHOUT invoking the handler:
+    * a consumer crossing a compaction sees an empty feed, not an
+    * O(table) redelivery. Registration waits for data: a
+    * governed-but-empty table stays unregistered until its first rows
+    * land.
     */
   def consumeNew[T](store: TableStore, table: String, consumer: String)(
-      f: DataFrame => T): Option[(T, Long)] = {
-    val to = store.snapshot().epoch
-    cursor(store, table, consumer) match {
-      case Some(from) if from >= to => None
-      case Some(from) if store.addedRelsSince(table, from, to).isEmpty =>
-        // nothing to deliver — epochs advanced but this table's logical
-        // content did not (rewrite-only commits: compaction, z-order;
-        // or commits touching other tables). Advance the cursor WITHOUT
-        // invoking the handler: a consumer crossing a compaction sees
-        // an empty feed, not an O(table) redelivery.
-        advance(store, table, consumer, to)
-        None
-      case Some(from) =>
-        val r = f(store.readAddedSince(table, from, to))
-        advance(store, table, consumer, to)
-        Some((r, to))
-      case None =>
-        // registration waits for data: a governed-but-empty table has
-        // no files to serve (readEpoch correctly refuses empty
-        // snapshots), so the consumer stays unregistered until the
-        // first rows land — then its first delivery is the full table
-        if (store.readIfExists(table).isEmpty) None
-        else {
-          val r = f(store.readEpoch(table, to))
-          advance(store, table, consumer, to)
-          Some((r, to))
-        }
-    }
-  }
+      f: DataFrame => T): Option[(T, Long)] =
+    delivered(consume(ChangeWindow(store, Seq(table -> Nil), appends = true),
+      consumer)(m => f(m(table))))
 
   /** The ROW-LEVEL form of [[consumeNew]]: feeds the handler a
     * [[TableStore.readChangesSince]] frame (rows tagged
@@ -152,80 +128,16 @@ object EpochFollower {
     * as pk removals and NEVER serves ghosts after a dedup pass or
     * retention delete. First call registers and delivers the full
     * table as inserts. Same cursor, same at-least-once advance, same
-    * vacuum pinning; rewrite-only windows advance the cursor without
-    * invoking the handler (the handler never sees an empty compaction
-    * echo).
-    *
-    * A pending window MIXING rewrite commits with logical changes is
-    * CUT at the rewrite boundaries automatically (while the commit
-    * history is retained): each run of logical commits is delivered as
-    * its own exact batch, each rewrite-only segment advances the
-    * cursor with zero data I/O — so a poll that slept across
-    * `upsert → compact → upsert` reconciles the two upserts' diffs
-    * and never touches the compaction's rewritten files. This keeps
-    * CDC O(logical diff) unconditionally, where the single-window form
-    * would degrade to reconciling the rewritten table
-    * (readChangesSince's documented caveat). The handler fires once
-    * per logical segment; the cursor advances after EACH segment, so a
-    * crash mid-poll resumes at the segment boundary (same
-    * at-least-once contract). Returns the LAST segment's handler
-    * result. With vacuumed intermediate history the split is not
-    * computable and the call falls back to the single endpoint window.
+    * vacuum pinning. The one-member case of [[consumeChangesMulti]]:
+    * the pending window is cut into [[ChangeWindow]] segments, the
+    * handler fires once per segment in which the table changed
+    * logically (never for a compaction echo), and the LAST call's
+    * result is returned.
     */
   def consumeChanges[T](
       store: TableStore, table: String, consumer: String, pk: Seq[String])(
-      f: DataFrame => T): Option[(T, Long)] = {
-    val to = store.snapshot().epoch
-    cursor(store, table, consumer) match {
-      case Some(from) if from >= to => None
-      case Some(from) =>
-        store.commitOps(table, from, to) match {
-          case Some(ops) if ops.forall {
-              case (_, op) => TableStore.RewriteOps(op) } =>
-            // provably-unchanged window (rewrite-only commits, or
-            // commits touching other tables): advance without invoking
-            // the handler — zero data I/O, pure commit-op metadata
-            advance(store, table, consumer, to)
-            None
-          case Some(ops) =>
-            // cut the window at rewrite commits: bounds isolate each
-            // rewrite epoch (its segment short-circuits in
-            // readChangesSince's metadata fast path) so the logical
-            // segments' endpoint diffs never span a rewrite
-            val cuts = ops.collect {
-              case (e, op) if TableStore.RewriteOps(op) => Seq(e - 1, e)
-            }.flatten
-            val bounds = (from +: cuts.filter(e => e > from && e < to))
-              .:+(to).distinct.sorted
-            var last: Option[T] = None
-            bounds.sliding(2).foreach {
-              case Seq(a, b) =>
-                val segLogical = ops.exists { case (e, op) =>
-                  e > a && e <= b && !TableStore.RewriteOps(op) }
-                if (segLogical)
-                  last = Some(f(store.readChangesSince(table, a, b, pk)))
-                advance(store, table, consumer, b)
-              case _ => ()
-            }
-            last.map(r => (r, to))
-          case None =>
-            // vacuumed / partially-ungoverned history: the split is
-            // not computable — single endpoint window (readChangesSince
-            // degrades as documented, never lies)
-            val r = f(store.readChangesSince(table, from, to, pk))
-            advance(store, table, consumer, to)
-            Some((r, to))
-        }
-      case None =>
-        if (store.readIfExists(table).isEmpty) None
-        else {
-          val r = f(store.readEpoch(table, to)
-            .withColumn(store.ChangeTypeCol, lit("insert")))
-          advance(store, table, consumer, to)
-          Some((r, to))
-        }
-    }
-  }
+      f: DataFrame => T): Option[(T, Long)] =
+    consumeChangesMulti(store, Seq(table -> pk), consumer)(m => f(m(table)))
 
   /** TRANSACTIONALLY-CONSISTENT multi-table CDC: one consumer, one
     * logical cursor over N tables, every batch a map of each table's
@@ -242,89 +154,70 @@ object EpochFollower {
     * `pks` maps each member table to its logical key. First call
     * registers and delivers each non-empty member in full (tables
     * still empty are registered too — their first rows arrive as a
-    * later diff); all-empty stays unregistered. Windows mixing
-    * rewrites with logical changes are cut at the UNION of the
-    * members' rewrite boundaries (same O(logical diff) guarantee as
-    * [[consumeChanges]], same per-segment cursor advance); a member
-    * with no logical change in a segment is absent from that batch's
-    * map. Returns the LAST batch's handler result. If member cursors
-    * ever diverge (the same consumer name also used per-table — don't)
-    * the window starts at the MINIMUM: at-least-once redelivery for
-    * the ahead members, never a skip.
+    * later diff); all-empty stays unregistered. The pending window is
+    * cut into [[ChangeWindow.segments]]: one handler call per segment
+    * with a logical change, the map holding only the members that
+    * changed in it, so the diffs stay O(logical diff) across
+    * compactions; with vacuumed intermediate history the window is
+    * one endpoint segment (readChangesSince degrades as documented,
+    * never lies). Returns the LAST batch's handler result. If member
+    * cursors ever diverge (the same consumer name also used
+    * per-table — don't) the window starts at the MINIMUM:
+    * at-least-once redelivery for the ahead members, never a skip.
     */
   def consumeChangesMulti[T](
       store: TableStore, pks: Seq[(String, Seq[String])], consumer: String)(
       f: Map[String, DataFrame] => T): Option[(T, Long)] = {
     require(pks.nonEmpty, "consumeChangesMulti needs at least one table")
-    val tables = pks.map(_._1)
-    val to = store.snapshot().epoch
-    val cur = cursors(store)
-    val registered = tables.flatMap(t => cur.get((t, consumer)))
+    delivered(consume(ChangeWindow(store, pks, appends = false), consumer)(f))
+  }
+
+  private def delivered[T](step: (Option[T], Option[Long])): Option[(T, Long)] =
+    for (r <- step._1; e <- step._2) yield (r, e)
+
+  /** One consume of `w`'s pending window: the handler fires once per
+    * segment with a change (registration: once, with the snapshot),
+    * the cursor advances after each such call and once at the end for
+    * trailing advance-only segments. Returns the last handler result
+    * and the epoch the cursor moved to — None when it did not move
+    * (already current, or registration still waiting for data), so a
+    * drain loop needs no cursor read of its own.
+    */
+  private[graft] def consume[T](w: ChangeWindow, consumer: String)(
+      f: Map[String, DataFrame] => T): (Option[T], Option[Long]) = {
+    val to = w.store.snapshot().epoch
+    val cur = cursors(w.store)
+    val registered = w.tables.flatMap(t => cur.get((t, consumer)))
     if (registered.isEmpty) {
       // registration: full delivery of every member that has data, one
       // atomic cursor write for ALL members (including still-empty
       // ones, so their first rows arrive as an ordinary diff)
-      val full = pks.flatMap { case (t, _) =>
-        if (store.readIfExists(t).isEmpty) None
-        else Some(t -> store.readEpoch(t, to)
-          .withColumn(store.ChangeTypeCol, lit("insert")))
-      }.toMap
-      if (full.isEmpty) None
+      val full = w.snapshot(to)
+      if (full.isEmpty) (None, None)
       else {
-        val r = f(full)
-        advanceAll(store, tables, consumer, to)
-        Some((r, to))
+        val r = f(full.toMap)
+        advance(w.store, w.tables, consumer, to)
+        (Some(r), Some(to))
       }
     } else {
-      require(registered.size == tables.size,
+      require(registered.size == w.tables.size,
         s"consumer '$consumer' is registered on only " +
-          s"${registered.size} of ${tables.size} member tables — " +
+          s"${registered.size} of ${w.tables.size} member tables — " +
           "member sets must not change after registration")
       val from = registered.min
-      if (from >= to) return None
-      val opsPer: Map[String, Option[Seq[(Long, String)]]] =
-        tables.map(t => t -> store.commitOps(t, from, to)).toMap
-      def logicalIn(t: String, a: Long, b: Long): Boolean =
-        opsPer(t) match {
-          case Some(ops) => ops.exists { case (e, op) =>
-            e > a && e <= b && !TableStore.RewriteOps(op) }
-          case None => true // unprovable: must deliver
-        }
-      if (tables.forall(t => opsPer(t).exists(_.forall {
-          case (_, op) => TableStore.RewriteOps(op) }))) {
-        advanceAll(store, tables, consumer, to)
-        None
-      } else if (opsPer.values.exists(_.isEmpty)) {
-        // some member's window is not walkable (vacuumed history):
-        // one consistent endpoint window for everyone
-        val frames = pks.flatMap { case (t, pk) =>
-          if (logicalIn(t, from, to))
-            Some(t -> store.readChangesSince(t, from, to, pk))
-          else None
-        }.toMap
-        val r = f(frames)
-        advanceAll(store, tables, consumer, to)
-        Some((r, to))
-      } else {
-        // cut at the UNION of the members' rewrite boundaries
-        val cuts = opsPer.values.flatMap(_.get).collect {
-          case (e, op) if TableStore.RewriteOps(op) => Seq(e - 1, e)
-        }.flatten.toSeq
-        val bounds = (from +: cuts.filter(e => e > from && e < to))
-          .:+(to).distinct.sorted
+      if (from >= to) (None, None)
+      else {
         var last: Option[T] = None
-        bounds.sliding(2).foreach {
-          case Seq(a, b) =>
-            val seg = pks.flatMap { case (t, pk) =>
-              if (logicalIn(t, a, b))
-                Some(t -> store.readChangesSince(t, a, b, pk))
-              else None
-            }.toMap
-            if (seg.nonEmpty) last = Some(f(seg))
-            advanceAll(store, tables, consumer, b)
-          case _ => ()
+        var at = from
+        w.segments(from, to).foreach { s =>
+          if (s.changed.nonEmpty) {
+            last = Some(f(w.frames(s).toMap))
+            advance(w.store, w.tables, consumer, s.to)
+            at = s.to
+          }
         }
-        last.map(r => (r, to))
+        if (at < to) advance(w.store, w.tables, consumer, to)
+        (last, Some(to))
       }
     }
   }

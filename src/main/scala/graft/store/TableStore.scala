@@ -2606,16 +2606,7 @@ class TableStore(val spark: SparkSession, val root: String) {
     def relsAt(e: Long): Set[String] =
       entryAt(name, listCommits().toMap, e).map(resolveEntry(_).toSet)
         .getOrElse(Set.empty)
-    if (added.nonEmpty)
-      // mergeSchema: the delivered files can come from SEVERAL commits,
-      // and a window spanning a schema-evolving upsert mixes pre- and
-      // post-evolution files — without the union, parquet samples ONE
-      // footer and either drops the new column or serves an unstable
-      // schema per poll. Cost: O(delivered files) footer reads, the
-      // window's own size — never O(table).
-      spark.read.option("basePath", path(name))
-        .option("mergeSchema", "true")
-        .parquet(added.map(r => new Path(path(name), r).toString): _*)
+    if (added.nonEmpty) readAdded(name, added)
     // empty diff: serve an empty frame with the table's schema from
     // whichever endpoint still has files (readEpoch refuses empty
     // snapshots — correctly — so pick a non-empty one)
@@ -2624,6 +2615,21 @@ class TableStore(val spark: SparkSession, val root: String) {
     else throw new IllegalStateException(
       s"$name holds no files at either epoch — no schema to serve")
   }
+
+  /** The non-empty file list [[addedRelsSince]] walked, read as one
+    * frame — split out so a caller that already walked the window
+    * (the appends segments of [[ChangeWindow]]) reads without a
+    * second walk. mergeSchema: the delivered files can come from
+    * SEVERAL commits, and a window spanning a schema-evolving upsert
+    * mixes pre- and post-evolution files — without the union, parquet
+    * samples ONE footer and either drops the new column or serves an
+    * unstable schema per poll. Cost: O(delivered files) footer reads,
+    * the window's own size — never O(table).
+    */
+  private[store] def readAdded(name: String, rels: Seq[String]): DataFrame =
+    spark.read.option("basePath", path(name))
+      .option("mergeSchema", "true")
+      .parquet(rels.map(r => new Path(path(name), r).toString): _*)
 
   /** [[readAddedSince]] against the CURRENT epoch — the steady-state
     * incremental-consumer call: "everything that landed after the
@@ -2725,24 +2731,11 @@ class TableStore(val spark: SparkSession, val root: String) {
     // side (partition-discovered columns can surface as INT where the
     // flat form stored LONG — casting keeps cross-layout hashes
     // comparable).
-    val aTypes = aRaw.schema.map(f => f.name -> f.dataType).toMap
-    val rTypes = rRaw.schema.map(f => f.name -> f.dataType).toMap
-    val unionCols: Seq[(String, org.apache.spark.sql.types.DataType)] =
-      (aRaw.columns ++ rRaw.columns.filterNot(aRaw.columns.contains))
-        .toSeq.map(n => n -> aTypes.getOrElse(n, rTypes(n)))
-    def align(df: DataFrame): DataFrame = {
-      val have = df.schema.map(f => f.name -> f.dataType).toMap
-      df.select(unionCols.map { case (n, t) =>
-        have.get(n) match {
-          case Some(dt) if dt == t => col(n)
-          case Some(_) => col(n).cast(t).as(n)
-          case None => lit(null).cast(t).as(n)
-        }
-      }: _*)
-    }
-    val rowHash = xxhash64(unionCols.map { case (n, _) => col(n) }: _*)
-    val a = align(aRaw).withColumn("__h", rowHash)
-    val r = align(rRaw).withColumn("__h", rowHash)
+    val union = org.apache.spark.sql.types.StructType(aRaw.schema.fields ++
+      rRaw.schema.fields.filterNot(f => aRaw.columns.contains(f.name)))
+    val rowHash = xxhash64(union.fieldNames.toSeq.map(col): _*)
+    val a = ChangeWindow.align(aRaw, union).withColumn("__h", rowHash)
+    val r = ChangeWindow.align(rRaw, union).withColumn("__h", rowHash)
     // new or changed: present in the added files with no identical row
     // (pk + full-row hash) among the removed — carried rows cancel out
     val inserts = a.join(r.select((pk :+ "__h").map(col): _*),

@@ -49,22 +49,20 @@ object Upsert {
   /** replace=True: incoming beats existing; within the batch, higher
     * `__ord` (later insert in the reference's sequential loop) wins.
     */
-  def upsert(existing: Option[DataFrame], incoming: DataFrame, pk: Seq[String]): DataFrame = {
-    val inc = withOrd(incoming).withColumn(PrecCol, lit(1))
-    val all = existing match {
-      case Some(ex) =>
-        withOrd(ex).withColumn(PrecCol, lit(0))
-          .unionByName(inc, allowMissingColumns = true)
-      case None => inc
-    }
-    dedup(all, pk, keepFirst = false)
-  }
+  def upsert(existing: Option[DataFrame], incoming: DataFrame, pk: Seq[String]): DataFrame =
+    merge(existing, incoming, pk, keepFirst = false)
 
   /** ignore=True: existing beats incoming; within the batch, the FIRST
     * row per key wins (`/root/reference/utils.py:459-469` following
     * edges preserve first_seen).
     */
-  def insertIgnore(existing: Option[DataFrame], incoming: DataFrame, pk: Seq[String]): DataFrame = {
+  def insertIgnore(existing: Option[DataFrame], incoming: DataFrame, pk: Seq[String]): DataFrame =
+    merge(existing, incoming, pk, keepFirst = true)
+
+  // existing rows rank below incoming ones (`__prec` 0 vs 1); dedup
+  // picks the winner per key
+  private def merge(existing: Option[DataFrame], incoming: DataFrame,
+      pk: Seq[String], keepFirst: Boolean): DataFrame = {
     val inc = withOrd(incoming).withColumn(PrecCol, lit(1))
     val all = existing match {
       case Some(ex) =>
@@ -72,6 +70,6 @@ object Upsert {
           .unionByName(inc, allowMissingColumns = true)
       case None => inc
     }
-    dedup(all, pk, keepFirst = true)
+    dedup(all, pk, keepFirst)
   }
 }

@@ -1,14 +1,14 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SQLContext}
+import org.apache.spark.sql.connector.read.streaming.{Offset => OffsetV2, ReadLimit, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.execution.streaming.{Offset => OffsetV1, Source}
 import org.apache.spark.sql.execution.streaming.runtime.{LongOffset, SerializedOffset}
-import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.graftbridge.StreamingFrame
 import org.apache.spark.sql.sources.{DataSourceRegister, StreamSourceProvider}
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.types.StructType
 
-import graft.store.{EpochFollower, TableStore}
+import graft.store.{ChangeWindow, EpochFollower, TableStore}
 
 /** The epoch log as a FIRST-CLASS Structured Streaming source:
   *
@@ -30,9 +30,9 @@ import graft.store.{EpochFollower, TableStore}
   *
   * Semantics, all inherited from the store's CDC layer:
   *  - `getOffset` is pure commit metadata (no data I/O). In `changes`
-  *    mode it advances ONE logical segment at a time, cutting at
-  *    rewrite commits exactly like [[EpochFollower.consumeChanges]],
-  *    so a micro-batch window never mixes a compaction with logical
+  *    mode it advances ONE [[graft.store.ChangeWindow]] segment at a
+  *    time — the window rule every CDC consumer shares — so a
+  *    micro-batch window never mixes a compaction with logical
   *    changes — CDC stays O(logical diff); a rewrite-only segment
   *    surfaces as one empty batch ([[TableStore.readChangesSince]]'s
   *    zero-I/O fast path). `maxEpochsPerBatch` caps backlog drain
@@ -49,8 +49,8 @@ import graft.store.{EpochFollower, TableStore}
   *    standard Spark contract (dropped columns null-fill).
   *
   * '''Multi-table mode''' — `tables=a,b` instead of `table`:
-  * TRANSACTIONALLY-CONSISTENT CDC over N tables through ONE stream,
-  * the streaming twin of [[EpochFollower.consumeChangesMulti]]. The
+  * TRANSACTIONALLY-CONSISTENT CDC over N tables through ONE stream
+  * (the same [[graft.store.ChangeWindow]] the cursor consumers use). The
   * epoch log is global, so two tables upserted in one
   * [[TableStore.transact]] land at one epoch — and because every
   * micro-batch window is a single global epoch pair shared by ALL
@@ -66,7 +66,8 @@ import graft.store.{EpochFollower, TableStore}
   * construction. The delivered schema is `_table` + the union of the
   * member schemas (same-name columns must agree on type — pass
   * `.schema(...)` to override) + `_change_type`; a member's missing
-  * columns null-fill.
+  * columns null-fill. Both modes serve surface column names without
+  * dropped columns or the bucket routing column.
   *
   * Options: `root` (required); `table` (single mode) or `tables`
   * (comma-separated, multi mode) — exactly one; `pk` (comma-separated,
@@ -96,14 +97,14 @@ import graft.store.{EpochFollower, TableStore}
   * single-threaded store contract).
   */
 class EpochLogSource(
-    sqlContext: SQLContext, root: String,
-    members: Seq[(String, Seq[String])], tagTable: Boolean,
-    mode: String, startingEpoch: String, maxEpochsPerBatch: Option[Long],
+    sqlContext: SQLContext, window: ChangeWindow, multi: Boolean,
+    startingEpoch: Option[String], maxEpochsPerBatch: Option[Long],
     consumer: Option[String], fixedSchema: StructType,
-    startingTimestamp: Option[Long] = None) extends Source {
+    startingTimestamp: Option[Long] = None)
+    extends Source with SupportsTriggerAvailableNow {
 
-  private val store = new TableStore(sqlContext.sparkSession, root)
-  private val tables = members.map(_._1)
+  private val store = window.store
+  private val tables = window.tables
 
   // the column name maps at QUERY START — the fixed streaming schema
   // was resolved through them, so a mid-stream ALTER RENAME COLUMN
@@ -114,7 +115,7 @@ class EpochLogSource(
   private val startRenames: Map[String, Seq[(String, String)]] =
     tables.map(t => t -> store.renamedColumnsOf(t)).toMap
 
-  private def surfaceChecked(t: String, df: org.apache.spark.sql.DataFrame) = {
+  private def surfaceChecked(t: String, df: DataFrame) = {
     val cur = store.renamedColumnsOf(t)
     if (cur != startRenames(t))
       throw new IllegalStateException(
@@ -129,24 +130,24 @@ class EpochLogSource(
 
   /** `latest` skips history (base = the epoch at source creation), a
     * NUMBER resumes/reprocesses from that exact epoch (retained-epoch
-    * contract applies), `earliest` leaves None — the first batch is a
-    * full snapshot. `startingTimestamp` (when set, exclusive with
-    * `startingEpoch`) resolves against the commit log's persisted
-    * wall-clock stamps AT SOURCE CREATION — same pinning rule as the
-    * replay window: the stream delivers every commit stamped AT OR
-    * AFTER the instant (the Delta CDF `startingTimestamp` rule), so
-    * the base is the newest retained commit stamped strictly before
-    * it; an instant predating every retained commit degrades to
-    * `earliest` (everything qualifies — the full first snapshot).
+    * contract applies), `earliest` (the default) leaves None — the
+    * first batch is a full snapshot. `startingTimestamp` (when set,
+    * exclusive with `startingEpoch`) resolves against the commit log's
+    * persisted wall-clock stamps AT SOURCE CREATION — same pinning
+    * rule as the replay window: the stream delivers every commit
+    * stamped AT OR AFTER the instant (the Delta CDF `startingTimestamp`
+    * rule), so the base is the newest retained commit stamped strictly
+    * before it; an instant predating every retained commit degrades
+    * to `earliest` (everything qualifies — the full first snapshot).
     */
   private val latestBase: Option[Long] = startingTimestamp match {
     case Some(ts) =>
       val before = store.commitStamps().filter(_._2 < ts)
       if (before.isEmpty) None else Some(before.map(_._1).max)
     case None => startingEpoch match {
-      case "latest" => Some(currentEpoch().getOrElse(0L))
-      case "earliest" => None
-      case n => Some(n.toLong)
+      case Some("latest") => Some(currentEpoch().getOrElse(0L))
+      case Some("earliest") | None => None
+      case Some(n) => Some(ChangeWindow.number("startingEpoch", n))
     }
   }
 
@@ -158,11 +159,13 @@ class EpochLogSource(
     * the consumeChangesMulti rule — at-least-once redelivery for
     * ahead members, never a skip.
     */
-  private var maxSeen: Option[Long] = {
-    val registered = consumer.toSeq.flatMap(c =>
-      tables.flatMap(t => EpochFollower.cursor(store, t, c)))
-    if (registered.nonEmpty) Some(registered.min) else latestBase
-  }
+  private val registered: Map[String, Long] =
+    consumer.fold(Map.empty[String, Long]) { c =>
+      val cur = EpochFollower.cursors(store)
+      tables.flatMap(t => cur.get((t, c)).map(t -> _)).toMap
+    }
+  private var maxSeen: Option[Long] =
+    if (registered.nonEmpty) Some(registered.values.min) else latestBase
 
   // register the cursor (vacuum pin) up front AT THE CREATION EPOCH:
   // Spark's offset WAL can reference a batch whose commit-log write
@@ -171,20 +174,34 @@ class EpochLogSource(
   // retained. commit() has not fired yet at that point, so the
   // REGISTRATION value is the only pin — it must cover everything the
   // source could have offered, i.e. the epoch current when the source
-  // was built. A pin at 0 (the old value) pinned nothing. All member
-  // rows land in one atomic swap (no partially-registered multi).
+  // was built. All member rows land in one atomic swap (no
+  // partially-registered multi).
   consumer.foreach { c =>
-    val unregistered =
-      tables.filter(t => EpochFollower.cursor(store, t, c).isEmpty)
+    val unregistered = tables.filterNot(registered.contains)
     if (unregistered.nonEmpty)
-      registerCursors(unregistered, c,
+      EpochFollower.advance(store, unregistered, c,
         maxSeen.orElse(currentEpoch()).getOrElse(0L))
   }
 
   override def schema: StructType = fixedSchema
 
-  override def getOffset: Option[OffsetV1] = currentEpoch().flatMap { cur =>
-    maxSeen match {
+  // Trigger.AvailableNow: the epoch current when the trigger
+  // started bounds the drain, which still advances one segment per
+  // micro-batch (without this the engine takes a single getOffset as
+  // the final offset and stops after the first segment)
+  private var availableNowEnd: Option[Long] = None
+
+  override def prepareForTriggerAvailableNow(): Unit =
+    availableNowEnd = currentEpoch()
+
+  override def latestOffset(start: OffsetV2, limit: ReadLimit): OffsetV2 =
+    getOffset.orNull
+
+  /** Pure commit metadata: in `changes` mode one [[ChangeWindow]]
+    * segment per micro-batch, capped by `maxEpochsPerBatch`.
+    */
+  override def getOffset: Option[OffsetV1] =
+    availableNowEnd.orElse(currentEpoch()).flatMap { cur => maxSeen match {
       case None =>
         // initial full-snapshot delivery (earliest): wait until some
         // member holds files, then offer the whole current epoch
@@ -192,20 +209,7 @@ class EpochLogSource(
         else Some(LongOffset(cur))
       case Some(base) if cur <= base => Some(LongOffset(base))
       case Some(base) =>
-        val target0 =
-          if (mode == "appends") cur // rewrite-aware walk needs no cuts
-          else {
-            val opsPer = tables.map(t => store.commitOps(t, base, cur))
-            if (opsPer.exists(_.isEmpty)) cur // vacuumed: endpoint window
-            else {
-              // one logical segment per micro-batch: cut the pending
-              // window at the UNION of the members' rewrite commits
-              val cuts = opsPer.flatMap(_.get).collect {
-                case (e, op) if TableStore.RewriteOps(op) => Seq(e - 1, e)
-              }.flatten
-              (cuts.filter(e => e > base && e < cur) :+ cur).min
-            }
-          }
+        val target0 = window.segments(base, cur).head.to
         val target = maxEpochsPerBatch
           .fold(target0)(m => math.min(target0, base + m))
         Some(LongOffset(math.max(target, base)))
@@ -216,99 +220,29 @@ class EpochLogSource(
     val endE = epochOf(end)
     val baseE = start.map(epochOf).orElse(latestBase)
     maxSeen = Some(math.max(endE, maxSeen.getOrElse(Long.MinValue)))
-    val frame = baseE match {
-      case Some(b) if b >= endE => emptyFrame()
-      case Some(b) =>
-        if (mode == "appends") {
-          // per-member file-level adds over the ONE global window —
-          // the rewrite-aware walk itself yields nothing for an
-          // unchanged member (empty frame, metadata cost only). A
-          // member with no files ANYWHERE in the window (governed
-          // empty: CREATE/CTAS before any insert) is skipped outright
-          // — readAddedSince has no schema to serve for it, and the
-          // delivered shape is the fixed union schema anyway (one
-          // batched pointer probe for all members; window-wide, so a
-          // member emptied within the window still delivers its adds)
-          val nonEmpty = store.withFilesInWindow(tables, b, endE)
-          // member frames carry PHYSICAL column names — surface-map
-          // them (ALTER RENAME COLUMN) before align() matches against
-          // the fixed (surface-shaped) schema; a map that CHANGED
-          // since query start dies loudly (surfaceChecked) instead of
-          // silently null-filling the renamed column
-          unionAligned(members.collect { case (t, _) if nonEmpty(t) =>
-            tagged(t, surfaceChecked(t, store.readAddedSince(t, b, endE))) })
-        }
-        else unionAligned(members.flatMap { case (t, pk) =>
-          if (logicalIn(t, b, endE))
-            Some(tagged(t,
-              surfaceChecked(t, store.readChangesSince(t, b, endE, pk))))
-          else None // provably unchanged member: zero data I/O
-        })
-      case None => // earliest: the registration snapshot, all inserts
-        unionAligned(members.flatMap { case (t, _) =>
-          if (store.readIfExists(t).isEmpty) None
-          else Some(tagged(t, surfaceChecked(t, store.readEpoch(t, endE))
-            .withColumn(store.ChangeTypeCol, lit("insert"))))
-        })
+    // member frames carry PHYSICAL column names — surface-map them
+    // (ALTER RENAME COLUMN) before they are aligned to the fixed
+    // (surface-shaped) schema; a map that CHANGED since query start
+    // dies loudly (surfaceChecked) instead of silently null-filling
+    val parts = baseE match {
+      case Some(b) if b >= endE => Nil
+      case Some(b) => window.frames(window.whole(b, endE))
+      case None => window.snapshot(endE) // earliest: the registration snapshot
     }
-    StreamingFrame.asStreaming(frame)
+    StreamingFrame.asStreaming(
+      window.serve(parts, fixedSchema, multi, surfaceChecked))
   }
 
   override def commit(end: OffsetV1): Unit = consumer.foreach { c =>
     // Spark has committed the batch to its WAL — release the replay
     // pin up to its end (the cursor is a floor, never a window source);
     // every member advances in ONE swap (no torn multi-table cursor)
-    registerCursors(tables, c, epochOf(end))
+    EpochFollower.advance(store, tables, c, epochOf(end))
   }
 
   override def stop(): Unit = ()
 
-  /** Did any commit in (a, b] logically change `t`? Unprovable
-    * (vacuumed history) counts as yes — must deliver, never skip.
-    */
-  private def logicalIn(t: String, a: Long, b: Long): Boolean =
-    store.commitOps(t, a, b) match {
-      case Some(ops) => ops.exists { case (e, op) =>
-        e > a && e <= b && !TableStore.RewriteOps(op) }
-      case None => true
-    }
-
-  private def tagged(t: String, df: DataFrame): DataFrame =
-    if (tagTable) df.withColumn(EpochLogSource.TableCol, lit(t)) else df
-
-  private def unionAligned(parts: Seq[DataFrame]): DataFrame =
-    if (parts.isEmpty) emptyFrame()
-    else parts.map(align).reduce(_.unionByName(_))
-
-  /** Serve exactly the query-start schema regardless of what the
-    * window's files carry: evolution-added columns are dropped until
-    * restart, evolution-dropped columns null-fill — the fixed-schema
-    * contract every Spark streaming source keeps. (Multi-table: also
-    * null-fills each member's missing union-schema columns.)
-    */
-  private def align(df: DataFrame): DataFrame = {
-    val have = df.schema.map(f => f.name -> f.dataType).toMap
-    df.select(fixedSchema.map { f =>
-      have.get(f.name) match {
-        case Some(dt) if dt == f.dataType => col(f.name)
-        case Some(_) => col(f.name).cast(f.dataType).as(f.name)
-        case None => lit(null).cast(f.dataType).as(f.name)
-      }
-    }: _*)
-  }
-
-  private def emptyFrame(): DataFrame =
-    sqlContext.sparkSession.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](), fixedSchema)
-
   private def currentEpoch(): Option[Long] = store.currentEpochIfAny
-
-  private def registerCursors(ts: Seq[String], c: String, epoch: Long): Unit = {
-    import store.spark.implicits._
-    store.upsert(EpochFollower.CursorTable,
-      ts.map(t => (t, c, epoch)).toDF("table", "consumer", "epoch"),
-      Seq("table", "consumer"))
-  }
 
   private def epochOf(o: OffsetV1): Long = o match {
     case l: LongOffset => l.offset
@@ -317,20 +251,13 @@ class EpochLogSource(
   }
 }
 
-object EpochLogSource {
-  /** Multi-table discriminator column: which member a row belongs to. */
-  val TableCol = "_table"
-}
-
 /** `format("graft-cdc")` registration. The source schema is resolved
   * at query definition: the user-provided `.schema(...)` wins; else
-  * the table's current data schema, falling back to its DECLARED
-  * schema for a governed-but-empty table (SQL CREATE/CTAS before any
-  * insert) — plus `_change_type` in changes mode. Multi-table
-  * (`tables=a,b`): `_table` + the union of the member schemas (all
-  * nullable — members null-fill each other's columns) +
-  * `_change_type`; a member contributing neither data nor a declared
-  * schema needs `.schema(...)`.
+  * [[ChangeWindow.servedSchema]] — the tables' current surface
+  * schemas (a governed-but-empty table's DECLARED schema), `_table`
+  * first in multi-table mode, `_change_type` last in changes mode; a
+  * member contributing neither data nor a declared schema needs
+  * `.schema(...)`.
   */
 class EpochLogSourceProvider extends StreamSourceProvider with DataSourceRegister {
 
@@ -345,139 +272,41 @@ class EpochLogSourceProvider extends StreamSourceProvider with DataSourceRegiste
       sqlContext: SQLContext, metadataPath: String,
       schema: Option[StructType], providerName: String,
       parameters: Map[String, String]): Source = {
-    val mode = parameters.getOrElse("mode", "changes")
-    require(mode == "changes" || mode == "appends",
-      s"mode must be changes|appends, got '$mode'")
-    val starting = parameters.getOrElse("startingEpoch", "earliest")
-    require(starting == "earliest" || starting == "latest" ||
-      starting.forall(_.isDigit),
-      s"startingEpoch must be earliest|latest|<epoch>, got '$starting'")
+    val appends = ChangeWindow.appendsMode(parameters)
+    val starting = parameters.get("startingEpoch")
+    starting.filterNot(s => s == "earliest" || s == "latest")
+      .foreach(ChangeWindow.number("startingEpoch", _))
     // startingTimestamp: epoch millis or ISO-8601 instant, resolved
     // against the commit log's persisted stamps (the TIMESTAMP AS OF /
     // graft-changes fromTimestamp machinery, streaming form)
-    val startingTs = parameters.get("startingTimestamp").map(v =>
-      if (v.nonEmpty && v.forall(_.isDigit)) v.toLong
-      else java.time.Instant.parse(v).toEpochMilli)
-    require(startingTs.isEmpty || !parameters.contains("startingEpoch"),
+    val startingTs = parameters.get("startingTimestamp")
+      .map(ChangeWindow.instant("startingTimestamp", _))
+    require(startingTs.isEmpty || starting.isEmpty,
       "pass option(\"startingEpoch\", ...) or " +
         "option(\"startingTimestamp\", ...), not both")
-    val members = resolveMembers(parameters, mode)
-    // appends windows walk the COMMIT LOG, so a flat (data-holding but
-    // never-governed) member would pass the known-table schema checks
-    // yet serve zero rows forever — refuse it at creation, matching
-    // the batch reader's guard
-    if (mode == "appends") {
-      val st = new TableStore(
-        sqlContext.sparkSession, required(parameters, "root"))
-      members.map(_._1).foreach { t =>
-        require(st.governed.contains(t) ||
-          st.declaredSchemaOf(t).isDefined,
-          s"table '$t' is a flat (ungoverned) table — appends windows " +
-            "walk the commit log, so it would serve zero rows forever; " +
-            "govern it (ensureGoverned) or read it directly")
-      }
-    }
+    val window = ChangeWindow(storeOf(sqlContext, parameters),
+      ChangeWindow.membersOf(parameters, appends, shortName()), appends)
+    window.requireKnown(Nil)
     new EpochLogSource(
-      sqlContext, required(parameters, "root"),
-      members, tagTable = parameters.contains("tables"),
-      mode, starting,
-      parameters.get("maxEpochsPerBatch").map(_.toLong),
+      sqlContext, window, ChangeWindow.isMulti(parameters), starting,
+      parameters.get("maxEpochsPerBatch")
+        .map(ChangeWindow.number("maxEpochsPerBatch", _)),
       parameters.get("consumer"),
       resolveSchema(sqlContext, schema, parameters),
       startingTs)
   }
 
-  /** `table` + `pk` (single) XOR `tables` + per-member `pk.<t>`
-    * (multi). In `appends` mode no key exists or is needed (file-level
-    * adds) — multi members resolve with empty pks.
-    */
-  private def resolveMembers(
-      parameters: Map[String, String], mode: String): Seq[(String, Seq[String])] =
-    parameters.get("tables") match {
-      case Some(ts) =>
-        require(!parameters.contains("table"),
-          "pass option(\"table\", ...) or option(\"tables\", ...), not both")
-        val names = splitCsv(ts)
-        require(names.nonEmpty, "tables must name at least one table")
-        names.map { t =>
-          t -> parameters.get(s"pk.$t").map(splitCsv).getOrElse {
-            if (mode == "appends") Seq.empty
-            else throw new IllegalArgumentException(
-              s"multi-table graft-cdc needs option(\"pk.$t\", ...) — " +
-                "each member's logical key")
-          }
-        }
-      case None =>
-        val table = required(parameters, "table")
-        val pk = parameters.get("pk").map(splitCsv).getOrElse(Seq.empty)
-        require(mode == "appends" || pk.nonEmpty,
-          "changes mode needs option(\"pk\", ...) — the table's logical key")
-        Seq(table -> pk)
-    }
-
-  private def splitCsv(s: String): Seq[String] =
-    s.split(",").map(_.trim).filter(_.nonEmpty).toSeq
-
-  private def required(parameters: Map[String, String], key: String): String =
-    parameters.getOrElse(key,
-      throw new IllegalArgumentException(s"graft-cdc needs option(\"$key\", ...)"))
+  private def storeOf(sqlContext: SQLContext, parameters: Map[String, String]) =
+    new TableStore(sqlContext.sparkSession,
+      ChangeWindow.required(parameters, "root", shortName()))
 
   private def resolveSchema(
       sqlContext: SQLContext, user: Option[StructType],
       parameters: Map[String, String]): StructType = {
-    val mode = parameters.getOrElse("mode", "changes")
-    val base = user.getOrElse {
-      val store = new TableStore(
-        sqlContext.sparkSession, required(parameters, "root"))
-      parameters.get("tables") match {
-        case Some(ts) =>
-          // union of the member schemas, first-seen field order; a
-          // same-name type conflict has no automatic answer — the
-          // user's .schema(...) decides (align() casts members to it)
-          val fields = scala.collection.mutable.LinkedHashMap[String, StructField]()
-          splitCsv(ts).foreach { t =>
-            // a governed-but-empty member (SQL CREATE/CTAS before any
-            // insert) contributes its DECLARED shape — .schema(...) is
-            // only needed for empty members that never declared one.
-            // Data schemas carry PHYSICAL names; map them to the
-            // surface names current reads serve (ALTER RENAME COLUMN)
-            // and project out DROPPED tombstones (declared schemas
-            // are already narrow)
-            val gone = store.droppedColumnsOf(t).toSet
-            val sch = store.readIfExists(t).map(_.schema)
-              .map(store.surfaceSchemaOf(t, _))
-              .orElse(store.declaredSchemaOf(t)).getOrElse(
-                throw new IllegalArgumentException(
-                  s"table '$t' holds no data and declares no schema — " +
-                    "pass .schema(...) to start a multi-table stream " +
-                    "over such members"))
-            sch.fields.filterNot(f =>
-              f.name == store.BucketCol || gone(f.name)).foreach { f =>
-              fields.get(f.name) match {
-                case Some(g) =>
-                  require(g.dataType == f.dataType,
-                    s"column '${f.name}' is ${g.dataType} in one member " +
-                      s"and ${f.dataType} in '$t' — pass .schema(...) " +
-                      "to pick the served type")
-                case None => fields(f.name) = f.copy(nullable = true)
-              }
-            }
-          }
-          StructType(StructField(EpochLogSource.TableCol, StringType,
-            nullable = false) +: fields.values.toSeq)
-        case None =>
-          val t = required(parameters, "table")
-          val gone = store.droppedColumnsOf(t).toSet
-          store.readIfExists(t).map(_.schema)
-            .map(s => StructType(store.surfaceSchemaOf(t, s).fields
-              .filterNot(f => gone(f.name))))
-            .orElse(store.declaredSchemaOf(t)).getOrElse(
-              throw new IllegalArgumentException(
-                s"table '$t' holds no data and declares no schema — " +
-                  "pass .schema(...) to start a stream over an empty table"))
-      }
-    }
-    if (mode == "appends" || base.fieldNames.contains("_change_type")) base
-    else base.add("_change_type", "string", nullable = false)
+    val window = ChangeWindow(storeOf(sqlContext, parameters),
+      ChangeWindow.tablesOf(parameters, shortName()).map(_ -> Nil),
+      ChangeWindow.appendsMode(parameters))
+    user.map(window.withChangeType).getOrElse(
+      window.servedSchema(ChangeWindow.isMulti(parameters), requireShape = true))
   }
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 
-import graft.store.{EpochFollower, TableStore}
+import graft.store.{ChangeWindow, EpochFollower, TableStore}
 
 /** Continuous-query bridge over the epoch log — `readStream` shaped,
   * with the commit log as the source and the consumer CURSOR as the
@@ -11,10 +11,11 @@ import graft.store.{EpochFollower, TableStore}
   * the sink returns, and a restarted consumer resumes from the cursor
   * — the same offsets-then-sink contract Structured Streaming's
   * checkpointed sources keep, so the existing foreachBatch sinks
-  * (StreamFts.indexSink et al.) plug in unchanged. Rewrite-only
-  * commits (compaction, z-order) never reach the sink
-  * (EpochFollower's round-11 skip), and the `changes` form feeds
-  * row-level insert/delete frames so mirrors retract deletions.
+  * (StreamFts.indexSink et al.) plug in unchanged. Windows are cut
+  * by [[ChangeWindow]] (the rule every CDC consumer shares), so
+  * rewrite-only commits (compaction, z-order) never reach the sink,
+  * and the `changes` form feeds row-level insert/delete frames so
+  * mirrors retract deletions.
   *
   * Delivery: AT-LEAST-ONCE batch redelivery on crash (cursor not yet
   * advanced) — an idempotent sink (pk upsert, the engine's standard
@@ -38,27 +39,32 @@ object EpochStream {
     * .consumeNew]]) — or, when `pk` is given, the row-level
     * insert/delete change feed ([[EpochFollower.consumeChanges]]) —
     * and the cursor advances after each sink return. Returns the
-    * number of batches the sink processed (0 = already current, or
-    * only rewrite-only commits landed).
+    * number of polls that delivered (0 = already current, or only
+    * rewrite-only commits landed). The one-member case of the
+    * [[processAvailableMulti]] drain.
     */
   def processAvailable(
       store: TableStore, table: String, consumer: String,
-      pk: Option[Seq[String]] = None)(sink: DataFrame => Unit): Int = {
+      pk: Option[Seq[String]] = None)(sink: DataFrame => Unit): Int =
+    drain(single(store, table, pk), consumer)(m => sink(m(table)))
+
+  private def single(store: TableStore, table: String, pk: Option[Seq[String]]) =
+    ChangeWindow(store, Seq(table -> pk.getOrElse(Nil)), appends = pk.isEmpty)
+
+  /** Poll `w` until the cursor stops moving: an empty (rewrite-only)
+    * window advances it without feeding the sink, and new commits may
+    * have landed mid-batch — stop only at a fixpoint. Each poll reads
+    * the cursor table once (inside the consume, which reports whether
+    * it moved the cursor).
+    */
+  private def drain(w: ChangeWindow, consumer: String)(
+      sink: Map[String, DataFrame] => Unit): Int = {
     var batches = 0
-    var progressed = true
-    while (progressed) {
-      val before = EpochFollower.cursor(store, table, consumer)
-      val fed = pk match {
-        case Some(k) =>
-          EpochFollower.consumeChanges(store, table, consumer, k)(sink)
-        case None =>
-          EpochFollower.consumeNew(store, table, consumer)(sink)
-      }
+    var moved = true
+    while (moved) {
+      val (fed, to) = EpochFollower.consume(w, consumer)(sink)
       if (fed.isDefined) batches += 1
-      // loop while the cursor moves: an empty (rewrite-only) window
-      // advances it without feeding the sink, and new commits may have
-      // landed mid-batch — stop only at a fixpoint
-      progressed = EpochFollower.cursor(store, table, consumer) != before
+      moved = to.isDefined
     }
     batches
   }
@@ -87,17 +93,15 @@ object EpochStream {
   /** Start the continuous form: poll the commit log every `pollMs`,
     * feeding `sink` exactly as [[processAvailable]] does. Stop with
     * [[Handle.stop]]; crash-restart = call `start` again with the
-    * same consumer name (the cursor is the checkpoint).
+    * same consumer name (the cursor is the checkpoint). The
+    * one-member case of [[startMulti]]'s loop.
     */
   def start(
       store: TableStore, table: String, consumer: String,
       pollMs: Long = 250L, pk: Option[Seq[String]] = None)(
       sink: DataFrame => Unit): Handle =
-    startLoop(s"epoch-stream-$table-$consumer", pollMs) { onBatch =>
-      processAvailable(store, table, consumer, pk) { df =>
-        sink(df); onBatch()
-      }
-    }
+    startLoop(s"epoch-stream-$table-$consumer", pollMs,
+      single(store, table, pk), consumer)(m => sink(m(table)))
 
   /** The MULTI-TABLE drain: one consumer, one consistent window over
     * N member tables per batch ([[EpochFollower.consumeChangesMulti]])
@@ -110,44 +114,31 @@ object EpochStream {
       store: TableStore, pks: Seq[(String, Seq[String])], consumer: String)(
       sink: Map[String, DataFrame] => Unit): Int = {
     require(pks.nonEmpty, "processAvailableMulti needs member tables")
-    val head = pks.head._1
-    var batches = 0
-    var progressed = true
-    while (progressed) {
-      val before = EpochFollower.cursor(store, head, consumer)
-      val fed = EpochFollower.consumeChangesMulti(store, pks, consumer)(sink)
-      if (fed.isDefined) batches += 1
-      progressed = EpochFollower.cursor(store, head, consumer) != before
-    }
-    batches
+    drain(ChangeWindow(store, pks, appends = false), consumer)(sink)
   }
 
   /** Continuous multi-table form of [[start]]. */
   def startMulti(
       store: TableStore, pks: Seq[(String, Seq[String])], consumer: String,
       pollMs: Long = 250L)(sink: Map[String, DataFrame] => Unit): Handle =
-    startLoop(s"epoch-stream-multi-$consumer", pollMs) { onBatch =>
-      processAvailableMulti(store, pks, consumer) { m =>
-        sink(m); onBatch()
-      }
-    }
+    startLoop(s"epoch-stream-multi-$consumer", pollMs,
+      ChangeWindow(store, pks, appends = false), consumer)(sink)
 
-  /** Shared poll loop. `onBatch` is invoked AFTER each sink return
-    * (before the cursor advance), so [[Handle.batchesProcessed]]
+  /** Shared poll loop. The batch counter ticks AFTER each sink
+    * return (before the cursor advance), so [[Handle.batchesProcessed]]
     * counts every completed sink call exactly once even when a later
-    * batch's error stops the loop — the old form added
-    * processAvailable's return value at drain END, silently dropping
-    * the completed-batch count of a partially-failed drain.
+    * batch's error stops the loop.
     */
   private def startLoop(
-      name: String, pollMs: Long)(drain: (() => Unit) => Unit): Handle = {
+      name: String, pollMs: Long, w: ChangeWindow, consumer: String)(
+      sink: Map[String, DataFrame] => Unit): Handle = {
     val stopFlag = new java.util.concurrent.atomic.AtomicBoolean(false)
     val err = new java.util.concurrent.atomic.AtomicReference[Throwable]()
     val batches = new java.util.concurrent.atomic.AtomicLong()
     val t = new Thread(() => {
       try {
         while (!stopFlag.get()) {
-          drain(() => batches.incrementAndGet())
+          drain(w, consumer) { m => sink(m); batches.incrementAndGet() }
           Thread.sleep(pollMs)
         }
       } catch {

@@ -223,6 +223,34 @@ class GraftCatalogSpec extends SparkSpec {
       .load().select(col("_change_type")).collect().map(_.getString(0))
     assert(byTag.toSeq === mid.toSeq.sorted || byTag.sorted.toSeq === mid.sorted.toSeq,
       "tag-named window must equal the epoch-named window")
+
+    // a bucketed table serves its surface columns: the bucket routing
+    // column stays internal, as in the multi-table form and SQL reads
+    store.ensureBucketed("cb", Seq("id"), 2)
+    store.ensureGoverned(Seq("cb"))
+    val b0 = store.snapshot().epoch
+    store.upsert("cb", Seq((1L, "a"), (2L, "b")).toDF("id", "v"), Seq("id"))
+    Seq("changes", "appends").foreach { mode =>
+      val cols = spark.read.format("graft-changes")
+        .option("root", root).option("table", "cb").option("pk", "id")
+        .option("mode", mode).option("fromEpoch", b0.toString)
+        .load().columns.toSeq
+      assert(!cols.contains(store.BucketCol),
+        s"mode=$mode serves the bucket routing column: $cols")
+    }
+
+    // empty or malformed endpoints are refused by name, not with a raw
+    // parse error
+    Seq("fromEpoch" -> "", "fromTimestamp" -> "", "toTimestamp" -> "",
+        "toEpoch" -> "", "fromEpoch" -> "7x", "toTimestamp" -> "yesterday")
+      .foreach { case (key, v) =>
+        val opts = Map("root" -> root, "table" -> "c", "pk" -> "id",
+          "fromEpoch" -> e1.toString) + (key -> v)
+        val e = intercept[IllegalArgumentException](
+          spark.read.format("graft-changes").options(opts).load())
+        assert(!e.isInstanceOf[NumberFormatException] && e.getMessage.contains(key),
+          s"$key='$v': ${e.getClass.getSimpleName}: ${e.getMessage}")
+      }
   }
 
   private def fmtUtc(ms: Long): String =
@@ -672,6 +700,60 @@ class GraftCatalogSpec extends SparkSpec {
     assert(rows.contains(2L),
       s"the window's added files must deliver even though 'a' is empty " +
         s"at both endpoints (got $rows)")
+  }
+
+  test("graft-changes over a table a bucketed delete emptied still " +
+    "serves its keys and images: the window lends the shape the table " +
+    "no longer has") {
+    val (root, store) = mountCatalog()
+    // 'a' is bucketed through the Scala API (no declared schema); 'b'
+    // shares no column with it, so it lends 'a' no shape either
+    store.ensureBucketed("a", Seq("id"), 2)
+    store.ensureGoverned(Seq("a", "b"))
+    store.upsert("b", Seq(("k1", 1)).toDF("k", "w"), Seq("k"))
+    val e0 = store.snapshot().epoch
+    store.upsert("a", Seq((1L, "a1"), (2L, "a2")).toDF("id", "v"), Seq("id"))
+    val e1 = store.snapshot().epoch
+    store.deleteByPk("a", Seq(1L, 2L).toDF("id"), Seq("id"))
+    val e2 = store.snapshot().epoch
+    assert(store.readIfExists("a").isEmpty &&
+      store.declaredSchemaOf("a").isEmpty, "fixture: 'a' emptied, undeclared")
+    def read(from: Long, to: Long, opts: (String, String)*) =
+      spark.read.format("graft-changes").option("root", root)
+        .option("fromEpoch", from.toString).option("toEpoch", to.toString)
+        .options(opts.toMap).load()
+    def rows(df: org.apache.spark.sql.DataFrame, cols: String*): Set[String] =
+      df.select(cols.map(col): _*).collect()
+        .map(_.toSeq.map(String.valueOf).mkString("|")).toSet
+    val deletes = Set("1|a1|delete", "2|a2|delete")
+    val single = read(e1, e2, "table" -> "a", "pk" -> "id")
+    assert(single.columns.toSeq === Seq("id", "v", "_change_type"))
+    assert(rows(single, "id", "v", "_change_type") === deletes)
+    val multi = read(e1, e2, "tables" -> "a,b", "pk.a" -> "id", "pk.b" -> "k")
+    assert(rows(multi.filter(col("_table") === "a"), "id", "v", "_change_type")
+      === deletes)
+    // appends: the inserting window, read after the table emptied
+    val inserted = Set("1|a1", "2|a2")
+    assert(rows(read(e0, e1, "table" -> "a", "mode" -> "appends"), "id", "v")
+      === inserted)
+    assert(rows(read(e0, e1, "tables" -> "a,b", "mode" -> "appends")
+      .filter(col("_table") === "a"), "id", "v") === inserted)
+    // a window 'a' did not change in: its shape comes from its files at
+    // the window's endpoint
+    assert(read(e1, e1, "table" -> "a", "pk" -> "id").columns.toSeq ===
+      Seq("id", "v", "_change_type"))
+    // a window in which 'a' holds no files has no shape for it: alone it
+    // is refused by name, beside 'b' it contributes no columns
+    store.upsert("b", Seq(("k2", 2)).toDF("k", "w"), Seq("k"))
+    val e3 = store.snapshot().epoch
+    Seq("changes", "appends").foreach { mode =>
+      val e = intercept[IllegalArgumentException](
+        read(e2, e3, "table" -> "a", "pk" -> "id", "mode" -> mode))
+      assert(e.getMessage.contains("'a'"), e.getMessage)
+    }
+    val quiet = read(e2, e3, "tables" -> "a,b", "pk.a" -> "id", "pk.b" -> "k")
+    assert(quiet.columns.toSeq === Seq("_table", "k", "w", "_change_type"))
+    assert(rows(quiet, "_table", "k", "_change_type") === Set("b|k2|insert"))
   }
 
   test("stored procedures: CALL graft.system.* runs the maintenance verbs") {

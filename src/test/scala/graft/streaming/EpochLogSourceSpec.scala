@@ -1163,5 +1163,31 @@ class EpochLogSourceSpec extends SparkSpec {
       .load()
     assert(srcZ.columns.contains("zonly"),
       s"declared shape must join the union: ${srcZ.columns.toSeq}")
+
+    // a bucketed member serves its surface columns in both forms: the
+    // bucket routing column stays internal
+    store.ensureBucketed("xb", Seq("id"), 2)
+    store.ensureGoverned(Seq("xb"))
+    store.upsert("xb", Seq((3L, "b")).toDF("id", "v"), Seq("id"))
+    Seq(Map("table" -> "xb", "pk" -> "id"),
+        Map("tables" -> "x,xb", "pk.x" -> "id", "pk.xb" -> "id")).foreach { o =>
+      val cols = spark.readStream.format("graft-cdc")
+        .option("root", root).options(o).load().columns.toSeq
+      assert(!cols.contains(store.BucketCol), s"$o serves: $cols")
+    }
+
+    // empty or malformed numbers and instants are refused by name, not
+    // with a raw parse error
+    val provider = new EpochLogSourceProvider()
+    Seq("startingEpoch" -> "", "startingEpoch" -> "-3",
+        "startingTimestamp" -> "", "startingTimestamp" -> "noon",
+        "maxEpochsPerBatch" -> "").foreach { case (key, v) =>
+      val e = intercept[IllegalArgumentException](provider.createSource(
+        spark.sqlContext, freshDir("graft-els-md"), None, "graft-cdc",
+        Map("root" -> root, "tables" -> "x,y", "pk.x" -> "id",
+          "pk.y" -> "id", key -> v)))
+      assert(!e.isInstanceOf[NumberFormatException] && e.getMessage.contains(key),
+        s"$key='$v': ${e.getClass.getSimpleName}: ${e.getMessage}")
+    }
   }
 }
