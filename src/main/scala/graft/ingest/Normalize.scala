@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.store.{HashId, Upsert}
+import graft.store.{HashId, Iteration, Upsert}
 
 /** The save_tweets normalization DAG (SURVEY.md §2.5 K1/K2,
   * `/root/reference/utils.py:411-469`): one DataFrame of nested tweet
@@ -17,8 +17,9 @@ import graft.store.{HashId, Upsert}
   * The reference recurses into quoted_status / retweeted_status and
   * saves nested tweets first (utils.py:424-431). The API nests at most
   * two levels (retweet of a quote), so the recursion unrolls into an
-  * explicit 3-level flatten + unionByName — no driver-side loops, the
-  * whole pipeline is one declarative plan (SURVEY.md §7.3).
+  * explicit 3-level flatten + unionByName — no driver-side loops; the
+  * flatten is one declarative plan (SURVEY.md §7.3), run once and
+  * pinned, and every table is derived from the pin.
   *
   * Everything here is schema-driven: each transform inspects the
   * incoming schema and handles absent optional fields, mirroring the
@@ -139,141 +140,166 @@ object Normalize {
     * save_tweets (utils.py:415-429): entity-expand + unescape
     * full_text, ISO created_at, drop *_str / quoted_status_id /
     * quoted_status_permalink, replace nested user/place/source/
-    * quoted/retweeted with their keys.
+    * quoted/retweeted with their keys. Named output columns of a flat
+    * tweet frame of `schema`.
     */
-  private def tweetFact(df: DataFrame): DataFrame = {
-    val schema = df.schema
+  private def tweetFact(schema: StructType): Seq[(String, Column)] = {
     val entSchema = structField(schema, "entities")
     // With INFERRED schemas (the reference's alter=True world), an
     // always-null nested field (place, quoted_status, …) infers as
     // StringType — extract the surrogate key only when it is actually
     // a struct, otherwise keep the (null) column as-is.
     def keyOf(name: String): Column =
-      if (structField(schema, name).isDefined) col(s"$name.id").as(name)
-      else col(name)
-    val cols: Seq[Column] = schema.fields.flatMap { f =>
-      f.name match {
-        case "created_at" =>
-          Some(isoFormat(parseTwitterTime(col("created_at"))).as("created_at"))
+      if (structField(schema, name).isDefined) col(s"$name.id") else col(name)
+    schema.fields.toSeq.flatMap { f =>
+      val c: Option[Column] = f.name match {
+        case Ord => None // the level's order rides beside the fact
+        case "created_at" => Some(isoFormat(parseTwitterTime(col("created_at"))))
         case "full_text" =>
           val expanded = entSchema
             .map(es => expandEntities(col("full_text"), col("entities"), es))
             .getOrElse(col("full_text"))
-          Some(htmlUnescape(expanded).as("full_text"))
-        case "user" => Some(keyOf("user"))
-        case "place" => Some(keyOf("place"))
-        case "source" => Some(sourceHashId(col("source")).as("source"))
-        case "quoted_status" => Some(keyOf("quoted_status"))
-        case "retweeted_status" => Some(keyOf("retweeted_status"))
+          Some(htmlUnescape(expanded))
+        case "user" | "place" | "quoted_status" | "retweeted_status" => Some(keyOf(f.name))
+        case "source" => Some(sourceHashId(col("source")))
         case "entities" | "extended_entities" | "quoted_status_id" |
             "quoted_status_permalink" | "text" => None
         case n if n.endsWith("_str") => None
         case n => Some(col(n))
       }
-    }.toSeq
-    df.select(cols: _*)
+      c.map(f.name -> _)
+    }
   }
 
   // -------------------------------------------------------- T2 users
 
   /** transform_user (`utils.py:284-296`): expand entities inside
     * description and url (only when non-empty, Python truthiness),
-    * ISO created_at, drop entities / status / *_str.
+    * ISO created_at, drop entities / status / *_str. Named output
+    * columns of a user struct of `schema` whose fields `at` reads.
     */
-  private def transformUsers(df: DataFrame): DataFrame = {
-    val schema = df.schema
+  private def userCols(schema: StructType, at: String => Column): Seq[(String, Column)] = {
     val entSchema = structField(schema, "entities")
     def expandVia(textCol: String, entKey: String): Column = {
-      val base = col(textCol)
+      val base = at(textCol)
       entSchema.flatMap(structField(_, entKey)) match {
         case Some(sub) =>
           when(base.isNotNull && length(base) > 0,
-            expandEntities(base, col("entities").getField(entKey), sub))
+            expandEntities(base, at("entities").getField(entKey), sub))
             .otherwise(base)
         case None => base
       }
     }
-    val cols: Seq[Column] = schema.fields.flatMap { f =>
-      f.name match {
-        case "created_at" =>
-          Some(isoFormat(parseTwitterTime(col("created_at"))).as("created_at"))
-        case "description" => Some(expandVia("description", "description").as("description"))
-        case "url" => Some(expandVia("url", "url").as("url"))
+    schema.fields.toSeq.flatMap { f =>
+      val c: Option[Column] = f.name match {
+        case "created_at" => Some(isoFormat(parseTwitterTime(at("created_at"))))
+        case "description" => Some(expandVia("description", "description"))
+        case "url" => Some(expandVia("url", "url"))
         case "entities" | "status" => None
         case n if n.endsWith("_str") => None
-        case n => Some(col(n))
+        case n => Some(at(n))
       }
-    }.toSeq
-    df.select(cols: _*)
+      c.map(f.name -> _)
+    }
   }
 
   // ---------------------------------------------------------- the DAG
+
+  // column prefixes of the one normalized frame saveTweets pins: each
+  // table's columns ride under its own prefix, so one union of the
+  // levels carries every table with the per-column type widening a
+  // per-table union would give
+  private val Kind = "__kind"
+  private val StatusRow = 0
+  private val MediaRow = 1
+  private val TweetP = "__t_"
+  private val UserP = "__u_"
+  private val SourceP = "__s_"
+  private val PlaceP = "__p_"
+  private val MediaP = "__m_"
+  private val MediaOf = "__media_of"
+
+  private def under(prefix: String, cols: Seq[(String, Column)]): Seq[Column] =
+    cols.map { case (n, c) => c.as(prefix + n) }
+
+  /** One level's statuses: the tweet fact, the user, the source and
+    * the place of each row, side by side.
+    */
+  private def statusRows(l: DataFrame): DataFrame = {
+    val s = l.schema
+    val user = structField(s, "user").toSeq.flatMap(us =>
+      under(UserP, userCols(us, n => col("user").getField(n))))
+    val source = fieldType(s, "source").toSeq.flatMap(_ => under(SourceP, Seq(
+      "id" -> sourceHashId(col("source")),
+      "name" -> Transforms.sourceName(col("source")),
+      "url" -> Transforms.sourceUrl(col("source")))))
+    val place = structField(s, "place").toSeq.flatMap(ps =>
+      under(PlaceP, ps.fieldNames.toSeq.map(n => n -> col("place").getField(n))))
+    l.select((under(TweetP, tweetFact(s)) ++ user ++ source ++ place ++
+      Seq(col(Ord), lit(StatusRow).as(Kind))): _*)
+  }
+
+  /** One level's media entities, one row each, with their tweet id. */
+  private def mediaRows(l: DataFrame): Option[DataFrame] =
+    structField(l.schema, "extended_entities")
+      .filter(_.fieldNames.contains("media"))
+      .map { _ =>
+        val m = l.filter(col("extended_entities.media").isNotNull)
+          .select(col("id").as(MediaOf), col(Ord),
+            explode(col("extended_entities.media")).as("m"))
+        val fields = m.schema("m").dataType.asInstanceOf[StructType].fieldNames.toSeq
+        m.select((under(MediaP, fields.map(n => n -> col("m").getField(n))) ++
+          Seq(col(MediaOf), col(Ord), lit(MediaRow).as(Kind))): _*)
+      }
 
   /** Full save_tweets: returns the normalized tables as DataFrames,
     * keyed by table name, each already deduped with the reference's
     * replace-upsert (LWW) semantics within the batch. Sinks apply
     * these against existing tables via TableStore/Upsert.
+    *
+    * The schema-dependent per-level projections run once and their
+    * union is pinned ([[Iteration.materialize]]): every table is a
+    * filter and a projection of that one frame, so no table re-plans
+    * or re-runs the flatten. The union comes AFTER the projections —
+    * inferred levels may type the same nested field differently.
     */
   def saveTweets(raw: DataFrame, favoritedBy: Option[Long] = None): Map[String, DataFrame] = {
     val lvls = levels(raw)
+    val all = (lvls.map(statusRows) ++ lvls.flatMap(mediaRows))
+      .reduce(_.unionByName(_, allowMissingColumns = true))
+    val pinned = Iteration.materialize(
+      all.coalesce(raw.sparkSession.sparkContext.defaultParallelism))
 
-    def unionAll(dfs: Seq[DataFrame]): Option[DataFrame] =
-      dfs.reduceOption(_.unionByName(_, allowMissingColumns = true))
-
-    // facts
-    val facts = unionAll(lvls.map(tweetFact)).get
-    val tweets = Upsert.upsert(None, facts, Seq("id"))
-
-    // users dimension (from every level)
-    val userRows = lvls.flatMap { l =>
-      structField(l.schema, "user").map(_ =>
-        l.filter(col("user.id").isNotNull).select(col(Ord), col("user.*")))
+    // the rows of `kind` holding `present`, `prefix` columns unprefixed
+    def part(prefix: String, kind: Int, present: Option[String] = None): Option[DataFrame] = {
+      val cs = pinned.columns.filter(_.startsWith(prefix))
+      if (cs.isEmpty) None
+      else Some(pinned
+        .filter(col(Kind) === kind && present.fold(lit(true))(p => col(prefix + p).isNotNull))
+        .select(cs.map(c => col(c).as(c.stripPrefix(prefix))) :+ col(Ord): _*))
     }
-    val users = Upsert.upsert(None, unionAll(userRows.map(transformUsers)).get, Seq("id"))
+    def keyed(df: Option[DataFrame], pk: String*) = df.map(Upsert.upsert(None, _, pk))
 
-    // sources dimension
-    val sourceRows = lvls.map(_
-      .filter(col("source").isNotNull && length(col("source")) > 0)
-      .select(
-        sourceHashId(col("source")).as("id"),
-        Transforms.sourceName(col("source")).as("name"),
-        Transforms.sourceUrl(col("source")).as("url"),
-        col(Ord)))
-    val sources = Upsert.upsert(None, unionAll(sourceRows).get, Seq("id"))
-
-    // places dimension
-    val placeRows = lvls.flatMap { l =>
-      structField(l.schema, "place").map(_ =>
-        l.filter(col("place.id").isNotNull).select(col(Ord), col("place.*")))
-    }
-    val places = unionAll(placeRows).map(Upsert.upsert(None, _, Seq("id")))
-
-    // media dimension + m2m links
-    val mediaRows = lvls.flatMap { l =>
-      structField(l.schema, "extended_entities")
-        .filter(_.fieldNames.contains("media"))
-        .map(_ => l
-          .filter(col("extended_entities.media").isNotNull)
-          .select(col("id").as("__tweet_id"), col(Ord),
-            explode(col("extended_entities.media")).as("m")))
-    }
-    val media = unionAll(mediaRows.map(_.select(col(Ord), col("m.*"))))
-      .map(Upsert.upsert(None, _, Seq("id")))
-    val mediaTweets = unionAll(mediaRows.map(_.select(
-      col("m.id").as("media_id"), col("__tweet_id").as("tweets_id"), col(Ord))))
-      .map(Upsert.upsert(None, _, Seq("media_id", "tweets_id")))
+    val tweets = keyed(part(TweetP, StatusRow), "id")
+    val users = keyed(part(UserP, StatusRow, Some("id")), "id")
+    val sources = keyed(part(SourceP, StatusRow, Some("id")), "id")
+    val places = keyed(part(PlaceP, StatusRow, Some("id")), "id")
+    val media = keyed(part(MediaP, MediaRow), "id")
+    val mediaTweets = keyed(Option.when(pinned.columns.contains(MediaOf))(pinned
+      .filter(col(Kind) === MediaRow)
+      .select(col(MediaP + "id").as("media_id"), col(MediaOf).as("tweets_id"), col(Ord))),
+      "media_id", "tweets_id")
 
     // favorited_by records only the TOP-LEVEL tweets (the reference's
     // recursion passes no favorited_by for nested statuses,
-    // utils.py:431 vs :435-441)
-    val favorited = favoritedBy.map(uid =>
-      raw.select(col("id").as("tweet")).distinct().withColumn("user", lit(uid)))
+    // utils.py:431 vs :435-441); levels() gives them __ord ≡ 9 mod 10
+    val favorited = favoritedBy.map(uid => pinned
+      .filter(col(Kind) === StatusRow && col(Ord) % 10 === 9)
+      .select(col(TweetP + "id").as("tweet")).distinct().withColumn("user", lit(uid)))
 
-    Map("tweets" -> tweets, "users" -> users, "sources" -> sources) ++
-      places.map("places" -> _) ++
-      media.map("media" -> _) ++
-      mediaTweets.map("media_tweets" -> _) ++
-      favorited.map("favorited_by" -> _)
+    Seq("tweets" -> tweets, "users" -> users, "sources" -> sources,
+      "places" -> places, "media" -> media, "media_tweets" -> mediaTweets,
+      "favorited_by" -> favorited).collect { case (t, Some(df)) => t -> df }.toMap
   }
 
   /** save_users (K2, `utils.py:449-469`): transform + upsert user
@@ -293,7 +319,8 @@ object Normalize {
     val withOrd =
       if (raw.columns.contains(Ord)) raw
       else raw.withColumn(Ord, monotonically_increasing_id())
-    val users = Upsert.upsert(None, transformUsers(withOrd), Seq("id"))
+    val users = Upsert.upsert(None, withOrd.select(
+      userCols(withOrd.schema, col).map { case (n, c) => c.as(n) }: _*), Seq("id"))
     val edges = (followedId, followerId) match {
       case (None, None) => None
       case _ => Some(users.select(

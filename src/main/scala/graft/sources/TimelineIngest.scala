@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.{col, from_json}
 
 import graft.ingest.Normalize
 import graft.schema.TwitterSchemas
@@ -55,9 +56,13 @@ object TimelineIngest {
     // API-imposed total cap (home timeline: 800, cli.py:395)
     pacing.hardCap.fold(pages)(Paginate.capTotal(pages, _))
       .foreach { page =>
-        val raw = spark.read
-          .schema(TwitterSchemas.tweet(2))
-          .json(page.toDS)
+        // from_json over the one-column page: Catalyst plans the parse
+        // and compiles it once per plan (a spark.read.json relation is
+        // opaque, and every task of every scan over it generates a
+        // fresh projection of the whole nested schema)
+        val raw = page.toDS
+          .select(from_json(col("value"), TwitterSchemas.tweet(2)).as("t"))
+          .select("t.*")
         val tables = Normalize.saveTweets(raw, favoritedBy)
         // FK-safe fan-out incl. the A2 count CDC (utils.py:433
         // save_user_counts inside save_tweets), atomic per page when
@@ -66,16 +71,15 @@ object TimelineIngest {
         // provenance links + the since_id watermark use the PAGE's
         // top-level tweets only — nested quoted/retweeted statuses are
         // normalized into `tweets` but never appeared in the timeline
-        // (cli.py:417-422 links only `tweet in chunk`)
-        import org.apache.spark.sql.functions._
-        val pageIds = raw.select(col("id"))
+        // (cli.py:417-422 links only `tweet in chunk`); their ids are
+        // the ones the driver already read for max_id paging
+        val pageIds = page.map(extractId).distinct
         linkTable.foreach { case (table, userId) =>
-          val links = pageIds
-            .select(lit(userId).as("user"), col("id").as("tweet")).distinct()
-          store.upsert(table, links, Seq("user", "tweet"))
+          store.upsert(table, pageIds.map((userId, _)).toDF("user", "tweet"),
+            Seq("user", "tweet"))
         }
         // watermark AFTER the page is durably sunk (resume-safe)
-        Watermarks.recordBatchMax(spark, store, sinceType, sinceKey, pageIds)
+        Watermarks.recordBatchMax(store, sinceType, sinceKey, pageIds)
         total += page.size
       }
     total

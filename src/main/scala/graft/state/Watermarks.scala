@@ -29,14 +29,17 @@ object Watermarks {
   val CountHistoryTypes: Map[String, Int] =
     Map("followers" -> 1, "friends" -> 2, "listed" -> 3)
 
+  /** Seed each enum table once, as one file (a local Seq would split
+    * into one part file per row, up to the session parallelism).
+    */
   def ensureTypeTables(spark: SparkSession, store: TableStore): Unit = {
     import spark.implicits._
-    if (!store.exists("since_id_types"))
-      store.overwrite("since_id_types",
-        SinceIdTypes.toSeq.map(t => (t._2, t._1)).toDF("id", "name"))
-    if (!store.exists("count_history_types"))
-      store.overwrite("count_history_types",
-        CountHistoryTypes.toSeq.map(t => (t._2, t._1)).toDF("id", "name"))
+    Seq("since_id_types" -> SinceIdTypes, "count_history_types" -> CountHistoryTypes)
+      .foreach { case (table, seed) =>
+        if (!store.exists(table))
+          store.overwrite(table,
+            seed.toSeq.map(t => (t._2, t._1)).toDF("id", "name").coalesce(1))
+      }
   }
 
   // ------------------------------------------------------------- A1
@@ -55,21 +58,17 @@ object Watermarks {
       .agg(max(col("since_id")).as("since_id")))
   }
 
-  /** Record the max of an id column for one (type, key) scan. */
+  /** Record the max of one (type, key) scan's ids — ids the driver
+    * already holds (a timeline page's, read for max_id paging), so no
+    * job scans the page for them. No ids, no write.
+    */
   def recordBatchMax(
-      spark: SparkSession,
-      store: TableStore,
-      typeName: String,
-      key: String,
-      batch: DataFrame,
-      idCol: String = "id"): Unit = {
-    val typeId = SinceIdTypes(typeName)
-    val maxima = batch.agg(max(col(idCol)).as("since_id"))
-      .withColumn("type", lit(typeId))
-      .withColumn("key", lit(key))
-      .filter(col("since_id").isNotNull)
-    recordSinceIds(store, maxima.select("type", "key", "since_id"))
-  }
+      store: TableStore, typeName: String, key: String, ids: Seq[Long]): Unit =
+    if (ids.nonEmpty) {
+      import store.spark.implicits._
+      recordSinceIds(store,
+        Seq((SinceIdTypes(typeName), key, ids.max)).toDF("type", "key", "since_id"))
+    }
 
   /** --since read-back (utils.py:160-173). */
   def sinceId(store: TableStore, typeName: String, key: String): Option[Long] =

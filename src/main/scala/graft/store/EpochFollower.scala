@@ -172,19 +172,26 @@ object EpochFollower {
     delivered(consume(ChangeWindow(store, pks, appends = false), consumer)(f))
   }
 
-  private def delivered[T](step: (Option[T], Option[Long])): Option[(T, Long)] =
-    for (r <- step._1; e <- step._2) yield (r, e)
+  private def delivered[T](step: Consumed[T]): Option[(T, Long)] =
+    for (r <- step.last; e <- step.to) yield (r, e)
+
+  /** What one [[consume]] did: the last handler result, the epoch the
+    * cursor moved to (None = it did not move) and the number of
+    * handler calls (one per fed segment).
+    */
+  private[graft] final case class Consumed[T](last: Option[T], to: Option[Long], fed: Int)
 
   /** One consume of `w`'s pending window: the handler fires once per
     * segment with a change (registration: once, with the snapshot),
     * the cursor advances after each such call and once at the end for
-    * trailing advance-only segments. Returns the last handler result
-    * and the epoch the cursor moved to — None when it did not move
+    * trailing advance-only segments. Reports the last handler result,
+    * the epoch the cursor moved to — None when it did not move
     * (already current, or registration still waiting for data), so a
-    * drain loop needs no cursor read of its own.
+    * drain loop needs no cursor read of its own — and how many
+    * segments it fed.
     */
   private[graft] def consume[T](w: ChangeWindow, consumer: String)(
-      f: Map[String, DataFrame] => T): (Option[T], Option[Long]) = {
+      f: Map[String, DataFrame] => T): Consumed[T] = {
     val to = w.store.snapshot().epoch
     val cur = cursors(w.store)
     val registered = w.tables.flatMap(t => cur.get((t, consumer)))
@@ -193,11 +200,11 @@ object EpochFollower {
       // atomic cursor write for ALL members (including still-empty
       // ones, so their first rows arrive as an ordinary diff)
       val full = w.snapshot(to)
-      if (full.isEmpty) (None, None)
+      if (full.isEmpty) Consumed(None, None, 0)
       else {
         val r = f(full.toMap)
         advance(w.store, w.tables, consumer, to)
-        (Some(r), Some(to))
+        Consumed(Some(r), Some(to), 1)
       }
     } else {
       require(registered.size == w.tables.size,
@@ -205,19 +212,21 @@ object EpochFollower {
           s"${registered.size} of ${w.tables.size} member tables — " +
           "member sets must not change after registration")
       val from = registered.min
-      if (from >= to) (None, None)
+      if (from >= to) Consumed(None, None, 0)
       else {
         var last: Option[T] = None
         var at = from
+        var fed = 0
         w.segments(from, to).foreach { s =>
           if (s.changed.nonEmpty) {
             last = Some(f(w.frames(s).toMap))
+            fed += 1
             advance(w.store, w.tables, consumer, s.to)
             at = s.to
           }
         }
         if (at < to) advance(w.store, w.tables, consumer, to)
-        (last, Some(to))
+        Consumed(last, Some(to), fed)
       }
     }
   }

@@ -8,10 +8,13 @@ import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
   * following edges), `overwrite` (K4 archive drop-and-recreate). One
   * directory per table under `root`.
   *
-  * Writes go to a temp dir then swap (read-modify-write over the same
-  * parquet path is illegal in Spark). A lakehouse format would replace
-  * exactly this class with MERGE INTO; everything above it is
-  * format-agnostic.
+  * Un-governed writes go to a temp dir then swap (read-modify-write
+  * over the same parquet path is illegal in Spark). Governed writes
+  * stage files and commit through the epoch pointer; a keyed upsert
+  * there rewrites only the files (flat tables) or buckets (bucketed
+  * tables) that hold a batch key and carries the rest by reference. A
+  * lakehouse format would replace exactly this class with MERGE INTO;
+  * everything above it is format-agnostic.
   */
 class TableStore(val spark: SparkSession, val root: String) {
 
@@ -145,9 +148,9 @@ class TableStore(val spark: SparkSession, val root: String) {
     * an append-mostly stream (the `events` firehose) wants: time
     * predicates then prune at PLANNING time to the matching
     * directories (PartitionPruningSpec proves the scan's
-    * PartitionFilters). Key-upsert tables stay unpartitioned — the
-    * rewrite-based upsert would churn every partition anyway; a
-    * lakehouse MERGE is the scale path for those (see class doc).
+    * PartitionFilters). Key-upsert tables stay unpartitioned — a
+    * keyed upsert rewrites a partitioned flat table whole; the bucketed
+    * layout below is the keyed partitioning (see class doc).
     */
   def overwrite(name: String, df: DataFrame, partitionBy: Seq[String] = Nil): Unit =
     writeSwapped(name, df, partitionBy)
@@ -387,9 +390,17 @@ class TableStore(val spark: SparkSession, val root: String) {
     if (fs.exists(dst)) fs.delete(dst, true)
   }
 
+  /** Keyed replace-upsert (later wins). A bucketed table rewrites the
+    * touched buckets ([[mergeBucketed]]); a governed flat table the
+    * touched files ([[stageTouchedFiles]]: a key-column probe, the
+    * files holding batch keys, the batch), so new keys append a file.
+    * An un-governed, partitioned or z-ordered flat table, and any batch
+    * that [[widens]] the schema, rewrites the whole table.
+    */
   def upsert(name: String, incoming: DataFrame, pk: Seq[String]): Unit =
     mergeKeyed(name, incoming, pk, ignore = false)
 
+  /** [[upsert]] with existing rows winning (insert-or-ignore). */
   def insertIgnore(name: String, incoming: DataFrame, pk: Seq[String]): Unit =
     mergeKeyed(name, incoming, pk, ignore = true)
 
@@ -403,9 +414,28 @@ class TableStore(val spark: SparkSession, val root: String) {
             s"pk=${pk.mkString(",")} — refusing a mixed-key merge")
         mergeBucketed(name, incoming, pk, n, ignore)
       case None =>
-        writeSwapped(name, keyMerge(pk, ignore)(readIfExists(name), incoming),
-          op = OpUpsert)
+        val merge = keyMerge(pk, ignore) _
+        readIfExists(name) match {
+          case Some(existing) if isGoverned(name) &&
+              partitionColumnsOf(name).isEmpty && zorderLayoutOf(name).isEmpty &&
+              !widens(existing.schema, incoming) =>
+            withTxWrite(tx => stageTouchedFiles(tx, name, existing.schema, incoming, pk)(merge))
+          case existing =>
+            writeSwapped(name, merge(existing, incoming), op = OpUpsert)
+        }
     }
+
+  /** Whether merging `batch` into a table of `stored` schema changes
+    * the table's schema: a batch column the table lacks, or a shared
+    * column of another type (the transient `__ord` and the bucket
+    * column aside). Such a batch rewrites the whole table, so every
+    * file keeps one schema; a batch with FEWER columns null-fills.
+    */
+  private def widens(stored: org.apache.spark.sql.types.StructType, batch: DataFrame): Boolean = {
+    val types = stored.map(f => f.name -> f.dataType).toMap
+    (batch.columns.toSet - Upsert.OrdCol - BucketCol)
+      .exists(c => !types.get(c).contains(batch.schema(c).dataType))
+  }
 
   /** The keyed merge rule of [[upsert]] (later wins) or
     * [[insertIgnore]] (existing wins).
@@ -541,13 +571,15 @@ class TableStore(val spark: SparkSession, val root: String) {
   }
 
   // -------------------------------------------------------------------
-  // Bucketed base-table layout — the O(batch) upsert path. The plain
-  // upsert above rewrites the WHOLE table per batch (the documented
-  // lakehouse-MERGE seam); at 100 TB that is untenable for the K1-K9
-  // sinks. A table declared bucketed is laid out as Hive partitions on
-  // pk_bucket = [[bucketOfPk]], and every keyed write — upsert,
-  // insertIgnore, deleteByPk and the custom [[mergeTouchedBuckets]] —
-  // derives its touched buckets from the batch's key hashes and hands
+  // Bucketed base-table layout — the O(batch) upsert path. The flat
+  // upsert above rewrites the touched FILES of a governed table, but
+  // finding them probes every live file's key columns, and an
+  // un-governed flat table is rewritten whole; at 100 TB neither fits
+  // the K1-K9 sinks. A table declared bucketed is laid out as Hive
+  // partitions on pk_bucket = [[bucketOfPk]], and every keyed write —
+  // upsert, insertIgnore, deleteByPk and the custom
+  // [[mergeTouchedBuckets]] — derives its touched buckets from the
+  // batch's key hashes and hands
   // them to [[rewritePartitions]]: O(batch + touched buckets' data),
   // not O(table). Size `buckets` so one bucket ≈ 100-500 MB at the
   // target scale (task-sized), and at least the cluster parallelism
@@ -710,19 +742,11 @@ class TableStore(val spark: SparkSession, val root: String) {
         // allowMissingColumns) is all-or-nothing per table — evolving
         // only the touched buckets would leave mixed file schemas, and
         // a later read would surface whichever subset parquet sampled.
-        // A batch carrying NEW columns therefore pays one full
+        // A batch that [[widens]] the table therefore pays one full
         // partitioned rewrite (rare: schema changes, not data growth,
-        // trigger it), as does one whose shared columns CHANGE TYPE
-        // (union widening would otherwise leave the touched buckets'
-        // files typed differently from the rest). A batch with FEWER
-        // columns (null-fill) merges to the existing schema and stays
-        // on the O(touched) path, as does the transient __ord column
-        // (dropped by the merge).
-        val exTypes = existing.schema
-          .map(f => f.name -> f.dataType).toMap
-        val widens = (incTyped.columns.toSet - Upsert.OrdCol - BucketCol)
-          .exists(c => !exTypes.get(c).contains(incTyped.schema(c).dataType))
-        if (widens)
+        // trigger it); one with FEWER columns (null-fill) stays on the
+        // O(touched) path, as does the transient __ord column.
+        if (widens(existing.schema, incTyped))
           rewriteBucketedWhole(name, merge(Some(existing.drop(BucketCol)),
             incTyped), pk, buckets, op)
         else rewriteTouchedBuckets(name, incTyped, pk, buckets, op)(merge)
@@ -2193,14 +2217,61 @@ class TableStore(val spark: SparkSession, val root: String) {
   private def stageReplace(
       tx: TxState, name: String, df: DataFrame, partitionBy: Seq[String],
       op: String): Unit = {
+    tx.pending(name) = writeStage(tx, name, df, partitionBy)
+    tx.fullyReplaced += name
+    recordOp(tx, name, op)
+  }
+
+  /** Write `df` into a fresh staging dir of `name`; its files as refs. */
+  private def writeStage(
+      tx: TxState, name: String, df: DataFrame, partitionBy: Seq[String]): Seq[FileRef] = {
     val stage = newStageDir(tx, name)
     val w = df.write.mode(SaveMode.Overwrite)
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
       .parquet(stage.toString)
-    tx.pending(name) =
-      walkParquetRel(stage).map(r => FileRef(stage, r, staged = true))
-    tx.fullyReplaced += name
-    recordOp(tx, name, op)
+    walkParquetRel(stage).map(r => FileRef(stage, r, staged = true))
+  }
+
+  /** Keyed merge into a governed FLAT table, staged at O(touched files
+    * + batch): one null-safe join of the batch keys against the live
+    * files' key columns names the files holding any batch key; only
+    * their rows merge with the batch (`merge`, the table's keyed
+    * rule), and the result, aligned to `schema`, replaces exactly
+    * those files. Every other live file carries across BY REFERENCE —
+    * the file-level twin of [[stagePartitions]]. A batch of new keys
+    * adds one file and removes none; an empty batch stages nothing.
+    * The batch is pinned once: the probe and the merge must see one
+    * key set, and an expensive batch must not run twice.
+    */
+  private def stageTouchedFiles(
+      tx: TxState, name: String, schema: org.apache.spark.sql.types.StructType,
+      incoming: DataFrame, pk: Seq[String])(
+      merge: (Option[DataFrame], DataFrame) => DataFrame): Unit = {
+    import org.apache.spark.sql.functions.col
+    val inc = Iteration.materialize(incoming)
+    val live = liveRefs(name)
+    val fileKeys = live.groupBy(_.base).toSeq.map { case (b, rs) =>
+      memoParquet(b.toString, rs.map(_.rel)).select(
+        col("_metadata.file_name").as("__file") +:
+          pk.indices.map(i => col(pk(i)).as(s"__k$i")): _*)
+    }.reduce(_.union(_))
+    val batchKeys = inc.select(pk.indices.map(i => col(pk(i)).as(s"__b$i")): _*)
+    // one row per (batch key, file holding it); a new key's file is null
+    val hits = batchKeys.join(fileKeys,
+        pk.indices.map(i => col(s"__b$i") <=> col(s"__k$i")).reduce(_ && _), "left")
+      .select(col("__file")).distinct().collect().map(r => Option(r.getString(0)))
+    if (hits.isEmpty) return
+    val touched = hits.flatten.toSet
+    // part-file names carry a write-job UUID; a name shared by two live
+    // files only widens the rewrite, never loses a row
+    val replaced = live.filter(r => touched(new Path(r.rel).getName)).toSet
+    val ex = replaced.groupBy(_.base).toSeq.map { case (b, rs) =>
+      spark.read.option("basePath", b.toString).schema(schema)
+        .parquet(rs.toSeq.map(r => new Path(b, r.rel).toString): _*)
+    }.reduceOption(_.union(_))
+    val staged = writeStage(tx, name, ChangeWindow.align(merge(ex, inc), schema), Nil)
+    tx.pending(name) = live.filterNot(replaced) ++ staged
+    recordOp(tx, name, OpUpsert)
   }
 
   /** Combine a transaction's op tags per table: repeated same-op writes
@@ -2223,17 +2294,14 @@ class TableStore(val spark: SparkSession, val root: String) {
   private def stagePartitions(
       tx: TxState, name: String, df: DataFrame, partitionBy: Seq[String],
       op: String): Unit = {
-    val stage = newStageDir(tx, name)
-    df.write.mode(SaveMode.Overwrite).partitionBy(partitionBy: _*)
-      .parquet(stage.toString)
-    val staged = walkParquetRel(stage)
+    val staged = writeStage(tx, name, df, partitionBy)
     def dirOf(rel: String): String = {
       val i = rel.lastIndexOf('/')
       if (i < 0) "" else rel.substring(0, i)
     }
-    val replaced = staged.map(dirOf).toSet
+    val replaced = staged.map(fr => dirOf(fr.rel)).toSet
     val kept = liveRefs(name).filterNot(fr => replaced.contains(dirOf(fr.rel)))
-    tx.pending(name) = kept ++ staged.map(r => FileRef(stage, r, staged = true))
+    tx.pending(name) = kept ++ staged
     recordOp(tx, name, op)
   }
 

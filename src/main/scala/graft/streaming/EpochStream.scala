@@ -39,9 +39,11 @@ object EpochStream {
     * .consumeNew]]) — or, when `pk` is given, the row-level
     * insert/delete change feed ([[EpochFollower.consumeChanges]]) —
     * and the cursor advances after each sink return. Returns the
-    * number of polls that delivered (0 = already current, or only
-    * rewrite-only commits landed). The one-member case of the
-    * [[processAvailableMulti]] drain.
+    * number of sink calls — one per delivered segment, so a window
+    * cut at a compaction counts each piece (0 = already current, or
+    * only rewrite-only commits landed), as [[Handle.batchesProcessed]]
+    * counts them. The one-member case of the [[processAvailableMulti]]
+    * drain.
     */
   def processAvailable(
       store: TableStore, table: String, consumer: String,
@@ -62,9 +64,9 @@ object EpochStream {
     var batches = 0
     var moved = true
     while (moved) {
-      val (fed, to) = EpochFollower.consume(w, consumer)(sink)
-      if (fed.isDefined) batches += 1
-      moved = to.isDefined
+      val step = EpochFollower.consume(w, consumer)(sink)
+      batches += step.fed
+      moved = step.to.isDefined
     }
     batches
   }

@@ -199,4 +199,46 @@ class SourcesSpec extends SparkSpec {
       .map(r => (r.getAs[Long]("search_run"), r.getAs[Long]("tweet"))).toSet
       === Set((1L, 101L), (1L, 102L)))
   }
+
+  test("TimelineIngest's from_json parse normalizes a page like spark.read.json") {
+    import spark.implicits._
+    // the golden fixture's three tweets (nested quote / retweet, media,
+    // place), a doc with no nested statuses and a malformed doc, one
+    // JSON document per string as a timeline page serves them
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val fixture = {
+      val it = mapper.readTree(new java.io.File(resource("tweets.json"))).elements()
+      Iterator.continually(it).takeWhile(_.hasNext).map(_.next().toString).toSeq
+    }
+    val page = fixture ++ Seq(new FakeTimelineApi(total = 1).tweetJson(5L),
+      """{"id": 4, "full_text": "cut off""")
+    val now = "2026-01-01T00:00:00+00:00"
+    def governed(): TableStore = {
+      val s = freshStore()
+      s.ensureGoverned(graft.ingest.TweetSink.Tables)
+      s
+    }
+    val viaIngest = governed()
+    var served = false
+    TimelineIngest.run(spark, viaIngest,
+      _ => if (served) Nil else { served = true; page },
+      sinceType = "user", sinceKey = "u", now = () => now)
+    val viaRead = governed()
+    graft.ingest.TweetSink(viaRead, graft.ingest.Normalize.saveTweets(
+      spark.read.schema(graft.schema.TwitterSchemas.tweet(2)).json(page.toDS)),
+      Some(now))
+    val tables = graft.ingest.TweetSink.Tables.filter(viaRead.exists)
+    assert(tables.toSet === Set("tweets", "users", "sources", "places", "media",
+      "media_tweets", "count_history"))
+    assert(tables.filter(viaIngest.exists) === tables)
+    tables.foreach { t =>
+      val (a, b) = (viaIngest.read(t), viaRead.read(t))
+      assert(a.schema === b.schema, t)
+      assert(a.collect().map(_.toString).sorted.toSeq ===
+        b.collect().map(_.toString).sorted.toSeq, t)
+    }
+    // 3 fixture tweets + 2 nested statuses + the plain doc + the
+    // malformed doc's all-null row, as the reader parse gives it
+    assert(viaIngest.read("tweets").count() === 7)
+  }
 }

@@ -19,24 +19,26 @@ class WatermarksSpec extends SparkSpec {
     val store = freshStore()
     Watermarks.ensureTypeTables(spark, store)
     assert(Watermarks.sinceId(store, "user", "simonw").isEmpty)
+    // each enum table is one file, not one per seed row
+    assert(store.dataFiles("since_id_types").size === 1)
+    assert(store.dataFiles("count_history_types").size === 1)
+    assert(store.read("since_id_types").count() === 4)
+    assert(store.read("count_history_types").count() === 3)
 
-    val page1 = Seq(100L, 250L, 180L).toDF("id")
-    Watermarks.recordBatchMax(spark, store, "user", "simonw", page1)
+    Watermarks.recordBatchMax(store, "user", "simonw", Seq(100L, 250L, 180L))
     assert(Watermarks.sinceId(store, "user", "simonw") === Some(250L))
 
     // an older page must NOT regress the watermark
-    val stale = Seq(10L, 20L).toDF("id")
-    Watermarks.recordBatchMax(spark, store, "user", "simonw", stale)
+    Watermarks.recordBatchMax(store, "user", "simonw", Seq(10L, 20L))
     assert(Watermarks.sinceId(store, "user", "simonw") === Some(250L))
 
     // separate (type,key) tracked independently
-    Watermarks.recordBatchMax(spark, store, "home", "simonw", Seq(999L).toDF("id"))
+    Watermarks.recordBatchMax(store, "home", "simonw", Seq(999L))
     assert(Watermarks.sinceId(store, "home", "simonw") === Some(999L))
     assert(Watermarks.sinceId(store, "user", "simonw") === Some(250L))
 
     // empty batch is a no-op
-    Watermarks.recordBatchMax(spark, store, "user", "simonw",
-      Seq.empty[Long].toDF("id"))
+    Watermarks.recordBatchMax(store, "user", "simonw", Seq.empty)
     assert(Watermarks.sinceId(store, "user", "simonw") === Some(250L))
   }
 

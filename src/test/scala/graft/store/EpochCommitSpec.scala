@@ -196,8 +196,10 @@ class EpochCommitSpec extends SparkSpec {
     val store = new TableStore(spark, root)
     store.upsert("t", Seq((1L, "a")).toDF("id", "v"), Seq("id"))
     store.ensureGoverned(Seq("t"))
+    // each upsert re-writes key 1 unchanged, so it replaces the file
+    // holding it (new keys alone would only add files)
     (2 to 4).foreach(i =>
-      store.upsert("t", Seq((i.toLong, s"v$i")).toDF("id", "v"), Seq("id")))
+      store.upsert("t", Seq((i.toLong, s"v$i"), (1L, "a")).toDF("id", "v"), Seq("id")))
     def diskFiles(): Int = {
       def walk(f: java.io.File): Seq[java.io.File] =
         if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
@@ -259,9 +261,11 @@ class EpochCommitSpec extends SparkSpec {
     val store = new TableStore(spark, root)
     store.upsert("t", Seq((1L, "a")).toDF("id", "v"), Seq("id"))
     store.ensureGoverned(Seq("t"))
-    // accrete replaced epochs until the vacuum advisory fires
+    // accrete replaced epochs until the vacuum advisory fires: each
+    // upsert re-writes key 1 unchanged, so it replaces the file holding
+    // it (new keys alone would only add files)
     (2 to 10).foreach(i =>
-      store.upsert("t", Seq((i.toLong, s"v$i")).toDF("id", "v"), Seq("id")))
+      store.upsert("t", Seq((i.toLong, s"v$i"), (1L, "a")).toDF("id", "v"), Seq("id")))
     val sug = Doctor.suggest(store).filter(_.component == "vacuum")
     assert(sug.size === 1, s"no vacuum advisory: ${Doctor.suggest(store)}")
     assert(sug.head.problem.contains("vacuum-epochs"))

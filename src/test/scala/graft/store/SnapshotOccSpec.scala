@@ -225,7 +225,10 @@ abstract class SnapshotOccBehavior extends SparkSpec {
     var watermark = (0, 0, 0)
     (1 to 20).foreach { i =>
       store.transact {
-        store.upsert("tweets", Seq((100L + i, s"t$i")).toDF("id", "v"), Seq("id"))
+        // re-upserting the seed key makes each commit replace the file
+        // holding it, so the live set stays one file
+        store.upsert("tweets", Seq((100L + i, s"t$i"), (10L, "t-old")).toDF("id", "v"),
+          Seq("id"))
       }
       store.read("tweets").count() // resolve (and memoize) the live chain
       store.vacuumEpochs()

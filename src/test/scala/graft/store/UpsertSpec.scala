@@ -59,4 +59,118 @@ class UpsertSpec extends SparkSpec {
     assert(rows2.toSeq === Seq((1L, "b"), (2L, "c"), (3L, "d")))
     assert(store.tableNames === Seq("t"))
   }
+
+  // ------------------------------------------- governed flat upsert
+
+  private def rowsOf(df: org.apache.spark.sql.DataFrame): Set[String] =
+    df.collect().map(_.toString).toSet
+
+  /** A governed flat table `t` whose live set is one file of keys 1-2
+    * plus what an upsert of new keys 3-4 added.
+    */
+  private def twoFileTable(): (TableStore, Set[String]) = {
+    val store = new TableStore(spark,
+      java.nio.file.Files.createTempDirectory("graft-touched").toString)
+    store.overwrite("t", Seq((1L, "a"), (2L, "b")).toDF("id", "v").coalesce(1))
+    store.ensureGoverned(Seq("t"))
+    val first = store.dataFiles("t").toSet
+    store.upsert("t", Seq((3L, "c"), (4L, "d")).toDF("id", "v"), Seq("id"))
+    assert(first.size === 1 && store.dataFiles("t").toSet.size > 1 &&
+      first.subsetOf(store.dataFiles("t").toSet))
+    (store, first)
+  }
+
+  /** Merge `batch` into `t`; the table must equal the keyed rule over
+    * the WHOLE old table, and the commit's change feed exactly the new
+    * or changed rows. Returns the (removed, added) live files.
+    */
+  private def mergeChecked(
+      store: TableStore, name: String, batch: org.apache.spark.sql.DataFrame,
+      ignore: Boolean = false): (Set[String], Set[String]) = {
+    val old = store.read(name) // governed files stay on disk until vacuum
+    val before = store.dataFiles(name).toSet
+    val e0 = store.currentEpochIfAny.get
+    if (ignore) store.insertIgnore(name, batch, Seq("id"))
+    else store.upsert(name, batch, Seq("id"))
+    val expected =
+      if (ignore) Upsert.insertIgnore(Some(old), batch, Seq("id"))
+      else Upsert.upsert(Some(old), batch, Seq("id"))
+    val now = store.read(name)
+    assert(now.columns.toSeq === expected.columns.toSeq)
+    assert(rowsOf(now) === rowsOf(expected))
+    assert(now.count() === expected.count())
+    val e1 = store.currentEpochIfAny.get
+    val changes = store.readChangesSince(name, e0, e1, Seq("id"))
+    assert(changes.filter(col("_change_type") =!= "insert").count() === 0)
+    assert(rowsOf(changes.drop("_change_type")) ===
+      rowsOf(expected.select(now.columns.map(col): _*)) --
+        rowsOf(ChangeWindow.align(old, now.schema)))
+    val after = store.dataFiles(name).toSet
+    (before -- after, after -- before)
+  }
+
+  test("governed flat upsert: new keys add a file and remove none") {
+    val (store, _) = twoFileTable()
+    val (removed, added) = mergeChecked(store, "t",
+      Seq((5L, "e"), (6L, "f")).toDF("id", "v"))
+    assert(removed.isEmpty)
+    assert(added.nonEmpty)
+  }
+
+  test("governed flat upsert: keys in one file replace exactly that file") {
+    val (store, first) = twoFileTable()
+    val (removed, added) = mergeChecked(store, "t",
+      Seq((1L, "A"), (9L, "i")).toDF("id", "v"))
+    assert(removed === first)
+    assert(added.nonEmpty)
+    // a batch with fewer columns null-fills and stays on the file path
+    val (removed2, _) = mergeChecked(store, "t", Seq(3L).toDF("id"))
+    assert(removed2.nonEmpty && store.dataFiles("t").toSet.size > 1)
+  }
+
+  test("governed flat insertIgnore keeps the existing rows, rewrites only touched files") {
+    val (store, first) = twoFileTable()
+    val (removed, _) = mergeChecked(store, "t",
+      Seq((2L, "zzz"), (7L, "g")).toDF("id", "v"), ignore = true)
+    assert(removed === first)
+    assert(store.read("t").filter(col("id") === 2L).head.getString(1) === "b")
+  }
+
+  test("governed flat upsert: a column-adding batch replaces every file; the widened schema reads back") {
+    val (store, _) = twoFileTable()
+    val before = store.dataFiles("t").toSet
+    val (removed, _) = mergeChecked(store, "t",
+      Seq((2L, "B", 9)).toDF("id", "v", "w"))
+    assert(removed === before)
+    assert(store.read("t").columns.toSeq === Seq("id", "v", "w"))
+    assert(store.read("t").filter(col("w").isNotNull).count() === 1)
+  }
+
+  test("governed flat upsert: an empty batch commits nothing") {
+    val (store, _) = twoFileTable()
+    val epoch = store.currentEpochIfAny
+    val history = store.tableHistory("t")
+    val files = store.dataFiles("t")
+    store.upsert("t", Seq.empty[(Long, String)].toDF("id", "v"), Seq("id"))
+    store.insertIgnore("t", Seq.empty[(Long, String)].toDF("id", "v"), Seq("id"))
+    assert(store.currentEpochIfAny === epoch)
+    assert(store.tableHistory("t") === history)
+    assert(store.dataFiles("t") === files)
+  }
+
+  test("partitioned and z-ordered governed tables keep the whole-table upsert") {
+    val root = java.nio.file.Files.createTempDirectory("graft-touched-whole").toString
+    val store = new TableStore(spark, root)
+    store.overwrite("p", Seq((1L, "a", 1), (2L, "b", 2)).toDF("id", "v", "g"),
+      partitionBy = Seq("g"))
+    store.overwrite("z", (1L to 40L).map(i => (i, s"v$i")).toDF("id", "v").repartition(4))
+    store.compactZorder("z", Seq("id"))
+    store.ensureGoverned(Seq("p", "z"))
+    Seq("p" -> Seq((3L, "c", 3)).toDF("id", "v", "g"),
+      "z" -> Seq((41L, "x")).toDF("id", "v")).foreach { case (t, batch) =>
+      val before = store.dataFiles(t).toSet
+      val (removed, _) = mergeChecked(store, t, batch)
+      assert(removed === before, s"$t carried files through a keyed upsert")
+    }
+  }
 }

@@ -124,6 +124,26 @@ class EpochStreamSpec extends SparkSpec {
       consumerStore, "t", "c")(mirrorUpsert) === 0)
   }
 
+  test("a window cut at a compaction counts one batch per sink call") {
+    val root = freshRoot()
+    val store = new TableStore(spark, root)
+    store.ensureGoverned(Seq("t"))
+    store.upsert("t", Seq((1L, "a")).toDF("id", "v"), Seq("id"))
+    var calls = 0
+    val sink: org.apache.spark.sql.DataFrame => Unit = _ => calls += 1
+    assert(EpochStream.processAvailable(store, "t", "c", Some(Seq("id")))(sink) === 1)
+    // the consumer sleeps through upsert → compact → upsert: its
+    // window is cut at the compaction into two delivered segments
+    val e0 = store.currentEpochIfAny.get
+    store.upsert("t", Seq((2L, "b")).toDF("id", "v"), Seq("id"))
+    store.compact("t")
+    store.upsert("t", Seq((3L, "c")).toDF("id", "v"), Seq("id"))
+    assert(store.currentEpochIfAny.get === e0 + 3)
+    calls = 0
+    assert(EpochStream.processAvailable(store, "t", "c", Some(Seq("id")))(sink) === 2)
+    assert(calls === 2)
+  }
+
   test("live mirror crosses a schema-evolving commit (ALTER-shaped CDC window)") {
     val root = freshRoot()
     val producer = new TableStore(spark, root)
