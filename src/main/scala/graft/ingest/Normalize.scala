@@ -1,6 +1,6 @@
 package graft.ingest
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -16,10 +16,13 @@ import graft.store.{HashId, Iteration, Upsert}
   *
   * The reference recurses into quoted_status / retweeted_status and
   * saves nested tweets first (utils.py:424-431). The API nests at most
-  * two levels (retweet of a quote), so the recursion unrolls into an
-  * explicit 3-level flatten + unionByName — no driver-side loops; the
-  * flatten is one declarative plan (SURVEY.md §7.3), run once and
-  * pinned, and every table is derived from the pin.
+  * two levels (retweet of a quote), so the recursion unrolls into up
+  * to seven levels, each an accessor on the input frame. One
+  * projection and one generator over a single scan of the input emit
+  * every level's status and media rows — no driver-side loops, no
+  * per-level branch re-reading the input; the flatten is one
+  * declarative plan (SURVEY.md §7.3), run once and pinned ([[pin]]),
+  * and every table is derived from the pin ([[tables]]).
   *
   * Everything here is schema-driven: each transform inspects the
   * incoming schema and handles absent optional fields, mirroring the
@@ -85,30 +88,31 @@ object Normalize {
 
   // ----------------------------------------------------- level flatten
 
-  /** Unroll the recursive quoted/retweeted nesting: returns flat tweet
-    * DataFrames (struct fields at top level) each with an `__ord`
-    * column encoding the reference's insertion sequence — nested
-    * tweets precede their parent, input order preserved (utils.py:
-    * 424-431: per input tweet, quoted then retweeted then parent).
+  /** Row id of an input tweet: every level of one tweet reads it. */
+  private[ingest] val Iid = "__iid"
+
+  /** One tweet level of a batch, described in place on the base frame:
+    * `at` reads a field of the level's status, `schema` is that status's
+    * struct, `present` holds on the rows where the level exists (its
+    * parent's presence and a non-null `id`), and `ord` is the level's
+    * `__ord` — the reference's insertion sequence.
     */
-  private def levels(raw: DataFrame): Seq[DataFrame] = {
-    val iid = "__iid"
-    val base =
-      if (raw.columns.contains(iid)) raw
-      else raw.withColumn(iid, monotonically_increasing_id())
+  private[ingest] final case class Level(
+      at: String => Column, schema: StructType, present: Column, ord: Column)
 
-    val l0 = base.withColumn(Ord, col(iid) * 10 + 9).drop(iid)
-    // keep __iid on the intermediate frames for the L2 extraction:
-    val l1qRaw = structField(base.schema, "quoted_status").map(_ =>
-      base.filter(col("quoted_status.id").isNotNull)
-        .select(col(iid), col("quoted_status.*")))
-    val l1rRaw = structField(base.schema, "retweeted_status").map(_ =>
-      base.filter(col("retweeted_status.id").isNotNull)
-        .select(col(iid), col("retweeted_status.*")))
-
-    def finish(df: DataFrame, off: Int): DataFrame =
-      df.withColumn(Ord, col(iid) * 10 + off).drop(iid)
-
+  /** Unroll the recursive quoted/retweeted nesting into the levels of
+    * `base` (which carries [[Iid]]): nested tweets precede their
+    * parent, input order preserved (utils.py:424-431: per input tweet,
+    * quoted then retweeted then parent).
+    */
+  private def levels(base: DataFrame): Seq[Level] = {
+    def ord(off: Int): Column = col(Iid) * 10 + off
+    val top = Level(col, StructType(base.schema.filterNot(_.name == Iid)), lit(true), ord(9))
+    def nested(parent: Level, f: String, off: Int): Option[Level] =
+      structField(parent.schema, f).map { st =>
+        val at = (n: String) => parent.at(f).getField(n)
+        Level(at, st, parent.present && at("id").isNotNull, ord(off))
+      }
     // reference insertion sequence per input tweet (utils.py:424-431,
     // recursive save_tweets([quoted, retweeted])): quoted's children,
     // QUOTED ITSELF, retweeted's children, retweeted, parent — i.e.
@@ -118,20 +122,15 @@ object Normalize {
     // like the reference's last sequential insert — including the
     // retweet-of-a-quote shape where the same id is both the parent's
     // quoted_status and retweeted_status.quoted_status.
-    val l2 = (l1qRaw.map((_, 0)).toSeq ++ l1rRaw.map((_, 3)).toSeq).flatMap {
-      case (l1, base) =>
-        Seq(("quoted_status", base), ("retweeted_status", base + 1)).flatMap {
-          case (f, off) =>
-            structField(l1.schema, f).map { _ =>
-              l1.filter(col(s"$f.id").isNotNull)
-                .select(col(iid), col(s"$f.*"))
-                .withColumn(Ord, col(iid) * 10 + off)
-                .drop(iid)
-            }
-        }
+    val l1 = Seq("quoted_status" -> 0, "retweeted_status" -> 3).flatMap { case (f, b) =>
+      nested(top, f, b + 2).map(_ -> b)
     }
-    val l1 = l1qRaw.map(finish(_, 2)).toSeq ++ l1rRaw.map(finish(_, 5)).toSeq
-    l2 ++ l1 ++ Seq(l0)
+    val l2 = l1.flatMap { case (l, b) =>
+      Seq("quoted_status" -> b, "retweeted_status" -> (b + 1)).flatMap {
+        case (f, off) => nested(l, f, off)
+      }
+    }
+    l2 ++ l1.map(_._1) :+ top
   }
 
   // ------------------------------------------------------- T1 tweets
@@ -140,32 +139,32 @@ object Normalize {
     * save_tweets (utils.py:415-429): entity-expand + unescape
     * full_text, ISO created_at, drop *_str / quoted_status_id /
     * quoted_status_permalink, replace nested user/place/source/
-    * quoted/retweeted with their keys. Named output columns of a flat
-    * tweet frame of `schema`.
+    * quoted/retweeted with their keys. Named output columns of one
+    * level's status.
     */
-  private def tweetFact(schema: StructType): Seq[(String, Column)] = {
-    val entSchema = structField(schema, "entities")
+  private def tweetFact(l: Level): Seq[(String, Column)] = {
+    val entSchema = structField(l.schema, "entities")
     // With INFERRED schemas (the reference's alter=True world), an
     // always-null nested field (place, quoted_status, …) infers as
     // StringType — extract the surrogate key only when it is actually
     // a struct, otherwise keep the (null) column as-is.
     def keyOf(name: String): Column =
-      if (structField(schema, name).isDefined) col(s"$name.id") else col(name)
-    schema.fields.toSeq.flatMap { f =>
+      if (structField(l.schema, name).isDefined) l.at(name).getField("id") else l.at(name)
+    l.schema.fields.toSeq.flatMap { f =>
       val c: Option[Column] = f.name match {
         case Ord => None // the level's order rides beside the fact
-        case "created_at" => Some(isoFormat(parseTwitterTime(col("created_at"))))
+        case "created_at" => Some(isoFormat(parseTwitterTime(l.at("created_at"))))
         case "full_text" =>
           val expanded = entSchema
-            .map(es => expandEntities(col("full_text"), col("entities"), es))
-            .getOrElse(col("full_text"))
+            .map(es => expandEntities(l.at("full_text"), l.at("entities"), es))
+            .getOrElse(l.at("full_text"))
           Some(htmlUnescape(expanded))
         case "user" | "place" | "quoted_status" | "retweeted_status" => Some(keyOf(f.name))
-        case "source" => Some(sourceHashId(col("source")))
+        case "source" => Some(sourceHashId(l.at("source")))
         case "entities" | "extended_entities" | "quoted_status_id" |
             "quoted_status_permalink" | "text" => None
         case n if n.endsWith("_str") => None
-        case n => Some(col(n))
+        case n => Some(l.at(n))
       }
       c.map(f.name -> _)
     }
@@ -206,9 +205,9 @@ object Normalize {
   // ---------------------------------------------------------- the DAG
 
   // column prefixes of the one normalized frame saveTweets pins: each
-  // table's columns ride under its own prefix, so one union of the
-  // levels carries every table with the per-column type widening a
-  // per-table union would give
+  // table's columns ride under its own prefix, so one row type carries
+  // every table with the per-column type widening a per-table union
+  // would give
   private val Kind = "__kind"
   private val StatusRow = 0
   private val MediaRow = 1
@@ -222,54 +221,101 @@ object Normalize {
   private def under(prefix: String, cols: Seq[(String, Column)]): Seq[Column] =
     cols.map { case (n, c) => c.as(prefix + n) }
 
-  /** One level's statuses: the tweet fact, the user, the source and
-    * the place of each row, side by side.
+  /** One level's status row: the tweet fact, the user, the source and
+    * the place, side by side, then the level's order and row kind.
     */
-  private def statusRows(l: DataFrame): DataFrame = {
-    val s = l.schema
-    val user = structField(s, "user").toSeq.flatMap(us =>
-      under(UserP, userCols(us, n => col("user").getField(n))))
-    val source = fieldType(s, "source").toSeq.flatMap(_ => under(SourceP, Seq(
-      "id" -> sourceHashId(col("source")),
-      "name" -> Transforms.sourceName(col("source")),
-      "url" -> Transforms.sourceUrl(col("source")))))
-    val place = structField(s, "place").toSeq.flatMap(ps =>
-      under(PlaceP, ps.fieldNames.toSeq.map(n => n -> col("place").getField(n))))
-    l.select((under(TweetP, tweetFact(s)) ++ user ++ source ++ place ++
-      Seq(col(Ord), lit(StatusRow).as(Kind))): _*)
+  private[ingest] def statusCols(l: Level): Seq[Column] = {
+    val user = structField(l.schema, "user").toSeq.flatMap(us =>
+      under(UserP, userCols(us, n => l.at("user").getField(n))))
+    val source = fieldType(l.schema, "source").toSeq.flatMap(_ => under(SourceP, Seq(
+      "id" -> sourceHashId(l.at("source")),
+      "name" -> Transforms.sourceName(l.at("source")),
+      "url" -> Transforms.sourceUrl(l.at("source")))))
+    val place = structField(l.schema, "place").toSeq.flatMap(ps =>
+      under(PlaceP, ps.fieldNames.toSeq.map(n => n -> l.at("place").getField(n))))
+    under(TweetP, tweetFact(l)) ++ user ++ source ++ place ++
+      Seq(l.ord.as(Ord), lit(StatusRow).as(Kind))
   }
 
-  /** One level's media entities, one row each, with their tweet id. */
-  private def mediaRows(l: DataFrame): Option[DataFrame] =
-    structField(l.schema, "extended_entities")
-      .filter(_.fieldNames.contains("media"))
-      .map { _ =>
-        val m = l.filter(col("extended_entities.media").isNotNull)
-          .select(col("id").as(MediaOf), col(Ord),
-            explode(col("extended_entities.media")).as("m"))
-        val fields = m.schema("m").dataType.asInstanceOf[StructType].fieldNames.toSeq
-        m.select((under(MediaP, fields.map(n => n -> col("m").getField(n))) ++
-          Seq(col(MediaOf), col(Ord), lit(MediaRow).as(Kind))): _*)
-      }
+  /** The struct of a level's media entities, if it has any. */
+  private[ingest] def mediaSchema(l: Level): Option[StructType] =
+    structField(l.schema, "extended_entities").flatMap(fieldType(_, "media")).collect {
+      case ArrayType(m: StructType, _) => m
+    }
 
-  /** Full save_tweets: returns the normalized tables as DataFrames,
-    * keyed by table name, each already deduped with the reference's
-    * replace-upsert (LWW) semantics within the batch. Sinks apply
-    * these against existing tables via TableStore/Upsert.
-    *
-    * The schema-dependent per-level projections run once and their
-    * union is pinned ([[Iteration.materialize]]): every table is a
-    * filter and a projection of that one frame, so no table re-plans
-    * or re-runs the flatten. The union comes AFTER the projections —
-    * inferred levels may type the same nested field differently.
+  /** Media entity `m` (a `ms` struct) of level `l` as a media row: its
+    * fields, its tweet's id, the level's order and row kind.
     */
-  def saveTweets(raw: DataFrame, favoritedBy: Option[Long] = None): Map[String, DataFrame] = {
-    val lvls = levels(raw)
-    val all = (lvls.map(statusRows) ++ lvls.flatMap(mediaRows))
-      .reduce(_.unionByName(_, allowMissingColumns = true))
-    val pinned = Iteration.materialize(
-      all.coalesce(raw.sparkSession.sparkContext.defaultParallelism))
+  private[ingest] def mediaCols(l: Level, ms: StructType, m: Column): Seq[Column] =
+    under(MediaP, ms.fieldNames.toSeq.map(n => n -> m.getField(n))) ++
+      Seq(l.at("id").as(MediaOf), l.ord.as(Ord), lit(MediaRow).as(Kind))
 
+  /** `c`, of type `from`, in the union-widened type `to`: struct fields
+    * by name (a field `from` lacks is null, a null struct stays null),
+    * array elements likewise, anything else cast — what
+    * `unionByName(allowMissingColumns = true)` does to one branch.
+    */
+  private def widen(c: Column, from: DataType, to: DataType): Column = (from, to) match {
+    case _ if from.catalogString == to.catalogString => c
+    case (f: StructType, t: StructType) =>
+      when(c.isNotNull, struct(t.fields.toSeq.map(tf => fieldType(f, tf.name)
+        .fold(lit(null).cast(tf.dataType))(widen(c.getField(tf.name), _, tf.dataType))
+        .as(tf.name)): _*))
+    case (ArrayType(fe, _), ArrayType(te, _)) => transform(c, widen(_, fe, te))
+    case _ => c.cast(to)
+  }
+
+  /** The normalized frame of a batch of tweet documents, pinned
+    * ([[Iteration.materialize]]): one row per status of every level
+    * (`__kind` 0) and one per media entity (`__kind` 1), each table's
+    * columns under its prefix; [[tables]] derives every table from it.
+    *
+    * The input is scanned ONCE. The levels are accessors on the base
+    * frame, not filtered copies of it: one projection builds each input
+    * row's status rows (null where a level is absent) and media rows (a
+    * `transform` of each level's media array, so a null entity still
+    * gives one row of nulls, as `explode` would), and one generator
+    * (`inline`) emits them. Whatever the nesting depth, a batch costs
+    * one scan and one per-partition projection. The row type is the one
+    * a `unionByName(allowMissingColumns = true)` of the per-level
+    * projections would have — inferred levels may type the same nested
+    * field differently, and a per-column widening keeps them apart —
+    * computed from the levels' analyzed types alone, over empty frames.
+    */
+  def pin(raw: DataFrame): DataFrame = {
+    val spark = raw.sparkSession
+    val base =
+      if (raw.columns.contains(Iid)) raw
+      else raw.withColumn(Iid, monotonically_increasing_id())
+    val lvls = levels(base)
+    val statuses = lvls.map(l => when(l.present, struct(statusCols(l): _*)))
+    val media = lvls.flatMap(l => mediaSchema(l).map(ms => when(l.present,
+      transform(l.at("extended_entities").getField("media"), m => struct(mediaCols(l, ms, m): _*)))))
+    // every level's expressions, analyzed once: the generator below
+    // reads these columns by name
+    val levelRows = base.select((statuses ++ media).zipWithIndex.map { case (c, i) =>
+      c.as(s"__l$i") }: _*)
+    val types = levelRows.schema.fields.toSeq.map(f => f.name -> (f.dataType match {
+      case ArrayType(st: StructType, _) => st
+      case st: StructType => st
+    }))
+    val row = types.map { case (_, st) => spark.createDataFrame(new java.util.ArrayList[Row](), st) }
+      .reduce(_.unionByName(_, allowMissingColumns = true)).schema
+    val (statusT, mediaT) = types.splitAt(statuses.size)
+    val all = array(statusT.map { case (n, st) => widen(col(n), st, row) }: _*) +:
+      mediaT.map { case (n, st) =>
+        coalesce(transform(col(n), widen(_, st, row)), array().cast(ArrayType(row)))
+      }
+    Iteration.materialize(levelRows.select(inline(filter(concat(all: _*), _.isNotNull)))
+      .coalesce(spark.sparkContext.defaultParallelism))
+  }
+
+  /** The normalized tables of a [[pin]]ned frame, keyed by table name,
+    * each already deduped with the reference's replace-upsert (LWW)
+    * semantics within the batch: every table is a filter and a
+    * projection of the pin, so no table re-plans or re-runs the flatten.
+    */
+  def tables(pinned: DataFrame, favoritedBy: Option[Long] = None): Map[String, DataFrame] = {
     // the rows of `kind` holding `present`, `prefix` columns unprefixed
     def part(prefix: String, kind: Int, present: Option[String] = None): Option[DataFrame] = {
       val cs = pinned.columns.filter(_.startsWith(prefix))
@@ -301,6 +347,13 @@ object Normalize {
       "places" -> places, "media" -> media, "media_tweets" -> mediaTweets,
       "favorited_by" -> favorited).collect { case (t, Some(df)) => t -> df }.toMap
   }
+
+  /** Full save_tweets: the normalized [[tables]] of one [[pin]] of
+    * `raw`. Sinks apply them against existing tables via
+    * TableStore/Upsert.
+    */
+  def saveTweets(raw: DataFrame, favoritedBy: Option[Long] = None): Map[String, DataFrame] =
+    tables(pin(raw), favoritedBy)
 
   /** save_users (K2, `utils.py:449-469`): transform + upsert user
     * docs; optionally emit `following` graph edges — when fetched as

@@ -83,9 +83,11 @@ object Watermarks {
     * followers_count, friends_count, listed_count). For each (type,
     * user), append (type, user, datetime=now, count) iff the count
     * differs from the latest stored row (null-safe: first sighting
-    * always writes). Plan shape: unpivot → top-1-per-group on the
-    * existing history (window on the pk prefix) → null-safe anti
-    * condition → append; one shuffle on (type, user).
+    * always writes). Plan shape: unpivot → the batch's (type, user)
+    * histories (a semi-join) → top-1-per-group on them (window on the
+    * pk prefix) → null-safe anti condition → append; one shuffle on
+    * (type, user). The ranking reads only the batch's users' history,
+    * so its cost grows with the batch, not the whole history.
     */
   def saveUserCounts(store: TableStore, users: DataFrame, now: String): Unit = {
     // nothing to record if the user docs carry no count columns
@@ -107,7 +109,8 @@ object Watermarks {
         import org.apache.spark.sql.expressions.Window
         val w = Window.partitionBy(col("type"), col("user"))
           .orderBy(col("datetime").desc)
-        h.withColumn("__rn", row_number().over(w))
+        h.join(current.select("type", "user"), Seq("type", "user"), "left_semi")
+          .withColumn("__rn", row_number().over(w))
           .filter(col("__rn") === 1)
           .select(col("type"), col("user"), col("count").as("prev_count"))
       case None => current.sparkSession.emptyDataFrame

@@ -1,16 +1,15 @@
 package graft.store
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 /** Incremental CONSUMER cursors over the epoch log — the operational
   * form of [[TableStore.readAddedSince]]: each named consumer records
   * the last epoch it processed in the store's `_graft_cursors`
-  * bookkeeping table (underscore-prefixed: invisible to tableNames /
+  * bookkeeping directory (underscore-prefixed: invisible to tableNames /
   * Doctor table walks, like every other store-internal artifact), and
   * [[consumeNew]] feeds it exactly the files added since — the
   * consumer-group pattern (Kafka's committed offsets, Delta's
-  * streaming-source checkpoint) scaled down to one parquet table.
+  * streaming-source checkpoint) scaled down to one small file.
   *
   * Delivery contract: AT-LEAST-ONCE. The cursor advances only after
   * the handler returns — a crash mid-handler re-delivers the same
@@ -28,18 +27,21 @@ import org.apache.spark.sql.functions._
   * lagging consumer can always catch up — and a dead consumer is
   * unregistered with [[drop]], releasing its pin (the same lifecycle
   * as dropTag). Doctor's `suggest` flags consumers whose lag keeps
-  * many epochs pinned. Scale: the cursor table holds one row per
+  * many epochs pinned. Scale: the cursor state holds one line per
   * (table, consumer); every consume is one metadata diff + a scan of
   * only the new files.
   *
-  * Concurrency: cursor advances are whole-table swap upserts, so two
-  * consumer PROCESSES advancing concurrently can lose one advance
-  * (last-writer-wins on the shared cursor table). That is safe by
-  * the delivery contract — a lost advance only re-delivers the same
-  * diff next call, never skips — the same at-least-once outcome as a
-  * crash before the advance. A deployment with many concurrent
-  * consumers serializes advances through its own scheduler, exactly
-  * as the single-writer store contract already requires of writers.
+  * Storage and concurrency: the cursor state is a numbered series of
+  * immutable snapshot files under `_graft_cursors` (one
+  * `table\tconsumer\tepoch` line per cursor, names URL-encoded); a
+  * read resolves the newest one, and an advance publishes the next
+  * through the commit pointer's put-if-absent, so a read never races a
+  * write and the cursor read is driver-side metadata, not a Spark job.
+  * Two consumer PROCESSES advancing concurrently conflict like two
+  * commits: the loser re-reads and re-applies its change, so no
+  * advance is lost. (A store written before the snapshot layout keeps
+  * its cursors in a parquet table there; it is read until the first
+  * advance publishes a snapshot.)
   */
 object EpochFollower {
 
@@ -51,55 +53,64 @@ object EpochFollower {
       store: TableStore, table: String, consumer: String): Option[Long] =
     cursors(store).get((table, consumer))
 
-  /** All registered cursors: (table, consumer) → epoch. Retries a
-    * handful of times on a read failure: the cursor table is a plain
-    * swap-maintained table, so a read racing a concurrent consumer's
-    * advance (another process/thread) can transiently fail mid-swap —
-    * vacuumEpochs reads pins through here, and treating a transient
-    * failure as "no cursors" would silently drop a lagging consumer's
-    * vacuum roots. (A mid-swap MISSING dir still reads as empty — the
-    * microsecond window the vacuum retention period is the documented
-    * guard for.)
-    */
-  def cursors(store: TableStore): Map[(String, String), Long] = {
-    var attempt = 0
-    while (true) {
-      try return store.readIfExists(CursorTable).map(
+  private val SnapshotPrefix = "cursors-"
+  // how long a superseded cursor snapshot stays on disk
+  private val RetainMs = 60000L
+
+  private def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
+  private def dec(s: String) = java.net.URLDecoder.decode(s, "UTF-8")
+
+  /** The newest cursor snapshot's number (0: none yet) and state. */
+  private def current(store: TableStore): (Long, Map[(String, String), Long]) =
+    store.snapshots(CursorTable, SnapshotPrefix).lastOption match {
+      case Some((n, st)) =>
+        // a snapshot is deleted only after its successor has been
+        // published for RetainMs: a vanished file means a newer one
+        val text =
+          try Some(store.readSnapshot(st))
+          catch { case _: java.io.FileNotFoundException => None }
+        text.fold(current(store))(t => n -> t.linesIterator.filter(_.nonEmpty).map { l =>
+          val Array(table, consumer, epoch) = l.split('\t')
+          (dec(table), dec(consumer)) -> epoch.toLong
+        }.toMap)
+      case None => 0L -> store.readIfExists(CursorTable).map(
         _.collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2))
           .toMap).getOrElse(Map.empty)
-      catch {
-        case e: Exception =>
-          if (attempt >= 3) throw e
-          attempt += 1
-          Thread.sleep(50L * attempt)
-      }
     }
-    throw new IllegalStateException("unreachable")
+
+  /** All registered cursors: (table, consumer) → epoch, from one
+    * immutable snapshot.
+    */
+  def cursors(store: TableStore): Map[(String, String), Long] = current(store)._2
+
+  /** Publish `update` of the current cursors as the next snapshot; a
+    * writer that published first makes this one re-read and re-apply.
+    */
+  private def publish(store: TableStore)(
+      update: Map[(String, String), Long] => Map[(String, String), Long]): Unit = {
+    val (n, cur) = current(store)
+    val text = update(cur).toSeq.sortBy(_._1).map { case ((t, c), e) =>
+      s"${enc(t)}\t${enc(c)}\t$e\n" }.mkString
+    if (!store.publishSnapshot(CursorTable, SnapshotPrefix, n + 1, text, RetainMs))
+      publish(store)(update)
   }
 
-  /** ONE swap upsert advancing every member table's cursor row — the
-    * cursor table is whole-table swap-maintained, so the advance is
-    * atomic across tables: a multi-table consumer can never observe
-    * (or leave behind) member cursors at different epochs.
+  /** ONE snapshot advancing every member table's cursor row, so the
+    * advance is atomic across tables: a multi-table consumer can never
+    * observe (or leave behind) member cursors at different epochs.
     */
   private[graft] def advance(
       store: TableStore, tables: Seq[String], consumer: String,
-      epoch: Long): Unit = {
-    import store.spark.implicits._
-    store.upsert(CursorTable,
-      tables.map(t => (t, consumer, epoch)).toDF("table", "consumer", "epoch"),
-      Seq("table", "consumer"))
-  }
+      epoch: Long): Unit =
+    publish(store)(_ ++ tables.map(t => (t, consumer) -> epoch))
 
   /** Unregister a consumer — releases its vacuum pin (the dropTag
     * lifecycle; run when a consumer is retired, or its lag pins
     * epochs forever).
     */
   def drop(store: TableStore, table: String, consumer: String): Unit =
-    store.readIfExists(CursorTable).foreach { c =>
-      store.overwrite(CursorTable,
-        c.filter(!(col("table") === table && col("consumer") === consumer)))
-    }
+    if (cursors(store).contains((table, consumer)))
+      publish(store)(_ - ((table, consumer)))
 
   /** Feed the handler everything this consumer has not yet seen —
     * the FULL table on first call (registration), the added-files

@@ -1,6 +1,6 @@
 package graft.store
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 
 /** Parquet-directory table catalog with the reference's sink semantics
@@ -2865,6 +2865,47 @@ class TableStore(val spark: SparkSession, val root: String) {
     val e = t.getOrElse(tag, throw new IllegalArgumentException(
       s"no such tag: $tag (tags: ${t.keys.toSeq.sorted.mkString(", ")})"))
     readEpoch(name, e)
+  }
+
+  // -------------------------------------------------------------------
+  // Numbered snapshot files: small store bookkeeping state that readers
+  // must never see half-replaced (the consumer cursors of
+  // [[EpochFollower]]) lives as `<root>/<dir>/<prefix><n>`, each file
+  // immutable once published and the highest `n` current. A write
+  // publishes n+1 through the commit pointer's put-if-absent and never
+  // touches n, so a read resolves ONE immutable file.
+
+  /** The published snapshots under `dir`, oldest first: (n, file). */
+  private[store] def snapshots(dir: String, prefix: String): Seq[(Long, FileStatus)] = {
+    val d = new Path(root, dir)
+    if (!fs.exists(d)) Nil
+    else fs.listStatus(d).toSeq
+      .filter(st => st.isFile && st.getPath.getName.startsWith(prefix))
+      .map(st => st.getPath.getName.stripPrefix(prefix).toLong -> st)
+      .sortBy(_._1)
+  }
+
+  private[store] def readSnapshot(st: FileStatus): String = readSmall(st.getPath)
+
+  /** Publish `content` as snapshot `n` under `dir` iff no writer
+    * published `n` first ([[atomicPointerPut]]); false = lost the race,
+    * re-read and retry. A snapshot is deleted once its successor is
+    * older than `retainMs` — a reader resolves and opens the newest
+    * file within microseconds, so it never opens a deleted one.
+    */
+  private[store] def publishSnapshot(
+      dir: String, prefix: String, n: Long, content: String, retainMs: Long): Boolean = {
+    val dst = new Path(new Path(root, dir), f"$prefix$n%020d")
+    val tmp = new Path(dst.getParent, s".tmp-${dst.getName}-$writerTag")
+    writeSmall(tmp, content)
+    val won = atomicPointerPut(tmp, dst)
+    if (won) {
+      val cutoff = System.currentTimeMillis() - retainMs
+      snapshots(dir, prefix).sliding(2).collect {
+        case Seq((_, old), (_, next)) if next.getModificationTime <= cutoff => old.getPath
+      }.foreach(fs.delete(_, false))
+    }
+    won
   }
 
   /** Data files on disk that the current commit does NOT reference —

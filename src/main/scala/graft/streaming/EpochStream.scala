@@ -56,7 +56,7 @@ object EpochStream {
   /** Poll `w` until the cursor stops moving: an empty (rewrite-only)
     * window advances it without feeding the sink, and new commits may
     * have landed mid-batch — stop only at a fixpoint. Each poll reads
-    * the cursor table once (inside the consume, which reports whether
+    * the cursors once (inside the consume, which reports whether
     * it moved the cursor).
     */
   private def drain(w: ChangeWindow, consumer: String)(

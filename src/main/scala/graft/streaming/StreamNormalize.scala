@@ -117,16 +117,17 @@ object StreamNormalize {
   }
 
   /** K8: one microbatch → full save_tweets normalization → idempotent
-    * multi-table upsert in FK-safe order.
+    * multi-table upsert in FK-safe order. The batch is scanned once, by
+    * the normalize pin; a batch of keepalives only pins no rows and
+    * writes nothing.
     */
   def writeBatch(store: TableStore, batch: DataFrame): Unit = {
-    val tweets = fixStreaming(controlFilter(batch))
-    if (tweets.isEmpty) return
-    val tables = Normalize.saveTweets(tweets)
+    val pinned = Normalize.pin(fixStreaming(controlFilter(batch)))
+    if (pinned.isEmpty) return
     // one atomic multi-table commit per micro-batch when the store
     // governs the tweet tables (the reference's per-tweet transaction,
     // cli.py:664-668); a pass-through otherwise
-    graft.ingest.TweetSink(store, tables,
+    graft.ingest.TweetSink(store, Normalize.tables(pinned),
       Some(graft.sources.TimelineIngest.utcNowIso()))
   }
 

@@ -1,11 +1,13 @@
 package graft.ingest
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.SparkSpec
 import graft.schema.TwitterSchemas
-import graft.store.SqliteCompat
+import graft.store.{SqliteCompat, TableStore, Upsert}
+import graft.streaming.StreamNormalize
 
 /** Port of the reference's end-to-end golden test
   * (`/root/reference/tests/test_save_tweets.py`): the same 3-tweet
@@ -225,6 +227,9 @@ class SaveTweetsSpec extends SparkSpec {
     assert(rt.getAs[String]("source") === "95f3aaaddaa45937ac94765e0ddb68ba2be92d20")
     val simonw = out("users").filter(col("id") === 12497L).collect()(0)
     assert(simonw.getAs[String]("url") === "https://simonwillison.net/")
+    // inferred levels type nested fields differently: the row type
+    // widens per column exactly as a union of the levels does
+    assertUnionParity(inferred)
   }
 
   test("a fresh bucketed store: first batch lands partitioned, second rewrites only touched buckets") {
@@ -311,5 +316,142 @@ class SaveTweetsSpec extends SparkSpec {
     assert(favs.map(_.getAs[Long]("user")).toSet === Set(12497L))
     assert(favs.map(_.getAs[Long]("tweet")).toSet ===
       Set(1169246717864136700L, 1169196446043664400L, 1168529001599533000L))
+  }
+
+  // ------------------------------------------ one scan, union parity
+
+  /** `lines` as a frame of `schema` over an RDD of `parts` partitions
+    * that counts every partition it computes.
+    */
+  private def counted(lines: Seq[String], parts: Int, schema: StructType) = {
+    val computed = spark.sparkContext.longAccumulator
+    val rdd = spark.sparkContext.parallelize(lines, parts)
+      .mapPartitions { it => computed.add(1); it }
+    (spark.read.schema(schema).json(spark.createDataset(rdd)(Encoders.STRING)), computed)
+  }
+
+  private lazy val fixtureLines: Seq[String] = spark.read
+    .option("multiLine", true).schema(TwitterSchemas.tweet(2))
+    .json(resource("tweets.json")).toJSON.collect().toSeq
+
+  test("saveTweets computes every input partition exactly once") {
+    val (raw, computed) = counted(fixtureLines, 3, TwitterSchemas.tweet(2))
+    val out = Normalize.saveTweets(raw, favoritedBy = Some(12497L))
+    out.values.foreach(_.collect())
+    assert(computed.value === 3L)
+    assert(out("tweets").count() === 5L)
+  }
+
+  test("writeBatch computes every input partition exactly once; keepalives alone write nothing") {
+    val store = new TableStore(spark,
+      java.nio.file.Files.createTempDirectory("graft-st-scan").toString)
+    store.ensureGoverned(TweetSink.Tables)
+    val (batch, computed) = counted(fixtureLines, 3, TwitterSchemas.streamTweet(2))
+    StreamNormalize.writeBatch(store, batch)
+    assert(computed.value === 3L)
+    assert(store.read("tweets").count() === 5L)
+
+    val epochs = store.epochs()
+    val (keepalives, _) = counted(Seq("""{"limit": {"track": 5}}""",
+      """{"delete": {"status": {"id": 1}}}"""), 2, TwitterSchemas.streamTweet(2))
+    StreamNormalize.writeBatch(store, keepalives)
+    assert(store.epochs() === epochs)
+    assert(store.read("tweets").count() === 5L)
+  }
+
+  /** save_tweets as a union of per-level frames: each nested level a
+    * filtered, flattened copy of the input, projected on its own and
+    * unioned by name, media exploded per level.
+    */
+  private def unionTables(raw: DataFrame): Map[String, DataFrame] = {
+    import Normalize.Iid
+    val ord = Upsert.OrdCol
+    val base = raw.withColumn(Iid, monotonically_increasing_id())
+    def nested(df: DataFrame, f: String): Option[DataFrame] =
+      df.schema.find(_.name == f).collect { case sf if sf.dataType.isInstanceOf[StructType] =>
+        df.filter(col(s"$f.id").isNotNull).select(col(Iid), col(s"$f.*"))
+      }
+    val l1 = Seq("quoted_status" -> 0, "retweeted_status" -> 3).flatMap { case (f, b) =>
+      nested(base, f).map(_ -> b)
+    }
+    val l2 = l1.flatMap { case (l, b) =>
+      Seq("quoted_status" -> b, "retweeted_status" -> (b + 1)).flatMap { case (f, off) =>
+        nested(l, f).map(_ -> off)
+      }
+    }
+    val levels = (l2 ++ l1.map { case (l, b) => (l, b + 2) } :+ (base -> 9)).map {
+      case (df, off) =>
+        val flat = df.withColumn(ord, col(Iid) * 10 + off).drop(Iid)
+        flat -> Normalize.Level(col, flat.schema, lit(true), col(ord))
+    }
+    val statuses = levels.map { case (df, l) => df.select(Normalize.statusCols(l): _*) }
+    val media = levels.flatMap { case (df, l) =>
+      Normalize.mediaSchema(l).map(ms => df
+        .filter(col("extended_entities.media").isNotNull)
+        .select(col("*"), explode(col("extended_entities.media")).as("__m"))
+        .select(Normalize.mediaCols(l, ms, col("__m")): _*))
+    }
+    Normalize.tables((statuses ++ media).reduce(_.unionByName(_, allowMissingColumns = true)))
+  }
+
+  private def assertUnionParity(raw: DataFrame): Unit = {
+    val got = Normalize.saveTweets(raw)
+    val want = unionTables(raw)
+    assert(got.keySet === want.keySet)
+    want.foreach { case (t, w) =>
+      assert(got(t).schema.catalogString === w.schema.catalogString, s"$t schema")
+      assert(got(t).toJSON.collect().sorted.toSeq === w.toJSON.collect().sorted.toSeq, s"$t rows")
+    }
+  }
+
+  private def user(id: Long): String =
+    s"""{"id": $id, "created_at": "Mon Sep 02 14:19:58 +0000 2019", "name": "U$id",
+       | "screen_name": "u$id", "followers_count": $id, "friends_count": 2,
+       | "listed_count": 3}""".stripMargin
+
+  private def status(id: Long, text: String, extra: String = ""): String =
+    s"""{"id": $id, "created_at": "Wed Sep 04 13:51:55 +0000 2019",
+       | "full_text": "$text", "user": ${user(id % 3 + 1)}$extra}""".stripMargin
+
+  private def docs(schema: StructType, json: String*): DataFrame = {
+    import spark.implicits._
+    spark.read.schema(schema).json(json.map(_.replace("\n", "")).toDS)
+  }
+
+  test("union parity: streaming docs with extended_tweet at the nested levels") {
+    def streamed(id: Long, extra: String = ""): String =
+      s"""{"id": $id, "created_at": "Wed Sep 04 13:51:55 +0000 2019",
+         | "text": "short $id", "truncated": true, "user": ${user(id % 3 + 1)},
+         | "source": "<a href=\\"http://x.example\\" rel=\\"nofollow\\">X</a>",
+         | "extended_tweet": {"full_text": "full $id &amp; https://t.co/$id",
+         |   "entities": {"urls": [{"url": "https://t.co/$id",
+         |     "expanded_url": "https://example.com/$id"}]}}$extra}""".stripMargin
+    val raw = docs(TwitterSchemas.streamTweet(2),
+      streamed(1, s""", "retweeted_status": ${streamed(2,
+        s""", "quoted_status": ${streamed(3)}, "retweeted_status": ${streamed(4)}""")}"""),
+      streamed(5, s""", "quoted_status": ${streamed(6, s""", "quoted_status": ${streamed(7)}""")}"""),
+      streamed(8))
+    val fixed = StreamNormalize.fixStreaming(StreamNormalize.controlFilter(raw))
+    assertUnionParity(fixed)
+    val t3 = Normalize.saveTweets(fixed)("tweets").filter(col("id") === 3L).collect()
+    assert(t3.map(_.getAs[String]("full_text")).toSeq === Seq("full 3 & https://example.com/3"))
+  }
+
+  test("union parity: a null media entity, a doc with no nested statuses, retweet-of-a-quote LWW") {
+    val media =
+      s""", "extended_entities": {"media": [null, {"id": 50, "id_str": "50",
+         | "media_url": "http://m.example/50.jpg", "type": "photo"}]}""".stripMargin
+    val raw = docs(TwitterSchemas.tweet(2),
+      status(10, "top", media + s""", "quoted_status": ${status(11, "quoted", media)}"""),
+      status(20, "alone"),
+      status(30, "parent", s""", "quoted_status": ${status(100, "top copy")},
+        | "retweeted_status": ${status(31, "rt",
+        s""", "quoted_status": ${status(100, "nested copy")}""")}""".stripMargin))
+    assertUnionParity(raw)
+    val out = Normalize.saveTweets(raw)
+    // each level's null entity still gives a media row, as explode does
+    assert(out("media_tweets").filter(col("media_id").isNull).count() === 2L)
+    assert(out("tweets").filter(col("id") === 100L).select("full_text").head.getString(0)
+      === "nested copy")
   }
 }

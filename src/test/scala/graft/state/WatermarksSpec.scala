@@ -92,4 +92,41 @@ class WatermarksSpec extends SparkSpec {
     assert(store.read("users").collect().map(_.getAs[String]("created_at")).toSet
       === Set("2019-09-02T14:19:58+00:00"))
   }
+
+  test("A2: only the batch's users are ranked; appended rows match the whole-history rule") {
+    val store = freshStore()
+    def counts(rows: (Long, Long, Long, Long)*) =
+      rows.toDF("id", "followers_count", "friends_count", "listed_count")
+    // user 1 builds several history rows, then sits out the last batch
+    Watermarks.saveUserCounts(store, counts((1L, 10L, 5L, 1L), (2L, 7L, 7L, 7L)),
+      "2026-01-01T00:00:00+00:00")
+    Watermarks.saveUserCounts(store, counts((1L, 11L, 5L, 1L)), "2026-01-02T00:00:00+00:00")
+    Watermarks.saveUserCounts(store, counts((1L, 12L, 6L, 2L)), "2026-01-03T00:00:00+00:00")
+    val before = store.read("count_history").collect().toSeq
+    assert(before.count(_.getAs[Long]("user") == 1L) === 7)
+
+    // the rule over the WHOLE history: latest row per (type, user)
+    val now = "2026-01-04T00:00:00+00:00"
+    val batch = counts((2L, 8L, 7L, 7L), (3L, 1L, 1L, 1L))
+    import org.apache.spark.sql.expressions.Window
+    val latest = store.read("count_history")
+      .withColumn("rn", row_number().over(
+        Window.partitionBy("type", "user").orderBy(col("datetime").desc)))
+      .filter(col("rn") === 1)
+      .select(col("type"), col("user"), col("count").as("prev"))
+    val expected = batch.selectExpr("id as user",
+        "stack(3, 1, followers_count, 2, friends_count, 3, listed_count) as (type, count)")
+      .join(latest, Seq("type", "user"), "left")
+      .filter(!(col("count") <=> col("prev")))
+      .select(col("type"), col("user"), lit(now).as("datetime"), col("count"))
+      .collect().toSeq
+
+    Watermarks.saveUserCounts(store, batch, now)
+    def key(r: org.apache.spark.sql.Row) = (r.getAs[Int]("type"), r.getAs[Long]("user"),
+      r.getAs[String]("datetime"), r.getAs[Long]("count"))
+    assert(store.read("count_history").collect().map(key).sorted.toSeq ===
+      (before ++ expected).map(key).sorted)
+    assert(expected.map(key).sorted === Seq((1, 2L, now, 8L), (1, 3L, now, 1L),
+      (2, 3L, now, 1L), (3, 3L, now, 1L)))
+  }
 }

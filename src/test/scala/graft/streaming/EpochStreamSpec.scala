@@ -19,9 +19,8 @@ class EpochStreamSpec extends SparkSpec {
     java.nio.file.Files.createTempDirectory("graft-estream").toString
 
   /** Poll until the probe holds; a probe that THROWS counts as
-    * not-ready (the cursor table is swap-maintained, so a cross-thread
-    * cursor read can transiently race the consumer's advance — the
-    * documented last-writer-wins concurrency of EpochFollower).
+    * not-ready (a probe that reads a swap-maintained mirror can race
+    * the consumer's rewrite of it).
     */
   private def eventually[T](deadlineMs: Long = 20000)(probe: => Boolean): Unit = {
     val t0 = System.currentTimeMillis()
@@ -287,5 +286,40 @@ class EpochStreamSpec extends SparkSpec {
       .select(col("id").cast("long")).collect().map(_.getLong(0)).toSet
     assert(left.intersect(doomed) === Set.empty)
     assert(left.size === 8 - doomed.size)
+  }
+
+  test("cursor reads never race an advance: a live consumer and a polling reader fail no task") {
+    val root = freshRoot()
+    val producer = new TableStore(spark, root)
+    producer.ensureGoverned(Seq("t"))
+    producer.upsert("t", Seq((1L, "a")).toDF("id", "v"), Seq("id"))
+    val failed = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (e.reason != org.apache.spark.Success) failed.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val consumerStore = new TableStore(spark, root)
+    val handle = EpochStream.start(consumerStore, "t", "c", pollMs = 10L) { batch =>
+      batch.count(); ()
+    }
+    // a third instance reads the cursors as fast as it can while the
+    // consumer advances them
+    val reader = new TableStore(spark, root)
+    try {
+      (2L to 6L).foreach { i =>
+        producer.upsert("t", Seq((i, "v")).toDF("id", "v"), Seq("id"))
+        val want = producer.snapshot().epoch
+        val t0 = System.currentTimeMillis()
+        while (!EpochFollower.cursor(reader, "t", "c").contains(want)) {
+          assert(System.currentTimeMillis() - t0 < 20000, s"consumer never reached epoch $want")
+          Thread.sleep(2)
+        }
+      }
+      assert(handle.lastError === None)
+    } finally handle.stop()
+    Thread.sleep(500) // let the listener bus deliver the last task ends
+    spark.sparkContext.removeSparkListener(listener)
+    assert(failed.get() === 0, "failed Spark tasks while cursors were read and advanced")
   }
 }
