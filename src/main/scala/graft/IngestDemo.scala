@@ -28,7 +28,8 @@ object IngestDemo {
       .json(input)
     val tables = Normalize.saveTweets(raw)
     val store = new TableStore(spark, storeDir)
-    // FK-safe order, atomic when the store governs the tweet tables
+    // atomic when the store governs the tweet tables (FK-safe order
+    // when it does not)
     graft.ingest.TweetSink(store, tables, now = None)
 
     store.tableNames.foreach { t =>

@@ -17,9 +17,13 @@ import graft.store.TableStore
   * the whole fan-out runs in [[TableStore.transact]], which stages
   * every governed table's write and flips one commit pointer at the
   * end — all-or-nothing for readers, exactly the reference's
-  * per-batch atomicity. On a store with no governed tables the
-  * transact is a pass-through and behavior is byte-identical to the
-  * historical per-table swaps (existing specs unchanged); opt in with
+  * per-batch atomicity. No write reads another's output, so on a
+  * governed store they stage concurrently
+  * ([[TableStore.stageConcurrently]]); visibility still changes at the
+  * one flip. On a store with no governed tables the transact is a
+  * pass-through, the writes apply one by one in FK-safe order, and
+  * behavior is byte-identical to the historical per-table swaps
+  * (existing specs unchanged); opt in with
   * `store.ensureGoverned(TweetSink.Tables)`.
   */
 object TweetSink {
@@ -32,25 +36,26 @@ object TweetSink {
     "tweets", "users", "sources", "places", "media", "media_tweets",
     "favorited_by", "count_history")
 
-  /** Apply a [[Normalize.saveTweets]] result map in FK-safe order
-    * (dimensions → CDC → facts → links), atomically when the store
-    * governs the tables. `now` feeds the A2 count-history CDC; pass
-    * None to skip it (the archive path, which carries no live counts).
+  /** Apply a [[Normalize.saveTweets]] result map atomically when the
+    * store governs the tables, staging the writes concurrently; on an
+    * un-governed store, in FK-safe order (dimensions → CDC → facts →
+    * links). `now` feeds the A2 count-history CDC; pass None to skip it
+    * (the archive path, which carries no live counts).
     */
   def apply(
       store: TableStore,
       tables: Map[String, DataFrame],
-      now: Option[String]): Unit =
+      now: Option[String]): Unit = {
+    def upsert(t: String, pk: String*): Option[(String, () => Unit)] =
+      tables.get(t).map(df => t -> (() => store.upsert(t, df, pk)))
+    val counts = for (ts <- now; users <- tables.get("users")) yield
+      "count_history" -> (() => graft.state.Watermarks.saveUserCounts(store, users, ts))
     store.transact {
-      Seq("users", "sources", "places", "media").foreach { t =>
-        tables.get(t).foreach(df => store.upsert(t, df, Seq("id")))
-      }
-      now.foreach(ts => tables.get("users").foreach(users =>
-        graft.state.Watermarks.saveUserCounts(store, users, ts)))
-      tables.get("tweets").foreach(df => store.upsert("tweets", df, Seq("id")))
-      tables.get("media_tweets").foreach(df =>
-        store.upsert("media_tweets", df, Seq("media_id", "tweets_id")))
-      tables.get("favorited_by").foreach(df =>
-        store.upsert("favorited_by", df, Seq("user", "tweet")))
+      store.stageConcurrently(Seq(
+        upsert("users", "id"), upsert("sources", "id"), upsert("places", "id"),
+        upsert("media", "id"), counts, upsert("tweets", "id"),
+        upsert("media_tweets", "media_id", "tweets_id"),
+        upsert("favorited_by", "user", "tweet")).flatten)
     }
+  }
 }

@@ -64,7 +64,7 @@ object TimelineIngest {
           .select(from_json(col("value"), TwitterSchemas.tweet(2)).as("t"))
           .select("t.*")
         val tables = Normalize.saveTweets(raw, favoritedBy)
-        // FK-safe fan-out incl. the A2 count CDC (utils.py:433
+        // the table fan-out incl. the A2 count CDC (utils.py:433
         // save_user_counts inside save_tweets), atomic per page when
         // the store governs the tweet tables
         graft.ingest.TweetSink(store, tables, Some(now()))

@@ -34,7 +34,7 @@ class TableStore(val spark: SparkSession, val root: String) {
     * the same resolution order read()/dataFiles() use.
     */
   def exists(name: String): Boolean =
-    if (isGoverned(name) || activeTx.exists(_.pending.contains(name)))
+    if (isGoverned(name) || activeTx.exists(_.staged(name)))
       liveRefs(name).nonEmpty
     else fs.exists(new Path(path(name)))
 
@@ -379,9 +379,8 @@ class TableStore(val spark: SparkSession, val root: String) {
       // a metadata-only pending update: the partition's files leave
       // the live set at commit (physical deletion is vacuum's job)
       withTxWrite { tx =>
-        tx.pending(name) = liveRefs(name)
-          .filterNot(_.rel.startsWith(s"$partCol=$value/"))
-        recordOp(tx, name, TableStore.OpDelete)
+        tx.stage(name, liveRefs(name)
+          .filterNot(_.rel.startsWith(s"$partCol=$value/")), TableStore.OpDelete)
       }
       return
     }
@@ -1273,7 +1272,7 @@ class TableStore(val spark: SparkSession, val root: String) {
     * footer-free pruning; every write path keeps it fresh thereafter.
     */
   def refreshFileStats(name: String): Unit =
-    if (activeTx.exists(_.pending.contains(name))) () // deferred to commit
+    if (activeTx.exists(_.staged(name))) () // deferred to commit
     else {
       val files = dataFiles(name)
       // zero data files (e.g. a governed table whose live set was
@@ -1295,7 +1294,7 @@ class TableStore(val spark: SparkSession, val root: String) {
     * back to the full build when no usable manifest exists.
     */
   def refreshFileStatsIncremental(name: String): Unit =
-    if (activeTx.exists(_.pending.contains(name))) () // deferred to commit
+    if (activeTx.exists(_.staged(name))) () // deferred to commit
     else if (!hasFileStats(name) || !manifestHasRowCounts(name))
       refreshFileStats(name)
     else {
@@ -1362,7 +1361,7 @@ class TableStore(val spark: SparkSession, val root: String) {
     * files are not in place yet.
     */
   private def manifestStale(name: String, presenceAbs: Set[String]): Boolean =
-    isGoverned(name) && !activeTx.exists(_.pending.contains(name)) &&
+    isGoverned(name) && !activeTx.exists(_.staged(name)) &&
       presenceAbs != dataFiles(name).toSet
 
   /** Driver footer walk over the LIVE file set — the no-manifest
@@ -1575,20 +1574,66 @@ class TableStore(val spark: SparkSession, val root: String) {
     */
   private case class FileRef(base: Path, rel: String, staged: Boolean)
 
+  /** One open transaction's staged state. The writes of one
+    * [[stageConcurrently]] call share it from their own threads, so
+    * every access takes the state's lock.
+    */
   private class TxState {
-    val pending = scala.collection.mutable.LinkedHashMap[String, Seq[FileRef]]()
-    val staging = scala.collection.mutable.Buffer[Path]()
-    val deferred = scala.collection.mutable.Buffer[() => Unit]()
+    private val pending = scala.collection.mutable.LinkedHashMap[String, Seq[FileRef]]()
+    private val staging = scala.collection.mutable.Buffer[Path]()
+    private val deferred = scala.collection.mutable.Buffer[() => Unit]()
     // WHY each table changed (append/upsert/compact/overwrite/delete) —
     // stamped into the commit's log entries so incremental consumers
     // can skip rewrite-only commits (Iceberg's REPLACE-snapshot rule)
-    val ops = scala.collection.mutable.LinkedHashMap[String, String]()
+    private val ops = scala.collection.mutable.LinkedHashMap[String, String]()
     // tables whose pending state came from a WHOLE-TABLE replace: the
     // commit clears their layout markers (the invariant the
     // ungoverned dir-swap provided for free), and any deferred marker
     // write then re-declares what still applies
-    val fullyReplaced = scala.collection.mutable.Set[String]()
-    var n = 0
+    private val fullyReplaced = scala.collection.mutable.Set[String]()
+    private var n = 0
+
+    def pendingOf(name: String): Option[Seq[FileRef]] = synchronized(pending.get(name))
+    def staged(name: String): Boolean = synchronized(pending.contains(name))
+    def stagedTables: Seq[(String, Seq[FileRef])] = synchronized(pending.toSeq)
+    def stagedOp(name: String): String = synchronized(ops.getOrElse(name, OpUpsert))
+    def replacedTables: Seq[String] = synchronized(fullyReplaced.toSeq)
+    def stagingDirs: Seq[Path] = synchronized(staging.toSeq)
+    def deferredActions: Seq[() => Unit] = synchronized(deferred.toSeq)
+
+    /** A fresh staging dir for `name`, registered for cleanup. */
+    def newStageDir(name: String): Path = synchronized {
+      n += 1
+      val p = new Path(stageRoot,
+        s"$name-${java.util.UUID.randomUUID().toString.take(8)}-$n")
+      staging += p
+      p
+    }
+
+    /** Set `name`'s pending live set, written by `op` (`whole`: a
+      * whole-table replace). Op tags combine per table: repeated
+      * same-op writes keep the tag; mixed tags degrade conservatively
+      * to a logical-change tag (never to a skippable rewrite), with
+      * overwrite dominating (the table's whole content was replaced at
+      * some point in the transaction).
+      */
+    def stage(name: String, refs: Seq[FileRef], op: String, whole: Boolean = false): Unit =
+      synchronized {
+        pending(name) = refs
+        if (whole) fullyReplaced += name
+        ops(name) = ops.get(name) match {
+          case None | Some(`op`) => op
+          case Some(prev) if prev == OpOverwrite || op == OpOverwrite => OpOverwrite
+          case _ => OpUpsert
+        }
+      }
+
+    /** Queue `action` for after the flip iff `name` is staged. */
+    def deferIfStaged(name: String, action: () => Unit): Boolean = synchronized {
+      val s = pending.contains(name)
+      if (s) deferred += action
+      s
+    }
   }
 
   /** Run `action` now — unless an open transaction staged `name`, in
@@ -1596,11 +1641,9 @@ class TableStore(val spark: SparkSession, val root: String) {
     * markers must never land ahead of the data they describe).
     */
   private def deferInTx(name: String, action: () => Unit): Unit =
-    activeTx match {
-      case Some(tx) if tx.pending.contains(name) => tx.deferred += action
-      case _ => action()
-    }
-  private var activeTx: Option[TxState] = None
+    if (!activeTx.exists(_.deferIfStaged(name, action))) action()
+  // read by the writes of a [[stageConcurrently]] call on their threads
+  @volatile private var activeTx: Option[TxState] = None
 
   /** Whether a [[transact]] block is open on this instance — the
     * signal [[Retract.cascade]] uses to refuse a MIXED-governance
@@ -1612,9 +1655,11 @@ class TableStore(val spark: SparkSession, val root: String) {
 
   // commit + list files are IMMUTABLE once written (fresh name per
   // epoch), so caching parsed content by file name is safe across
-  // writers — only the latest-pointer LISTING hits the FS per resolve
-  private val commitCache = scala.collection.mutable.HashMap[String, Map[String, String]]()
-  private val listCache = scala.collection.mutable.HashMap[String, Seq[String]]()
+  // writers — only the latest-pointer LISTING hits the FS per resolve.
+  // Concurrent maps: the writes of a [[stageConcurrently]] call resolve
+  // entries from their own threads (as do the depth/op/ts caches)
+  private val commitCache = scala.collection.concurrent.TrieMap[String, Map[String, String]]()
+  private val listCache = scala.collection.concurrent.TrieMap[String, Seq[String]]()
 
   private def readSmall(p: Path): String = {
     val in = fs.open(p)
@@ -1689,7 +1734,7 @@ class TableStore(val spark: SparkSession, val root: String) {
 
   // pointer files are immutable → stamp memoizes by name, like the
   // entry caches (None = legacy pointer written before stamping)
-  private val tsCache = scala.collection.mutable.HashMap[String, Option[Long]]()
+  private val tsCache = scala.collection.concurrent.TrieMap[String, Option[Long]]()
 
   private def commitTsOf(p: Path): Option[Long] =
     tsCache.getOrElseUpdate(p.getName,
@@ -1984,7 +2029,7 @@ class TableStore(val spark: SparkSession, val root: String) {
   // small files and vacuum reachability stays shallow
   private val MaxDeltaDepth = 10
 
-  private val depthCache = scala.collection.mutable.HashMap[String, Int]()
+  private val depthCache = scala.collection.concurrent.TrieMap[String, Int]()
 
   /** Resolve a commit entry to its full rel-path list. `files-*`
     * entries ARE the list; `delta-*` entries carry `base=<entry>` +
@@ -2026,7 +2071,7 @@ class TableStore(val spark: SparkSession, val root: String) {
 
   // entry → op tag, memoized like the list/depth caches (entries are
   // immutable once written)
-  private val opCache = scala.collection.mutable.HashMap[String, String]()
+  private val opCache = scala.collection.concurrent.TrieMap[String, String]()
 
   /** The operation that produced a log entry — [[TableStore.OpUnknown]]
     * for entries written before op stamping (treated as a logical
@@ -2092,7 +2137,7 @@ class TableStore(val spark: SparkSession, val root: String) {
 
   /** Post-pending live set inside a transaction, committed set outside. */
   private def liveRefs(name: String): Seq[FileRef] =
-    activeTx.flatMap(_.pending.get(name)).getOrElse(committedRefs(name))
+    activeTx.flatMap(_.pendingOf(name)).getOrElse(committedRefs(name))
 
   private def walkParquetRel(dir: Path): Seq[String] = {
     val prefix = dir.toString + "/"
@@ -2159,7 +2204,7 @@ class TableStore(val spark: SparkSession, val root: String) {
       catch {
         case e: Throwable =>
           activeTx = None
-          tx.staging.foreach(p => if (fs.exists(p)) fs.delete(p, true))
+          tx.stagingDirs.foreach(p => if (fs.exists(p)) fs.delete(p, true))
           throw e
       }
     activeTx = None
@@ -2194,6 +2239,53 @@ class TableStore(val spark: SparkSession, val root: String) {
     throw new IllegalStateException("unreachable")
   }
 
+  /** Stage the independent writes of one transaction concurrently:
+    * each `(table, write)` must touch only its own table, and no write
+    * may read another's output. Inside a [[transact]] whose targets are
+    * distinct governed tables, every write runs on a thread created
+    * for this call — so it inherits the caller's Spark local
+    * properties (job group, description, scheduler pool) — and their
+    * jobs overlap the driver-side gaps between each other's. The call
+    * returns only when every write has finished; a failure is rethrown
+    * only then (the earliest failed write in `writes` order, the
+    * others attached as suppressed), so the enclosing transaction's
+    * abort discards staging no sibling is still writing to. Staged
+    * files, op tags and the one pointer flip are what the same writes
+    * made in order. Outside a transaction, or when a target is
+    * un-governed (its write applies immediately), the writes run in
+    * order on the caller's thread, keeping the caller's FK-safe order;
+    * so do a single write and a table named twice.
+    */
+  def stageConcurrently(writes: Seq[(String, () => Unit)]): Unit = {
+    val names = writes.map(_._1)
+    if (writes.size < 2 || activeTx.isEmpty || names.distinct.size < names.size ||
+        !names.toSet.subsetOf(governed)) writes.foreach(_._2())
+    else {
+      val failures = new Array[Throwable](writes.size)
+      val threads = writes.zipWithIndex.map { case ((name, write), i) =>
+        val t = new Thread(() =>
+          try write() catch { case e: Throwable => failures(i) = e },
+          s"graft-stage-$name")
+        t.setDaemon(true)
+        t
+      }
+      // every started write is joined, even when the caller is
+      // interrupted (the interrupt is restored after) or a later
+      // thread fails to start
+      var interrupted = false
+      try threads.foreach(_.start())
+      finally threads.foreach { t =>
+        while (t.isAlive)
+          try t.join() catch { case _: InterruptedException => interrupted = true }
+      }
+      if (interrupted) Thread.currentThread.interrupt()
+      failures.find(_ != null).foreach { first =>
+        failures.filter(e => e != null && (e ne first)).foreach(first.addSuppressed)
+        throw first
+      }
+    }
+  }
+
   /** Inside a transaction: record with it. Outside: a governed write
     * is its own single-table transaction (stage + immediate commit),
     * so non-transactional callers stay correct without code changes.
@@ -2203,29 +2295,19 @@ class TableStore(val spark: SparkSession, val root: String) {
     case None => transact(f(activeTx.get))
   }
 
-  private def newStageDir(tx: TxState, name: String): Path = {
-    tx.n += 1
-    val p = new Path(stageRoot, s"$name-${java.util.UUID.randomUUID().toString.take(8)}-${tx.n}")
-    fs.mkdirs(p)
-    tx.staging += p
-    p
-  }
-
   /** Whole-table replace, staged: the transactional twin of
     * writeSwapped's delete-and-rename.
     */
   private def stageReplace(
       tx: TxState, name: String, df: DataFrame, partitionBy: Seq[String],
-      op: String): Unit = {
-    tx.pending(name) = writeStage(tx, name, df, partitionBy)
-    tx.fullyReplaced += name
-    recordOp(tx, name, op)
-  }
+      op: String): Unit =
+    tx.stage(name, writeStage(tx, name, df, partitionBy), op, whole = true)
 
   /** Write `df` into a fresh staging dir of `name`; its files as refs. */
   private def writeStage(
       tx: TxState, name: String, df: DataFrame, partitionBy: Seq[String]): Seq[FileRef] = {
-    val stage = newStageDir(tx, name)
+    val stage = tx.newStageDir(name)
+    fs.mkdirs(stage)
     val w = df.write.mode(SaveMode.Overwrite)
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
       .parquet(stage.toString)
@@ -2270,22 +2352,8 @@ class TableStore(val spark: SparkSession, val root: String) {
         .parquet(rs.toSeq.map(r => new Path(b, r.rel).toString): _*)
     }.reduceOption(_.union(_))
     val staged = writeStage(tx, name, ChangeWindow.align(merge(ex, inc), schema), Nil)
-    tx.pending(name) = live.filterNot(replaced) ++ staged
-    recordOp(tx, name, OpUpsert)
+    tx.stage(name, live.filterNot(replaced) ++ staged, OpUpsert)
   }
-
-  /** Combine a transaction's op tags per table: repeated same-op writes
-    * keep the tag; mixed tags degrade conservatively to a
-    * logical-change tag (never to a skippable rewrite), with overwrite
-    * dominating (the table's whole content was replaced at some point
-    * in the transaction).
-    */
-  private def recordOp(tx: TxState, name: String, op: String): Unit =
-    tx.ops(name) = tx.ops.get(name) match {
-      case None | Some(`op`) => op
-      case Some(prev) if prev == OpOverwrite || op == OpOverwrite => OpOverwrite
-      case _ => OpUpsert
-    }
 
   /** Dynamic-partition overwrite, staged: partitions present in `df`
     * swap their file lists; all other live files carry across BY
@@ -2301,8 +2369,7 @@ class TableStore(val spark: SparkSession, val root: String) {
     }
     val replaced = staged.map(fr => dirOf(fr.rel)).toSet
     val kept = liveRefs(name).filterNot(fr => replaced.contains(dirOf(fr.rel)))
-    tx.pending(name) = kept ++ staged
-    recordOp(tx, name, op)
+    tx.stage(name, kept ++ staged, op)
   }
 
   /** Test seam: invoked after staged files are moved into place but
@@ -2319,20 +2386,22 @@ class TableStore(val spark: SparkSession, val root: String) {
   private[graft] var afterCommitFlip: () => Unit = () => ()
 
   private def commitTx(tx: TxState): Unit = {
-    if (tx.pending.isEmpty) {
-      tx.staging.foreach(p => if (fs.exists(p)) fs.delete(p, true))
+    val pending = tx.stagedTables
+    if (pending.isEmpty) {
+      tx.stagingDirs.foreach(p => if (fs.exists(p)) fs.delete(p, true))
       return
     }
     val (epoch, tables) = currentCommit.getOrElse((0L, Map.empty[String, String]))
-    require(tx.pending.keySet.subsetOf(tables.keySet),
-      s"transaction wrote un-governed tables ${tx.pending.keySet.toSet -- tables.keySet}")
+    val pendingNames = pending.map(_._1).toSet
+    require(pendingNames.subsetOf(tables.keySet),
+      s"transaction wrote un-governed tables ${pendingNames -- tables.keySet}")
     val next = epoch + 1
     // pre-flip live sets, for the O(changed) stats refresh in step 4
     val committedBefore: Map[String, Set[String]] =
-      tx.pending.keys.map(n => n -> committedRefs(n).map(_.rel).toSet).toMap
+      pendingNames.map(n => n -> committedRefs(n).map(_.rel).toSet).toMap
     // 1. move staged files into the table dirs (metadata renames;
     //    invisible to readers — nothing references them yet)
-    val finalRels: Seq[(String, Seq[String])] = tx.pending.toSeq.map {
+    val finalRels: Seq[(String, Seq[String])] = pending.map {
       case (name, refs) =>
         name -> refs.map { fr =>
           if (!fr.staged) fr.rel
@@ -2363,7 +2432,7 @@ class TableStore(val spark: SparkSession, val root: String) {
     // same tx) re-declare after the flip. A crash here leaves old
     // live data with no marker — re-derived wholesale on the next
     // upsert, never wrong.
-    tx.fullyReplaced.foreach { n =>
+    tx.replacedTables.foreach { n =>
       fs.delete(layoutPath(n), false)
       fs.delete(new Path(path(n), "_graft_zorder"), false)
     }
@@ -2376,7 +2445,7 @@ class TableStore(val spark: SparkSession, val root: String) {
     val ourEntries = finalRels.map { case (n, rels) =>
       // WHY this table changed, stamped into the entry so incremental
       // scans can skip rewrite-only commits without reading any data
-      val op = tx.ops.getOrElse(n, OpUpsert)
+      val op = tx.stagedOp(n)
       def writeFull(): String = {
         val lf = s"files-$n-$next-$writerTag"
         writeSmall(new Path(epochDir, lf),
@@ -2431,7 +2500,7 @@ class TableStore(val spark: SparkSession, val root: String) {
             s"commit-$attempt exists but no commit resolves — corrupt log?"))
         val changed = (curTables.keySet ++ base.keySet)
           .filter(t => curTables.get(t) != base.get(t))
-        val overlap = changed.intersect(tx.pending.keySet)
+        val overlap = changed.intersect(pendingNames)
         if (overlap.nonEmpty)
           throw new TableStore.OccOverlapException(
             s"concurrent commit(s) changed ${overlap.toSeq.sorted.mkString(", ")} " +
@@ -2477,9 +2546,9 @@ class TableStore(val spark: SparkSession, val root: String) {
     }
     // 5. deferred metadata markers (bucket layout, z-order) land
     //    AFTER the data they describe became visible
-    tx.deferred.foreach(_())
+    tx.deferredActions.foreach(_())
     // 6. staging dirs are spent (their files moved out)
-    tx.staging.foreach(p => if (fs.exists(p)) fs.delete(p, true))
+    tx.stagingDirs.foreach(p => if (fs.exists(p)) fs.delete(p, true))
   }
 
   /** Retained commit epochs, oldest first ([[vacuumEpochs]] prunes all

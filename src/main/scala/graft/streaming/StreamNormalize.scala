@@ -117,7 +117,8 @@ object StreamNormalize {
   }
 
   /** K8: one microbatch → full save_tweets normalization → idempotent
-    * multi-table upsert in FK-safe order. The batch is scanned once, by
+    * multi-table upsert through [[graft.ingest.TweetSink]] (one commit
+    * on a governed store). The batch is scanned once, by
     * the normalize pin; a batch of keepalives only pins no rows and
     * writes nothing.
     */
