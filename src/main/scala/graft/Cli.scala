@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 import graft.ingest.Archive
-import graft.store.{Fts, Lsh, SqliteCompat, TableStore, VectorIndex}
+import graft.store.{FileManifest, Fts, Lsh, SqliteCompat, TableStore, VectorIndex}
 
 /** Thin command surface mirroring the reference CLI's offline
   * commands (the network-bound commands — user-timeline, search,
@@ -473,7 +473,7 @@ object Cli {
         // refresh-stats <store> <table> — build/refresh the per-file
         // min/max manifest (distributed footer read); prune-files and
         // readPruned then answer with zero footer I/O
-        store.refreshFileStats(args(2))
+        FileManifest.build(store, args(2))
         println(s"[refresh-stats] ${args(2)}: manifest covers " +
           s"${store.dataFiles(args(2)).size} files")
       case "prune-files" =>
@@ -485,7 +485,7 @@ object Cli {
           (c, lo.toLong, hi.toLong)
         }
         val total = store.dataFiles(args(2)).size
-        val kept = store.pruneFiles(args(2), preds).size
+        val kept = FileManifest.pruneFiles(store, args(2), preds).size
         println(s"[prune-files] ${args(2)}: $kept of $total files " +
           s"overlap ${args(3)}")
       case "compact" =>

@@ -10,18 +10,18 @@ import org.apache.spark.sql.SparkSession
   * The --stats mode prints the MANIFEST-driven cardinality estimate
   * for a (optionally range-predicated) scan — file counts and row
   * totals answered from `_graft_stats` presence rows with zero data
-  * I/O (TableStore.estimateRows; the reference's A3 progress
+  * I/O (FileManifest.estimateRows; the reference's A3 progress
   * estimate promoted to the query layer).
   */
 object Explain {
 
   /** The --stats report, separated from main for spec coverage. One
-    * manifest pass (TableStore.statsSummary), zero data I/O.
+    * manifest pass (FileManifest.statsSummary), zero data I/O.
     */
   def statsReport(
       store: graft.store.TableStore, table: String,
       preds: Seq[(String, Long, Long)]): String =
-    store.statsSummary(table, preds) match {
+    graft.store.FileManifest.statsSummary(store, table, preds) match {
       case None =>
         s"$table: no stats manifest with row counts — run refresh-stats " +
           "to (re)build it"

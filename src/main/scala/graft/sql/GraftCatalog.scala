@@ -16,7 +16,7 @@ import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.store.TableStore
+import graft.store.{FileManifest, TableStore}
 
 /** Governed tables as a FIRST-CLASS SQL catalog — DataSource V2
   * `TableCatalog`, so the store joins `spark.sql` by name:
@@ -706,8 +706,8 @@ private[sql] class GraftMetaTable(root: String, base: String, meta: String)
           .toDF("epoch", "committed_at", "op", "n_files")
       case "files" =>
         // manifest-backed when the table opted into footer-free pruning
-        // (refreshFileStats); plain live file list otherwise
-        s.fileStatsTable(base).getOrElse(s.dataFiles(base).toDF("file"))
+        // (FileManifest.build); plain live file list otherwise
+        FileManifest.table(s, base).getOrElse(s.dataFiles(base).toDF("file"))
       case "tags" =>
         // dead_members: tables the pinned commit names that are no
         // longer live (the PURGE-survivor state Doctor's

@@ -10,7 +10,7 @@ import org.apache.spark.sql.connector.read.{LocalScan, Scan}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.store.{Doctor, Retract, TableStore}
+import graft.store.{Doctor, FileManifest, Retract, TableStore}
 
 /** The store's MAINTENANCE verbs as SQL stored procedures — the
   * Iceberg `CALL catalog.system.…` pattern, on Spark 4's DSv2
@@ -174,7 +174,7 @@ private[sql] object GraftProcedures {
         StructField("files", LongType))),
       (s, args) => {
         val t = args.getUTF8String(0).toString
-        s.refreshFileStats(t)
+        FileManifest.build(s, t)
         Seq(row(utf8(t), s.dataFiles(t).size.toLong))
       },
       "rebuild the footer-free column-envelope manifest used for " +

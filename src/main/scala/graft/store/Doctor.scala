@@ -110,7 +110,7 @@ object Doctor {
       store.zorderLayoutOf(t).foreach { case (zCols, bits) =>
         issues ++= zordered(store, t, zCols, bits)
       }
-      if (store.hasFileStats(t)) issues ++= fileStatsFresh(store, t)
+      if (FileManifest.exists(store, t)) issues ++= fileStatsFresh(store, t)
       issues ++= declaredSchema(store, t)
     }
     // epoch-governed tables: every committed file must exist on disk —
@@ -489,12 +489,8 @@ object Doctor {
 
   private def fileStatsFresh(store: TableStore, table: String): Seq[Issue] = {
     val out = Seq.newBuilder[Issue]
-    val listed = store.dataFiles(table).toSet
-    val known = store.fileStatsTable(table).get
-      .filter(col("col") === "").select(col("file"))
-      .collect().map(_.getString(0)).toSet
-    val untracked = listed -- known
-    val gone = known -- listed
+    val (untracked, gone) =
+      FileManifest.drift(store, table, FileManifest.presence(store, table))
     if (untracked.nonEmpty || gone.nonEmpty)
       out += Issue("file-stats", table,
         s"manifest out of date: ${untracked.size} data files untracked " +

@@ -119,18 +119,14 @@ object Fts {
     * computed expression (see indexRows). The index-lambda `filter`
     * keeps this [size] for an empty token array, where a
     * `sequence(0, -1)` would instead yield the descending [0, -1].
-    *
-    * The predicate relies on `Or` short-circuiting: at i = 0 the left
-    * side is true, so `element_at(pairs, 0)` — an invalid index that
-    * throws INVALID_ARRAY_INDEX under ANSI — is never evaluated. An
-    * expression rewrite that reorders the disjuncts or evaluates both
-    * sides eagerly would break every non-empty document.
+    * The 0-based `get` gives null out of range, so the previous pair
+    * of i = 0 is null and never an index error.
     */
   private def runBounds(pairs: Column): Column =
     concat(
       filter(transform(pairs, (_, i) => i),
         i => (i === lit(0)) ||
-          (element_at(pairs, i + 1)("token") =!= element_at(pairs, i)("token"))),
+          (get(pairs, i)("token") =!= get(pairs, i - 1)("token"))),
       array(size(pairs)))
 
   /** All (token, positions) entries of the sorted pair array: one
@@ -423,7 +419,7 @@ object Fts {
 
   /** Opt `table`'s postings into FILE-level term skipping: build the
     * `_graft_stats` manifest (token envelopes encoded via
-    * [[TableStore.stringStatKey]]) over the index once; every later
+    * [[FileManifest.stringStatKey]]) over the index once; every later
     * [[upsertWithIndex]] batch keeps it fresh at O(replaced files),
     * and every MATCH query prunes its file list through it — the
     * listing-level analog of the in-file row-group skipping the
@@ -432,7 +428,7 @@ object Fts {
     * footers.
     */
   def enableFileSkipping(store: TableStore, table: String): Unit =
-    store.refreshFileStats(indexName(table))
+    FileManifest.build(store, indexName(table))
 
   /** Delete rows AND their postings — the ghost-free path a dedup
     * pass or retention delete takes on an FTS-indexed table (the
@@ -1277,16 +1273,16 @@ object Fts {
   }
 
   /** Encoded `[lo, hi]` token ranges the query's terms probe — one
-    * point range per exact token ([[TableStore.stringStatKey]]), one
+    * point range per exact token ([[FileManifest.stringStatKey]]), one
     * closed range per prefix term. Every Term variant contributes (a
     * NOT branch's postings are read too — the anti-join needs them),
     * so the union of ranges covers every token `evalPks` can touch.
     */
   private def termProbes(node: Node): Seq[(Long, Long)] = {
     def point(t: String) =
-      (TableStore.stringStatKey(t), TableStore.stringStatKey(t))
+      (FileManifest.stringStatKey(t), FileManifest.stringStatKey(t))
     def prefix(p: String) =
-      (TableStore.stringStatKey(p), TableStore.stringStatKeyUpper(p))
+      (FileManifest.stringStatKey(p), FileManifest.stringStatKeyUpper(p))
     def ofTerm(t: Term): Seq[(Long, Long)] = t match {
       case Plain(w)       => Seq(point(w))
       case PrefixTerm(p)  => Seq(prefix(p))
@@ -1311,9 +1307,9 @@ object Fts {
     * some query-term range — file-level skipping on top of the
     * row-group pruning the per-file token sort already provides, so
     * a selective term on a 4096-bucket postings layout opens a
-    * handful of footers instead of all 4096 (the store's
-    * `_graft_stats` machinery, same rows as z-order pruning; string
-    * envelopes ride [[TableStore.stringStatKey]]'s order-preserving
+    * handful of footers instead of all 4096 ([[FileManifest]], same
+    * rows as z-order pruning; string envelopes ride
+    * [[FileManifest.stringStatKey]]'s order-preserving
     * prefix encoding — conservative, never a false skip). Indexes
     * without a manifest (or whose manifest predates string stats)
     * read everything, exactly as before.
@@ -1321,32 +1317,13 @@ object Fts {
   private def prunedIndex(
       store: TableStore, table: String, node: Node): DataFrame = {
     val name = indexName(table)
-    if (!store.hasFileStats(name)) return store.read(name)
     val probes = termProbes(node)
-    if (probes.isEmpty) return store.read(name)
-    val env = store.fileEnvelopes(name, Seq("token"))
-    // SEARCH-path staleness guard for an UN-governed index (a governed
-    // one gets this from the store's manifest guard, which re-syncs on
-    // presence mismatch): the manifest refresh is a separate step
-    // after the postings overwrite, so a crash between them leaves
-    // envelopes describing the PREVIOUS batch's files — pruning on
-    // them would silently skip live postings (false negatives) or
-    // open files the overwrite removed. When the epoch marker
-    // disagrees with the stats row (the torn-write signal the upsert
-    // path already honors) or the write-ahead pending flag shows a
-    // mutation ran without its refresh, prune NOTHING: slower once,
-    // never wrong; the next refresh heals it. Both probes are O(1) —
-    // no directory listing re-enters the prune path.
-    if (!store.governed.contains(name) && (!store.statsManifestFresh(name)
-        || !epochsAgree(store, table)))
-      return store.read(name)
-    val keep = env.collect {
-      case (f, e) if probes.exists { case (lo, hi) =>
-        e.get("token").forall { case (mn, mx) => mx >= lo && mn <= hi }
-      } => f
-    }
-    if (keep.size == env.size) store.read(name)
-    else store.readFileSubset(name, keep)
+    if (probes.isEmpty) store.read(name)
+    // an un-governed index whose epoch marker disagrees with the stats
+    // row (the torn-write signal the upsert path already honors) is
+    // read whole, like one whose pending flag is set
+    else FileManifest.readKept(store, name, Seq("token"), epochsAgree(store, table))(e =>
+      probes.exists { case (lo, hi) => FileManifest.overlaps(e, "token", lo, hi) })
   }
 
   /** Column filters referenced by the query tree. */

@@ -227,7 +227,7 @@ object Retract {
     * ([[TableStore.inOneEpoch]]) — readers see the delete everywhere
     * or nowhere. In any MIXED or un-governed configuration (the common
     * one: governed base, swap-maintained in-place indexes — see
-    * TableStore.markStatsPending) the BASE delete lands FIRST (its own
+    * FileManifest.markPending) the BASE delete lands FIRST (its own
     * single-table commit where governed), index retractions after: a
     * crash mid-cascade then leaves only GHOST index rows (pks absent
     * from the base), which [[healGhosts]] self-repairs. A transaction

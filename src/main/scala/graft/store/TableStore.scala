@@ -20,9 +20,9 @@ class TableStore(val spark: SparkSession, val root: String) {
 
   import TableStore.{OpCompact, OpGovern, OpOverwrite, OpUnknown, OpUpsert, RewriteOps}
 
-  private def path(name: String) = s"$root/$name"
+  private[store] def path(name: String) = s"$root/$name"
 
-  private def fs = new Path(root).getFileSystem(
+  private[store] def fs = new Path(root).getFileSystem(
     spark.sparkContext.hadoopConfiguration)
 
   /** For governed tables existence is a COMMIT-LOG question, not a
@@ -34,7 +34,7 @@ class TableStore(val spark: SparkSession, val root: String) {
     * the same resolution order read()/dataFiles() use.
     */
   def exists(name: String): Boolean =
-    if (isGoverned(name) || activeTx.exists(_.staged(name)))
+    if (isGoverned(name) || stagedInTx(name))
       liveRefs(name).nonEmpty
     else fs.exists(new Path(path(name)))
 
@@ -116,7 +116,7 @@ class TableStore(val spark: SparkSession, val root: String) {
     // skipping stays skippable and a declared surface (SQL
     // CREATE/ALTER) survives every whole-table rewrite (overwrite,
     // compact, schema evolution)
-    val hadStats = hasFileStats(name)
+    val hadStats = FileManifest.exists(this, name)
     val declared = declaredSchemaOf(name)
     val dropped = droppedColumnsOf(name)
     val renamed = renamedColumnsOf(name)
@@ -140,7 +140,7 @@ class TableStore(val spark: SparkSession, val root: String) {
     if (!fs.rename(tmp, dst))
       throw new java.io.IOException(
         s"rename $tmp -> $dst failed; data is preserved at $tmp")
-    if (hadStats) refreshFileStats(name)
+    if (hadStats) FileManifest.refresh(this, name)
   }
 
   /** Replace a table wholesale. `partitionBy` lays the table out as a
@@ -170,7 +170,7 @@ class TableStore(val spark: SparkSession, val root: String) {
       op: String = OpUpsert): Unit = {
     require(partitionBy.nonEmpty, "overwritePartitions needs partition columns")
     if (isGoverned(name)) { withTxWrite(tx => stagePartitions(tx, name, df, partitionBy, op)); return }
-    markStatsPending(name)
+    FileManifest.markPending(this, name)
     df.write.mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partitionBy: _*)
@@ -384,7 +384,7 @@ class TableStore(val spark: SparkSession, val root: String) {
       }
       return
     }
-    markStatsPending(name)
+    FileManifest.markPending(this, name)
     val dst = new Path(path(name) + s"/$partCol=$value")
     if (fs.exists(dst)) fs.delete(dst, true)
   }
@@ -565,7 +565,7 @@ class TableStore(val spark: SparkSession, val root: String) {
       keys.filterNot(out).foreach(dropPartition(name, partCol, _))
       out
     }
-    if (!isGoverned(name) && hasFileStats(name)) refreshFileStatsIncremental(name)
+    if (!isGoverned(name) && FileManifest.exists(this, name)) FileManifest.refresh(this, name)
     survivors
   }
 
@@ -598,34 +598,35 @@ class TableStore(val spark: SparkSession, val root: String) {
   /** Partition column carrying the pk-hash bucket of each row. */
   val BucketCol = "pk_bucket"
 
-  private def layoutPath(name: String) = new Path(path(name), "_graft_layout")
+  private val LayoutMarker = "_graft_layout"
+  private val ZorderMarker = "_graft_zorder"
 
-  /** The declared (buckets, pk columns) of a bucketed table, if any. */
-  def bucketLayoutOf(name: String): Option[(Int, Seq[String])] = {
-    val p = layoutPath(name)
+  /** The `key=value` lines of marker `file` in `name`'s dir, if present. */
+  private def readMarker(name: String, file: String): Option[Map[String, String]] = {
+    val p = new Path(path(name), file)
     if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try {
-        val kv = scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          .linesIterator.map(_.split("=", 2))
-          .collect { case Array(k, v) => k -> v }.toMap
-        Some((kv("buckets").toInt, kv("pk").split(",").toSeq))
-      } finally in.close()
-    }
+    else Some(readSmall(p).linesIterator.map(_.split("=", 2))
+      .collect { case Array(k, v) => k -> v }.toMap)
   }
 
+  /** Write marker `file` of `name` as `key=value` lines. Inside a
+    * transaction that staged this table, the marker must not land
+    * AHEAD of the data it describes: a crash before the pointer flip
+    * would leave e.g. a bucketed declaration over flat live files, and
+    * the next upsert would fail on the missing partition column — so
+    * it defers to the commit (runs after the flip, same crash atom).
+    */
+  private def writeMarker(name: String, file: String, kv: (String, String)*): Unit =
+    deferInTx(name, () => writeSmall(new Path(path(name), file),
+      kv.map { case (k, v) => s"$k=$v\n" }.mkString))
+
+  /** The declared (buckets, pk columns) of a bucketed table, if any. */
+  def bucketLayoutOf(name: String): Option[(Int, Seq[String])] =
+    readMarker(name, LayoutMarker).map(kv =>
+      (kv("buckets").toInt, kv("pk").split(",").toSeq))
+
   private def writeBucketLayout(name: String, buckets: Int, pk: Seq[String]): Unit =
-    // inside a transaction that staged this table, the marker must not
-    // land AHEAD of the data it describes: a crash before the pointer
-    // flip would leave a bucketed declaration over flat live files and
-    // the next upsert would fail on the missing partition column.
-    // Defer to the commit (runs after the flip, same crash atom).
-    deferInTx(name, () => {
-      val out = fs.create(layoutPath(name), true)
-      try out.write(s"buckets=$buckets\npk=${pk.mkString(",")}\n".getBytes("UTF-8"))
-      finally out.close()
-    })
+    writeMarker(name, LayoutMarker, "buckets" -> buckets.toString, "pk" -> pk.mkString(","))
 
   /** The bucket `cols` hash into — THE bucket-layout rule of every
     * pk-bucketed artifact (base tables, FTS/trigram postings, LSH
@@ -856,7 +857,7 @@ class TableStore(val spark: SparkSession, val root: String) {
 
   /** Absolute paths of the table's parquet part files (layout
     * inspection: compaction specs, per-file min/max locality checks).
-    * Shares fileStats' skip rules via the same bookkeeping filter.
+    * Shares fileStats' skip rules through [[walkFiles]].
     */
   def dataFiles(name: String): Seq[String] = {
     // governed tables answer from the commit manifest: the live set,
@@ -866,16 +867,21 @@ class TableStore(val spark: SparkSession, val root: String) {
       return liveRefs(name).map(fr =>
         fs.makeQualified(new Path(fr.base, fr.rel)).toString)
     TableStore.driverListings.incrementAndGet()
-    def walk(p: Path): Seq[String] =
-      fs.listStatus(p).toSeq.flatMap { st =>
-        val base = st.getPath.getName
-        if (base.startsWith("_") || base.startsWith(".")) Nil
-        else if (st.isDirectory) walk(st.getPath)
-        else if (base.endsWith(".parquet")) Seq(st.getPath.toString)
-        else Nil
-      }
-    walk(new Path(path(name)))
+    walkFiles(new Path(path(name))).map(_.getPath)
+      .collect { case p if p.getName.endsWith(".parquet") => p.toString }
   }
+
+  /** Every file under `dir`, recursively, minus bookkeeping: a name
+    * starting with `_` or `.` (layout markers, the stats manifest,
+    * `_SUCCESS`, checksums) is skipped, file or directory alike.
+    */
+  private def walkFiles(dir: Path): Seq[FileStatus] =
+    fs.listStatus(dir).toSeq.flatMap { st =>
+      val base = st.getPath.getName
+      if (base.startsWith("_") || base.startsWith(".")) Nil
+      else if (st.isDirectory) walkFiles(st.getPath)
+      else Seq(st)
+    }
 
   /** Data-file count and total bytes of a table directory (recursive,
     * skipping `_SUCCESS`/hidden bookkeeping files) — the fragmentation
@@ -895,15 +901,8 @@ class TableStore(val spark: SparkSession, val root: String) {
         }
       return (sts.size.toLong, sts.map(_.getLen).sum)
     }
-    def walk(p: Path): (Long, Long) =
-      fs.listStatus(p).foldLeft((0L, 0L)) { case ((n, b), st) =>
-        val base = st.getPath.getName
-        if (base.startsWith("_") || base.startsWith(".")) (n, b)
-        else if (st.isDirectory) {
-          val (dn, db) = walk(st.getPath); (n + dn, b + db)
-        } else (n + 1, b + st.getLen)
-      }
-    walk(new Path(path(name)))
+    val sts = walkFiles(new Path(path(name)))
+    (sts.size.toLong, sts.map(_.getLen).sum)
   }
 
   /** The Hive partition column chain of a table's directory layout
@@ -935,31 +934,6 @@ class TableStore(val spark: SparkSession, val root: String) {
     loop(new Path(path(name)), Vector.empty)
   }
 
-  /** Compact a fragmented table in place (swap-safe): the incremental
-    * maintenance paths (dynamic-partition FTS postings, IVF cells,
-    * upsert-rewritten base tables) accrete one file per batch per
-    * partition, and at 100 TB the resulting small-files listing +
-    * open-per-file overhead dominates scan time long before data
-    * volume does. This is the OPTIMIZE/bin-packing half of a lakehouse
-    * maintenance story (the other half, MERGE, is the documented
-    * Upsert seam).
-    *
-    *  - Partitioned tables rewrite through an AQE REBALANCE on the
-    *    partition columns: small partitions coalesce into shared
-    *    tasks, a skewed hot partition splits across several — neither
-    *    a million tiny files nor one unwritable giant.
-    *  - Flat tables repartition to ceil(bytes / targetBytes) output
-    *    files.
-    *  - `sortBy` additionally sort-clusters rows WITHIN each output
-    *    file (after the partition columns), so parquet row-group
-    *    min/max stats become selective for predicates on those
-    *    columns — the poor man's Z-order, and the right call for a
-    *    pk-ranged read pattern.
-    *
-    * Returns (filesBefore, filesAfter). The rewrite reads the live
-    * files and writes `<name>.__tmp`, then swaps — a concurrent crash
-    * leaves the original table intact.
-    */
   /** Order- and partitioning-independent content fingerprint:
     * (row count, wrapping Σ xxhash64(row)) over `cols` (default: the
     * full schema, column-name order pinned so two stores with
@@ -998,6 +972,31 @@ class TableStore(val spark: SparkSession, val root: String) {
     (n, s.mod(BigInt(2).pow(64)).toLong)
   }
 
+  /** Compact a fragmented table in place (swap-safe): the incremental
+    * maintenance paths (dynamic-partition FTS postings, IVF cells,
+    * upsert-rewritten base tables) accrete one file per batch per
+    * partition, and at 100 TB the resulting small-files listing +
+    * open-per-file overhead dominates scan time long before data
+    * volume does. This is the OPTIMIZE/bin-packing half of a lakehouse
+    * maintenance story (the other half, MERGE, is the documented
+    * Upsert seam).
+    *
+    *  - Partitioned tables rewrite through an AQE REBALANCE on the
+    *    partition columns: small partitions coalesce into shared
+    *    tasks, a skewed hot partition splits across several — neither
+    *    a million tiny files nor one unwritable giant.
+    *  - Flat tables repartition to ceil(bytes / targetBytes) output
+    *    files.
+    *  - `sortBy` additionally sort-clusters rows WITHIN each output
+    *    file (after the partition columns), so parquet row-group
+    *    min/max stats become selective for predicates on those
+    *    columns — the poor man's Z-order, and the right call for a
+    *    pk-ranged read pattern.
+    *
+    * Returns (filesBefore, filesAfter). The rewrite reads the live
+    * files and writes `<name>.__tmp`, then swaps — a concurrent crash
+    * leaves the original table intact.
+    */
   def compact(
       name: String,
       sortBy: Seq[String] = Nil,
@@ -1005,10 +1004,6 @@ class TableStore(val spark: SparkSession, val root: String) {
     require(exists(name), s"no such table: $name")
     val (nBefore, bytes) = fileStats(name)
     val partCols = partitionColumnsOf(name)
-    // the swap replaces the whole directory, marker included — carry
-    // the bucket layout across or the next upsert silently falls back
-    // to the O(table) rewrite
-    val layout = bucketLayoutOf(name)
     val df = read(name)
     import org.apache.spark.sql.functions.col
     val shaped =
@@ -1018,11 +1013,21 @@ class TableStore(val spark: SparkSession, val root: String) {
     val sorted =
       if (sortBy.isEmpty) shaped
       else shaped.sortWithinPartitions((partCols ++ sortBy).map(col): _*)
-    writeSwapped(name, sorted, partCols, op = OpCompact)
+    swapCompacted(name, sorted, partCols)
+    (nBefore, fileStats(name)._1)
+  }
+
+  /** The swap of [[compact]] and [[compactZorder]]. It replaces the
+    * whole directory, marker included — the bucket layout is carried
+    * across (while the rewrite keeps the bucket partitioning), or the
+    * next upsert would silently fall back to the O(table) rewrite.
+    */
+  private def swapCompacted(name: String, df: DataFrame, partCols: Seq[String]): Unit = {
+    val layout = bucketLayoutOf(name)
+    writeSwapped(name, df, partCols, op = OpCompact)
     layout.foreach { case (n, pk) =>
       if (partCols.contains(BucketCol)) writeBucketLayout(name, n, pk)
     }
-    (nBefore, fileStats(name)._1)
   }
 
   /** Z-ORDER compaction (the Delta/Iceberg `OPTIMIZE ZORDER BY`
@@ -1075,9 +1080,6 @@ class TableStore(val spark: SparkSession, val root: String) {
       s"z-order columns ${zCols.mkString(",")} must lie in [0, 2^$bits): " +
         s"found [${bounds.get(0)}, ${bounds.get(1)}] — pre-bucket them " +
         "(rank, hash, or min/max scale)")
-    // writeSwapped destroys the in-dir markers; carry the bucket
-    // layout across like compact does
-    val layout = bucketLayoutOf(name)
     val zkey = graft.functions.ZOrder.zorderKey(zCols.map(col), bits)
     val nFiles = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
     val shaped = read(name)
@@ -1085,10 +1087,7 @@ class TableStore(val spark: SparkSession, val root: String) {
       .repartitionByRange(nFiles, partCols.map(col) :+ col("__zkey"): _*)
       .sortWithinPartitions(partCols.map(col) :+ col("__zkey"): _*)
       .drop("__zkey")
-    writeSwapped(name, shaped, partCols, op = OpCompact)
-    layout.foreach { case (n, pk) =>
-      if (partCols.contains(BucketCol)) writeBucketLayout(name, n, pk)
-    }
+    swapCompacted(name, shaped, partCols)
     // declare the clustering (the _graft_layout convention) so the
     // prune path and Doctor know which columns the files localize on;
     // any later whole-table rewrite deletes the marker with the dir —
@@ -1098,430 +1097,17 @@ class TableStore(val spark: SparkSession, val root: String) {
     // z-order's read dividend is file skipping, and footer-free
     // skipping needs the manifest — create it here (writeSwapped
     // already refreshed it if the table had one before the rewrite)
-    if (!hasFileStats(name)) refreshFileStats(name)
+    if (!FileManifest.exists(this, name)) FileManifest.build(this, name)
     (nBefore, fileStats(name)._1)
   }
 
   private def writeZorderMarker(name: String, zCols: Seq[String], bits: Int): Unit =
-    // same marker-behind-data discipline as writeBucketLayout
-    deferInTx(name, () => {
-      val out = fs.create(new Path(path(name), "_graft_zorder"), true)
-      try out.write(s"zcols=${zCols.mkString(",")}\nbits=$bits\n".getBytes("UTF-8"))
-      finally out.close()
-    })
+    writeMarker(name, ZorderMarker, "zcols" -> zCols.mkString(","), "bits" -> bits.toString)
 
   /** The declared (zCols, bits) of a z-order-compacted table, if any. */
-  def zorderLayoutOf(name: String): Option[(Seq[String], Int)] = {
-    val p = new Path(path(name), "_graft_zorder")
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try {
-        val kv = scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          .linesIterator.map(_.split("=", 2))
-          .collect { case Array(k, v) => k -> v }.toMap
-        Some((kv("zcols").split(",").toSeq, kv("bits").toInt))
-      } finally in.close()
-    }
-  }
-
-  // -------------------------------------------------------------------
-  // Persisted file-stats manifest — the Delta/Iceberg data-skipping
-  // analog. Walking every parquet footer on the driver per pruneFiles
-  // call is fine at sf0.1 (dozens of files) and fatal at 100 TB
-  // (10^5-10^6 files × an open+read each = minutes of single-threaded
-  // I/O per query). Instead, per-file (col, min, max) rows are
-  // PERSISTED in a `_graft_stats` parquet dir inside the table
-  // directory (underscore-prefixed: invisible to data scans, same
-  // convention as `_graft_layout`), built by a DISTRIBUTED footer read
-  // and maintained AT WRITE TIME: every whole-table rewrite rebuilds
-  // it (writeSwapped), a bucketed merge replaces only the touched
-  // buckets' rows (mergeBucketed), and compactZorder creates it — the
-  // reference analog is the FTS index discipline (maintained at write,
-  // utils.py:330-352), never rebuilt at read. Readers fall back to a
-  // driver footer walk only for files the manifest doesn't know
-  // (out-of-band additions), so stale is slower, never wrong.
-
-  /** Relative file paths keep the manifest valid across a table (or
-    * store) move; presence rows (col = "") let readers tell "file has
-    * no stats" from "file unknown to the manifest".
-    */
-  private def statsPath(name: String) = new Path(path(name), "_graft_stats")
-
-  /** Whether `name` maintains a persisted file-stats manifest. */
-  def hasFileStats(name: String): Boolean = fs.exists(statsPath(name))
-
-  private def qualifiedDir(name: String): String =
-    fs.makeQualified(new Path(path(name))).toString
-
-  /** Top-level integral and string columns — the types whose footer
-    * min/max the Long envelope model covers (integrals numerically;
-    * strings via [[TableStore.stringStatKey]]'s order-preserving
-    * 8-byte-prefix encoding, the seam that lets an FTS term probe
-    * prune postings FILES through the same manifest).
-    */
-  private def statCols(name: String): Seq[String] = {
-    import org.apache.spark.sql.types._
-    read(name).schema.fields.collect {
-      case f if Seq[DataType](ByteType, ShortType, IntegerType, LongType,
-        StringType).contains(f.dataType) => f.name
-    }.toSeq
-  }
-
-  /** Footer min/max rows for `files`, read DISTRIBUTED — one Spark
-    * task per slice of the file list, so a 10^6-file manifest build is
-    * a cluster job, not a driver loop. Emits one presence row plus one
-    * row per column with stats, file paths relativized to `base`. The
-    * presence row's `mn` carries the file's ROW COUNT (footer total),
-    * which is what [[estimateRows]] sums for manifest-driven
-    * cardinality estimates; its `mx` stays 0.
-    */
-  private def footerStatsDf(
-      files: Seq[String], cols: Seq[String], base: String): DataFrame = {
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(new org.apache.spark.SerializableWritable(
-      spark.sparkContext.hadoopConfiguration))
-    val par = math.max(1,
-      math.min(files.size, spark.sparkContext.defaultParallelism))
-    val prefix = base + "/"
-    spark.createDataset(files).repartition(par)
-      .mapPartitions { it =>
-        val conf = bc.value.value
-        it.flatMap { f =>
-          val rel = f.stripPrefix(prefix)
-          val (nRows, env) = TableStore.footerEnvelope(f, conf, cols)
-          (rel, "", nRows, 0L) +: env.map { case (c, mn, mx) => (rel, c, mn, mx) }
-        }
-      }.toDF("file", "col", "mn", "mx")
-  }
-
-  /** Format marker row (file = "", col = this): present iff the
-    * manifest's presence rows carry footer ROW COUNTS in `mn` —
-    * manifests written before that change carried zeros there, and
-    * [[estimateRows]] must refuse them rather than report 0 rows for
-    * a populated table.
-    */
-  private val StatsRowsMarker = "__rows_v2"
-
-  /** An empty (marker-only) stats frame, for tables whose live set is
-    * empty — footerStatsDf over no files can't run (statCols needs a
-    * readable schema).
-    */
-  private def emptyStatsFrame: DataFrame = {
-    import spark.implicits._
-    Seq.empty[(String, String, Long, Long)].toDF("file", "col", "mn", "mx")
-  }
-
-  /** Whether the persisted manifest's presence rows carry row counts
-    * (the __rows_v2 format) — incremental merges must not graft
-    * counted rows onto a zero-count legacy manifest.
-    */
-  private def manifestHasRowCounts(name: String): Boolean =
-    hasFileStats(name) && !spark.read.parquet(statsPath(name).toString)
-      .filter(org.apache.spark.sql.functions.col("col") === StatsRowsMarker)
-      .isEmpty
-
-  private def writeStatsManifest(name: String, stats: DataFrame): Unit = {
-    val tmp = new Path(path(name), "_graft_stats.__tmp")
-    val dst = statsPath(name)
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    import spark.implicits._
-    val stamped = stats
-      .filter(org.apache.spark.sql.functions.col("col") =!= StatsRowsMarker)
-      .unionByName(Seq(("", StatsRowsMarker, 0L, 0L)).toDF("file", "col", "mn", "mx"))
-    // tmp is written BEFORE dst is deleted, so an incremental update
-    // that lazily reads the old manifest executes against live files
-    stamped.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    if (fs.exists(dst)) fs.delete(dst, true)
-    if (!fs.rename(tmp, dst))
-      throw new java.io.IOException(s"rename $tmp -> $dst failed")
-    clearStatsPending(name)
-  }
-
-  private def statsPendingPath(name: String) =
-    new Path(path(name), "_graft_stats_pending")
-
-  /** WRITE-AHEAD dirt marker for the skipping manifest of an
-    * UN-governed, in-place-maintained table (FTS/trigram/IVF
-    * postings): every dynamic-partition overwrite / partition drop
-    * sets it BEFORE mutating files, [[writeStatsManifest]] clears it
-    * after the refresh — so a crash in the window between them leaves
-    * the flag on disk, and a manifest-driven prune can detect the
-    * stale envelopes with ONE existence probe instead of the O(files)
-    * directory listing the prune path exists to avoid. Governed
-    * tables don't need it (their manifest guard re-syncs against the
-    * commit's live set).
-    */
-  private[store] def markStatsPending(name: String): Unit =
-    if (hasFileStats(name)) writeSmall(statsPendingPath(name), "")
-
-  private def clearStatsPending(name: String): Unit = {
-    val p = statsPendingPath(name)
-    if (fs.exists(p)) fs.delete(p, false)
-  }
-
-  /** False while an in-place mutation has run without its manifest
-    * refresh — the search-path staleness probe (O(1)).
-    */
-  private[store] def statsManifestFresh(name: String): Boolean =
-    !fs.exists(statsPendingPath(name))
-
-  /** (Re)build the persisted manifest for `name` from its current
-    * files — a distributed footer read. Call once (or via
-    * `compactZorder` / the refresh-stats CLI) to opt a table into
-    * footer-free pruning; every write path keeps it fresh thereafter.
-    */
-  def refreshFileStats(name: String): Unit =
-    if (activeTx.exists(_.staged(name))) () // deferred to commit
-    else {
-      val files = dataFiles(name)
-      // zero data files (e.g. a governed table whose live set was
-      // emptied): statCols would read() and throw — a marker-only
-      // manifest is the correct description of "no files"
-      if (files.isEmpty) writeStatsManifest(name, emptyStatsFrame)
-      else writeStatsManifest(name,
-        footerStatsDf(files, statCols(name), qualifiedDir(name)))
-    }
-
-  /** O(changed files) manifest refresh for UN-governed tables
-    * maintained by dynamic partition overwrite (FTS/trigram/IVF
-    * postings): rows for files still on disk carry over, only files
-    * that appeared since the last refresh are footer-read, rows for
-    * gone files drop. (Governed tables get exactly this from the
-    * commit itself — step 4 of commitTx; this is the same contract
-    * for the in-place path, where a full [[refreshFileStats]] per
-    * batch would re-open every footer of a 10^6-file index.) Falls
-    * back to the full build when no usable manifest exists.
-    */
-  def refreshFileStatsIncremental(name: String): Unit =
-    if (activeTx.exists(_.staged(name))) () // deferred to commit
-    else if (!hasFileStats(name) || !manifestHasRowCounts(name))
-      refreshFileStats(name)
-    else {
-      val live = dataFiles(name)
-      if (live.isEmpty) { writeStatsManifest(name, emptyStatsFrame); return }
-      val dir = qualifiedDir(name) + "/"
-      val liveRel = live.map(_.stripPrefix(dir)).toSet
-      import org.apache.spark.sql.functions.col
-      val prior = spark.read.parquet(statsPath(name).toString)
-        .filter(col("col") =!= StatsRowsMarker)
-      val priorRel = prior.filter(col("col") === "")
-        .select("file").collect().map(_.getString(0)).toSet
-      val fresh = live.filterNot(f => priorRel(f.stripPrefix(dir)))
-      // materialize the carried rows: writeStatsManifest deletes the
-      // old manifest AFTER writing the tmp, but keep the plan simple
-      val kept = prior.filter(col("file")
-        .isInCollection(liveRel.intersect(priorRel)))
-      if (fresh.isEmpty && priorRel == liveRel)
-        clearStatsPending(name) // already exact — the refresh ran
-      else writeStatsManifest(name, kept.unionByName(
-        footerStatsDf(fresh, statCols(name), qualifiedDir(name))))
-    }
-
-  /** The maintained manifest as a DataFrame of (file, col, mn, mx)
-    * with ABSOLUTE file paths (presence rows carry col = ""), or None
-    * for a table that never opted in.
-    */
-  def fileStatsTable(name: String): Option[DataFrame] =
-    if (!hasFileStats(name)) None
-    else {
-      import org.apache.spark.sql.functions.{col, concat, lit}
-      Some(spark.read.parquet(statsPath(name).toString)
-        .withColumn("file", concat(lit(qualifiedDir(name) + "/"), col("file"))))
-    }
-
-  /** Per-file [min, max] envelopes of integral columns. For a table
-    * that maintains a `_graft_stats` manifest the ENTIRE answer —
-    * including the file list itself, from the presence rows — comes
-    * from the manifest: zero footer opens AND zero driver directory
-    * listings on the prune path (the last O(files) driver walk the
-    * round-6 audit flagged). Every write path maintains the manifest
-    * transactionally, so its presence rows ARE the live file set; an
-    * out-of-band write that bypasses the store is exactly what
-    * [[Doctor]]'s file-stats invariant detects ("run refresh-stats"),
-    * the same staleness contract Delta/Iceberg logs carry. Tables
-    * without a manifest keep the listing + driver footer walk. A
-    * column absent from a file's stats is absent from its map.
-    */
-  def fileEnvelopes(
-      name: String, cols: Seq[String]): Seq[(String, Map[String, (Long, Long)])] =
-    fileEnvelopes0(name, cols, retried = false)
-
-  /** Governed-table staleness guard for the manifest-driven read
-    * paths: a crash between a commit's pointer flip and its manifest
-    * refresh (commitTx step 4) — or an out-of-band write — leaves the
-    * manifest describing a PREVIOUS epoch's files, and a
-    * manifest-driven prune would then silently serve retired
-    * (pre-vacuum) files that disagree with read(). Presence rows must
-    * match the live set exactly; on mismatch the caller refreshes and
-    * retries once (slower once, never wrong — the same staleness
-    * contract Doctor's file-stats invariant reports). Skipped
-    * mid-transaction for a staged table: there the manifest
-    * legitimately describes the committed epoch while the pending
-    * files are not in place yet.
-    */
-  private def manifestStale(name: String, presenceAbs: Set[String]): Boolean =
-    isGoverned(name) && !activeTx.exists(_.staged(name)) &&
-      presenceAbs != dataFiles(name).toSet
-
-  /** Driver footer walk over the LIVE file set — the no-manifest
-    * path, and the fallback a pinned (or irreparably stale) reader
-    * takes instead of trusting a manifest that describes some other
-    * epoch.
-    */
-  private def footerWalkEnvelopes(
-      name: String, cols: Seq[String]): Seq[(String, Map[String, (Long, Long)])] = {
-    val files = dataFiles(name)
-    val conf = spark.sparkContext.hadoopConfiguration
-    files.map(f => (f,
-      TableStore.footerEnvelope(f, conf, cols)._2
-        .map { case (c, mn, mx) => c -> (mn, mx) }.toMap))
-  }
-
-  private def fileEnvelopes0(
-      name: String, cols: Seq[String],
-      retried: Boolean): Seq[(String, Map[String, (Long, Long)])] =
-    fileStatsTable(name) match {
-      case Some(st) =>
-        import org.apache.spark.sql.functions.col
-        // deliberate driver-side collect: (files × (1 + |cols|)) tiny
-        // rows — the same driver-resident skipping state Delta keeps
-        // when it evaluates its stats log. ~10^6 files × a few query
-        // columns is tens of MB; if tables ever outgrow that, the
-        // prune itself becomes a distributed anti-join against the
-        // manifest, not a bigger collect.
-        val rows = st.filter(col("col").isin("" +: cols: _*)).collect()
-        val presence = rows.filter(_.getString(1).isEmpty)
-          .map(_.getString(0)).toSet
-        if (manifestStale(name, presence)) {
-          if (pinnedCommit.isDefined || retried)
-            // a PINNED reader must neither trust a manifest that
-            // describes another epoch (the pin would silently leak)
-            // nor "heal" it backwards to the pinned file set
-            // (corrupting it for every un-pinned reader): walk the
-            // pinned live set's footers instead — slower, never
-            // wrong, writes nothing. Same escape if a refresh somehow
-            // failed to converge (retried).
-            footerWalkEnvelopes(name, cols)
-          else {
-            refreshFileStats(name)
-            fileEnvelopes0(name, cols, retried = true)
-          }
-        } else {
-          val env = rows.filter(_.getString(1).nonEmpty)
-            .groupBy(_.getString(0))
-            .map { case (f, rs) => f ->
-              rs.map(r => r.getString(1) -> (r.getLong(2), r.getLong(3))).toMap }
-          // presence rows carry col = "" — one per file, stats or not
-          presence.toSeq.sorted
-            .map(f => (f, env.getOrElse(f, Map.empty[String, (Long, Long)])))
-        }
-      case None => footerWalkEnvelopes(name, cols)
-    }
-
-  /** The files a stats-aware scan must open for a conjunction of
-    * closed-range predicates `col BETWEEN lo AND hi` — every file
-    * whose footer envelope overlaps ALL ranges (a file without stats
-    * for a predicate column is kept: can't prune what can't be
-    * proven). This is the READ-PATH dividend of `compactZorder`: after
-    * z-ordering on (x, y), a 2-dim box predicate keeps a small
-    * fraction of files, where plain `compact(sortBy = x)` keeps them
-    * all (ZOrderSpec measures both). At 100 TB this listing-level skip
-    * is what Delta/Iceberg data-skipping indexes do with the same
-    * stats; the engine-level analog (parquet row-group skipping via
-    * pushed filters) additionally prunes WITHIN the files kept here.
-    */
-  def pruneFiles(
-      name: String, preds: Seq[(String, Long, Long)]): Seq[String] =
-    fileEnvelopes(name, preds.map(_._1)).collect {
-      case (f, env) if preds.forall { case (c, lo, hi) =>
-        env.get(c).forall { case (mn, mx) => mx >= lo && mn <= hi }
-      } => f
-    }
-
-  /** Read only the files [[pruneFiles]] keeps for `preds` — result
-    * equals the full scan filtered to the same ranges (pruned files
-    * provably hold no matching rows). The caller still applies the
-    * row-level filter; this trims the FILE list.
-    */
-  /** Manifest-driven cardinality estimate for a pruned range scan —
-    * the reference's progress-bar estimate (A3,
-    * `/root/reference/cli.py:151-157` guesses work from count fields
-    * before fetching) promoted to the query layer: the sum of the
-    * ROW COUNTS of exactly the files [[pruneFiles]] keeps for
-    * `preds`, read from the presence rows' footer totals — zero data
-    * I/O, zero file opens on a manifest-backed table. With no
-    * predicates this is the table's total row count. The estimate is
-    * an UPPER BOUND on the rows a filtered scan returns (kept files
-    * may hold non-matching rows) and EXACT for the file-level scan
-    * (readPruned(preds).count() — a spec pins both). None when the
-    * table has no stats manifest (estimate would cost footer opens —
-    * callers fall back to counting or opt in via refreshFileStats).
-    */
-  def estimateRows(
-      name: String, preds: Seq[(String, Long, Long)] = Nil): Option[Long] =
-    statsSummary(name, preds).map(_._1)
-
-  /** One-pass form of the estimate report: (estimated rows, total
-    * rows, kept files, total files) from a SINGLE presence-row
-    * collect plus one prune — the `estimate` CLI / `Explain --stats`
-    * backend (four independent estimateRows/dataFiles calls would
-    * re-collect the manifest each time; at 10^6 files that matters).
-    * None under the same conditions as [[estimateRows]].
-    */
-  def statsSummary(name: String, preds: Seq[(String, Long, Long)])
-      : Option[(Long, Long, Int, Int)] =
-    statsSummary0(name, preds, retried = false)
-
-  private def statsSummary0(
-      name: String, preds: Seq[(String, Long, Long)],
-      retried: Boolean): Option[(Long, Long, Int, Int)] =
-    fileStatsTable(name).flatMap { st =>
-      import org.apache.spark.sql.functions.col
-      val rows = st.filter(col("col") === "" || col("col") === StatsRowsMarker)
-        .collect()
-      val presence0 = rows.filter(_.getString(1).isEmpty)
-        .map(_.getString(0)).toSet
-      // same post-crash staleness guard as the prune path: estimates
-      // must describe the live epoch, not the one before the flip. A
-      // PINNED reader gets None instead (estimate honestly
-      // unavailable for its epoch — callers fall back to counting);
-      // it must not refresh (see fileEnvelopes0) and the manifest's
-      // row counts describe a different epoch.
-      if (manifestStale(name, presence0)) {
-        if (pinnedCommit.isDefined || retried) None
-        else {
-          refreshFileStats(name)
-          statsSummary0(name, preds, retried = true)
-        }
-      } else if (!rows.exists(_.getString(1) == StatsRowsMarker)) None
-      else {
-        val presence = rows.filter(_.getString(1).isEmpty)
-        val keep = pruneFiles(name, preds).toSet
-        val kept = presence.filter(r => keep(r.getString(0)))
-        Some((kept.map(_.getLong(2)).sum, presence.map(_.getLong(2)).sum,
-          kept.length, presence.length))
-      }
-    }
-
-  def readPruned(
-      name: String, preds: Seq[(String, Long, Long)]): DataFrame =
-    readFileSubset(name, pruneFiles(name, preds))
-
-  /** Read an explicit (pre-pruned) absolute-path file subset of
-    * `name`, schema-identical to `read(name)` — the shared tail of
-    * [[readPruned]] and callers with their own prune semantics (the
-    * FTS term probe unions ranges instead of intersecting them).
-    */
-  private[store] def readFileSubset(
-      name: String, keep: Seq[String]): DataFrame =
-    if (keep.isEmpty)
-      read(name).limit(0)
-    else
-      // basePath keeps Hive partition discovery working on leaf-file
-      // reads, so a partitioned table's partition columns survive and
-      // both branches return the same schema as read(name)
-      spark.read.option("basePath", path(name)).parquet(keep: _*)
+  def zorderLayoutOf(name: String): Option[(Seq[String], Int)] =
+    readMarker(name, ZorderMarker).map(kv =>
+      (kv("zcols").split(",").toSeq, kv("bits").toInt))
 
   // -------------------------------------------------------------------
   // Epoch-pointer commit log — atomic MULTI-TABLE visibility. The
@@ -1653,6 +1239,11 @@ class TableStore(val spark: SparkSession, val root: String) {
     */
   private[store] def inTransaction: Boolean = activeTx.nonEmpty
 
+  /** Whether an open transaction staged `name` — its files on disk
+    * then still describe the committed epoch.
+    */
+  private[store] def stagedInTx(name: String): Boolean = activeTx.exists(_.staged(name))
+
   // commit + list files are IMMUTABLE once written (fresh name per
   // epoch), so caching parsed content by file name is safe across
   // writers — only the latest-pointer LISTING hits the FS per resolve.
@@ -1665,7 +1256,7 @@ class TableStore(val spark: SparkSession, val root: String) {
     val in = fs.open(p)
     try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
   }
-  private def writeSmall(p: Path, s: String): Unit = {
+  private[store] def writeSmall(p: Path, s: String): Unit = {
     val out = fs.create(p, true)
     try out.write(s.getBytes("UTF-8")) finally out.close()
   }
@@ -1795,6 +1386,9 @@ class TableStore(val spark: SparkSession, val root: String) {
   // read-side twin of activeTx: a snapshot scope pins the resolved
   // commit so every governed read inside serves ONE epoch
   private var pinnedCommit: Option[(Long, Map[String, String])] = None
+
+  /** Whether reads are pinned to a [[withSnapshot]] epoch. */
+  private[store] def pinned: Boolean = pinnedCommit.isDefined
 
   /** (epoch, table → list-file name) of the latest commit — or the
     * PINNED commit inside a [[withSnapshot]] scope, if any.
@@ -2021,7 +1615,7 @@ class TableStore(val spark: SparkSession, val root: String) {
   /** Tables whose visibility is governed by the commit pointer. */
   def governed: Set[String] = currentCommit.map(_._2.keySet).getOrElse(Set.empty)
 
-  private def isGoverned(name: String): Boolean =
+  private[store] def isGoverned(name: String): Boolean =
     fs.exists(epochDir) && currentCommit.exists(_._2.contains(name))
 
   // chain compaction bound: after this many delta links a commit
@@ -2139,21 +1733,17 @@ class TableStore(val spark: SparkSession, val root: String) {
   private def liveRefs(name: String): Seq[FileRef] =
     activeTx.flatMap(_.pendingOf(name)).getOrElse(committedRefs(name))
 
-  private def walkParquetRel(dir: Path): Seq[String] = {
-    val prefix = dir.toString + "/"
-    def walk(p: Path): Seq[String] =
-      if (!fs.exists(p)) Nil
-      else fs.listStatus(p).toSeq.flatMap { st =>
-        val base = st.getPath.getName
-        if (base.startsWith("_") || base.startsWith(".")) Nil
-        else if (st.isDirectory) walk(st.getPath)
-        else if (base.endsWith(".parquet"))
-          Seq(fs.makeQualified(st.getPath).toString
-            .stripPrefix(fs.makeQualified(dir).toString + "/").stripPrefix(prefix))
-        else Nil
+  /** Rel paths of the parquet files under `dir` (none if absent). */
+  private def walkParquetRel(dir: Path): Seq[String] =
+    if (!fs.exists(dir)) Nil
+    else {
+      val qualified = fs.makeQualified(dir).toString + "/"
+      val prefix = dir.toString + "/"
+      walkFiles(dir).map(_.getPath).collect {
+        case p if p.getName.endsWith(".parquet") =>
+          fs.makeQualified(p).toString.stripPrefix(qualified).stripPrefix(prefix)
       }
-    walk(dir)
-  }
+    }
 
   /** Opt `names` into epoch-pointer governance: their CURRENT files
     * become epoch 1 (or join the live epoch), and every later write —
@@ -2381,7 +1971,7 @@ class TableStore(val spark: SparkSession, val root: String) {
   /** Test seam: invoked right AFTER the pointer flip, before the
     * stats-manifest refresh (step 4) — the crash window that leaves a
     * manifest describing the previous epoch, which the read-path
-    * staleness guard ([[manifestStale]]) must absorb.
+    * staleness guard of [[FileManifest]] must absorb.
     */
   private[graft] var afterCommitFlip: () => Unit = () => ()
 
@@ -2433,8 +2023,8 @@ class TableStore(val spark: SparkSession, val root: String) {
     // live data with no marker — re-derived wholesale on the next
     // upsert, never wrong.
     tx.replacedTables.foreach { n =>
-      fs.delete(layoutPath(n), false)
-      fs.delete(new Path(path(n), "_graft_zorder"), false)
+      fs.delete(new Path(path(n), LayoutMarker), false)
+      fs.delete(new Path(path(n), ZorderMarker), false)
     }
     // 2. new log entries for CHANGED tables only; unchanged tables
     //    re-reference their existing immutable entry. A changed table
@@ -2514,35 +2104,9 @@ class TableStore(val spark: SparkSession, val root: String) {
     }
     afterCommitFlip()
     // 4. keep the stats manifests of changed tables fresh (the Doctor
-    //    invariant) at O(changed files): rows for files still live
-    //    carry over, only the NEWLY COMMITTED files are footer-read —
-    //    a full refreshFileStats here would re-open every file of a
-    //    10^6-file table per batch commit
+    //    invariant) at O(changed files)
     finalRels.foreach { case (n, rels) =>
-      if (hasFileStats(n)) {
-        if (rels.isEmpty)
-          // an emptied table: marker-only manifest (statCols would
-          // read() the empty live set and throw AFTER a commit that
-          // already landed — the abort contract must not lie)
-          writeStatsManifest(n, emptyStatsFrame)
-        else if (!manifestHasRowCounts(n))
-          // legacy manifest (zero-count presence rows): the
-          // incremental merge would stamp the format marker over
-          // rows that still carry zeros — a silent underestimate.
-          // Pay the one-time full footer read instead.
-          refreshFileStats(n)
-        else {
-          val live = rels.toSet
-          val prior = committedBefore.getOrElse(n, Set.empty)
-          val fresh = rels.filterNot(prior)
-          val keepOld = spark.read.parquet(statsPath(n).toString)
-            .filter(org.apache.spark.sql.functions.col("file")
-              .isInCollection(live.intersect(prior)))
-          writeStatsManifest(n, keepOld.unionByName(footerStatsDf(
-            fresh.map(r => fs.makeQualified(new Path(path(n), r)).toString),
-            statCols(n), qualifiedDir(n))))
-        }
-      }
+      FileManifest.refreshCommitted(this, n, rels, committedBefore(n))
     }
     // 5. deferred metadata markers (bucket layout, z-order) land
     //    AFTER the data they describe became visible
@@ -3194,77 +2758,4 @@ object TableStore {
   private val schemaMemo =
     scala.collection.concurrent.TrieMap
       .empty[(String, String, String), org.apache.spark.sql.types.StructType]
-
-  /** Order-preserving 8-byte-prefix encoding of a string into the
-    * manifest's Long envelope slots: the first 8 UTF-8 bytes, read
-    * big-endian as an unsigned number, remapped to signed order
-    * (`^ Long.MinValue`). Monotone — `a ≤ b` (byte-lex, which UTF-8
-    * makes code-point order) implies `key(a) ≤ key(b)` — so a file
-    * whose true token range is `[m, M]` provably holds no token `t`
-    * with `key(t)` outside `[key(m), key(M)]`, and pruning on the
-    * encoded range is conservative (false keeps only, on shared
-    * 8-byte prefixes — never a false skip). This is what lets STRING
-    * columns ride the same (file, col, mn, mx) manifest rows as the
-    * integral ones.
-    */
-  def stringStatKey(s: String): Long =
-    prefix8(s.getBytes(java.nio.charset.StandardCharsets.UTF_8), pad = 0x00)
-
-  /** Upper bound of [[stringStatKey]] over every string that STARTS
-    * WITH `s` — the closed prefix-range probe (`token LIKE 's%'`):
-    * the 8-byte prefix padded with 0xFF instead of zeros.
-    */
-  def stringStatKeyUpper(s: String): Long =
-    prefix8(s.getBytes(java.nio.charset.StandardCharsets.UTF_8), pad = 0xFF)
-
-  private def prefix8(bytes: Array[Byte], pad: Int): Long = {
-    var v = 0L
-    var i = 0
-    while (i < 8) {
-      v = (v << 8) | (if (i < bytes.length) bytes(i) & 0xffL else pad.toLong)
-      i += 1
-    }
-    v ^ Long.MinValue
-  }
-
-  /** Footer (row count, [min, max] of `cols`) for one parquet file —
-    * the shared core of the manifest build (executor-side, inside
-    * mapPartitions) and the legacy driver walk. Only the footer is
-    * read; data pages are never touched. Integral columns carry their
-    * numeric min/max; STRING columns carry [[stringStatKey]]-encoded
-    * min/max (parquet-mr truncates long binary stats with max rounded
-    * UP, so the encoded envelope stays conservative).
-    */
-  private[store] def footerEnvelope(
-      file: String,
-      conf: org.apache.hadoop.conf.Configuration,
-      cols: Seq[String]): (Long, Seq[(String, Long, Long)]) = {
-    import scala.jdk.CollectionConverters._
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new Path(file), conf))
-    try {
-      val blocks = r.getFooter.getBlocks.asScala.toSeq
-      val nRows = blocks.map(_.getRowCount).sum
-      (nRows, cols.flatMap { c =>
-        val stats = blocks.flatMap(_.getColumns.asScala
-          .find(_.getPath.toDotString == c).map(_.getStatistics))
-        if (stats.isEmpty || stats.exists(s =>
-            s == null || !s.hasNonNullValue)) None
-        else stats.head.genericGetMin match {
-          case _: Number => Some((c,
-            stats.map(_.genericGetMin.asInstanceOf[Number].longValue).min,
-            stats.map(_.genericGetMax.asInstanceOf[Number].longValue).max))
-          case _: org.apache.parquet.io.api.Binary => Some((c,
-            stats.map(s => prefix8(s.genericGetMin
-              .asInstanceOf[org.apache.parquet.io.api.Binary].getBytes,
-              pad = 0x00)).min,
-            stats.map(s => prefix8(s.genericGetMax
-              .asInstanceOf[org.apache.parquet.io.api.Binary].getBytes,
-              pad = 0xFF)).max))
-          case _ => None
-        }
-      })
-    } finally r.close()
-  }
 }

@@ -104,13 +104,13 @@ object Trigram {
 
   /** Opt the trigram postings into FILE-level gram skipping: build the
     * `_graft_stats` manifest once (g envelopes via
-    * [[TableStore.stringStatKey]] — narrow because files are
+    * [[FileManifest.stringStatKey]] — narrow because files are
     * gram-sorted); every later [[upsertWithIndex]] batch keeps it
     * fresh at O(replaced files), and every needle probe prunes its
     * file list through it instead of opening all N bucket footers.
     */
   def enableFileSkipping(store: TableStore, table: String): Unit =
-    store.refreshFileStats(indexName(table))
+    FileManifest.build(store, indexName(table))
 
   /** The postings subset a needle's grams can live in — file-level
     * skipping on a manifest-backed index ([[Fts]]'s prunedIndex rule:
@@ -119,23 +119,9 @@ object Trigram {
     */
   private def prunedIndex(
       store: TableStore, table: String, grams: Seq[String]): DataFrame = {
-    val name = indexName(table)
-    if (!store.hasFileStats(name)) return store.read(name)
-    val probes = grams.map(TableStore.stringStatKey)
-    val env = store.fileEnvelopes(name, Seq("g"))
-    // staleness guard for an un-governed index — same rule as Fts's
-    // prunedIndex: a crash between the postings overwrite and the
-    // separate manifest refresh leaves envelopes describing dead
-    // files; the write-ahead pending flag detects that window in O(1)
-    // and the probe prunes NOTHING (slower once, never a false skip)
-    if (!store.governed.contains(name) && !store.statsManifestFresh(name))
-      return store.read(name)
-    val keep = env.collect {
-      case (f, e) if probes.exists(p =>
-        e.get("g").forall { case (mn, mx) => mx >= p && mn <= p }) => f
-    }
-    if (keep.size == env.size) store.read(name)
-    else store.readFileSubset(name, keep)
+    val probes = grams.map(FileManifest.stringStatKey)
+    FileManifest.readKept(store, indexName(table), Seq("g"))(e =>
+      probes.exists(p => FileManifest.overlaps(e, "g", p, p)))
   }
 
   /** All pks whose text contains `needle` (case-folded, like FTS5

@@ -3,7 +3,7 @@ package graft.sql
 import org.apache.spark.sql.functions.col
 
 import graft.SparkSpec
-import graft.store.TableStore
+import graft.store.{FileManifest, TableStore}
 
 /** Governed tables through `spark.sql`: the V2 catalog resolves names,
   * serves epoch time travel (`VERSION AS OF`), and routes INSERT
@@ -139,7 +139,7 @@ class GraftCatalogSpec extends SparkSpec {
     store.ensureGoverned(Seq("m"))
     store.upsert("m", Seq((1L, "a"), (2L, "b")).toDF("id", "v"), Seq("id"))
     store.compact("m")
-    store.refreshFileStats("m") // opt into the manifest-backed $files
+    FileManifest.build(store, "m") // opt into the manifest-backed $files
     store.tagEpoch("m-release")
     graft.store.EpochFollower.consumeNew(store, "m", "meta-spec")(_ => ())
 

@@ -181,7 +181,7 @@ class BucketedUpsertSpec extends SparkSpec {
     val store = freshStore()
     store.upsertBucketed("t", rows(0 until 200), Seq("id"), buckets = 20)
     val preds = Seq(("id", 0L, 50L))
-    val pruned = store.readPruned("t", preds)
+    val pruned = FileManifest.readPruned(store, "t", preds)
     assert(pruned.columns.toSet === store.read("t").columns.toSet)
     val got = pruned.filter(col("id").between(0, 50))
       .select(col("id")).collect().map(_.getLong(0)).toSet

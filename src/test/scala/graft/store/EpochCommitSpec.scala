@@ -179,15 +179,15 @@ class EpochCommitSpec extends SparkSpec {
     store.ensureBucketed("t", Seq("id"), 4)
     store.upsert("t", (0 until 32).map(i => (i.toLong, s"v$i")).toDF("id", "v"), Seq("id"))
     store.ensureGoverned(Seq("t"))
-    store.refreshFileStats("t")
-    assert(store.hasFileStats("t"))
+    FileManifest.build(store, "t")
+    assert(FileManifest.exists(store, "t"))
     store.transact {
       store.upsert("t", Seq((100L, "x")).toDF("id", "v"), Seq("id"))
     }
     val stale = Doctor.check(store).filter(_.component == "file-stats")
     assert(stale.isEmpty, s"manifest went stale across a governed commit: $stale")
     // the manifest-backed prune still answers from the live set
-    val pruned = store.readPruned("t", Seq(("id", 100L, 100L)))
+    val pruned = FileManifest.readPruned(store, "t", Seq(("id", 100L, 100L)))
     assert(rows(pruned.filter(col("id") === 100L)) === Set((100L, "x")))
   }
 
@@ -499,10 +499,10 @@ class EpochCommitSpec extends SparkSpec {
     val store = new TableStore(spark, root)
     store.overwrite("a", Seq((1L, "x", "d1")).toDF("id", "v", "day"), Seq("day"))
     store.ensureGoverned(Seq("a"))
-    store.refreshFileStats("a")
+    FileManifest.build(store, "a")
     store.dropPartition("a", "day", "d1") // live set now empty
     assert(store.readIfExists("a").isEmpty)
-    assert(store.estimateRows("a") === Some(0L)) // marker-only manifest
+    assert(FileManifest.estimateRows(store, "a") === Some(0L)) // marker-only manifest
     // and it can refill afterwards
     store.overwrite("a", Seq((2L, "y", "d2")).toDF("id", "v", "day"), Seq("day"))
     assert(store.read("a").count() === 1L)

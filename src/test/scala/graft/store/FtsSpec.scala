@@ -433,7 +433,7 @@ class FtsSpec extends SparkSpec {
     def hits(q: String): Set[Long] =
       Fts.search(spark, store, "tweets", q).collect().map(_.getLong(0)).toSet
     assert(hits("cword3") === Set(2L))
-    assert(store.statsManifestFresh(idxName))
+    assert(FileManifest.fresh(store, idxName))
 
     // crash residue 1: DEAD files still in the manifest. The store's
     // in-place mutations mark the write-ahead pending flag before
@@ -442,7 +442,7 @@ class FtsSpec extends SparkSpec {
     // reader a file the drop removed.
     val b2 = bucketOf(2L, 16)
     store.dropPartition(idxName, "pk_bucket", b2.toString)
-    assert(!store.statsManifestFresh(idxName))
+    assert(!FileManifest.fresh(store, idxName))
     assert(hits("cword3") === Set.empty)
     assert(hits("aword1") === Set(0L))
 
@@ -461,8 +461,8 @@ class FtsSpec extends SparkSpec {
       "stale manifest silently skipped a live postings file")
 
     // one refresh heals: flag clears, pruning resumes, results exact
-    store.refreshFileStatsIncremental(idxName)
-    assert(store.statsManifestFresh(idxName))
+    FileManifest.refresh(store, idxName)
+    assert(FileManifest.fresh(store, idxName))
     assert(hits("aword1") === Set(0L, newPk))
     assert(hits("cword3") === Set.empty)
   }

@@ -253,7 +253,7 @@ abstract class SnapshotOccBehavior extends SparkSpec {
     val root = freshRoot()
     val store = mkStore(root)
     store.overwrite("p", Seq((1L, "old")).toDF("id", "v"))
-    store.refreshFileStats("p")
+    FileManifest.build(store, "p")
     store.ensureGoverned(Seq("p"))
     val writer = mkStore(root)
     store.withSnapshot {
@@ -264,11 +264,11 @@ abstract class SnapshotOccBehavior extends SparkSpec {
       }
       // the pinned manifest-driven scan serves the PINNED epoch
       // (footer-walk fallback, not the newer manifest)...
-      assert(rows(store.readPruned("p", Seq(("id", 0L, 100L)))) ===
+      assert(rows(FileManifest.readPruned(store, "p", Seq(("id", 0L, 100L)))) ===
         Set((1L, "old")),
         "pinned prune leaked the newer epoch through the manifest")
       // ...and estimates are honestly unavailable for the pinned epoch
-      assert(store.estimateRows("p") === None)
+      assert(FileManifest.estimateRows(store, "p") === None)
     }
     // the pinned reader wrote NOTHING: the manifest still describes
     // the new epoch (a backwards heal would corrupt every un-pinned
@@ -282,8 +282,8 @@ abstract class SnapshotOccBehavior extends SparkSpec {
     assert(manifestFiles === newRels,
       "pinned reader rewrote the manifest to its own epoch")
     // un-pinned manifest-driven reads serve the new epoch as usual
-    assert(rows(reader.readPruned("p", Seq(("id", 0L, 100L)))) === Set((2L, "new")))
-    assert(reader.estimateRows("p") === Some(1L))
+    assert(rows(FileManifest.readPruned(reader, "p", Seq(("id", 0L, 100L)))) === Set((2L, "new")))
+    assert(FileManifest.estimateRows(reader, "p") === Some(1L))
   }
 
   test("incremental scan: readAddedSince reads only the files added between epochs") {
@@ -397,7 +397,7 @@ abstract class SnapshotOccBehavior extends SparkSpec {
     val root = freshRoot()
     val store = mkStore(root)
     store.overwrite("m", Seq((1L, "old")).toDF("id", "v"))
-    store.refreshFileStats("m")
+    FileManifest.build(store, "m")
     store.ensureGoverned(Seq("m"))
     store.afterCommitFlip = () => throw new RuntimeException("power cut post-flip")
     try intercept[RuntimeException] {
@@ -409,10 +409,10 @@ abstract class SnapshotOccBehavior extends SparkSpec {
     // precedes the crash), so every read form must serve the new epoch
     val reader = mkStore(root)
     assert(rows(reader.read("m")) === Set((2L, "new")))
-    val pruned = reader.readPruned("m", Seq(("id", 0L, 100L)))
+    val pruned = FileManifest.readPruned(reader, "m", Seq(("id", 0L, 100L)))
     assert(rows(pruned) === Set((2L, "new")),
       "manifest-driven scan served the pre-flip epoch")
-    assert(reader.estimateRows("m") === Some(1L))
+    assert(FileManifest.estimateRows(reader, "m") === Some(1L))
   }
 }
 

@@ -25,16 +25,16 @@ class StatsEstimateSpec extends SparkSpec {
       .toDF("k", "grp", "v")
     store.overwrite("t", df.repartitionByRange(8, col("k"))
       .sortWithinPartitions(col("k")))
-    store.refreshFileStats("t")
+    FileManifest.build(store, "t")
 
     // no predicates: the estimate IS the exact table count
-    assert(store.estimateRows("t") === Some(1000L))
+    assert(FileManifest.estimateRows(store, "t") === Some(1000L))
 
     // pruned scan 1: a narrow range keeps a strict file subset
     val p1 = Seq(("k", 100L, 150L))
-    val est1 = store.estimateRows("t", p1).get
-    val fileLevel1 = store.readPruned("t", p1).count()
-    val actual1 = store.readPruned("t", p1)
+    val est1 = FileManifest.estimateRows(store, "t", p1).get
+    val fileLevel1 = FileManifest.readPruned(store, "t", p1).count()
+    val actual1 = FileManifest.readPruned(store, "t", p1)
       .filter(col("k").between(100, 150)).count()
     assert(est1 === fileLevel1, "estimate must equal the file-level scan")
     assert(actual1 === 51L)
@@ -43,26 +43,26 @@ class StatsEstimateSpec extends SparkSpec {
 
     // pruned scan 2: a range near the top end
     val p2 = Seq(("k", 900L, 999L))
-    val est2 = store.estimateRows("t", p2).get
-    assert(est2 === store.readPruned("t", p2).count())
-    val actual2 = store.readPruned("t", p2)
+    val est2 = FileManifest.estimateRows(store, "t", p2).get
+    assert(est2 === FileManifest.readPruned(store, "t", p2).count())
+    val actual2 = FileManifest.readPruned(store, "t", p2)
       .filter(col("k").between(900, 999)).count()
     assert(actual2 === 100L)
     assert(est2 >= actual2 && est2 < 1000L)
 
     // an empty range estimates (and scans) zero rows
-    assert(store.estimateRows("t", Seq(("k", 5000L, 6000L))) === Some(0L))
+    assert(FileManifest.estimateRows(store, "t", Seq(("k", 5000L, 6000L))) === Some(0L))
 
     // no manifest → no estimate (never a silent footer walk)
     val bare = freshStore()
     bare.overwrite("u", df)
-    assert(bare.estimateRows("u") === None)
+    assert(FileManifest.estimateRows(bare, "u") === None)
 
     // a LEGACY manifest (pre-row-count presence rows, no format
     // marker) must refuse rather than confidently estimate 0
     val legacy = freshStore()
     legacy.overwrite("w", df)
-    legacy.refreshFileStats("w")
+    FileManifest.build(legacy, "w")
     val statsDir = s"${legacy.dataFiles("w").head.split("/w/")(0)}/w/_graft_stats"
       .stripPrefix("file:")
     val old = spark.read.parquet(statsDir)
@@ -74,12 +74,12 @@ class StatsEstimateSpec extends SparkSpec {
       spark.sparkContext.hadoopConfiguration)
     fs.delete(new Path(statsDir), true)
     fs.rename(new Path(statsDir + ".__legacy"), new Path(statsDir))
-    assert(legacy.hasFileStats("w"))
-    assert(legacy.estimateRows("w") === None,
+    assert(FileManifest.exists(legacy, "w"))
+    assert(FileManifest.estimateRows(legacy, "w") === None,
       "legacy manifest must not estimate (would report 0 rows)")
     assert(graft.Explain.statsReport(legacy, "w", Nil).contains("refresh-stats"))
     // the prune path itself still works on the legacy format
-    assert(legacy.pruneFiles("w", Seq(("k", 0L, 10L))).nonEmpty)
+    assert(FileManifest.pruneFiles(legacy, "w", Seq(("k", 0L, 10L))).nonEmpty)
   }
 
   test("the Explain --stats report carries the estimate") {
@@ -87,7 +87,7 @@ class StatsEstimateSpec extends SparkSpec {
     store.overwrite("t", (0 until 100).map(i => (i.toLong, s"v$i"))
       .toDF("k", "v").repartitionByRange(4, col("k"))
       .sortWithinPartitions(col("k")))
-    store.refreshFileStats("t")
+    FileManifest.build(store, "t")
     val rep = graft.Explain.statsReport(store, "t", Seq(("k", 0L, 10L)))
     assert(rep.contains("estimated rows ="), rep)
     assert(rep.contains("of 100 total"), rep)

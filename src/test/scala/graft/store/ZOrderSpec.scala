@@ -87,12 +87,12 @@ class ZOrderSpec extends SparkSpec {
 
     store.compact("pts", sortBy = Seq("x"), targetBytes = 2L << 10)
     val plainTotal = store.dataFiles("pts").size
-    val plainKept = store.pruneFiles("pts", box).size
+    val plainKept = FileManifest.pruneFiles(store, "pts", box).size
     assert(plainTotal > 4, "need real fragmentation to measure pruning")
 
     store.compactZorder("pts", Seq("x", "y"), bits = 6, targetBytes = 2L << 10)
     val zTotal = store.dataFiles("pts").size
-    val zKept = store.pruneFiles("pts", box).size
+    val zKept = FileManifest.pruneFiles(store, "pts", box).size
     info(s"box scan opens $plainKept/$plainTotal files plain-sorted, " +
       s"$zKept/$zTotal z-ordered")
     assert(zKept < plainKept,
@@ -102,15 +102,15 @@ class ZOrderSpec extends SparkSpec {
 
     // pruning is sound: the pruned read filtered to the box equals the
     // full scan filtered to the box
-    val got = store.readPruned("pts", box)
+    val got = FileManifest.readPruned(store, "pts", box)
       .filter(col("x").between(8, 15) && col("y").between(40, 47))
       .select(col("id"), col("x"), col("y"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(got === want)
 
     // an empty box prunes everything and reads nothing
-    assert(store.pruneFiles("pts", Seq(("x", 1000L, 2000L))).isEmpty)
-    assert(store.readPruned("pts", Seq(("x", 1000L, 2000L))).count() === 0L)
+    assert(FileManifest.pruneFiles(store, "pts", Seq(("x", 1000L, 2000L))).isEmpty)
+    assert(FileManifest.readPruned(store, "pts", Seq(("x", 1000L, 2000L))).count() === 0L)
   }
 
   test("pruneFiles answers from the persisted manifest, not footers") {
@@ -120,13 +120,13 @@ class ZOrderSpec extends SparkSpec {
       (i.toLong, (i * 2654435761L % 64L + 64L) % 64L,
         (i * 40503L % 64L + 64L) % 64L))
     store.overwrite("pts", rows.toDF("id", "x", "y"))
-    assert(!store.hasFileStats("pts"))
+    assert(!FileManifest.exists(store, "pts"))
     store.compactZorder("pts", Seq("x", "y"), bits = 6, targetBytes = 2L << 10)
-    assert(store.hasFileStats("pts"),
+    assert(FileManifest.exists(store, "pts"),
       "compactZorder must create the stats manifest")
 
     val box = Seq(("x", 8L, 15L), ("y", 40L, 47L))
-    val keptBefore = store.pruneFiles("pts", box)
+    val keptBefore = FileManifest.pruneFiles(store, "pts", box)
     assert(keptBefore.nonEmpty && keptBefore.size < store.dataFiles("pts").size)
 
     // POISON the manifest out-of-band: claim one kept file's x-range
@@ -142,7 +142,7 @@ class ZOrderSpec extends SparkSpec {
     }
     poisoned.toDF("file", "col", "mn", "mx")
       .write.mode("overwrite").parquet(statsDir)
-    val keptPoisoned = store.pruneFiles("pts", box)
+    val keptPoisoned = FileManifest.pruneFiles(store, "pts", box)
     assert(!keptPoisoned.contains(keptBefore.head),
       "pruneFiles ignored the manifest (read footers instead?)")
     assert(keptPoisoned.toSet === keptBefore.toSet - keptBefore.head)
@@ -152,7 +152,7 @@ class ZOrderSpec extends SparkSpec {
     val fs = new org.apache.hadoop.fs.Path(statsDir).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(statsDir), true)
-    assert(store.pruneFiles("pts", box).toSet === keptBefore.toSet)
+    assert(FileManifest.pruneFiles(store, "pts", box).toSet === keptBefore.toSet)
   }
 
   test("a manifest-backed prune performs ZERO driver directory listings") {
@@ -172,7 +172,7 @@ class ZOrderSpec extends SparkSpec {
     val box = Seq(("x", 8L, 15L), ("y", 40L, 47L))
     val withManifest = {
       val before = TableStore.driverListings.get()
-      val kept = store.pruneFiles("pts", box)
+      val kept = FileManifest.pruneFiles(store, "pts", box)
       (kept, TableStore.driverListings.get() - before)
     }
     assert(withManifest._1.nonEmpty)
@@ -187,20 +187,25 @@ class ZOrderSpec extends SparkSpec {
     fs.delete(new org.apache.hadoop.fs.Path(statsDir), true)
     val walked = {
       val before = TableStore.driverListings.get()
-      val kept = store.pruneFiles("pts", box)
+      val kept = FileManifest.pruneFiles(store, "pts", box)
       (kept, TableStore.driverListings.get() - before)
     }
     assert(walked._1.toSet === withManifest._1.toSet)
     assert(walked._2 > 0L, "manifest-less prune should list (sanity)")
   }
 
-  test("write paths keep the manifest fresh; bucketed merges update it incrementally") {
+  // un-governed, the in-place bucket rewrite refreshes the manifest;
+  // governed, the commit after its pointer flip does
+  for (governed <- Seq(false, true))
+  test("write paths keep the manifest fresh; bucketed merges update it incrementally" +
+      (if (governed) " (governed)" else "")) {
     val store = new TableStore(spark,
       java.nio.file.Files.createTempDirectory("graft-zinc").toString)
+    if (governed) store.ensureGoverned(Seq("t"))
     store.upsertBucketed("t",
       (0 until 500).map(i => (i.toLong, i.toLong % 64L)).toDF("id", "x"),
       Seq("id"), buckets = 50)
-    store.refreshFileStats("t")
+    FileManifest.build(store, "t")
     assert(Doctor.check(store).filter(_.component == "file-stats").isEmpty)
 
     // poison a manifest row belonging to some bucket, then upsert a
@@ -234,30 +239,45 @@ class ZOrderSpec extends SparkSpec {
     // a whole-table rewrite (compact) rebuilds the manifest and heals
     // the poison
     store.compact("t")
-    assert(store.hasFileStats("t"))
+    assert(FileManifest.exists(store, "t"))
     assert(Doctor.check(store).filter(_.component == "file-stats").isEmpty)
-    assert(store.fileStatsTable("t").get
+    assert(FileManifest.table(store, "t").get
       .filter(col("mn") === -777L).count() === 0L)
 
     // an out-of-band write goes stale and Doctor says so
-    val fs = new org.apache.hadoop.fs.Path(statsDir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val extra = new org.apache.hadoop.fs.Path(
-      statsDir.stripSuffix("/_graft_stats") + "/pk_bucket=0/zz-oob.parquet")
-    Seq((9999L, 0L)).toDF("id", "x").coalesce(1).write
-      .mode("overwrite").parquet(statsDir.stripSuffix("/_graft_stats") + "/__oob_tmp")
-    val part = fs.listStatus(new org.apache.hadoop.fs.Path(
-        statsDir.stripSuffix("/_graft_stats") + "/__oob_tmp"))
-      .map(_.getPath).find(_.getName.endsWith(".parquet")).get
-    fs.rename(part, extra)
-    fs.delete(new org.apache.hadoop.fs.Path(
-      statsDir.stripSuffix("/_graft_stats") + "/__oob_tmp"), true)
+    val untrackedId =
+      if (governed) {
+        // the commit log, not the directory, names a governed table's
+        // files: its out-of-band drift is a manifest edit that loses a
+        // live file's presence row: the one of probe's bucket
+        val bucket = Seq(Tuple1(probe)).toDF("id")
+          .select(store.bucketOfPk(Seq("id"), 50)).head.getLong(0)
+        val rows = spark.read.parquet(statsDir).collect().toSeq
+          .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3)))
+        val lost = rows.find(t => t._2 == "" && t._1.startsWith(s"pk_bucket=$bucket/")).get._1
+        rows.filterNot(t => t._1 == lost && t._2 == "")
+          .toDF("file", "col", "mn", "mx").write.mode("overwrite").parquet(statsDir)
+        probe
+      } else {
+        val fs = new org.apache.hadoop.fs.Path(statsDir).getFileSystem(
+          spark.sparkContext.hadoopConfiguration)
+        val extra = new org.apache.hadoop.fs.Path(
+          statsDir.stripSuffix("/_graft_stats") + "/pk_bucket=0/zz-oob.parquet")
+        Seq((9999L, 0L)).toDF("id", "x").coalesce(1).write
+          .mode("overwrite").parquet(statsDir.stripSuffix("/_graft_stats") + "/__oob_tmp")
+        val part = fs.listStatus(new org.apache.hadoop.fs.Path(
+            statsDir.stripSuffix("/_graft_stats") + "/__oob_tmp"))
+          .map(_.getPath).find(_.getName.endsWith(".parquet")).get
+        fs.rename(part, extra)
+        fs.delete(new org.apache.hadoop.fs.Path(
+          statsDir.stripSuffix("/_graft_stats") + "/__oob_tmp"), true)
+        9999L
+      }
     val issues = Doctor.check(store).filter(_.component == "file-stats")
     assert(issues.exists(_.problem.contains("untracked")),
       s"Doctor missed the stale manifest: $issues")
-    // untracked file is footer-walked, not lost: its rows are readable
-    // and pruning still sees them
-    assert(store.read("t").filter(col("id") === 9999L).count() === 1L)
+    // the untracked file is not lost: its rows are readable
+    assert(store.read("t").filter(col("id") === untrackedId).count() === 1L)
   }
 
   test("z-order within a bucketed table: 1-bucket upserts AND in-bucket file pruning") {
@@ -278,13 +298,13 @@ class ZOrderSpec extends SparkSpec {
     // the read dividend: a 2-dim box prunes files WITHIN buckets
     val box = Seq(("x", 8L, 15L), ("y", 40L, 47L))
     val total = store.dataFiles("t").size
-    val kept = store.pruneFiles("t", box)
+    val kept = FileManifest.pruneFiles(store, "t", box)
     assert(total > 8, s"need real per-bucket fragmentation, got $total files")
     assert(kept.size < total / 2,
       s"box kept ${kept.size}/$total files — no in-bucket z locality")
     val want = rows.filter(r =>
       r._2 >= 8 && r._2 <= 15 && r._3 >= 40 && r._3 <= 47).toSet
-    val got = store.readPruned("t", box)
+    val got = FileManifest.readPruned(store, "t", box)
       .filter(col("x").between(8, 15) && col("y").between(40, 47))
       .select(col("id"), col("x"), col("y"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.store.TableStore
+import graft.store.{FileManifest, TableStore}
 
 /** Streaming bottom-k sample maintenance: after every micro-batch the
   * persisted sample equals the batch aggregate's sample over the
@@ -210,8 +210,8 @@ class StreamQuantilesSpec extends SparkSpec {
     val name = StreamQuantiles.sampleName("docs")
     // conversion happens on the NEXT merge; then enable stats
     sink(Seq(("g0", 100L, 1L)).toDF("grp", "id", "v"), 1L)
-    store.refreshFileStats(name)
-    assert(store.hasFileStats(name))
+    FileManifest.build(store, name)
+    assert(FileManifest.exists(store, name))
     // two more touched-bucket merges must keep the manifest fresh
     sink(Seq(("g1", 101L, 2L)).toDF("grp", "id", "v"), 2L)
     sink(Seq(("g2", 102L, 3L), ("g3", 103L, 4L)).toDF("grp", "id", "v"), 3L)
