@@ -545,7 +545,7 @@ object Cli {
         println(s"[govern] ${store.governed.toSeq.sorted.mkString(", ")}")
       case "epochs" =>
         // epochs <store> — retained snapshot epochs + governed tables
-        println(s"[epochs] retained: ${store.epochs().mkString(", ")}; " +
+        println(s"[epochs] retained: ${store.log.epochs().mkString(", ")}; " +
           s"governed: ${store.governed.toSeq.sorted.mkString(", ")}")
       case "consume" =>
         // consume <store> <table> <consumer> [n] — deliver everything
@@ -588,7 +588,7 @@ object Cli {
         val from = args(3).toLong
         val to = args.lift(4).map(_.toLong)
           .getOrElse(store.snapshot().epoch)
-        store.commitOps(args(2), from, to) match {
+        store.log.commitOps(args(2), from, to) match {
           case Some(ops) if ops.isEmpty =>
             println(s"[history] ${args(2)} unchanged in ($from, $to]")
           case Some(ops) => ops.foreach { case (e, op) =>
@@ -628,7 +628,7 @@ object Cli {
         // tag <store> <name> [epoch] — pin an epoch as a named
         // release; tagged epochs are VACUUM ROOTS (their files and
         // pointers survive any retention window) until drop-tag
-        val e = store.tagEpoch(args(2), args.lift(3).map(_.toLong))
+        val e = store.log.tagEpoch(args(2), args.lift(3).map(_.toLong))
         println(s"[tag] ${args(2)} -> epoch $e")
       case "build-corpus" =>
         // build-corpus <store> <sfDir> <name> [budgetTokens] — the
@@ -649,7 +649,7 @@ object Cli {
         store.transact { store.overwrite("corpus_release", mixture) }
         census.collect().foreach(r =>
           println(f"[build-corpus] ${r.getString(0)}%-18s ${r.getLong(1)}"))
-        val e = store.tagEpoch(name)
+        val e = store.log.tagEpoch(name)
         val (n, h) = store.contentFingerprint("corpus_release")
         println(f"[build-corpus] release '$name' -> epoch $e rows=$n hash=$h%016x")
       case "release" =>
@@ -658,7 +658,7 @@ object Cli {
         // dataset-release one-liner (the tag keeps the bytes
         // readable through any vacuum policy; the fingerprint proves
         // WHAT they are for the release notes)
-        val e = store.tagEpoch(args(2))
+        val e = store.log.tagEpoch(args(2))
         println(s"[release] ${args(2)} -> epoch $e")
         store.governed.toSeq.sorted.foreach { t =>
           if (store.dataFiles(t).nonEmpty) {
@@ -668,12 +668,12 @@ object Cli {
         }
       case "tags" =>
         // tags <store> — named releases and their pinned epochs
-        store.tags().toSeq.sortBy(_._1).foreach { case (t, e) =>
+        store.log.tags().toSeq.sortBy(_._1).foreach { case (t, e) =>
           println(f"$t%-24s epoch $e") }
       case "drop-tag" =>
         // drop-tag <store> <name> — the epoch becomes reclaimable by
         // the next vacuum (unless otherwise retained)
-        store.dropTag(args(2))
+        store.log.dropTag(args(2))
         println(s"[drop-tag] ${args(2)}")
       case "show-tag" =>
         // show-tag <store> <table> <tag> [n] — read a table as of a
@@ -695,7 +695,7 @@ object Cli {
         val minAge = args.lift(2).map(_.toLong * 60_000L).getOrElse(0L)
         store.vacuumEpochs(minAge)
         println(s"[vacuum-epochs] done (retention ${minAge / 60000} min); " +
-          s"retained epochs: ${store.epochs().mkString(", ")}")
+          s"retained epochs: ${store.log.epochs().mkString(", ")}")
       case "estimate" =>
         // estimate <store> <table> [col:lo:hi ...] — manifest-driven
         // cardinality estimate, zero data I/O (Explain --stats form)

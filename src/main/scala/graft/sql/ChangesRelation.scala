@@ -25,7 +25,7 @@ import graft.store.{ChangeWindow, TableStore}
   * release tags (`fromTag`/`toTag`), or wall-clock instants
   * (`fromTimestamp`/`toTimestamp` — epoch millis or ISO-8601,
   * resolved against the commit log's persisted stamps via
-  * [[TableStore.epochAtTimestamp]]). `mode=appends` serves the
+  * [[graft.store.CommitLog.epochAtTimestamp]]). `mode=appends` serves the
   * file-level incremental scan ([[TableStore.readAddedSince]],
   * rewrite-skipping, no tag column) instead of the exact feed. Both
   * endpoints must be retained — the vacuum contract every CDC

@@ -159,20 +159,20 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog {
   override def loadTable(ident: Identifier, version: String): Table =
     load(ident, epoch = Some(
       scala.util.Try(version.trim.toLong).toOption.getOrElse(
-        store().tags().getOrElse(version,
+        store().log.tags().getOrElse(version,
           throw new IllegalArgumentException(
             s"'$version' is neither an epoch nor a known tag")))))
 
   /** `TIMESTAMP AS OF <instant>` — Spark hands the instant as
     * MICROSECONDS since the epoch; it resolves to the latest retained
     * commit whose persisted wall-clock stamp is ≤ the instant
-    * ([[TableStore.epochAtTimestamp]] — commit-log `#ts=` headers,
+    * ([[graft.store.CommitLog.epochAtTimestamp]] — commit-log `#ts=` headers,
     * immune to mtime-rewriting copies). Like `VERSION AS OF`, the
     * resolved epoch is GLOBAL, so the same instant on every referenced
     * table is a transactionally consistent multi-table snapshot.
     */
   override def loadTable(ident: Identifier, timestamp: Long): Table =
-    load(ident, epoch = Some(store().epochAtTimestamp(
+    load(ident, epoch = Some(store().log.epochAtTimestamp(
       Math.floorDiv(timestamp, 1000L))))
 
   private def load(ident: Identifier, epoch: Option[Long]): Table = {
@@ -548,10 +548,9 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog {
       }
       val kept = Set.newBuilder[String]
       val doomedSet = doomed.toSet
-      s.tags().foreach { case (tag, e) =>
-        val at = s.tablesAt(e) // one pointer resolution per tag
+      s.log.taggedTables().foreach { case (tag, _, at) =>
         if (at.exists(doomedSet)) {
-          if ((at -- doomedSet).isEmpty) s.dropTag(tag)
+          if ((at -- doomedSet).isEmpty) s.log.dropTag(tag)
           else kept += tag
         }
       }
@@ -699,8 +698,8 @@ private[sql] class GraftMetaTable(root: String, base: String, meta: String)
         // committed_at = the pointer's persisted wall-clock stamp
         // (pointer mtime for legacy commits) — what TIMESTAMP AS OF
         // resolves against, surfaced Iceberg-snapshots-style
-        val stamps = s.commitStamps().toMap
-        s.tableHistory(base)
+        val stamps = s.log.commitStamps().toMap
+        s.log.tableHistory(base)
           .map { case (e, op, n) =>
             (e, new java.sql.Timestamp(stamps(e)), op, n) }
           .toDF("epoch", "committed_at", "op", "n_files")
@@ -712,9 +711,8 @@ private[sql] class GraftMetaTable(root: String, base: String, meta: String)
         // dead_members: tables the pinned commit names that are no
         // longer live (the PURGE-survivor state Doctor's
         // tag-dead-member flags) — empty for a fully-live tag
-        val live = s.tableNames.toSet ++ s.governed
-        s.tags().toSeq.map { case (t, e) =>
-          (t, e, (s.tablesAt(e) -- live).toSeq.sorted.mkString(",")) }
+        graft.store.Doctor.tagDeadMembers(s, s.tableNames.toSet ++ s.governed)
+          .map { case (t, e, dead) => (t, e, dead.mkString(",")) }
           .toDF("tag", "epoch", "dead_members")
       case "cursors" =>
         graft.store.EpochFollower.cursors(s).toSeq.collect {

@@ -114,7 +114,7 @@ private[sql] object GraftProcedures {
       (s, args) => {
         val name = args.getUTF8String(0).toString
         val e = args.getLong(1)
-        val pinned = s.tagEpoch(name, if (e < 0) None else Some(e))
+        val pinned = s.log.tagEpoch(name, if (e < 0) None else Some(e))
         Seq(row(utf8(name), pinned))
       },
       "pin an epoch (default: current) as a named release tag — a " +
@@ -123,7 +123,7 @@ private[sql] object GraftProcedures {
       StructType(Seq(StructField("dropped", StringType))),
       (s, args) => {
         val name = args.getUTF8String(0).toString
-        s.dropTag(name)
+        s.log.dropTag(name)
         Seq(row(utf8(name)))
       },
       "drop a release tag (its epoch becomes vacuumable)"),

@@ -70,8 +70,8 @@ final case class ChangeWindow(
       // one rewrite-aware walk per member holding files in the window;
       // the frames read the files it found
       lazy val added = {
-        val withFiles = store.withFilesInWindow(tables, from, to)
-        tables.filter(withFiles).map(t => t -> store.addedRelsSince(t, from, to))
+        val withFiles = store.log.withFilesInWindow(tables, from, to)
+        tables.filter(withFiles).map(t => t -> store.log.addedRelsSince(t, from, to))
           .filter(_._2.nonEmpty).toMap
       }
       new Segment(from, to, tables.filter(added.contains), added)
@@ -79,7 +79,7 @@ final case class ChangeWindow(
     else changesSegment(opsIn(from, to), from, to)
 
   private def opsIn(from: Long, to: Long) =
-    tables.map(t => t -> store.commitOps(t, from, to)).toMap
+    tables.map(t => t -> store.log.commitOps(t, from, to)).toMap
 
   // a member changed in (a, b] iff a logical (non-rewrite) commit
   // touched it there; unprovable (unwalkable history) counts as changed
@@ -127,7 +127,7 @@ final case class ChangeWindow(
     val gone = store.droppedColumnsOf(t).toSet
     def inWindow = window.flatMap { case (s, parts) =>
       parts.collectFirst { case (`t`, df) => df.schema }.orElse(
-        Seq(s.to, s.from).find(e => store.withFilesInWindow(Seq(t), e, e)(t))
+        Seq(s.to, s.from).find(e => store.log.withFilesInWindow(Seq(t), e, e)(t))
           .map(store.readEpoch(t, _).schema))
     }.map(s => store.surfaceSchemaOf(t,
       StructType(s.fields.filterNot(_.name == store.ChangeTypeCol))))
@@ -200,7 +200,7 @@ final case class ChangeWindow(
     * also serve zero rows forever.
     */
   def requireKnown(endpoints: Seq[Long]): Unit = {
-    val known = endpoints.flatMap(store.tablesAt).toSet ++ store.governed
+    val known = endpoints.flatMap(store.log.tablesAt).toSet ++ store.governed
     val when = ("now" +: endpoints.distinct.map(e => s"at epoch $e")).mkString(", ")
     tables.foreach { t =>
       val declared = store.declaredSchemaOf(t).isDefined
@@ -319,9 +319,9 @@ object ChangeWindow {
     */
   def endpoint(store: TableStore, params: Map[String, String],
       side: String): Option[Long] =
-    params.get(s"${side}Tag").map(tag => store.tags().getOrElse(tag,
+    params.get(s"${side}Tag").map(tag => store.log.tags().getOrElse(tag,
       throw new IllegalArgumentException(s"unknown tag '$tag'")))
       .orElse(params.get(s"${side}Timestamp").map(v =>
-        store.epochAtTimestamp(instant(s"${side}Timestamp", v))))
+        store.log.epochAtTimestamp(instant(s"${side}Timestamp", v))))
       .orElse(params.get(s"${side}Epoch").map(number(s"${side}Epoch", _)))
 }

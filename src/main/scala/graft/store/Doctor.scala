@@ -133,8 +133,7 @@ object Doctor {
     // but silent: `VERSION AS OF '<tag>'` fails only per-dead-table at
     // read time. Name the state here so a release manager can see
     // which release pins are partial ($tags surfaces the same list).
-    store.tags().toSeq.sortBy(_._1).foreach { case (tag, e) =>
-      val dead = (store.tablesAt(e) -- live).toSeq.sorted
+    tagDeadMembers(store, live).sortBy(_._1).foreach { case (tag, e, dead) =>
       if (dead.nonEmpty)
         issues += Issue("tag-dead-member", tag,
           s"release tag pins epoch $e whose commit names non-live " +
@@ -156,6 +155,14 @@ object Doctor {
     })
     issues.result()
   }
+
+  /** THE dead-member rule: each release tag with its pinned epoch and
+    * the tables its commit names that are not in `live` — Doctor's
+    * tag-dead-member finding and the `$tags` dead_members column.
+    */
+  private[graft] def tagDeadMembers(
+      store: TableStore, live: Set[String]): Seq[(String, Long, Seq[String])] =
+    store.log.taggedTables().map { case (t, e, tables) => (t, e, (tables -- live).toSeq.sorted) }
 
   /** Advisory maintenance suggestions — the self-driving half of the
     * compaction story: integrity `check` reports what is WRONG, this
@@ -201,7 +208,7 @@ object Doctor {
     * or is dropped. Flag past a handful of pinned epochs.
     */
   private def consumerLag(store: TableStore): Seq[Issue] = {
-    val cur = store.epochs().lastOption.getOrElse(return Seq.empty)
+    val cur = store.log.epochs().lastOption.getOrElse(return Seq.empty)
     EpochFollower.cursors(store).toSeq.sortBy(_._1).flatMap {
       case ((table, consumer), epoch) =>
         val lag = cur - epoch
@@ -231,9 +238,9 @@ object Doctor {
   /** PREDICTIVE vacuum-horizon check: would `vacuumEpochs(planned)`
     * run NOW cost a lagging consumer its rewrite-skipping? The
     * rewrite-aware incremental walk needs every intermediate commit in
-    * (cursor, head) retained; vacuum retains a commit only while its
-    * successor's mtime is inside the retention window (or a tag /
-    * cursor pins it directly). The existing consumer-lag advisory
+    * (cursor, head) retained, and this check asks the vacuum's own
+    * rule ([[CommitLog.retention]]) which of them it would drop. The
+    * existing consumer-lag advisory
     * fires AFTER the fallback is already in force — this one names the
     * consumers a planned retention would break, counts the commits at
     * risk, and reports the minAgeMs that would be safe — retention
@@ -241,25 +248,22 @@ object Doctor {
     */
   private def vacuumHorizon(
       store: TableStore, plannedMinAgeMs: Long): Seq[Issue] = {
-    val commits = store.commitStamps()
+    val commits = store.log.list()
     if (commits.size < 3) return Seq.empty
-    val head = commits.last._1
-    val pinned = store.tags().values.toSet ++
-      EpochFollower.cursors(store).values.toSet
+    val head = commits.lastKey
     val now = System.currentTimeMillis()
-    val cutoff = now - plannedMinAgeMs
+    // the vacuum's own retention rule at the planned cutoff: the walk
+    // needs every commit in (cursor, head), and each one it drops is at
+    // risk, paired with the stamp its successor landed at
+    val verdicts = store.log.retention(commits, now - plannedMinAgeMs)
     EpochFollower.cursors(store).toSeq.sortBy(_._1).flatMap {
       case ((table, consumer), epoch) =>
-        // the walk needs every commit in (cursor, head); commit i
-        // survives vacuum while its SUCCESSOR is younger than the
-        // cutoff, it is the latest, or a pin holds it directly
-        val atRisk = commits.zipWithIndex.collect {
-          case ((e, _), i) if e > epoch && e < head && !pinned(e) &&
-            commits(i + 1)._2 <= cutoff => (e, commits(i + 1)._2)
+        val atRisk = verdicts.collect {
+          case (e, Some(until), false) if e > epoch && e < head => until
         }
         if (atRisk.isEmpty) None
         else {
-          val safeMs = now - atRisk.map(_._2).min + 1
+          val safeMs = now - atRisk.min + 1
           Some(Issue("vacuum-horizon", table,
             s"consumer '$consumer' (cursor $epoch, head $head) would " +
               s"lose rewrite-skipping: vacuumEpochs($plannedMinAgeMs) " +

@@ -62,12 +62,12 @@ object EpochFollower {
 
   /** The newest cursor snapshot's number (0: none yet) and state. */
   private def current(store: TableStore): (Long, Map[(String, String), Long]) =
-    store.snapshots(CursorTable, SnapshotPrefix).lastOption match {
+    store.log.snapshots(CursorTable, SnapshotPrefix).lastOption match {
       case Some((n, st)) =>
         // a snapshot is deleted only after its successor has been
         // published for RetainMs: a vanished file means a newer one
         val text =
-          try Some(store.readSnapshot(st))
+          try Some(store.readSmall(st.getPath))
           catch { case _: java.io.FileNotFoundException => None }
         text.fold(current(store))(t => n -> t.linesIterator.filter(_.nonEmpty).map { l =>
           val Array(table, consumer, epoch) = l.split('\t')
@@ -91,7 +91,7 @@ object EpochFollower {
     val (n, cur) = current(store)
     val text = update(cur).toSeq.sortBy(_._1).map { case ((t, c), e) =>
       s"${enc(t)}\t${enc(c)}\t$e\n" }.mkString
-    if (!store.publishSnapshot(CursorTable, SnapshotPrefix, n + 1, text, RetainMs))
+    if (!store.log.publishSnapshot(CursorTable, SnapshotPrefix, n + 1, text, RetainMs))
       publish(store)(update)
   }
 

@@ -279,14 +279,17 @@ object FileManifest {
     * pending files are not in place yet.
     *
     * None when there is no manifest, or when the reader must not
-    * trust it: a PINNED reader must neither trust one that describes
-    * another epoch (the pin would silently leak) nor "heal" it
-    * backwards to the pinned file set (corrupting it for every
-    * un-pinned reader); the same holds if a rebuild somehow failed to
-    * converge.
+    * trust it: an UN-governed manifest whose write-ahead pending flag
+    * is set describes the files before an in-place rewrite that has not
+    * refreshed it yet (possibly files that rewrite removed); a PINNED
+    * reader must neither trust one that describes another epoch (the
+    * pin would silently leak) nor "heal" it backwards to the pinned
+    * file set (corrupting it for every un-pinned reader); the same
+    * holds if a rebuild somehow failed to converge.
     */
   private def guardedRows(
       store: TableStore, name: String, cols: Seq[String]): Option[Array[Row]] = {
+    lazy val governed = store.isGoverned(name)
     def attempt(retried: Boolean): Option[Array[Row]] = {
       // deliberate driver-side collect: (files × (1 + |cols|)) tiny
       // rows — the same driver-resident skipping state Delta keeps
@@ -296,13 +299,14 @@ object FileManifest {
       // not a bigger collect.
       val rows = table(store, name).get.filter(col("col").isin("" +: cols: _*)).collect()
       val present = rows.filter(_.getString(1).isEmpty).map(_.getString(0)).toSet
-      val stale = store.isGoverned(name) && !store.stagedInTx(name) &&
+      val stale = governed && !store.stagedInTx(name) &&
         drift(store, name, present) != ((Set.empty, Set.empty))
       if (!stale) Some(rows)
       else if (store.pinned || retried) None
       else { build(store, name); attempt(retried = true) }
     }
-    if (exists(store, name)) attempt(retried = false) else None
+    if (!exists(store, name) || (!governed && !fresh(store, name))) None
+    else attempt(retried = false)
   }
 
   /** Per-file [min, max] envelopes of `cols`. For a table that
@@ -378,15 +382,13 @@ object FileManifest {
   def readKept(
       store: TableStore, name: String, cols: Seq[String], trusted: => Boolean = true)(
       keep: Envelope => Boolean): DataFrame =
-    if (!exists(store, name)) store.read(name)
+    if (!exists(store, name) ||
+        (!store.governed.contains(name) && (!fresh(store, name) || !trusted)))
+      store.read(name)
     else {
       val env = envelopes(store, name, cols)
-      if (!store.governed.contains(name) && (!fresh(store, name) || !trusted))
-        store.read(name)
-      else {
-        val files = kept(env, keep)
-        if (files.size == env.size) store.read(name) else readFiles(store, name, files)
-      }
+      val files = kept(env, keep)
+      if (files.size == env.size) store.read(name) else readFiles(store, name, files)
     }
 
   /** An explicit (pre-pruned) absolute-path file subset of `name`,

@@ -18,7 +18,13 @@ import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
   */
 class TableStore(val spark: SparkSession, val root: String) {
 
-  import TableStore.{OpCompact, OpGovern, OpOverwrite, OpUnknown, OpUpsert, RewriteOps}
+  import TableStore.{OpCompact, OpGovern, OpOverwrite, OpUpsert, RewriteOps}
+
+  /** The epoch log under `_graft_epoch` ([[CommitLog]]): pointers,
+    * entries, tags, history and the change walk. This class keeps the
+    * transaction and every verb that reads or deletes data files.
+    */
+  lazy val log: CommitLog = new CommitLog(this)
 
   private[store] def path(name: String) = s"$root/$name"
 
@@ -206,27 +212,13 @@ class TableStore(val spark: SparkSession, val root: String) {
       names: Seq[String], ignorePinsOf: Set[String]): Unit = {
     require(activeTx.isEmpty, "cannot drop tables inside a transaction")
     require(pinnedCommit.isEmpty, "cannot drop tables inside withSnapshot")
-    // the cursor guard runs regardless of governance — a consumer can
-    // be registered on a table the current pointer no longer lists,
-    // and its diff-base break would be just as silent
-    val cursorsOn = EpochFollower.cursors(this).keys.collect {
-      case (t, c) if names.contains(t) => s"$c (on $t)" }.toSeq.sorted
-    require(cursorsOn.isEmpty,
-      s"registered consumer cursor(s) ${cursorsOn.mkString(", ")} — " +
-        "drop-consumer first (or DROP TABLE ... PURGE)")
-    val governedNow = names.filter(isGoverned)
-    if (governedNow.nonEmpty) {
-      val taggedBy = pinnedByTags(governedNow)
-        .collect { case (t, n) if !ignorePinsOf(t) => s"$t (pins $n)" }
-      require(taggedBy.isEmpty,
-        s"pinned by release tag(s) ${taggedBy.mkString(", ")} — " +
-          "drop-tag first (or DROP TABLE ... PURGE)")
+    val governedNow = requireUnpinned(names,
+      "drop-consumer first (or DROP TABLE ... PURGE)",
+      "drop-tag first (or DROP TABLE ... PURGE)", ignorePinsOf)
+    if (governedNow.nonEmpty)
       currentCommit.foreach { case (epoch, tables) =>
-        val remaining = tables -- governedNow
-        writePointer(epoch + 1, remaining.toSeq.sorted
-          .map { case (t, lf) => s"$t\t$lf" }.mkString("\n"))
+        log.publish(epoch, tables)(_ -- governedNow)
       }
-    }
     names.foreach { n =>
       val dst = new Path(path(n))
       if (fs.exists(dst)) fs.delete(dst, true)
@@ -289,18 +281,10 @@ class TableStore(val spark: SparkSession, val root: String) {
       require(!(fs.exists(new Path(path(o))) && fs.exists(new Path(path(n)))),
         s"cannot rename $o -> $n: '$n' already exists")
     }
-    val cursorsOn = EpochFollower.cursors(this).keys.collect {
-      case (t, c) if olds.contains(t) => s"$c (on $t)" }.toSeq.sorted
-    require(cursorsOn.isEmpty,
-      s"registered consumer cursor(s) ${cursorsOn.mkString(", ")} — " +
-        "their diff base would silently break under the new name; " +
-        "drop-consumer first")
-    val governedNow = olds.filter(isGoverned)
-    val taggedBy = pinnedByTags(governedNow)
-      .map { case (t, n) => s"$t (pins $n)" }
-    require(taggedBy.isEmpty,
-      s"pinned by release tag(s) ${taggedBy.mkString(", ")} — the " +
-        "pinned epoch resolves files the rename would move; drop-tag first")
+    val governedNow = requireUnpinned(olds,
+      "their diff base would silently break under the new name; " +
+        "drop-consumer first",
+      "the pinned epoch resolves files the rename would move; drop-tag first")
     // POSITIVE rename intent: written only after every guard passed,
     // immediately before anything flips, and deleted after the last
     // directory move — so a crash state carries explicit old→new
@@ -313,13 +297,10 @@ class TableStore(val spark: SparkSession, val root: String) {
     if (pendingIntent.isEmpty && pairs.nonEmpty)
       writeSmall(renameIntentPath,
         pairs.map { case (o, n) => s"$o\t$n" }.mkString("\n"))
-    if (governedNow.nonEmpty) {
+    if (governedNow.nonEmpty)
       currentCommit.foreach { case (epoch, tables) =>
-        writePointer(epoch + 1, tables.toSeq
-          .map { case (t, lf) => renames.getOrElse(t, t) -> lf }
-          .sorted.map { case (t, lf) => s"$t\t$lf" }.mkString("\n"))
+        log.publish(epoch, tables)(_.map { case (t, en) => renames.getOrElse(t, t) -> en })
       }
-    }
     // already-moved pairs (crash resume) skip; both-present was refused
     pairs.foreach { case (o, n) =>
       val src = new Path(path(o))
@@ -355,18 +336,32 @@ class TableStore(val spark: SparkSession, val root: String) {
       .map(_.trim).filter(_.nonEmpty)
       .map { l => val Array(o, n) = l.split("\t", 2); o -> n }.toMap)
 
-  /** (tag, pinned table) pairs for every release tag whose pinned
-    * commit contains one of `names` — the shared pin guard
-    * [[dropTables]] and [[renameTables]] refuse on (one commit-log
-    * listing for the whole check).
+  /** THE pin guard of [[dropTables]] and [[renameTables]]: refuses
+    * while a registered consumer cursor is on one of `names`, or a
+    * release tag outside `ignoreTags` pins a commit naming one of its
+    * governed members (one listing of the log for the whole check);
+    * each hint completes its refusal. Returns the governed members.
+    * The cursor guard runs regardless of governance — a consumer can
+    * be registered on a table the current pointer no longer lists, and
+    * its diff-base break would be just as silent.
     */
-  private def pinnedByTags(names: Seq[String]): Seq[(String, String)] = {
-    val commitByEpoch = listCommits().toMap
-    val allTags = tags()
-    names.flatMap(n => allTags.collect {
-      case (t, e) if commitByEpoch.get(e)
-        .exists(p => parseCommit(p).contains(n)) => (t, n)
-    }).distinct.sorted
+  private def requireUnpinned(
+      names: Seq[String], cursorHint: String, tagHint: String,
+      ignoreTags: Set[String] = Set.empty): Seq[String] = {
+    val cursorsOn = EpochFollower.cursors(this).keys.collect {
+      case (t, c) if names.contains(t) => s"$c (on $t)" }.toSeq.sorted
+    require(cursorsOn.isEmpty,
+      s"registered consumer cursor(s) ${cursorsOn.mkString(", ")} — $cursorHint")
+    val governedNow = names.filter(isGoverned)
+    if (governedNow.nonEmpty) {
+      val tagged = log.taggedTables()
+      val taggedBy = governedNow.flatMap(n => tagged.collect {
+        case (t, _, tables) if tables(n) => (t, n)
+      }).distinct.sorted.collect { case (t, n) if !ignoreTags(t) => s"$t (pins $n)" }
+      require(taggedBy.isEmpty,
+        s"pinned by release tag(s) ${taggedBy.mkString(", ")} — $tagHint")
+    }
+    governedNow
   }
 
   /** Delete one Hive partition directory (`name/col=value`) — the
@@ -862,7 +857,7 @@ class TableStore(val spark: SparkSession, val root: String) {
   def dataFiles(name: String): Seq[String] = {
     // governed tables answer from the commit manifest: the live set,
     // never the directory (which also holds retired files until
-    // vacuum and, mid-commit-crash, orphaned staged files)
+    // vacuum and, after a crash mid-commit, orphaned staged files)
     if (isGoverned(name))
       return liveRefs(name).map(fr =>
         fs.makeQualified(new Path(fr.base, fr.rel)).toString)
@@ -1110,49 +1105,18 @@ class TableStore(val spark: SparkSession, val root: String) {
       (kv("zcols").split(",").toSeq, kv("bits").toInt))
 
   // -------------------------------------------------------------------
-  // Epoch-pointer commit log — atomic MULTI-TABLE visibility. The
-  // reference wraps each streamed tweet's six table writes in one
-  // SQLite transaction (`/root/reference/cli.py:664-668` `with
-  // db.conn:`; save_tweets touches tweets/users/places/sources/media/
-  // media_tweets, `utils.py:411-446`), so a reader never observes a
-  // tweet whose user row hasn't landed. The per-table swap above is
-  // atomic per TABLE only; this section restores the reference's
-  // point-in-time guarantee with the design every table format at this
-  // scale uses (Delta/Iceberg snapshot logs): writes STAGE files,
-  // reads resolve through a commit pointer, and one pointer-file
-  // rename flips every governed table from all-old to all-new at once.
-  //
-  // Layout under `<root>/_graft_epoch/`:
-  //   commit-<epoch%020d>   lines `<table>\t<listfile>` — THE pointer;
-  //                         readers resolve the max-epoch file
-  //   files-<table>-<epoch> one live data-file rel path per line
-  //                         (immutable once written; unchanged tables
-  //                         re-reference their old list, so a commit
-  //                         writes O(changed tables' files) metadata,
-  //                         not O(store) — the Iceberg manifest-list
-  //                         trick)
-  //   stage/<...>           per-transaction staging dirs
-  //
-  // Governance is opt-in per table (ensureGoverned): un-governed
-  // tables keep the plain swap exactly as before. For governed tables
-  // EVERY write path routes through staging — a write outside an
-  // explicit `transact` block becomes its own single-table commit, so
-  // compaction, z-order, upserts and markers all stay correct without
-  // knowing about epochs. Untouched files carry across epochs BY
-  // REFERENCE (the new list names the old files), so the bucketed
-  // upsert keeps its O(touched buckets) property through an atomic
-  // commit — nothing is ever copied.
-  //
-  // Crash matrix: before the pointer rename, readers resolve the old
-  // commit and see the complete OLD state of every table (staged or
-  // even already-moved files are unreferenced and invisible); after
-  // it, the complete NEW state. Replaced files stay on disk until
-  // [[vacuumEpochs]], so a reader that planned against the old commit
-  // finishes its scan. Single writer per store root (the reference's
-  // SQLite model); readers are unrestricted and cross-process.
+  // Transactions over the epoch log ([[CommitLog]]). Governance is
+  // opt-in per table (ensureGoverned): un-governed tables keep the
+  // plain swap exactly as before. For governed tables EVERY write path
+  // routes through staging — a write outside an explicit `transact`
+  // block becomes its own single-table commit, so compaction, z-order,
+  // upserts and markers all stay correct without knowing about epochs.
+  // Untouched files carry across epochs BY REFERENCE (the new entry
+  // names the old files), so the bucketed upsert keeps its O(touched
+  // buckets) property through an atomic commit — nothing is ever
+  // copied.
 
-  private def epochDir = new Path(root, "_graft_epoch")
-  private def stageRoot = new Path(epochDir, "stage")
+  private def stageRoot = new Path(log.dir, "stage")
 
   /** A live file: `base` is the table dir for committed files or a
     * staging dir mid-transaction; `rel` preserves the Hive partition
@@ -1244,15 +1208,7 @@ class TableStore(val spark: SparkSession, val root: String) {
     */
   private[store] def stagedInTx(name: String): Boolean = activeTx.exists(_.staged(name))
 
-  // commit + list files are IMMUTABLE once written (fresh name per
-  // epoch), so caching parsed content by file name is safe across
-  // writers — only the latest-pointer LISTING hits the FS per resolve.
-  // Concurrent maps: the writes of a [[stageConcurrently]] call resolve
-  // entries from their own threads (as do the depth/op/ts caches)
-  private val commitCache = scala.collection.concurrent.TrieMap[String, Map[String, String]]()
-  private val listCache = scala.collection.concurrent.TrieMap[String, Seq[String]]()
-
-  private def readSmall(p: Path): String = {
+  private[store] def readSmall(p: Path): String = {
     val in = fs.open(p)
     try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
   }
@@ -1261,128 +1217,6 @@ class TableStore(val spark: SparkSession, val root: String) {
     try out.write(s.getBytes("UTF-8")) finally out.close()
   }
 
-  /** Write the commit pointer ATOMICALLY: tmp file then rename to the
-    * fresh `commit-<epoch>` name. A direct create-and-write would let
-    * a crash mid-write (or a concurrent cross-process reader) observe
-    * a TRUNCATED max-epoch pointer — tables missing from it would
-    * silently read as un-governed directory scans, returning retired
-    * files. The tmp name is dot-prefixed so [[listCommits]] can never
-    * resolve it.
-    */
-  private def writePointer(epoch: Long, content: String): Unit =
-    if (!tryWritePointer(epoch, content))
-      throw new java.util.ConcurrentModificationException(
-        s"commit-$epoch already exists — a concurrent writer committed " +
-          "first; re-resolve and retry")
-
-  /** Attempt the flip; `false` iff the target pointer name already
-    * exists — another writer won epoch `epoch`, the OCC conflict
-    * signal [[commitTx]] rebases on. Any other rename failure throws.
-    */
-  private def tryWritePointer(epoch: Long, content: String): Boolean = {
-    val name = f"commit-$epoch%020d"
-    val tmp = new Path(epochDir, s".tmp-$name-$writerTag")
-    // wall-clock stamped INTO the pointer (a `#`-header line, invisible
-    // to the table\tentry parser): file mtimes are the wrong identity
-    // for a commit's time — an rsync/copy/restore rewrites them — so
-    // TIMESTAMP AS OF resolution and vacuum retention key on this
-    // persisted stamp, with mtime only as the legacy-pointer fallback
-    writeSmall(tmp, s"#ts=${System.currentTimeMillis()}\n" + content)
-    val dst = new Path(epochDir, name)
-    atomicPointerPut(tmp, dst)
-  }
-
-  /** THE atomicity primitive of the whole commit log: publish `tmp` as
-    * `dst` iff `dst` does not exist yet, atomically. Everything else in
-    * the log — staging, entries, vacuum — only needs plain writes and
-    * deletes; correctness under concurrent writers and crashes reduces
-    * to this one put-if-absent. The default is HDFS/POSIX `rename`
-    * (atomic, fails-if-exists on both). Object stores without atomic
-    * rename (S3) override JUST this method with a conditional put
-    * (`If-None-Match: *`) or a small CAS service (DynamoDB — what
-    * Delta's S3 LogStore does); see SCALING.md §commit-log. Contract:
-    * return true iff this writer's content is now `dst`; false iff
-    * `dst` already existed (the OCC conflict signal — `tmp` must be
-    * cleaned up); throw on anything else (the commit must not be
-    * half-visible).
-    */
-  protected def atomicPointerPut(tmp: Path, dst: Path): Boolean =
-    if (fs.rename(tmp, dst)) true
-    else if (fs.exists(dst)) { fs.delete(tmp, false); false }
-    else throw new java.io.IOException(
-      s"rename $tmp -> $dst failed; commit not visible")
-
-  /** Parse a commit pointer file: table → log entry. One parser for
-    * the latest-pointer path and the time-travel path, memoized by
-    * the immutable file name.
-    */
-  private def parseCommit(p: Path): Map[String, String] =
-    commitCache.getOrElseUpdate(p.getName,
-      readSmall(p).linesIterator
-        .filter(l => l.nonEmpty && !l.startsWith("#")) // `#` = headers (ts)
-        .map(_.split("\t", 2))
-        .collect { case Array(t, lf) => t -> lf }.toMap)
-
-  // pointer files are immutable → stamp memoizes by name, like the
-  // entry caches (None = legacy pointer written before stamping)
-  private val tsCache = scala.collection.concurrent.TrieMap[String, Option[Long]]()
-
-  private def commitTsOf(p: Path): Option[Long] =
-    tsCache.getOrElseUpdate(p.getName,
-      readSmall(p).linesIterator.collectFirst {
-        case l if l.startsWith("#ts=") => l.stripPrefix("#ts=").toLong
-      })
-
-  private def listCommits(): Seq[(Long, Path)] =
-    if (!fs.exists(epochDir)) Nil
-    else fs.listStatus(epochDir).toSeq.map(_.getPath)
-      .filter(_.getName.startsWith("commit-"))
-      .flatMap(p => scala.util.Try(
-        p.getName.stripPrefix("commit-").toLong).toOption.map(_ -> p))
-      .sortBy(_._1)
-
-  /** Retained commits with their wall-clock stamps, epoch-ascending —
-    * the persisted `#ts=` header where present (every pointer written
-    * since stamping), the pointer file's mtime for legacy pointers.
-    * These are the inputs of [[vacuumEpochs]]' retention decision and
-    * of [[epochAtTimestamp]], exposed so Doctor can PREDICT which
-    * intermediate commits a planned vacuum would drop (the
-    * rewrite-skipping horizon check) instead of only reporting the
-    * loss after the fact.
-    */
-  def commitStamps(): Seq[(Long, Long)] =
-    listCommits().map { case (e, p) =>
-      (e, commitTsOf(p).getOrElse(fs.getFileStatus(p).getModificationTime)) }
-
-  /** The epoch a wall-clock instant resolves to: the LATEST retained
-    * commit whose persisted stamp is ≤ `tsMillis` — Delta/Iceberg's
-    * `TIMESTAMP AS OF` rule (a query at time T sees the table as the
-    * then-current commit served it). Stamps are the commit log's own
-    * `#ts=` headers, so a copied/restored store resolves identically —
-    * file mtimes play no part for stamped pointers. Throws when
-    * `tsMillis` predates every retained commit (vacuumed history or a
-    * before-first-commit instant) — never silently serves a newer
-    * epoch. Robust to cross-writer clock skew: the scan takes the max
-    * qualifying epoch rather than assuming stamps are monotone.
-    */
-  def epochAtTimestamp(tsMillis: Long): Long = {
-    val stamps = commitStamps()
-    require(stamps.nonEmpty, "no commits — govern tables first")
-    val at = stamps.filter(_._2 <= tsMillis)
-    require(at.nonEmpty,
-      s"no retained commit at or before ts=$tsMillis (earliest retained: " +
-        s"epoch ${stamps.head._1} at ${stamps.head._2}) — vacuumed, or a " +
-        "before-first-commit instant")
-    at.map(_._1).max
-  }
-
-  // entry filenames carry a per-store random tag so two OCC writers
-  // staging the SAME table at the same epoch can never overwrite each
-  // other's immutable log entries before the pointer flip arbitrates
-  // (the loser aborts at the flip, but its entry write must not have
-  // corrupted the winner's already-referenced list)
-  private val writerTag = java.util.UUID.randomUUID().toString.take(8)
-
   // read-side twin of activeTx: a snapshot scope pins the resolved
   // commit so every governed read inside serves ONE epoch
   private var pinnedCommit: Option[(Long, Map[String, String])] = None
@@ -1390,12 +1224,11 @@ class TableStore(val spark: SparkSession, val root: String) {
   /** Whether reads are pinned to a [[withSnapshot]] epoch. */
   private[store] def pinned: Boolean = pinnedCommit.isDefined
 
-  /** (epoch, table → list-file name) of the latest commit — or the
-    * PINNED commit inside a [[withSnapshot]] scope, if any.
+  /** (epoch, table → entry) of the latest commit — or the PINNED
+    * commit inside a [[withSnapshot]] scope, if any.
     */
   private def currentCommit: Option[(Long, Map[String, String])] =
-    pinnedCommit.orElse(
-      listCommits().lastOption.map { case (e, p) => (e, parseCommit(p)) })
+    pinnedCommit.orElse(log.latest)
 
   /** Read-side twin of [[transact]]: resolve the commit pointer ONCE
     * and serve every governed read inside `f` from that commit, so a
@@ -1416,14 +1249,14 @@ class TableStore(val spark: SparkSession, val root: String) {
     require(activeTx.isEmpty,
       "withSnapshot inside transact is redundant — a transaction " +
         "already reads its own pending state consistently")
-    pinnedCommit = listCommits().lastOption.map { case (e, p) => (e, parseCommit(p)) }
+    pinnedCommit = log.latest
     try f finally pinnedCommit = None
   }
 
-  /** The latest committed epoch, or None when nothing is governed yet
-    * — the non-throwing poll for consumers that start before the
-    * first commit (the streaming source's getOffset). Pure pointer
-    * read, no data I/O.
+  /** The latest committed epoch (the pinned one inside
+    * [[withSnapshot]]), or None when nothing is governed yet — the
+    * non-throwing poll for consumers that start before the first commit
+    * (the streaming source's getOffset). Pure pointer read, no data I/O.
     */
   def currentEpochIfAny: Option[Long] = currentCommit.map(_._1)
 
@@ -1443,11 +1276,7 @@ class TableStore(val spark: SparkSession, val root: String) {
     */
   private[store] def readResolved(
       name: String, tables: Map[String, String], epoch: Long): DataFrame = {
-    val rels = tables.get(name) match {
-      case Some(lf) => resolveEntry(lf)
-      case None => throw new IllegalArgumentException(
-        s"$name was not governed at epoch $epoch")
-    }
+    val rels = log.relsIn(name, tables, epoch)
     // an empty snapshot must NOT fall back to a directory scan — the
     // dir may hold files from OTHER epochs (retired or newer), which
     // would silently serve out-of-snapshot data. A DECLARED schema
@@ -1616,117 +1445,11 @@ class TableStore(val spark: SparkSession, val root: String) {
   def governed: Set[String] = currentCommit.map(_._2.keySet).getOrElse(Set.empty)
 
   private[store] def isGoverned(name: String): Boolean =
-    fs.exists(epochDir) && currentCommit.exists(_._2.contains(name))
-
-  // chain compaction bound: after this many delta links a commit
-  // writes a full list again, so resolution reads ≤ MaxDeltaDepth+1
-  // small files and vacuum reachability stays shallow
-  private val MaxDeltaDepth = 10
-
-  private val depthCache = scala.collection.concurrent.TrieMap[String, Int]()
-
-  /** Resolve a commit entry to its full rel-path list. `files-*`
-    * entries ARE the list; `delta-*` entries carry `base=<entry>` +
-    * `+rel`/`-rel` lines and resolve recursively — the Delta-log
-    * trick that makes a commit write O(batch) metadata instead of
-    * O(table files). Entries are immutable once written, so the
-    * resolved set caches by name across the store's lifetime.
-    */
-  private def resolveEntry(entry: String): Seq[String] =
-    listCache.getOrElseUpdate(entry, {
-      val content = readSmall(new Path(epochDir, entry))
-      if (!entry.startsWith("delta-")) {
-        depthCache(entry) = 0
-        // `#`-prefixed lines are headers (op=…); rel paths never start
-        // with `#` (partition dirs are `col=value`, part files `part-…`)
-        content.linesIterator.filter(l => l.nonEmpty && !l.startsWith("#")).toSeq
-      } else {
-        val lines = content.linesIterator.toSeq
-        val base = lines.collectFirst {
-          case l if l.startsWith("base=") => l.stripPrefix("base=")
-        }.getOrElse(throw new IllegalStateException(
-          s"delta entry $entry carries no base= header"))
-        depthCache(entry) = lines.collectFirst {
-          case l if l.startsWith("depth=") => l.stripPrefix("depth=").toInt
-        }.getOrElse(1)
-        val set = scala.collection.mutable.LinkedHashSet(resolveEntry(base): _*)
-        lines.foreach { l =>
-          if (l.startsWith("+")) set += l.substring(1)
-          else if (l.startsWith("-")) set -= l.substring(1)
-        }
-        set.toSeq
-      }
-    })
-
-  private def entryDepth(entry: String): Int = {
-    if (!depthCache.contains(entry)) resolveEntry(entry) // populates
-    depthCache(entry)
-  }
-
-  // entry → op tag, memoized like the list/depth caches (entries are
-  // immutable once written)
-  private val opCache = scala.collection.concurrent.TrieMap[String, String]()
-
-  /** The operation that produced a log entry — [[TableStore.OpUnknown]]
-    * for entries written before op stamping (treated as a logical
-    * change: never skipped).
-    */
-  private def opOf(entry: String): String =
-    opCache.getOrElseUpdate(entry, {
-      readSmall(new Path(epochDir, entry)).linesIterator.collectFirst {
-        case l if l.startsWith("#op=") => l.stripPrefix("#op=")
-        case l if entry.startsWith("delta-") && l.startsWith("op=") =>
-          l.stripPrefix("op=")
-      }.getOrElse(OpUnknown)
-    })
-
-  /** RETAINED commit history affecting `name`, oldest first: (epoch,
-    * op, n_files) of every retained commit that changed the table's
-    * file list — the `$history` metadata surface (Iceberg's snapshots
-    * table). The first retained entry counts as a change (its op is
-    * whatever produced it — earlier history may have been vacuumed).
-    * Pure metadata walk, O(retained commits).
-    */
-  def tableHistory(name: String): Seq[(Long, String, Int)] = {
-    val commits = listCommits()
-    val cmap = commits.toMap
-    var prevEntry: Option[String] = None
-    var out = Seq.newBuilder[(Long, String, Int)]
-    commits.map(_._1).sorted.foreach { e =>
-      val cur = entryAt(name, cmap, e)
-      if (cur != prevEntry) {
-        // a governance GAP (the table left the commit log — DROP, or
-        // an explicit ungovern) ends the incarnation: a re-created
-        // table of the same name starts its history fresh; the dead
-        // incarnation's epochs are not ITS history (their reads fail
-        // loudly — the files are gone)
-        if (cur.isEmpty && prevEntry.nonEmpty)
-          out = Seq.newBuilder[(Long, String, Int)]
-        cur.foreach(en => out += ((e, opOf(en), resolveEntry(en).size)))
-        prevEntry = cur
-      }
-    }
-    out.result()
-  }
-
-  /** Every log entry reachable from `entry` through base= links —
-    * what vacuum must retain for the current commit to resolve.
-    */
-  private def reachableEntries(entry: String): Set[String] = {
-    resolveEntry(entry) // ensure headers cached / base chain readable
-    if (!entry.startsWith("delta-")) Set(entry)
-    else {
-      val base = readSmall(new Path(epochDir, entry)).linesIterator
-        .collectFirst { case l if l.startsWith("base=") => l.stripPrefix("base=") }
-        .get
-      reachableEntries(base) + entry
-    }
-  }
+    fs.exists(log.dir) && currentCommit.exists(_._2.contains(name))
 
   private def committedRefs(name: String): Seq[FileRef] =
-    currentCommit.flatMap(_._2.get(name)).toSeq.flatMap { lf =>
-      resolveEntry(lf)
-        .map(r => FileRef(new Path(path(name)), r, staged = false))
+    currentCommit.flatMap(_._2.get(name)).toSeq.flatMap { en =>
+      log.rels(en).map(r => FileRef(new Path(path(name)), r, staged = false))
     }
 
   /** Post-pending live set inside a transaction, committed set outside. */
@@ -1758,18 +1481,13 @@ class TableStore(val spark: SparkSession, val root: String) {
     val (epoch, tables) = currentCommit.getOrElse((0L, Map.empty[String, String]))
     val missing = names.filterNot(tables.contains)
     if (missing.isEmpty) return
-    val next = epoch + 1
-    fs.mkdirs(epochDir)
+    fs.mkdirs(log.dir)
     val added = missing.map { n =>
       val rels =
         if (exists(n)) walkParquetRel(new Path(path(n))) else Seq.empty[String]
-      val lf = s"files-$n-$next-$writerTag"
-      writeSmall(new Path(epochDir, lf), (s"#op=$OpGovern" +: rels).mkString("\n"))
-      opCache(lf) = OpGovern
-      n -> lf
+      n -> log.writeEntry(n, epoch + 1, rels, OpGovern, prev = None)
     }
-    writePointer(next,
-      (tables ++ added).toSeq.sorted.map { case (t, lf) => s"$t\t$lf" }.mkString("\n"))
+    log.publish(epoch, tables)(_ ++ added)
   }
 
   /** Run `f` with every governed-table write STAGED, then commit them
@@ -1988,7 +1706,7 @@ class TableStore(val spark: SparkSession, val root: String) {
     val next = epoch + 1
     // pre-flip live sets, for the O(changed) stats refresh in step 4
     val committedBefore: Map[String, Set[String]] =
-      pendingNames.map(n => n -> committedRefs(n).map(_.rel).toSet).toMap
+      pendingNames.map(n => n -> log.rels(tables(n)).toSet).toMap
     // 1. move staged files into the table dirs (metadata renames;
     //    invisible to readers — nothing references them yet)
     val finalRels: Seq[(String, Seq[String])] = pending.map {
@@ -2026,82 +1744,17 @@ class TableStore(val spark: SparkSession, val root: String) {
       fs.delete(new Path(path(n), LayoutMarker), false)
       fs.delete(new Path(path(n), ZorderMarker), false)
     }
-    // 2. new log entries for CHANGED tables only; unchanged tables
-    //    re-reference their existing immutable entry. A changed table
-    //    whose delta vs its previous entry is SMALLER than its full
-    //    list writes a delta link (O(batch) commit metadata — the
-    //    Delta-log incremental form); chains compact back to a full
-    //    list every MaxDeltaDepth links so resolution stays shallow.
+    // 2. new log entries for CHANGED tables only (a delta link where
+    //    that is smaller, [[CommitLog.writeEntry]]); unchanged tables
+    //    re-reference their existing immutable entry, stamped with WHY
+    //    the table changed
     val ourEntries = finalRels.map { case (n, rels) =>
-      // WHY this table changed, stamped into the entry so incremental
-      // scans can skip rewrite-only commits without reading any data
-      val op = tx.stagedOp(n)
-      def writeFull(): String = {
-        val lf = s"files-$n-$next-$writerTag"
-        writeSmall(new Path(epochDir, lf),
-          (s"#op=$op" +: rels).mkString("\n"))
-        lf
-      }
-      val entry = tables.get(n) match {
-        case Some(prev) if entryDepth(prev) < MaxDeltaDepth =>
-          val old = committedBefore.getOrElse(n, resolveEntry(prev).toSet)
-          val newSet = rels.toSet
-          val adds = rels.filterNot(old)
-          val dels = (old -- newSet).toSeq.sorted
-          if (adds.size + dels.size < rels.size) {
-            val df = s"delta-$n-$next-$writerTag"
-            writeSmall(new Path(epochDir, df),
-              (s"base=$prev" +: s"depth=${entryDepth(prev) + 1}" +:
-                s"op=$op" +: (adds.map("+" + _) ++ dels.map("-" + _)))
-                .mkString("\n"))
-            depthCache(df) = entryDepth(prev) + 1
-            df
-          } else writeFull()
-        case _ => writeFull()
-      }
-      // entries are immutable — memoize the set (and op) we just wrote
-      listCache(entry) = rels
-      opCache(entry) = op
-      if (!entry.startsWith("delta-")) depthCache(entry) = 0
-      n -> entry
+      n -> log.writeEntry(n, next, rels, tx.stagedOp(n), tables.get(n))
     }
-    // 3. THE atomic step: tmp-write + rename to one fresh pointer
-    //    file; readers resolve the max epoch, so visibility flips for
-    //    every table at once and a truncated pointer can never appear.
-    //    On a pointer COLLISION (a concurrent writer committed this
-    //    epoch first) the Delta/Iceberg OCC rule applies: re-resolve
-    //    the current commit and re-flip at the next epoch iff the
-    //    interleaved commits touched only tables DISJOINT from this
-    //    transaction's — our staged entries and moved files stay valid
-    //    verbatim (delta bases reference per-table entries the
-    //    interleaver did not change). Overlap aborts loudly: merging
-    //    two writers' divergent file lists for one table would be a
-    //    lost update, exactly what the pointer exists to prevent.
-    var base = tables
-    var attempt = next
-    var flipped = false
-    while (!flipped) {
-      val content = (base ++ ourEntries).toSeq.sorted
-        .map { case (t, lf) => s"$t\t$lf" }.mkString("\n")
-      if (tryWritePointer(attempt, content)) flipped = true
-      else {
-        val (curEpoch, curTables) = currentCommit.getOrElse(
-          throw new IllegalStateException(
-            s"commit-$attempt exists but no commit resolves — corrupt log?"))
-        val changed = (curTables.keySet ++ base.keySet)
-          .filter(t => curTables.get(t) != base.get(t))
-        val overlap = changed.intersect(pendingNames)
-        if (overlap.nonEmpty)
-          throw new TableStore.OccOverlapException(
-            s"concurrent commit(s) changed ${overlap.toSeq.sorted.mkString(", ")} " +
-              "while this transaction also staged them — rebase is only " +
-              "safe for disjoint table sets; re-read and retry the batch " +
-              "(or commit through transactWithRetry for bounded " +
-              "automatic retry of an idempotent batch)")
-        base = curTables
-        attempt = curEpoch + 1
-      }
-    }
+    // 3. THE atomic step: one pointer publish flips every table at
+    //    once; a concurrent commit of disjoint tables is rebased over,
+    //    one that changed a staged table aborts the transaction
+    log.publish(epoch, tables, rebaseUnless = Some(pendingNames))(_ ++ ourEntries)
     afterCommitFlip()
     // 4. keep the stats manifests of changed tables fresh (the Doctor
     //    invariant) at O(changed files)
@@ -2115,19 +1768,6 @@ class TableStore(val spark: SparkSession, val root: String) {
     tx.stagingDirs.foreach(p => if (fs.exists(p)) fs.delete(p, true))
   }
 
-  /** Retained commit epochs, oldest first ([[vacuumEpochs]] prunes all
-    * but the latest).
-    */
-  def epochs(): Seq[Long] = listCommits().map(_._1)
-
-  /** Whether `name` was governed in the retained commit at `epoch` —
-    * pure pointer metadata. Single-probe convenience over
-    * [[tablesAt]] (which the DROP/PURGE pin loop uses directly — one
-    * pointer resolution per tag instead of one per doomed table).
-    */
-  def governedAt(name: String, epoch: Long): Boolean =
-    tablesAt(epoch).contains(name)
-
   /** Snapshot read — the governed table AS OF `epoch`, the time-travel
     * dividend the pointer log pays for free (Delta's `versionAsOf`):
     * resolve THAT epoch's pointer instead of the latest and read its
@@ -2137,151 +1777,14 @@ class TableStore(val spark: SparkSession, val root: String) {
     * from that commit) reads as empty-of-files, i.e. fails like an
     * empty dir — it did not exist in that snapshot.
     */
-  def readEpoch(name: String, epoch: Long): DataFrame = {
-    val commits = listCommits()
-    val p = commits.collectFirst { case (e, path) if e == epoch => path }
-      .getOrElse(throw new IllegalArgumentException(
-        s"no retained commit for epoch $epoch " +
-          s"(retained: ${commits.map(_._1).mkString(", ")}) — vacuumed?"))
-    readResolved(name, parseCommit(p), epoch)
-  }
-
-  /** The table's log entry at epoch `e`, or None if the table was not
-    * governed in that commit.
-    */
-  private def entryAt(
-      name: String, commits: Map[Long, Path], e: Long): Option[String] =
-    commits.get(e).flatMap(p => parseCommit(p).get(name))
-
-  /** The subset of `names` holding data files at SOME retained commit
-    * in `[a, b]` — pure pointer metadata, ONE commit-log listing for
-    * the whole probe (a per-name form would re-list the directory per
-    * member per micro-batch; on object stores every listing is a
-    * billed round-trip). The guard multi-table appends consumers
-    * need: a governed-but-EMPTY member (SQL CREATE/CTAS before any
-    * insert) has no schema [[readAddedSince]] could serve — callers
-    * that already know the union schema skip such members instead of
-    * crashing every window on the empty one. The probe checks the two
-    * ENDPOINTS first (the common case short-circuits in two lookups)
-    * but must also walk the retained interior for endpoint-empty
-    * members: an insert → rewrite → delete-all sequence inside one
-    * window is empty at both endpoints yet [[readAddedSince]]'s
-    * rewrite-aware walk still owes its added files (the at-least-once
-    * appends contract) — an endpoints-only skip would silently drop
-    * them. Interior commits vacuumed away probe as absent, matching
-    * what the walk itself could deliver.
-    */
-  def withFilesInWindow(names: Seq[String], a: Long, b: Long): Set[String] = {
-    val commits = listCommits().toMap
-    def has(n: String, e: Long): Boolean =
-      entryAt(n, commits, e).exists(resolveEntry(_).nonEmpty)
-    // iterate the RETAINED commit keys, not the numeric epoch range —
-    // a wide catch-up window (fromEpoch=0 on a long-lived store) must
-    // cost O(retained commits), not O(epochs)
-    lazy val interior =
-      commits.keysIterator.filter(e => e > a && e < b).toSeq
-    names.filter(n =>
-      has(n, a) || has(n, b) || interior.exists(has(n, _))).toSet
-  }
-
-  /** Table names governed in the retained commit at `epoch` (empty
-    * when the commit is not retained) — pure pointer metadata; the
-    * PURGE tag guard resolves "what else does this tag pin" through
-    * it.
-    */
-  def tablesAt(epoch: Long): Set[String] =
-    listCommits().collectFirst { case (e, p) if e == epoch =>
-      parseCommit(p).keySet }.getOrElse(Set.empty)
-
-  private def relsAtRequired(
-      name: String, commits: Map[Long, Path], e: Long): Set[String] = {
-    val p = commits.getOrElse(e, throw new IllegalArgumentException(
-      s"no retained commit for epoch $e " +
-        s"(retained: ${commits.keys.toSeq.sorted.mkString(", ")}) — vacuumed?"))
-    parseCommit(p).get(name) match {
-      case Some(lf) => resolveEntry(lf).toSet
-      case None => throw new IllegalArgumentException(
-        s"$name was not governed at epoch $e")
-    }
-  }
-
-  /** The (epoch, op) history of commits that CHANGED `name`'s file
-    * list in `(fromEpoch, toEpoch]` — None when any intermediate
-    * commit was vacuumed (epochs are consecutive, so a gap in the
-    * retained set is detectable) or the table was ungoverned at some
-    * step, in which case only the endpoint-diff is computable.
-    */
-  def commitOps(
-      name: String, fromEpoch: Long, toEpoch: Long): Option[Seq[(Long, String)]] = {
-    val commits = listCommits().toMap
-    val epochs = (fromEpoch to toEpoch)
-    if (!epochs.forall(commits.contains)) None
-    else {
-      val entries = epochs.map(e => entryAt(name, commits, e))
-      if (entries.exists(_.isEmpty)) None
-      else Some(epochs.zip(entries.map(_.get)).sliding(2).collect {
-        case Seq((_, prev), (e, cur)) if cur != prev => (e, opOf(cur))
-      }.toSeq)
-    }
-  }
-
-  /** Rel paths of the files an incremental consumer must read to catch
-    * up from `fromEpoch` to `toEpoch` — the file-level diff behind
-    * [[readAddedSince]], REWRITE-AWARE when the intermediate commit
-    * history is still retained: the walk accumulates each step's added
-    * files, skips steps whose op is rewrite-only (compact / z-order /
-    * bucketize — no logical rows changed, Iceberg's REPLACE-snapshot
-    * rule), and drops files a later non-rewrite step removed (their
-    * surviving rows ride that step's own adds). When any intermediate
-    * commit was vacuumed the walk falls back to the coarse endpoint
-    * diff (`rels(to) -- rels(from)`) — correct, but a compaction in
-    * the gap then redelivers the table, so size the vacuum retention
-    * window to cover consumer lag.
-    */
-  private[store] def addedRelsSince(
-      name: String, fromEpoch: Long, toEpoch: Long): Seq[String] = {
-    require(fromEpoch <= toEpoch,
-      s"fromEpoch $fromEpoch > toEpoch $toEpoch")
-    val commits = listCommits().toMap
-    // endpoint validation happens unconditionally (retained + governed)
-    val fromSet = relsAtRequired(name, commits, fromEpoch)
-    val toSet = relsAtRequired(name, commits, toEpoch)
-    val stepEpochs = ((fromEpoch + 1) to toEpoch)
-    val walkable = stepEpochs.forall(e =>
-      entryAt(name, commits, e).isDefined) &&
-      entryAt(name, commits, fromEpoch).isDefined
-    if (!walkable) (toSet -- fromSet).toSeq.sorted
-    else {
-      val acc = scala.collection.mutable.LinkedHashSet[String]()
-      var prevEntry = entryAt(name, commits, fromEpoch).get
-      var prevSet = fromSet
-      stepEpochs.foreach { e =>
-        val entry = entryAt(name, commits, e).get
-        if (entry != prevEntry) {
-          val cur = resolveEntry(entry).toSet
-          if (!RewriteOps(opOf(entry))) {
-            // a non-rewrite step supersedes what it removed: rows that
-            // survive ride its adds, removed-and-gone rows must not be
-            // redelivered as stale images
-            acc --= (prevSet -- cur)
-            acc ++= (cur -- prevSet)
-          }
-          // rewrite step: content is row-identical — neither its adds
-          // nor its removals change what the consumer must see; files
-          // accumulated earlier stay on disk (their commit is retained)
-          prevSet = cur
-          prevEntry = entry
-        }
-      }
-      acc.toSeq
-    }
-  }
+  def readEpoch(name: String, epoch: Long): DataFrame =
+    readResolved(name, log.retainedAt(log.list(), epoch), epoch)
 
   /** INCREMENTAL scan between two retained epochs (Iceberg's
     * incremental-read semantics): the rows a downstream job must
     * process to catch up from one dataset version to the next without
     * rescanning the table. The file list comes from
-    * [[addedRelsSince]], so REWRITE-ONLY commits (compact / z-order /
+    * [[CommitLog.addedRelsSince]], so REWRITE-ONLY commits (compact / z-order /
     * bucketize) deliver NOTHING when the intermediate history is
     * retained — a routine compaction no longer redelivers the table.
     * Exact for append-shaped history; a file REWRITTEN by an upsert
@@ -2303,21 +1806,19 @@ class TableStore(val spark: SparkSession, val root: String) {
     */
   def readAddedSince(
       name: String, fromEpoch: Long, toEpoch: Long): DataFrame = {
-    val added = addedRelsSince(name, fromEpoch, toEpoch)
-    def relsAt(e: Long): Set[String] =
-      entryAt(name, listCommits().toMap, e).map(resolveEntry(_).toSet)
-        .getOrElse(Set.empty)
+    val added = log.addedRelsSince(name, fromEpoch, toEpoch)
+    def hasFiles(e: Long): Boolean = log.withFilesInWindow(Seq(name), e, e).nonEmpty
     if (added.nonEmpty) readAdded(name, added)
     // empty diff: serve an empty frame with the table's schema from
     // whichever endpoint still has files (readEpoch refuses empty
     // snapshots — correctly — so pick a non-empty one)
-    else if (relsAt(toEpoch).nonEmpty) readEpoch(name, toEpoch).limit(0)
-    else if (relsAt(fromEpoch).nonEmpty) readEpoch(name, fromEpoch).limit(0)
+    else if (hasFiles(toEpoch)) readEpoch(name, toEpoch).limit(0)
+    else if (hasFiles(fromEpoch)) readEpoch(name, fromEpoch).limit(0)
     else throw new IllegalStateException(
       s"$name holds no files at either epoch — no schema to serve")
   }
 
-  /** The non-empty file list [[addedRelsSince]] walked, read as one
+  /** The non-empty file list [[CommitLog.addedRelsSince]] walked, read as one
     * frame — split out so a caller that already walked the window
     * (the appends segments of [[ChangeWindow]]) reads without a
     * second walk. mergeSchema: the delivered files can come from
@@ -2397,9 +1898,9 @@ class TableStore(val spark: SparkSession, val root: String) {
     require(fromEpoch <= toEpoch,
       s"fromEpoch $fromEpoch > toEpoch $toEpoch")
     import org.apache.spark.sql.functions.{col, lit, xxhash64}
-    val commits = listCommits().toMap
-    val fromSet = relsAtRequired(name, commits, fromEpoch)
-    val toSet = relsAtRequired(name, commits, toEpoch)
+    val commits = log.list()
+    val fromSet = log.relsAt(commits, name, fromEpoch)
+    val toSet = log.relsAt(commits, name, toEpoch)
     val schemaSource =
       if (toSet.nonEmpty) readEpoch(name, toEpoch)
       else readEpoch(name, fromEpoch)
@@ -2408,7 +1909,7 @@ class TableStore(val spark: SparkSession, val root: String) {
     val empty = schemaSource.limit(0)
       .withColumn(ChangeTypeCol, lit("insert"))
     // rewrite-only window: provably no logical change, zero data I/O
-    val ops = commitOps(name, fromEpoch, toEpoch)
+    val ops = log.commitOps(name, fromEpoch, toEpoch)
     if (ops.exists(_.forall { case (_, op) => RewriteOps(op) })) return empty
     val added = (toSet -- fromSet).toSeq.sorted
     val removed = (fromSet -- toSet).toSeq.sorted
@@ -2450,95 +1951,14 @@ class TableStore(val spark: SparkSession, val root: String) {
     inserts.unionByName(deletes)
   }
 
-  // -------------------------------------------------------------------
-  // Named epoch tags — Iceberg-style refs for dataset releases: a tag
-  // pins a commit ("the exact corpus that trained model X") as a
-  // VACUUM ROOT, so every file and log entry it references survives
-  // any retention window until the tag is dropped, and readTag
-  // resolves reads through it by name. This is the reproducibility
-  // primitive a training-data release ships with: contentFingerprint
-  // proves WHAT the release holds, the tag guarantees it stays
-  // readable.
-
-  private def tagPath(tag: String) = new Path(epochDir, s"tag-$tag")
-
-  /** Pin `epoch` (default: the current commit) under a name.
-    * Re-tagging an existing name re-points it (Iceberg's replace-tag
-    * form). Returns the pinned epoch.
+  /** Read a governed table as of a tag ([[CommitLog.tagEpoch]]) —
+    * [[readEpoch]] by name.
     */
-  def tagEpoch(tag: String, epoch: Option[Long] = None): Long = {
-    require(tag.nonEmpty && tag.matches("[A-Za-z0-9._-]+"),
-      s"tag names are [A-Za-z0-9._-]+: '$tag'")
-    val commits = listCommits()
-    require(commits.nonEmpty, "no commits to tag — govern tables first")
-    val e = epoch.getOrElse(commits.last._1)
-    require(commits.exists(_._1 == e),
-      s"no retained commit for epoch $e " +
-        s"(retained: ${commits.map(_._1).mkString(", ")})")
-    writeSmall(tagPath(tag), e.toString)
-    e
-  }
-
-  /** All tags: name → pinned epoch. */
-  def tags(): Map[String, Long] =
-    if (!fs.exists(epochDir)) Map.empty
-    else fs.listStatus(epochDir).map(_.getPath)
-      .filter(_.getName.startsWith("tag-"))
-      .map(p => p.getName.stripPrefix("tag-") -> readSmall(p).trim.toLong)
-      .toMap
-
-  /** Drop a tag — its epoch becomes reclaimable by the next vacuum
-    * (unless otherwise retained).
-    */
-  def dropTag(tag: String): Unit = fs.delete(tagPath(tag), false)
-
-  /** Read a governed table as of a tag — [[readEpoch]] by name. */
   def readTag(name: String, tag: String): DataFrame = {
-    val t = tags()
+    val t = log.tags()
     val e = t.getOrElse(tag, throw new IllegalArgumentException(
       s"no such tag: $tag (tags: ${t.keys.toSeq.sorted.mkString(", ")})"))
     readEpoch(name, e)
-  }
-
-  // -------------------------------------------------------------------
-  // Numbered snapshot files: small store bookkeeping state that readers
-  // must never see half-replaced (the consumer cursors of
-  // [[EpochFollower]]) lives as `<root>/<dir>/<prefix><n>`, each file
-  // immutable once published and the highest `n` current. A write
-  // publishes n+1 through the commit pointer's put-if-absent and never
-  // touches n, so a read resolves ONE immutable file.
-
-  /** The published snapshots under `dir`, oldest first: (n, file). */
-  private[store] def snapshots(dir: String, prefix: String): Seq[(Long, FileStatus)] = {
-    val d = new Path(root, dir)
-    if (!fs.exists(d)) Nil
-    else fs.listStatus(d).toSeq
-      .filter(st => st.isFile && st.getPath.getName.startsWith(prefix))
-      .map(st => st.getPath.getName.stripPrefix(prefix).toLong -> st)
-      .sortBy(_._1)
-  }
-
-  private[store] def readSnapshot(st: FileStatus): String = readSmall(st.getPath)
-
-  /** Publish `content` as snapshot `n` under `dir` iff no writer
-    * published `n` first ([[atomicPointerPut]]); false = lost the race,
-    * re-read and retry. A snapshot is deleted once its successor is
-    * older than `retainMs` — a reader resolves and opens the newest
-    * file within microseconds, so it never opens a deleted one.
-    */
-  private[store] def publishSnapshot(
-      dir: String, prefix: String, n: Long, content: String, retainMs: Long): Boolean = {
-    val dst = new Path(new Path(root, dir), f"$prefix$n%020d")
-    val tmp = new Path(dst.getParent, s".tmp-${dst.getName}-$writerTag")
-    writeSmall(tmp, content)
-    val won = atomicPointerPut(tmp, dst)
-    if (won) {
-      val cutoff = System.currentTimeMillis() - retainMs
-      snapshots(dir, prefix).sliding(2).collect {
-        case Seq((_, old), (_, next)) if next.getModificationTime <= cutoff => old.getPath
-      }.foreach(fs.delete(_, false))
-    }
-    won
   }
 
   /** Data files on disk that the current commit does NOT reference —
@@ -2588,8 +2008,8 @@ class TableStore(val spark: SparkSession, val root: String) {
     * it references, so an in-flight reader that planned on it
     * finishes its scan and [[readEpoch]] time-travels to it. A
     * pointer is "current" until its SUCCESSOR lands, so retention
-    * keys on the successor pointer's PERSISTED `#ts=` stamp (its
-    * mtime only for legacy pointers written before stamping) — file
+    * ([[CommitLog.retention]]) keys on the successor pointer's
+    * PERSISTED stamp (its mtime only for legacy pointers) — file
     * mtimes are the wrong signal twice over: a file retired five
     * minutes ago may have been WRITTEN days ago, and an rsync/copy/
     * restore rewrites every mtime while the stamps ride the bytes.
@@ -2604,77 +2024,28 @@ class TableStore(val spark: SparkSession, val root: String) {
   def vacuumEpochs(minAgeMs: Long = 0L): Unit = {
     require(activeTx.isEmpty, "cannot vacuum inside a transaction")
     require(pinnedCommit.isEmpty, "cannot vacuum inside withSnapshot")
-    val commits = listCommits()
+    val commits = log.list()
     if (commits.isEmpty) return
     val cutoff = System.currentTimeMillis() - minAgeMs
-    val stamps = commits.map { case (_, p) =>
-      commitTsOf(p).getOrElse(fs.getFileStatus(p).getModificationTime) }
-    // commits(i) was current during [stamp(i), stamp(i+1)): retained
-    // iff that interval touches the window — successor younger than
-    // the cutoff — or it IS the latest, or a TAG or a registered
-    // CONSUMER CURSOR pins it (both are vacuum roots: a named release
-    // must stay readable until dropped, and a lagging incremental
-    // consumer must keep its diff base until it catches up or is
-    // unregistered). Stamps are the pointers' persisted `#ts=`
-    // headers (mtime only for legacy pointers), so retention survives
-    // an mtime-rewriting copy/restore.
-    val pinnedEpochs = tags().values.toSet ++
-      EpochFollower.cursors(this).values.toSet
-    val (retained, dropped) = commits.zipWithIndex.partition { case ((e, _), i) =>
-      i == commits.size - 1 || stamps(i + 1) > cutoff || pinnedEpochs(e)
-    }
-    val retainedTables = retained.map { case ((_, p), _) => parseCommit(p) }
+    val kept = log.retention(commits, cutoff).collect { case (e, _, true) => e }
+    val keptTables = kept.map(e => log.tables(commits(e)))
     // live rel-paths per CURRENTLY governed table across ALL retained
     // commits (an ex-governed table's directory is plain data now —
     // never sweep it); unreferenced files older than the cutoff go
-    val current = retainedTables.last
-    current.keys.foreach { n =>
-      val live = retainedTables.flatMap(_.get(n)).distinct
-        .flatMap(resolveEntry).toSet
+    keptTables.last.keys.foreach { n =>
+      val live = keptTables.flatMap(_.get(n)).distinct.flatMap(log.rels).toSet
       walkParquetRel(new Path(path(n))).filterNot(live)
         .map(r => new Path(path(n), r))
         .filter(p => fs.getFileStatus(p).getModificationTime <= cutoff)
         .foreach(p => fs.delete(p, false))
       deleteEmptyDirs(new Path(path(n)))
     }
-    dropped.foreach { case ((_, p), _) => fs.delete(p, false) }
-    // retain every log entry ANY retained commit's chains reach
-    // (delta entries resolve through their base= links); everything
-    // else — superseded lists, dead chains — goes
-    val liveEntries =
-      retainedTables.flatMap(_.values).toSet.flatMap(reachableEntries)
-    fs.listStatus(epochDir).map(_.getPath)
-      .filter(p => (p.getName.startsWith("files-") ||
-        p.getName.startsWith("delta-")) && !liveEntries(p.getName))
-      .foreach(p => fs.delete(p, false))
-    // crash leftovers: unflipped pointer tmp files past the window
-    // (younger ones may be a concurrent writer's in-flight flip)
-    fs.listStatus(epochDir).map(_.getPath)
-      .filter(_.getName.startsWith(".tmp-"))
-      .filter(p => fs.getFileStatus(p).getModificationTime <= cutoff)
-      .foreach(p => fs.delete(p, false))
+    log.prune(commits, kept.toSet, cutoff)
     if (fs.exists(stageRoot))
       fs.listStatus(stageRoot)
         .filter(_.getModificationTime <= cutoff)
         .foreach(st => fs.delete(st.getPath, true))
-    // bound the driver-side metadata caches (the unbounded-growth
-    // fix): drop every memoized commit/list/depth entry no retained
-    // commit reaches — on a long-lived high-commit-rate writer these
-    // otherwise accrete one full file list per historical entry
-    val keepCommits = retained.map { case ((_, p), _) => p.getName }.toSet
-    commitCache.filterInPlace((k, _) => keepCommits(k))
-    tsCache.filterInPlace((k, _) => keepCommits(k))
-    listCache.filterInPlace((k, _) => liveEntries(k))
-    depthCache.filterInPlace((k, _) => liveEntries(k))
-    opCache.filterInPlace((k, _) => liveEntries(k))
   }
-
-  /** Test-only size probe for the epoch metadata caches — the
-    * cache-bounding spec asserts O(live entries) across N
-    * commit+vacuum cycles. (commitCache, listCache, depthCache).
-    */
-  private[graft] def metadataCacheSizes: (Int, Int, Int) =
-    (commitCache.size, listCache.size, depthCache.size)
 
   /** Remove empty subdirectories left behind by file-level vacuum —
     * a stale `col=value` shell would otherwise confuse partition-
@@ -2711,7 +2082,7 @@ final class Snapshot private[store] (
 
 object TableStore {
 
-  // Operation types stamped into commit-log entries — WHY a table's
+  // Operation types stamped into the log's entries — WHY a table's
   // file list changed, not just how. Rewrite-only ops ([[RewriteOps]])
   // change no logical rows, so incremental consumers skip them
   // (Iceberg's REPLACE-snapshot rule for changelog scans).

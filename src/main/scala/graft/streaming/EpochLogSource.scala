@@ -142,7 +142,7 @@ class EpochLogSource(
     */
   private val latestBase: Option[Long] = startingTimestamp match {
     case Some(ts) =>
-      val before = store.commitStamps().filter(_._2 < ts)
+      val before = store.log.commitStamps().filter(_._2 < ts)
       if (before.isEmpty) None else Some(before.map(_._1).max)
     case None => startingEpoch match {
       case Some("latest") => Some(currentEpoch().getOrElse(0L))

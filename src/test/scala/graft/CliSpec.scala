@@ -152,18 +152,18 @@ class CliSpec extends SparkSpec {
     cli("lsh-index", dir, "docs", "pk", "text")
     cli("lsh-pairs-filtered", dir, "docs", "1,2,3", "0")
     cli("epochs", dir)
-    cli("show-epoch", dir, "docs", store.epochs().head.toString, "3")
-    cli("diff-epochs", dir, "docs", store.epochs().head.toString,
-      store.epochs().last.toString)
+    cli("show-epoch", dir, "docs", store.log.epochs().head.toString, "3")
+    cli("diff-epochs", dir, "docs", store.log.epochs().head.toString,
+      store.log.epochs().last.toString)
     cli("consume", dir, "docs", "ops", "3")
     assert(graft.store.EpochFollower.cursor(store, "docs", "ops").nonEmpty)
     cli("consume", dir, "docs", "ops", "3") // current: no-op
     cli("drop-consumer", dir, "docs", "ops")
     assert(graft.store.EpochFollower.cursor(store, "docs", "ops").isEmpty)
     // round-11 commit-log verbs: op history, row-level changes, CDC consume
-    cli("history", dir, "docs", store.epochs().head.toString)
-    cli("changes", dir, "docs", store.epochs().head.toString,
-      store.epochs().last.toString, "pk")
+    cli("history", dir, "docs", store.log.epochs().head.toString)
+    cli("changes", dir, "docs", store.log.epochs().head.toString,
+      store.log.epochs().last.toString, "pk")
     cli("consume-changes", dir, "docs", "cdc", "pk", "3")
     assert(graft.store.EpochFollower.cursor(store, "docs", "cdc").nonEmpty)
     cli("consume-changes", dir, "docs", "cdc", "pk", "3") // current: no-op
@@ -196,14 +196,14 @@ class CliSpec extends SparkSpec {
     // named release: tag, list, read-by-tag, drop — vacuum-root
     // semantics are pinned in SnapshotOccSpec; here the dispatch
     cli("tag", dir, "release-v1")
-    assert(store.tags().contains("release-v1"))
+    assert(store.log.tags().contains("release-v1"))
     cli("release", dir, "corpus-2026-08")
-    assert(store.tags().contains("corpus-2026-08"))
+    assert(store.log.tags().contains("corpus-2026-08"))
     cli("tags", dir)
     cli("show-tag", dir, "docs", "release-v1", "3")
     cli("drop-tag", dir, "release-v1")
     cli("drop-tag", dir, "corpus-2026-08")
-    assert(store.tags() === Map.empty)
+    assert(store.log.tags() === Map.empty)
     assert(Doctor.check(store) === Seq.empty)
   }
 
@@ -240,15 +240,15 @@ class CliSpec extends SparkSpec {
     // vacuum with a retention window keeps the superseded epoch
     // readable for in-flight readers; age-0 reclaims it
     cli("govern", dir, "vectors")
-    val e1 = store.epochs().last
+    val e1 = store.log.epochs().last
     store.upsert("vectors",
       Seq((999L, (0 until dims).map(_ => 0.1))).toDF("vec_id", "e"),
       Seq("vec_id"))
     cli("vacuum-epochs", dir, "60")
-    assert(store.epochs().contains(e1),
+    assert(store.log.epochs().contains(e1),
       "retention window failed to keep the superseded epoch")
     cli("vacuum-epochs", dir)
-    assert(store.epochs() === Seq(e1 + 1))
+    assert(store.log.epochs() === Seq(e1 + 1))
   }
 
   test("an unknown verb fails loudly instead of doing nothing") {
@@ -266,7 +266,7 @@ class CliSpec extends SparkSpec {
     assert(store.read("corpus_release").columns.toSet ===
       Set("doc_id", "source", "text", "n_tokens"))
     // the release is pinned: the tag re-serves the exact rows
-    assert(store.tags().contains("rel-1"))
+    assert(store.log.tags().contains("rel-1"))
     assert(store.readTag("corpus_release", "rel-1").count() === n)
     val (fpRows, _) = store.contentFingerprint("corpus_release")
     assert(fpRows === n)
@@ -277,7 +277,7 @@ class CliSpec extends SparkSpec {
       .count() === 0L)
     // a second release under a new name pins its own epoch
     cli("build-corpus", dir, "/root/testdata/sf0.001", "rel-2", "400")
-    assert(Set("rel-1", "rel-2").subsetOf(store.tags().keySet))
+    assert(Set("rel-1", "rel-2").subsetOf(store.log.tags().keySet))
     assert(store.readTag("corpus_release", "rel-1").count() === n)
   }
 

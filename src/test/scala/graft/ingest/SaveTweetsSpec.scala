@@ -351,11 +351,11 @@ class SaveTweetsSpec extends SparkSpec {
     assert(computed.value === 3L)
     assert(store.read("tweets").count() === 5L)
 
-    val epochs = store.epochs()
+    val epochs = store.log.epochs()
     val (keepalives, _) = counted(Seq("""{"limit": {"track": 5}}""",
       """{"delete": {"status": {"id": 1}}}"""), 2, TwitterSchemas.streamTweet(2))
     StreamNormalize.writeBatch(store, keepalives)
-    assert(store.epochs() === epochs)
+    assert(store.log.epochs() === epochs)
     assert(store.read("tweets").count() === 5L)
   }
 

@@ -61,14 +61,14 @@ class TweetSinkSpec extends SparkSpec {
       assert(reader.readIfExists(t).forall(_.isEmpty), s"$t has rows of the aborted batch")
     }
     // redelivery lands every table in one epoch
-    val before = reader.epochs()
+    val before = reader.log.epochs()
     TweetSink(store, tables, Some(Now))
-    val after = reader.epochs()
+    val after = reader.log.epochs()
     assert(after.size === before.size + 1)
     Seq("tweets" -> 5L, "users" -> 3L, "sources" -> 4L, "media" -> 1L,
       "media_tweets" -> 1L, "count_history" -> 9L).foreach { case (t, n) =>
         assert(reader.read(t).count() === n, t)
-        assert(reader.tableHistory(t).last._1 === after.last, t)
+        assert(reader.log.tableHistory(t).last._1 === after.last, t)
       }
   }
 
@@ -94,13 +94,13 @@ class TweetSinkSpec extends SparkSpec {
       ordered.upsert("media_tweets", page2("media_tweets"), Seq("media_id", "tweets_id"))
       ordered.upsert("favorited_by", page2("favorited_by"), Seq("user", "tweet"))
     }
-    assert(concurrent.epochs().size === ordered.epochs().size)
+    assert(concurrent.log.epochs().size === ordered.log.epochs().size)
     TweetSink.Tables.foreach { t =>
       val (a, b) = (concurrent.read(t), ordered.read(t))
       assert(a.schema === b.schema, t)
       assert(a.collect().map(_.toString).sorted === b.collect().map(_.toString).sorted, t)
       // same ops and file counts per epoch
-      assert(concurrent.tableHistory(t) === ordered.tableHistory(t), t)
+      assert(concurrent.log.tableHistory(t) === ordered.log.tableHistory(t), t)
     }
     assert(concurrent.read("tweets").count() === 8)
   }
@@ -145,7 +145,7 @@ class TweetSinkSpec extends SparkSpec {
       assert(failure.get != null, "the cancelled commit succeeded")
       assert(stageDirsLeft(cancelled).isEmpty)
       val reader = new TableStore(spark, cancelled.root)
-      assert(reader.epochs().size === 1) // the governance commit only
+      assert(reader.log.epochs().size === 1) // the governance commit only
       TweetSink.Tables.foreach(t => assert(reader.readIfExists(t).forall(_.isEmpty), t))
       TweetSink(cancelled, tables, Some(Now))
       assert(reader.read("tweets").count() === 5)

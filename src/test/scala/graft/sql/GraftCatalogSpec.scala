@@ -80,7 +80,7 @@ class GraftCatalogSpec extends SparkSpec {
     assert(rowsAt("") === Set((2L, "b2"), (3L, "c")))
 
     // a TAG is a named epoch — usable wherever a version goes
-    store.tagEpoch("tt-rel", Some(e1))
+    store.log.tagEpoch("tt-rel", Some(e1))
     assert(rowsAt("VERSION AS OF 'tt-rel'") === Set((1L, "a"), (2L, "b")),
       "tag-name time travel must resolve through the release tags")
   }
@@ -140,7 +140,7 @@ class GraftCatalogSpec extends SparkSpec {
     store.upsert("m", Seq((1L, "a"), (2L, "b")).toDF("id", "v"), Seq("id"))
     store.compact("m")
     FileManifest.build(store, "m") // opt into the manifest-backed $files
-    store.tagEpoch("m-release")
+    store.log.tagEpoch("m-release")
     graft.store.EpochFollower.consumeNew(store, "m", "meta-spec")(_ => ())
 
     val hist = spark.sql(
@@ -215,8 +215,8 @@ class GraftCatalogSpec extends SparkSpec {
     assert(mid.nonEmpty && mid.forall(_ == "insert"))
 
     // the release-diff form: tags name the window's endpoints
-    store.tagEpoch("diff-a", Some(e1))
-    store.tagEpoch("diff-b", Some(e1 + 1))
+    store.log.tagEpoch("diff-a", Some(e1))
+    store.log.tagEpoch("diff-b", Some(e1 + 1))
     val byTag = spark.read.format("graft-changes")
       .option("root", root).option("table", "c").option("pk", "id")
       .option("fromTag", "diff-a").option("toTag", "diff-b")
@@ -266,7 +266,7 @@ class GraftCatalogSpec extends SparkSpec {
     val e1 = store.snapshot().epoch
     Thread.sleep(15) // stamps are millis — force distinct ones
     store.upsert("t", Seq((1L, "b")).toDF("id", "v"), Seq("id"))
-    val stamps = store.commitStamps().toMap
+    val stamps = store.log.commitStamps().toMap
     assert(stamps(e1) < stamps(e1 + 1), "commit stamps must be distinct here")
 
     def vAt(clause: String): String =
@@ -306,7 +306,7 @@ class GraftCatalogSpec extends SparkSpec {
     (1 to 3).foreach { i =>
       store.upsert("t", Seq((i.toLong, s"v$i")).toDF("id", "v"), Seq("id"))
     }
-    val epochs = store.epochs()
+    val epochs = store.log.epochs()
     // tamper every pointer mtime to the distant past: mtime-keyed
     // retention would now reclaim everything but the latest commit
     val epochDir = java.nio.file.Paths.get(root, "_graft_epoch")
@@ -316,7 +316,7 @@ class GraftCatalogSpec extends SparkSpec {
           java.nio.file.attribute.FileTime.fromMillis(1000L))
     }
     store.vacuumEpochs(minAgeMs = 3600L * 1000L)
-    assert(store.epochs() === epochs,
+    assert(store.log.epochs() === epochs,
       "retention used mtimes — fresh-stamped commits were reclaimed")
 
     // legacy pointer (pre-stamping): strip the #ts= header in place and
@@ -336,7 +336,7 @@ class GraftCatalogSpec extends SparkSpec {
     java.nio.file.Files.setLastModifiedTime(oldest,
       java.nio.file.attribute.FileTime.fromMillis(12345L))
     val fresh = new TableStore(spark, root)
-    assert(fresh.commitStamps().toMap.apply(epochs.head) === 12345L,
+    assert(fresh.log.commitStamps().toMap.apply(epochs.head) === 12345L,
       "legacy pointer must fall back to its mtime")
   }
 
@@ -353,7 +353,7 @@ class GraftCatalogSpec extends SparkSpec {
     val e1 = store.snapshot().epoch
     Thread.sleep(15)
     store.upsert("c", Seq((10_000L, "late")).toDF("id", "payload"), Seq("id"))
-    val stamps = store.commitStamps().toMap
+    val stamps = store.log.commitStamps().toMap
 
     // wall-clock window: fromTimestamp between the commits ≡ fromEpoch e1
     val byTs = spark.read.format("graft-changes")
@@ -780,11 +780,11 @@ class GraftCatalogSpec extends SparkSpec {
     // tag pins the current epoch; VERSION AS OF resolves it; drop frees it
     val tagged = spark.sql("CALL graft.system.tag('rel-x')").collect().head
     assert(tagged.getString(0) === "rel-x")
-    assert(store.tags()("rel-x") === tagged.getLong(1))
+    assert(store.log.tags()("rel-x") === tagged.getLong(1))
     assert(spark.sql("SELECT count(*) FROM graft.docs VERSION AS OF 'rel-x'")
       .collect().head.getLong(0) === 4L)
     spark.sql("CALL graft.system.drop_tag('rel-x')")
-    assert(!store.tags().contains("rel-x"))
+    assert(!store.log.tags().contains("rel-x"))
 
     // heal_ghosts: a bare base delete orphans the SQ index; the
     // procedure names and repairs it, Doctor goes green
@@ -873,11 +873,11 @@ class GraftCatalogSpec extends SparkSpec {
       "the fixture must actually carry a multi-family artifact set")
 
     // a release tag pinning the table refuses a plain DROP
-    store.tagEpoch("rel-1")
+    store.log.tagEpoch("rel-1")
     val pinned = intercept[Exception](spark.sql("DROP TABLE graft.docs"))
     assert(pinned.getMessage.contains("rel-1"), pinned.getMessage)
     assert(store.tableNames.contains("docs"), "a refused DROP removes nothing")
-    store.dropTag("rel-1")
+    store.log.dropTag("rel-1")
 
     spark.sql("DROP TABLE graft.docs")
 
@@ -903,7 +903,7 @@ class GraftCatalogSpec extends SparkSpec {
       "SELECT 100L AS id, 'fresh' AS full_text")
     assert(spark.sql("SELECT full_text FROM graft.docs").collect()
       .head.getString(0) === "fresh")
-    val hist = store.tableHistory("docs").map(_._1)
+    val hist = store.log.tableHistory("docs").map(_._1)
     assert(hist.forall(_ > e1),
       s"re-created history must start after the drop, got $hist")
 
@@ -944,12 +944,12 @@ class GraftCatalogSpec extends SparkSpec {
     store.ensureGoverned(Seq("t"))
     store.upsert("t", Seq((1L, "a")).toDF("id", "v"), Seq("id"))
     // pins an epoch whose commit contains ONLY t → PURGE may drop it
-    store.tagEpoch("rel-t")
+    store.log.tagEpoch("rel-t")
     store.ensureGoverned(Seq("other"))
     store.upsert("other", Seq((1L, "keep")).toDF("id", "v"), Seq("id"))
     // pins an epoch containing t AND other → dropping it would
     // silently release other's retention pin too; PURGE must keep it
-    store.tagEpoch("rel-both")
+    store.log.tagEpoch("rel-both")
     graft.store.EpochFollower.consumeChanges(store, "t", "mirror",
       Seq("id"))(_ => ())
 
@@ -960,9 +960,9 @@ class GraftCatalogSpec extends SparkSpec {
 
     spark.sql("DROP TABLE graft.t PURGE")
     assert(!store.tableNames.contains("t"))
-    assert(!store.tags().contains("rel-t"),
+    assert(!store.log.tags().contains("rel-t"),
       "PURGE drops a tag that pinned nothing but the doomed tables")
-    assert(store.tags().contains("rel-both"),
+    assert(store.log.tags().contains("rel-both"),
       "a tag that also pins OTHER tables survives the purge — " +
         "dropping it would silently release their retention")
     assert(!graft.store.EpochFollower.cursors(store).keys.exists(_._1 == "t"),
@@ -1209,11 +1209,11 @@ class GraftCatalogSpec extends SparkSpec {
       spark.sql("CALL graft.system.drop_index('never_was', 'fts')"))
     assert(tbl.getMessage.contains("never_was"), tbl.getMessage)
     spark.sql("CALL graft.system.build_fts('t', 'v')")
-    store.tagEpoch("pin-1")
+    store.log.tagEpoch("pin-1")
     val pinned = intercept[Exception](
       spark.sql("CALL graft.system.drop_index('t', 'fts')"))
     assert(pinned.getMessage.contains("pin-1"), pinned.getMessage)
-    store.dropTag("pin-1")
+    store.log.dropTag("pin-1")
     assert(spark.sql("CALL graft.system.drop_index('t', 'fts')")
       .collect().head.getLong(2) > 0L)
   }
@@ -1578,11 +1578,11 @@ class GraftCatalogSpec extends SparkSpec {
     assert(Doctor.check(store) === Seq.empty)
 
     // pins refuse, exactly like DROP
-    store.tagEpoch("rel-1")
+    store.log.tagEpoch("rel-1")
     val pinned = intercept[Exception](
       spark.sql("ALTER TABLE graft.docs RENAME TO corpus"))
     assert(pinned.getMessage.contains("rel-1"), pinned.getMessage)
-    store.dropTag("rel-1")
+    store.log.dropTag("rel-1")
     EpochFollower.consumeChanges(store, "docs", "mirror", Seq("id"))(_ => ())
     val cursored = intercept[Exception](
       spark.sql("ALTER TABLE graft.docs RENAME TO corpus"))

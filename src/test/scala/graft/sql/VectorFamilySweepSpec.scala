@@ -55,7 +55,7 @@ class VectorFamilySweepSpec extends SparkSpec {
     val e1 = store.snapshot().epoch
     assert(e1 === e0 + 1, "the UPDATE must commit as exactly one epoch")
     ("t" +: families.map(_._2)).foreach { name =>
-      assert(store.tableHistory(name).last._1 === e1,
+      assert(store.log.tableHistory(name).last._1 === e1,
         s"$name was not rewritten by the UPDATE's epoch")
     }
     val negated = (0 until dims).map(d => -math.sin(3 * dims + d))

@@ -266,7 +266,7 @@ class BucketedUpsertSpec extends SparkSpec {
       if (governed) store.ensureGoverned(Seq("t"))
       val files = store.dataFiles("t").toSet
       val before = store.read("t").collect().toSet
-      val epochs = store.epochs()
+      val epochs = store.log.epochs()
       val b = store.read("t").select(col(store.BucketCol).cast("long")).head.getLong(0)
       // bucket b's rows re-filed under a bucket whose rows were never
       // read: overwriting it would silently lose them
@@ -277,7 +277,7 @@ class BucketedUpsertSpec extends SparkSpec {
       assert(e.getMessage.contains("outside the touched set"))
       assert(store.dataFiles("t").toSet === files, s"governed=$governed")
       assert(store.read("t").collect().toSet === before, s"governed=$governed")
-      assert(store.epochs() === epochs, s"governed=$governed")
+      assert(store.log.epochs() === epochs, s"governed=$governed")
     }
   }
 

@@ -54,7 +54,7 @@ abstract class ChangeFeedBehavior extends SparkSpec {
     val eCp = store.snapshot().epoch
     store.overwrite("t", Seq((1L, "only")).toDF("id", "v"))
     val eOw = store.snapshot().epoch
-    val ops = store.commitOps("t", eUp - 1, eOw).get.toMap
+    val ops = store.log.commitOps("t", eUp - 1, eOw).get.toMap
     assert(ops(eUp) === TableStore.OpUpsert)
     assert(ops(eCp) === TableStore.OpCompact)
     assert(ops(eOw) === TableStore.OpOverwrite)

@@ -522,15 +522,24 @@ class DoctorSpec extends SparkSpec {
     assert(warn.head.problem.contains("use minAgeMs >= "))
     val safeMs = "minAgeMs >= (\\d+)".r.findFirstMatchIn(warn.head.problem)
       .get.group(1).toLong
+    val atRisk = "drops (\\d+) intermediate".r.findFirstMatchIn(warn.head.problem)
+      .get.group(1).toInt
 
     // the recommendation is REAL both ways: vacuuming with the safe
     // window (plus scheduling slack) keeps the walk intact…
     store.vacuumEpochs(safeMs + 60000L)
-    assert(store.commitOps("t", cursorAt, store.snapshot().epoch).isDefined,
+    assert(store.log.commitOps("t", cursorAt, store.snapshot().epoch).isDefined,
       "the recommended retention still lost the window")
-    // …and ignoring the warning loses rewrite-skipping exactly as said
+    // …and ignoring the warning loses rewrite-skipping exactly as said,
+    // dropping exactly the (cursor, head) commits it counted
+    val head = store.snapshot().epoch
+    def inWindow = store.log.epochs().count(e => e > cursorAt && e < head)
+    val windowBefore = inWindow
     store.vacuumEpochs(0L)
-    assert(store.commitOps("t", cursorAt, store.snapshot().epoch).isEmpty,
+    assert(windowBefore - inWindow === atRisk,
+      s"the warning counted $atRisk commits at risk; vacuum(0) removed " +
+        s"${windowBefore - inWindow}")
+    assert(store.log.commitOps("t", cursorAt, store.snapshot().epoch).isEmpty,
       "vacuum(0) was expected to break the walk — the warning would be noise")
 
     // healthy setup: a caught-up consumer is silent even at retention 0
@@ -546,7 +555,7 @@ class DoctorSpec extends SparkSpec {
     store.upsert("t", Seq((1L, "a")).toDF("id", "v"), Seq("id"))
     store.upsert("other", Seq((1L, "keep")).toDF("id", "v"), Seq("id"))
     // the tag pins a commit containing BOTH tables, so PURGE keeps it
-    store.tagEpoch("rel-both")
+    store.log.tagEpoch("rel-both")
     spark.conf.set("spark.sql.catalog.graft",
       classOf[graft.sql.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.graft.root", store.root)
@@ -555,7 +564,7 @@ class DoctorSpec extends SparkSpec {
       "a fully-live tag is silent")
 
     spark.sql("DROP TABLE graft.t PURGE")
-    assert(store.tags().contains("rel-both"), "fixture: the tag survived")
+    assert(store.log.tags().contains("rel-both"), "fixture: the tag survived")
     val flagged = Doctor.check(store)
       .filter(_.component == "tag-dead-member")
     assert(flagged.size === 1 && flagged.head.table === "rel-both" &&

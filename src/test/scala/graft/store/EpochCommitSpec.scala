@@ -288,7 +288,7 @@ class EpochCommitSpec extends SparkSpec {
     store.ensureGoverned(Seq("t")) // epoch 1: {1}
     store.upsert("t", Seq((2L, "b")).toDF("id", "v"), Seq("id")) // epoch 2: {1,2}
     store.upsert("t", Seq((1L, "a2")).toDF("id", "v"), Seq("id")) // epoch 3: LWW
-    assert(store.epochs() === Seq(1L, 2L, 3L))
+    assert(store.log.epochs() === Seq(1L, 2L, 3L))
     assert(rows(store.readEpoch("t", 1L)) === Set((1L, "a")))
     assert(rows(store.readEpoch("t", 2L)) === Set((1L, "a"), (2L, "b")))
     assert(rows(store.readEpoch("t", 3L)) === Set((1L, "a2"), (2L, "b")))
@@ -297,7 +297,7 @@ class EpochCommitSpec extends SparkSpec {
     intercept[IllegalArgumentException] { store.readEpoch("nope", 2L) }
     // vacuum prunes history: only the latest snapshot remains
     store.vacuumEpochs()
-    assert(store.epochs() === Seq(3L))
+    assert(store.log.epochs() === Seq(3L))
     assert(rows(store.readEpoch("t", 3L)) === Set((1L, "a2"), (2L, "b")))
     intercept[IllegalArgumentException] { store.readEpoch("t", 2L) }
   }
@@ -378,7 +378,7 @@ class EpochCommitSpec extends SparkSpec {
     val reader = new TableStore(spark, root) // cold caches: chain walk
     assert(rows(reader.read("t")) === rows(store.read("t")))
     // time travel still resolves mid-chain epochs
-    val midEpoch = store.epochs()(4)
+    val midEpoch = store.log.epochs()(4)
     assert(store.readEpoch("t", midEpoch).count() ===
       320L + (midEpoch - 1)) // epoch 1 = snapshot, each +1 adds a row
     // vacuum keeps the live chains; reads + history survive
@@ -410,7 +410,7 @@ class EpochCommitSpec extends SparkSpec {
     // simulate a writer killed mid-pointer-write: a partial tmp file
     val tmp = new java.io.File(s"$root/_graft_epoch/.tmp-commit-00000000000000000099")
     java.nio.file.Files.writeString(tmp.toPath, "t\tfiles-t-")
-    assert(store.epochs() === Seq(1L), "tmp pointer must not resolve")
+    assert(store.log.epochs() === Seq(1L), "tmp pointer must not resolve")
     assert(rows(store.read("t")) === Set((1L, "a")))
     store.vacuumEpochs()
     assert(!tmp.exists(), "vacuum should clear pointer tmp leftovers")

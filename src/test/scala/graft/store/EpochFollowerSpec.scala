@@ -123,7 +123,7 @@ class EpochFollowerSpec extends SparkSpec {
     }
     store.vacuumEpochs()
     // the cursor's diff-base epoch survived the age-0 vacuum...
-    assert(store.epochs().contains(base),
+    assert(store.log.epochs().contains(base),
       "vacuum reclaimed a registered consumer's diff base")
     // ...so the catch-up still resolves and delivers both new rows
     val caught = EpochFollower.consumeNew(store, "t", "lagging")(rows)
@@ -142,7 +142,7 @@ class EpochFollowerSpec extends SparkSpec {
     assert(Doctor.suggest(store).filter(_.component == "consumer-lag") === Seq.empty)
     assert(EpochFollower.cursor(store, "t", "lagging") === None)
     store.vacuumEpochs()
-    assert(store.epochs().size === 1)
+    assert(store.log.epochs().size === 1)
     assert(Doctor.check(store) === Seq.empty)
   }
 }

@@ -38,7 +38,7 @@ abstract class EpochPropertyBehavior extends SparkSpec {
       val history = scala.collection.mutable.Map[Long, Map[String, Map[Long, String]]]()
 
       def snapshotModel(): Unit =
-        store.epochs().lastOption.foreach { e =>
+        store.log.epochs().lastOption.foreach { e =>
           history(e) = model.map { case (t, m) => t -> m.toMap }.toMap
         }
 
@@ -98,7 +98,7 @@ abstract class EpochPropertyBehavior extends SparkSpec {
             check(s"abort@$step")
           case 8 => // vacuum: reclaim must never change visible state
             store.vacuumEpochs()
-            history.keys.filterNot(store.epochs().toSet).toSeq
+            history.keys.filterNot(store.log.epochs().toSet).toSeq
               .foreach(history.remove)
             check(s"vacuum@$step")
           case 9 => // time travel: the latest epoch equals the model;
@@ -107,16 +107,16 @@ abstract class EpochPropertyBehavior extends SparkSpec {
             // at-least-once contract of readAddedSince)
             tables.foreach { t =>
               if (model(t).nonEmpty) {
-                val got = store.readEpoch(t, store.epochs().last)
+                val got = store.readEpoch(t, store.log.epochs().last)
                   .select(col("id"), col("v"))
                   .collect().map(r => (r.getLong(0), r.getString(1))).toSet
                 assert(got === model(t).toSet, s"round $round epoch-read@$step")
               }
             }
-            val retained = store.epochs().filter(history.contains)
+            val retained = store.log.epochs().filter(history.contains)
             if (retained.nonEmpty) {
               val e = retained(rnd.nextInt(retained.size))
-              val cur = store.epochs().last
+              val cur = store.log.epochs().last
               tables.foreach { t =>
                 val then_ = history(e).getOrElse(t, Map.empty)
                 val now = model(t).toMap

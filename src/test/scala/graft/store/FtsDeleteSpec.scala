@@ -53,7 +53,7 @@ class FtsDeleteSpec extends SparkSpec {
       .subsetOf(after.toSet), "an untouched bucket was rewritten")
     // the commit is op-tagged delete → the change feed retracts pk 7
     val e2 = store.snapshot().epoch
-    assert(store.commitOps("t", e1, e2).get.map(_._2).contains(TableStore.OpDelete))
+    assert(store.log.commitOps("t", e1, e2).get.map(_._2).contains(TableStore.OpDelete))
     val ch = store.readChangesSince("t", e1, e2, Seq("id"))
       .select(col("id").cast("long"), col("_change_type"))
       .collect().map(r => (r.getLong(0), r.getString(1))).toSet

@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
 /** Test double for the commit log's ONE atomicity seam
-  * ([[TableStore.atomicPointerPut]]): an object-store style
+  * ([[CommitLog.putIfAbsent]]): an object-store style
   * put-if-absent with NO rename anywhere — the semantics of an S3
   * conditional PUT (`If-None-Match: *`) driven through the client
   * retry loop a real SDK runs:
@@ -65,7 +65,13 @@ class S3SeamStore(spark: SparkSession, root: String)
         if (hfs.exists(dst)) false else throw e
     }
 
-  override protected def atomicPointerPut(tmp: Path, dst: Path): Boolean = {
+  /** The log whose put-if-absent is [[conditionalPutIfAbsent]]. */
+  override lazy val log: CommitLog = new CommitLog(this) {
+    override protected[store] def putIfAbsent(tmp: Path, dst: Path): Boolean =
+      conditionalPutIfAbsent(tmp, dst)
+  }
+
+  private def conditionalPutIfAbsent(tmp: Path, dst: Path): Boolean = {
     val bytes = readAll(tmp)
     try {
       var drops = transientPerPut
@@ -127,6 +133,6 @@ class S3SeamContractSpec extends graft.SparkSpec {
     val reader = new TableStore(spark, root)
     assert(reader.read("t").count() === 2L)
     // no half-visible commits, no leftover tmp pointers
-    assert(reader.epochs().size === s.epochs().size)
+    assert(reader.log.epochs().size === s.log.epochs().size)
   }
 }

@@ -125,7 +125,7 @@ abstract class SnapshotOccBehavior extends SparkSpec {
     // age-0 vacuum (the no-readers contract) reclaims: the old epoch
     // is gone and its files swept
     store.vacuumEpochs()
-    assert(store.epochs() === Seq(epoch1 + 1))
+    assert(store.log.epochs() === Seq(epoch1 + 1))
     intercept[IllegalArgumentException] { store.readEpoch("tweets", epoch1) }
     assert(store.unreferencedFiles("tweets").isEmpty)
     assert(rows(store.read("tweets")) === Set((10L, "t-NEW")))
@@ -221,8 +221,8 @@ abstract class SnapshotOccBehavior extends SparkSpec {
 
   test("metadata caches stay O(live entries) across commit+vacuum cycles") {
     val store = governedPair(freshRoot())
-    def sizes = store.metadataCacheSizes
-    var watermark = (0, 0, 0)
+    def sizes = store.log.metadataCacheSizes
+    var watermark = (0, 0)
     (1 to 20).foreach { i =>
       store.transact {
         // re-upserting the seed key makes each commit replace the file
@@ -236,17 +236,15 @@ abstract class SnapshotOccBehavior extends SparkSpec {
       if (i == 5) watermark = s
       if (i > 5) {
         assert(s._1 <= watermark._1 + 1,
-          s"commitCache grew past steady state at cycle $i: $s vs $watermark")
+          s"pointer cache grew past steady state at cycle $i: $s vs $watermark")
         assert(s._2 <= watermark._2 + 2,
-          s"listCache grew past steady state at cycle $i: $s vs $watermark")
-        assert(s._3 <= watermark._3 + 2,
-          s"depthCache grew past steady state at cycle $i: $s vs $watermark")
+          s"entry cache grew past steady state at cycle $i: $s vs $watermark")
       }
     }
     // absolute bound: one retained commit, ≤ (MaxDeltaDepth+1) chain
     // entries per table — nowhere near the 20 commits made
-    val (c, l, d) = sizes
-    assert(c <= 2 && l <= 2 * 12 && d <= 2 * 12, s"caches unbounded: ($c, $l, $d)")
+    val (c, e) = sizes
+    assert(c <= 2 && e <= 2 * 12, s"caches unbounded: ($c, $e)")
   }
 
   test("a pinned reader never trusts — or heals backwards — a newer epoch's manifest") {
@@ -328,8 +326,8 @@ abstract class SnapshotOccBehavior extends SparkSpec {
   test("tags are vacuum roots: a tagged release epoch survives age-0 vacuum until dropped") {
     val store = governedPair(freshRoot())
     val e1 = store.snapshot().epoch
-    store.tagEpoch("release-v1")
-    assert(store.tags() === Map("release-v1" -> e1))
+    store.log.tagEpoch("release-v1")
+    assert(store.log.tags() === Map("release-v1" -> e1))
     store.transact {
       store.upsert("tweets", Seq((11L, "t2")).toDF("id", "v"), Seq("id"))
     }
@@ -339,28 +337,28 @@ abstract class SnapshotOccBehavior extends SparkSpec {
     store.vacuumEpochs()
     // the tagged epoch survived the age-0 vacuum with its files; the
     // untagged middle epoch was reclaimed
-    assert(store.epochs() === Seq(e1, e1 + 2))
+    assert(store.log.epochs() === Seq(e1, e1 + 2))
     assert(rows(store.readTag("tweets", "release-v1")) === Set((10L, "t-old")))
     // dropping the tag releases the pin; the next vacuum reclaims
-    store.dropTag("release-v1")
+    store.log.dropTag("release-v1")
     store.vacuumEpochs()
-    assert(store.epochs() === Seq(e1 + 2))
+    assert(store.log.epochs() === Seq(e1 + 2))
     intercept[IllegalArgumentException] {
       store.readTag("tweets", "release-v1")
     }
     // tagging an unretained epoch is refused loudly
     val e = intercept[IllegalArgumentException] {
-      store.tagEpoch("ghost", Some(e1))
+      store.log.tagEpoch("ghost", Some(e1))
     }
     assert(e.getMessage.contains("retained"))
   }
 
   test("drop refuses while a tag or cursor still pins the table, allows after release") {
     val store = governedPair(freshRoot())
-    store.tagEpoch("pin")
+    store.log.tagEpoch("pin")
     val t = intercept[IllegalArgumentException] { store.drop("tweets") }
     assert(t.getMessage.contains("pin"))
-    store.dropTag("pin")
+    store.log.dropTag("pin")
     EpochFollower.consumeNew(store, "tweets", "c1")(identity)
     val c = intercept[IllegalArgumentException] { store.drop("tweets") }
     assert(c.getMessage.contains("c1"))

@@ -97,4 +97,28 @@ class StatsEstimateSpec extends SparkSpec {
     assert(graft.Explain.statsReport(noManifest, "u", Nil)
       .contains("no stats manifest"))
   }
+
+  test("a torn un-governed manifest (pending flag, no refresh) is refused: " +
+    "pruned reads fall back to the live files' footers, no estimate") {
+    val store = freshStore()
+    val df = (0 until 300).map(i => (i.toLong, (i / 100).toLong, s"v$i"))
+      .toDF("k", "p", "v")
+    store.overwrite("t", df, partitionBy = Seq("p"))
+    FileManifest.build(store, "t")
+    // the two in-place primitives set the write-ahead flag and leave
+    // the refresh to their caller; none runs here (a crash before it)
+    store.dropPartition("t", "p", "0")
+    store.overwritePartitions("t",
+      (0 until 50).map(i => (1000L + i, s"w$i", 1L)).toDF("k", "v", "p"), Seq("p"))
+    assert(!FileManifest.fresh(store, "t"), "fixture: the flag is set")
+    val preds = Seq(("k", 0L, 2000L))
+    val full = store.read("t").filter(col("k").between(0L, 2000L))
+    val pruned = FileManifest.readPruned(store, "t", preds)
+      .filter(col("k").between(0L, 2000L))
+    assert(pruned.count() === 150L)
+    assert(pruned.select("k", "v").collect().toSet ===
+      full.select("k", "v").collect().toSet)
+    assert(FileManifest.estimateRows(store, "t") === None,
+      "a torn manifest must not estimate")
+  }
 }

@@ -152,11 +152,11 @@ class TrigramSpec extends SparkSpec {
       .agg(countDistinct(col("pk")).as("n"), min(col("pk")).as("pk"))
       .filter(col("n") === 1L).select(col("pk")).head.getLong(0)
     val mover = (1L to 4L).find(_ != solo).get
-    val start = store.epochs().max
+    val start = store.log.epochs().max
     Trigram.upsertWithIndex(store, "docs",
       Seq((solo, "zz"), (mover, "an entirely new sentence")).toDF("doc_id", "text"),
       "doc_id", "text")
-    val advanced = store.epochs().filter(_ > start)
+    val advanced = store.log.epochs().filter(_ > start)
     assert(advanced === Seq(start + 1), s"index maintenance committed epochs $advanced")
     advanced.foreach { e =>
       assert(store.readEpoch(idx, e).filter(col("pk") === solo).count() === 0L,

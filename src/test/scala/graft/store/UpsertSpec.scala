@@ -149,12 +149,12 @@ class UpsertSpec extends SparkSpec {
   test("governed flat upsert: an empty batch commits nothing") {
     val (store, _) = twoFileTable()
     val epoch = store.currentEpochIfAny
-    val history = store.tableHistory("t")
+    val history = store.log.tableHistory("t")
     val files = store.dataFiles("t")
     store.upsert("t", Seq.empty[(Long, String)].toDF("id", "v"), Seq("id"))
     store.insertIgnore("t", Seq.empty[(Long, String)].toDF("id", "v"), Seq("id"))
     assert(store.currentEpochIfAny === epoch)
-    assert(store.tableHistory("t") === history)
+    assert(store.log.tableHistory("t") === history)
     assert(store.dataFiles("t") === files)
   }
 

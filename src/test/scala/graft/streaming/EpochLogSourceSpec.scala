@@ -495,7 +495,7 @@ class EpochLogSourceSpec extends SparkSpec {
         // history segmentation: the new incarnation's epochs all
         // POST-date the drop — the dead incarnation's commits are not
         // its history
-        val hist = store.tableHistory("docs").map(_._1)
+        val hist = store.log.tableHistory("docs").map(_._1)
         assert(hist.nonEmpty && hist.min > dropEpoch,
           s"trial $trial: history $hist must start after drop@$dropEpoch")
       } finally q2.stop()

@@ -161,7 +161,7 @@ class StreamingSpec extends SparkSpec {
     val q = StreamNormalize.start(mem.toDF(), store, checkpoint)
     mem.addData(streamingTweet)
     q.processAllAvailable()
-    val epochAfterB1 = store.epochs().last
+    val epochAfterB1 = store.log.epochs().last
 
     store.afterCommitFlip = () => throw new RuntimeException("crash post-flip")
     mem.addData(restTweet)
@@ -173,7 +173,7 @@ class StreamingSpec extends SparkSpec {
     val reader = new TableStore(spark, root)
     assert(reader.read("tweets").count() === 3)
     assert(reader.read("users").count() === 1)
-    val epochAfterCrash = new TableStore(spark, root).epochs().last
+    val epochAfterCrash = new TableStore(spark, root).log.epochs().last
     assert(epochAfterCrash > epochAfterB1)
 
     // checkpoint replay: the same batch redelivers into a store that
